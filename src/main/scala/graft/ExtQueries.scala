@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
-import graft.operators.{Buckets, ConnectedComponents, KMeans, LatestPerKey, Multimodal, Similarity}
+import graft.operators.{Buckets, Checkpoints, ConnectedComponents, KMeans, LatestPerKey, Multimodal, Par, Similarity}
 import graft.sources.Tables
 import graft.streaming.StreamingStage
 
@@ -1645,10 +1645,8 @@ object ExtQueries {
     // minhash HOF cascade re-ran once per consumer. Both consumers are
     // drained eagerly inside this call (solveAuto collects;
     // mergeClusters solves its quotient graph), so the returned frame
-    // has no lineage into the cache and the finally releases it.
-    val corpusBanded = minhashBanded(corpus)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    // has no lineage into the cache and the loan releases it.
+    Checkpoints.withPersisted(minhashBanded(corpus)) { corpusBanded =>
       // "yesterday's stored labels": converged components over the
       // corpus-only pairs (the full detector ≡ pairsAgainst with an
       // empty state — every doc is "new")
@@ -1665,7 +1663,7 @@ object ExtQueries {
         IncrementalDedup.bandState(corpusBanded), minhashBanded(nd.filter(isBatch)))
       IncrementalDedup.mergeClusters(labels0,
         nd.filter(isBatch).select(col("doc_id").as("id")), newPairs)
-    } finally { corpusBanded.unpersist(); () }
+    }
   }
 
   /** Soft-dedup weights computed OFF THE INCREMENTAL LABELS — the
@@ -4048,7 +4046,7 @@ object ExtQueries {
     // Values are unchanged by construction — each family computes its
     // own row from its own roots; only wall-clock overlaps. Row order
     // is fixed by the sequence below, not by completion order.
-    val rows = runConcurrently(Seq(
+    val rows = Par.run(Seq(
       () => digestFamily(), () => bandFamily(), () => labelsFamily()))
 
     Option(purgeStatePrev.getAndSet(roots.values.toSeq)).foreach(
@@ -4057,24 +4055,6 @@ object ExtQueries {
     rows.toDF("artifact", "n_before", "n_after", "n_refs_purged", "n_leaked",
         "n_stale_versions")
   }
-
-  /** Run independent driver thunks concurrently (guide §2.6), returning
-    * results in INPUT order. Spark job submission is thread-safe and
-    * FIFO-scheduled: later thunks' tasks back-fill executor slots freed
-    * by earlier thunks' stragglers and driver-side gaps. Failures
-    * propagate with the ORIGINAL throwable rethrown (ADVICE r16: an
-    * audit require() must reach callers as the same exception type the
-    * sequential code raised, not wrapped in ExecutionException), and
-    * the remaining thunks are cancelled and awaited before the rethrow
-    * so no family is still publishing to its roots after the driver
-    * has thrown.
-    */
-  private def runConcurrently[T](thunks: Seq[() => T]): Seq[T] =
-    graft.operators.Par.run(thunks)
-
-  /** Two-armed [[runConcurrently]] with independent result types. */
-  private def runPair[A, B](a: () => A, b: () => B): (A, B) =
-    graft.operators.Par.pair(a, b)
 
   // ===== driver r8: trained classifier (rule distillation) =====
 
@@ -4819,7 +4799,6 @@ object ExtQueries {
           "transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000000) AS BIGINT))"))
           .as(Seq("pos", "x_fp")))
       .select(col("vec_id"), col("pos").cast("long").as("dim"), col("x_fp"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val vSchema = StructType(Seq(
@@ -4833,11 +4812,9 @@ object ExtQueries {
     // persisted pass, v_raw collected (64 rows) and rescaled on the
     // driver with the SAME truncate-toward-zero division (Scala Long
     // `/` truncates toward zero, matching the SQL CASE sign-split)
-    def round(v: DataFrame): Seq[Row] = {
-      val sRow = xl.join(broadcast(v), "dim")
-        .groupBy("vec_id").agg(sum(col("x_fp") * col("v_fp")).as("s"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+    def round(v: DataFrame): Seq[Row] =
+      Checkpoints.withPersisted(xl.join(broadcast(v), "dim")
+        .groupBy("vec_id").agg(sum(col("x_fp") * col("v_fp")).as("s"))) { sRow =>
         val smaxRow = sRow.agg(max(abs(col("s")))).head()
         val smax = if (smaxRow.isNullAt(0)) 0L else smaxRow.getLong(0)
         val t = sRow.select(col("vec_id"), signDiv("s", 1L + smax / 1048576L).as("t"))
@@ -4847,12 +4824,12 @@ object ExtQueries {
         val vmax = if (vraw.isEmpty) 0L
           else vraw.map(r => math.abs(r.getLong(1))).max
         vraw.map(r => Row(r.getLong(0), r.getLong(1) / (1L + vmax / 1000000L)))
-      } finally { sRow.unpersist(); () }
-    }
-    try {
+      }
+    // every round reads `xl` through this loan's cache entry
+    Checkpoints.withPersisted(xl) { _ =>
       val v0 = (0L until 64L).map(d => Row(d, 1000000L))
       localV(round(localV(round(localV(round(localV(v0)))))))
-    } finally { xl.unpersist(); () }
+    }
   }
 
   /** Compaction EXECUTION (`layout_compaction_exec`): the rewrite half
@@ -6083,7 +6060,7 @@ object ExtQueries {
     // root) share no state beyond committed v1 — overlap them (guide
     // §2.6) so the build's scoring jobs back-fill the commits'
     // control-plane gaps
-    val (idx0, v3) = runPair(
+    val (idx0, v3) = Par.pair(
       () => Bm25Index.build(s,
         VersionedTable.readVersion(s, root, v1).select(col("doc_id"), col("text")),
         tbl, base),
@@ -6094,17 +6071,17 @@ object ExtQueries {
       })
     // one feed window, two consumers (insert fold + delete purge):
     // persist it so the manifest diff runs once, not per fold
-    val feed = VersionedTable.changeFeed(s, root, v1, v3)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (idx1, _) = Bm25Index.append(s, idx0,
-      feed.filter(col("change_type") === "insert").select(col("doc_id"), col("text")),
-      gen = 1)
     val base2 = java.nio.file.Files.createTempDirectory("graft_idxfeed_b").toString
     val tbl2 = s"graft_idxfeed_p_$suffix"
-    val (idx2, _) = Bm25Index.purge(s, idx1,
-      feed.filter(col("change_type") === "delete").select(col("doc_id")),
-      tbl2, base2)
-    feed.unpersist()
+    val (idx2, _) =
+      Checkpoints.withPersisted(VersionedTable.changeFeed(s, root, v1, v3)) { feed =>
+        val (idx1, _) = Bm25Index.append(s, idx0,
+          feed.filter(col("change_type") === "insert").select(col("doc_id"), col("text")),
+          gen = 1)
+        Bm25Index.purge(s, idx1,
+          feed.filter(col("change_type") === "delete").select(col("doc_id")),
+          tbl2, base2)
+      }
     // the unpurged index is dead within this invocation; the table
     // root and purged index follow the cross-invocation lifecycle
     s.sql(s"DROP TABLE IF EXISTS $tbl")
@@ -6161,7 +6138,7 @@ object ExtQueries {
     // the table's writer side (append + DV-delete commits) share no
     // state beyond committed v1 — overlap them (guide §2.6): the
     // k-means collect rounds' driver gaps back-fill with commit tasks
-    val (idx0, v3) = runPair(
+    val (idx0, v3) = Par.pair(
       () => IvfIndex.build(s, VersionedTable.readVersion(s, root, v1),
         k = 8, iterations = 3, tbl, base),
       () => {
@@ -6171,17 +6148,17 @@ object ExtQueries {
       })
     // one feed window, two consumers (insert fold + delete purge):
     // persist it so the manifest diff runs once, not per fold
-    val feed = VersionedTable.changeFeed(s, root, v1, v3)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    IvfIndex.append(s, idx0,
-      feed.filter(col("change_type") === "insert")
-        .select(col("vec_id"), col("embedding")), gen = 1)
     val base2 = java.nio.file.Files.createTempDirectory("graft_ivffeed_p").toString
     val tbl2 = s"graft_ivffeed_p_$suffix"
-    val idx2 = IvfIndex.purge(s, idx0,
-      feed.filter(col("change_type") === "delete").select(col("vec_id")),
-      tbl2, base2)
-    feed.unpersist()
+    val idx2 =
+      Checkpoints.withPersisted(VersionedTable.changeFeed(s, root, v1, v3)) { feed =>
+        IvfIndex.append(s, idx0,
+          feed.filter(col("change_type") === "insert")
+            .select(col("vec_id"), col("embedding")), gen = 1)
+        IvfIndex.purge(s, idx0,
+          feed.filter(col("change_type") === "delete").select(col("vec_id")),
+          tbl2, base2)
+      }
     // the unpurged index is dead within this invocation; the table
     // root and purged index follow the cross-invocation lifecycle
     s.sql(s"DROP TABLE IF EXISTS $tbl")

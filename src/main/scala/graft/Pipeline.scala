@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.storage.StorageLevel
 
 import graft.operators.Quality
 import graft.reports.ReportingLayer
@@ -31,7 +30,7 @@ object Pipeline {
                       tieCols: Seq[String]): StagingViews = {
     val v = StagingLayer.build(spark, accounts, activities, tieCols)
     Seq(v.cleanAccounts, v.primary, v.field, v.promise, v.restructure)
-      .foreach(_.persist(StorageLevel.MEMORY_AND_DISK))
+      .foreach(_.persist())
     v
   }
 

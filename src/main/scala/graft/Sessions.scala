@@ -42,9 +42,9 @@ object Sessions {
       // until the operators.Checkpoints shutdown hook)
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       // let AQE coalesce shuffle partitions INSIDE cached plans: off,
-      // every persist bracket (Checkpoints.materialize, the twice-
-      // consumed-frame brackets) freezes its stage at the raw
-      // shuffle-partition count, and iterative consumers (BPE's 20
+      // every cached plan (Checkpoints pins and persist loans) freezes
+      // its stage at the raw shuffle-partition count, and iterative
+      // consumers (BPE's 20
       // merge rounds over the checkpointed vocab) pay full-width task
       // scheduling per round for a dictionary-sized frame (measured:
       // text_bpe_train 1.5 s -> 1.9 s when the r16 persist bracket

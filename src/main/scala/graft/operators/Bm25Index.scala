@@ -139,16 +139,15 @@ object Bm25Index {
     // no requireAllClusterKeysForCoPartition toggle here (unlike
     // GraphIndex.append): the anti-join key (doc_id) IS the full
     // bucket key, so the stored side is already bucket-local.
-    // Par.materialize (not a bare persist, r17): the flat LogicalRDD
-    // cuts the delta's lineage into the stored table, which is what
-    // makes overlapping the postings append with the spine folds SAFE —
-    // a persisted-but-lineage-bearing plan would be recomputed against
+    // pinned (not a bare persist, r17): the flat LogicalRDD cuts the
+    // delta's lineage into the stored table, which is what makes
+    // overlapping the postings append with the spine folds SAFE — a
+    // persisted-but-lineage-bearing plan would be recomputed against
     // the post-append table by the CacheManager (the spine-before-
     // append ordering this fold previously relied on).
-    val fresh = Par.materialize(postingsOf(batchDocs)
+    Checkpoints.withPinned(postingsOf(batchDocs)
       .join(spark.table(stored.postingsTable).select(col("doc_id")).distinct(),
-        Seq("doc_id"), "left_anti"))
-    try {
+        Seq("doc_id"), "left_anti")) { fresh =>
       val next = stored.copy(gen = gen)
       val freshDocs = fresh.select(col("doc_id"), col("dl")).distinct()
         .agg(count(lit(1)).as("n_docs"), coalesce(sum(col("dl")), lit(0L)).as("sum_dl"))
@@ -179,7 +178,7 @@ object Bm25Index {
           .bucketBy(NumBuckets, "doc_id").sortBy("doc_id", "word")
           .saveAsTable(stored.postingsTable)))
       (next, nNew)
-    } finally { fresh.unpersist(); () }
+    }
   }
 
   /** Base-vs-appended posting counts off the generation stamps — the
@@ -267,10 +266,9 @@ object Bm25Index {
     // retraction deltas FROM THE STORED POSTINGS of the roster docs,
     // pinned (flat materialized plan — eager, lineage-cut) before the
     // overlapped writes below start
-    val victim = Par.materialize(spark.table(stored.postingsTable)
+    Checkpoints.withPinned(spark.table(stored.postingsTable)
       .select(col("doc_id"), col("dl"), col("word"))
-      .join(broadcast(ids), Seq("doc_id"), "left_semi"))
-    try {
+      .join(broadcast(ids), Seq("doc_id"), "left_semi")) { victim =>
       val next = Stored(newTable, newBase, 0)
       val vd = victim.select(col("doc_id"), col("dl")).distinct()
         .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("l"))
@@ -306,7 +304,7 @@ object Bm25Index {
           .bucketBy(NumBuckets, "doc_id").sortBy("doc_id", "word")
           .saveAsTable(newTable)))
       (next, nPurged)
-    } finally { victim.unpersist(); () }
+    }
   }
 
   /** Query-time BM25 top-k over the STORED artifacts only — the exact

@@ -1,18 +1,37 @@
 package graft.operators
 
 import org.apache.spark.SparkContext
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, count, lit, sum, xxhash64}
 
-/** Reliable-checkpoint lifetime management for the iterative operators
-  * (PageRank, ConnectedComponents.runStar).
+/** The one module that materializes intermediates. Three modes, each
+  * with its own lifetime:
   *
-  * Those operators materialize their result through a reliable
-  * checkpoint — the only lineage-truncation that the cache manager does
-  * NOT own (`localCheckpoint` persists outside it, where
-  * `Dataset.unpersist` cannot release the blocks — PLANS.md #20), so
-  * the cache-leak fix traded stranded memory for checkpoint FILES:
-  * Spark never cleans reliable checkpoints by default, and a long
-  * Verify/Bench session leaked one |V|-row directory per iterative
-  * invocation (VERDICT r5 "what's wrong" #2). Three bounds close that:
+  *  - [[materialize]] — ON DISK: write + read back under the per-JVM
+  *    checkpoint root. Lineage-free, no cache entry; the returned frame
+  *    lives until [[sweep]] (or JVM exit).
+  *  - [[pin]] — IN MEMORY, eager, lineage-cut: a persisted flat
+  *    `LogicalRDD` plan built by one job that also yields the row count
+  *    and a row digest. The caller releases it — through [[withPinned]]
+  *    when the pin is scoped to one call, by `unpersist()` when it
+  *    rotates across rounds.
+  *  - [[withPersisted]] — IN MEMORY, lazy, scoped: the frame is
+  *    persisted at the session default level while `use` runs and
+  *    released in a `finally`, also when `use` throws.
+  *
+  * Only frames that OUTLIVE their creating call keep a bare `persist()`
+  * at the call site (the staged views of `Pipeline.stageAndPersist`,
+  * the returned labels of `ConnectedComponents.run`).
+  *
+  * On-disk lifetime. The iterative operators (PageRank,
+  * ConnectedComponents.runStar) materialize their result on disk
+  * because the cache manager does NOT own `localCheckpoint` (it persists
+  * outside it, where `Dataset.unpersist` cannot release the blocks —
+  * PLANS.md #20), so the cache-leak fix traded stranded memory for
+  * checkpoint FILES: Spark never cleans reliable checkpoints by default,
+  * and a long Verify/Bench session leaked one |V|-row directory per
+  * iterative invocation (VERDICT r5 "what's wrong" #2). Three bounds
+  * close that:
   *
   *  1. ONE per-JVM root, deleted by a shutdown hook — no session can
   *     leak past its own lifetime;
@@ -59,16 +78,16 @@ object Checkpoints {
     * never swept.
     */
   def sweep(sc: SparkContext): Unit = synchronized {
-    sc.getCheckpointDir.foreach { d =>
-      val p = java.nio.file.Paths.get(new java.net.URI(d).getPath match {
-        case null => d
-        case path => path
-      })
-      if (p.startsWith(root) && TableStore.get.isDirectory(p.toString))
-        TableStore.get.listNames(p.toString)
-          .foreach(n => TableStore.get.deleteTree(s"$p/$n"))
-    }
+    checkpointDir(sc)
+      .filter(p => p.startsWith(root) && TableStore.get.isDirectory(p.toString))
+      .foreach(p => TableStore.get.listNames(p.toString)
+        .foreach(n => TableStore.get.deleteTree(s"$p/$n")))
   }
+
+  /** The context's checkpoint dir as a local path, if one is set. */
+  private def checkpointDir(sc: SparkContext): Option[java.nio.file.Path] =
+    sc.getCheckpointDir.map(d =>
+      java.nio.file.Paths.get(Option(new java.net.URI(d).getPath).getOrElse(d)))
 
   /** Materialize a frame ONCE behind a durable, lineage-free scan —
     * the role `Dataset.checkpoint()` plays for the iterative operators,
@@ -89,7 +108,7 @@ object Checkpoints {
     * contract is unchanged: swept at the same quiesce points, deleted
     * by the shutdown hook, and a returned frame is DEAD after [[sweep]].
     */
-  def materialize(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+  def materialize(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     ensure(spark.sparkContext)
     val dir = spark.sparkContext.getCheckpointDir.get.stripSuffix("/") +
@@ -98,17 +117,70 @@ object Checkpoints {
     spark.read.schema(df.schema).parquet(dir)
   }
 
+  /** A [[pin]]ned frame with the row count and row digest its eager
+    * job computed.
+    */
+  final case class Pinned(df: DataFrame, rows: Long, digest: Long)
+
+  /** Pin a frame IN MEMORY behind a FLAT, persisted `LogicalRDD` plan
+    * (the SNIPPETS Dataset-from-plan trick), built eagerly. Three
+    * properties matter beyond a plain `persist()`:
+    *
+    *  1. LINEAGE CUT: the returned plan no longer references its
+    *     sources. A concurrent `saveAsTable` append to a source table
+    *     cannot invalidate it through the CacheManager's recacheByPlan
+    *     (a persisted-but-lineage-bearing delta would be recomputed
+    *     against the POST-append table — the Bm25Index
+    *     spine-before-append hazard), and an iterative operator whose
+    *     round references its predecessor k times keeps a flat logical
+    *     plan instead of a k^rounds-node one (a star round references
+    *     its predecessor ~8×; un-truncated, analysis OOMs after ~10
+    *     rounds on a 200-hop chain). `localCheckpoint` also truncates,
+    *     but persists OUTSIDE the cache manager, where `unpersist`
+    *     cannot release it.
+    *  2. EAGER: one job materializes the blocks before any concurrent
+    *     consumer starts, so overlapping readers never race to compute
+    *     the same cache entry twice.
+    *  3. COUNTED: that same job returns the row count and an
+    *     order-insensitive digest — Σ xxhash64(row) in wrapping long
+    *     arithmetic. Two DISTINCT row sets with different digests are
+    *     provably different, so `ConnectedComponents.runStar`'s
+    *     convergence check skips its exact union-count proof in
+    *     equal-count-but-still-moving rounds at no extra job.
+    *
+    * The caller owns the release ([[withPinned]], or `unpersist()` for
+    * a round rotation); a failing eager job releases the blocks before
+    * rethrowing.
+    */
+  def pin(df: DataFrame): Pinned = {
+    val out = org.apache.spark.sql.GraftSqlBridge
+      .fromInternalRdd(df.sparkSession, df.queryExecution.toRdd, df.schema)
+      .persist()
+    val r =
+      try out.agg(count(lit(1)), sum(xxhash64(out.columns.map(col): _*))).head()
+      catch { case t: Throwable => out.unpersist(); throw t }
+    Pinned(out, r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+  }
+
+  /** Loan `df` persisted (lazily, at the session default level) to
+    * `use`, and unpersist it when `use` returns or throws. `use` must
+    * not return a frame with lineage into the persisted one that is
+    * read after the loan ends — it would recompute from the source.
+    */
+  def withPersisted[T](df: DataFrame)(use: DataFrame => T): T =
+    release(df.persist())(use)
+
+  /** Loan a [[pin]] of `df` to `use`, released like [[withPersisted]]. */
+  def withPinned[T](df: DataFrame)(use: DataFrame => T): T =
+    release(pin(df).df)(use)
+
+  private def release[T](held: DataFrame)(use: DataFrame => T): T =
+    try use(held) finally { held.unpersist(); () }
+
   /** Number of live checkpoint directories under the context's
     * checkpoint dir — the observable the hygiene spec bounds.
     */
   def liveCount(sc: SparkContext): Long =
-    sc.getCheckpointDir.map { d =>
-      val p = java.nio.file.Paths.get(new java.net.URI(d).getPath match {
-        case null => d
-        case path => path
-      })
-      if (TableStore.get.isDirectory(p.toString))
-        TableStore.get.listNames(p.toString).length.toLong
-      else 0L
-    }.getOrElse(0L)
+    checkpointDir(sc).filter(p => TableStore.get.isDirectory(p.toString))
+      .fold(0L)(p => TableStore.get.listNames(p.toString).length.toLong)
 }

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Distributed connected components over an undirected edge list — the
   * clustering step that turns pairwise near-duplicate PAIRS (minhash /
@@ -105,7 +104,7 @@ object ConnectedComponents {
             col("component").as("c2")), "component")
           .groupBy(col("id"))
           .agg(min(col("c2")).as("component"))
-        val (mat, _, _) = materializeRound(jumped)
+        val mat = Checkpoints.pin(jumped).df
         if (held != null) held.unpersist()
         held = mat
         labels = mat
@@ -159,6 +158,79 @@ object ConnectedComponents {
     labels
   }
 
+  /** Exact components with a BOUNDED driver-local union-find for small
+    * graphs, falling back to [[runStar]] past the bound — the
+    * broadcast-join argument applied to components: the quotient
+    * graphs incremental maintenance feeds a solver are ∝ batch PAIRS
+    * (a few MB), yet every distributed round pays driver/job latency
+    * that dominates data volume there (the stored-labels smoke row
+    * measured ~5 s of round-trips for a graph that fits in one task).
+    * Below `maxCollected` total rows the graph collects (bounded
+    * driver footprint, like the k-means centroid pulls), a union-find
+    * solves it in one pass, and the (id, component) result returns as
+    * a small frame downstream joins broadcast. Same output contract as
+    * runStar: component = minimum member id; the incremental-clusters
+    * gates stay oracle-verbatim through either path.
+    */
+  def solveAuto(vertices: DataFrame, edges: DataFrame,
+                maxCollected: Long = 1000000L): DataFrame = {
+    // PERSIST the edge projection for the scope of the solve (r16
+    // measure-first finding): the routing count and the union-find
+    // collect are two separate materializations — uncached, EACH
+    // re-ran the caller's whole pair-derivation cascade (minhash
+    // banding + bucket expansion for the dedup-incremental gates:
+    // 1.8 s count + 1.7 s collect of identical work at sf0.1).
+    // Bounded: the collect path is ≤ maxCollected rows by
+    // construction; the fallback path pays one edge materialization
+    // before runStar re-derives (the fallback is the rare,
+    // already-expensive branch). Released when the loan ends — both exits
+    // return frames with no lineage into `es` (the driver path
+    // returns a local frame; runStar checkpoints).
+    Checkpoints.withPersisted(
+      edges.select(col("src").cast("long"), col("dst").cast("long"))) { es =>
+      val ne = es.count()
+      if (ne > maxCollected) { starFallbacks.incrementAndGet(); runStar(vertices, edges) }
+      else {
+        // VERDICT r8 #7: the driver path is for BATCH-sized quotient
+        // graphs (a few MB). A future call site routing a corpus-scale
+        // graph through here would silently centralize it — flag any
+        // driver-side solve past 100k edges so the misuse is visible in
+        // logs and counters before it becomes an OOM at a bigger SF.
+        if (ne > DriverPathWarnEdges) {
+          driverPathWarnings.incrementAndGet()
+          System.err.println(
+            s"[graft] ConnectedComponents.solveAuto: driver union-find on $ne edges " +
+            s"(> $DriverPathWarnEdges) — this path is for batch-sized quotient graphs; " +
+            "corpus-scale graphs belong on runStar (raise via a smaller maxCollected)")
+        }
+        val vs = vertices.select(col("id").cast("long")).distinct().collect().map(_.getLong(0))
+        if (vs.length + ne > maxCollected) { starFallbacks.incrementAndGet(); runStar(vertices, edges) }
+        else {
+          val parent = new java.util.HashMap[Long, Long]()
+          def find(x: Long): Long = {
+            var r = x
+            while (parent.getOrDefault(r, r) != r) r = parent.getOrDefault(r, r)
+            var c = x
+            while (parent.getOrDefault(c, c) != c) {
+              val n = parent.getOrDefault(c, c); parent.put(c, r); c = n
+            }
+            r
+          }
+          es.collect().foreach { row =>
+            val (a, b) = (find(row.getLong(0)), find(row.getLong(1)))
+            if (a != b) parent.put(math.max(a, b), math.min(a, b))
+          }
+          // component label = MIN member id: with min-root unions the
+          // root IS the minimum of every id merged through edges; ids
+          // never seen in an edge label themselves
+          val labels = vs.map(v => (v, find(v)))
+          vertices.sparkSession.createDataFrame(labels.toSeq)
+            .toDF("id", "component")
+        }
+      }
+    }
+  }
+
   /** Alternating large-star/small-star contraction (Kiveris et al.
     * 2014, "Connected Components in MapReduce and Beyond") — the
     * ADVERSARIAL-DIAMETER variant: min-label propagation needs
@@ -189,116 +261,9 @@ object ConnectedComponents {
     *         current parents — callers should size maxRounds ≫
     *         log²|V|, which 50 is for any realistic graph)
     */
-  /** Materialize a round's result behind a FLAT `LogicalRDD` plan
-    * (persisted through the cache manager, eagerly built): a star
-    * round references its predecessor ~8× (union ×2, then
-    * join-with-own-aggregate ×2, twice), so an un-truncated LOGICAL
-    * plan grows 8^rounds nodes — execution would be saved by the
-    * cache, but analysis/stringification OOMs after ~10 rounds
-    * (measured on a 200-hop chain). `localCheckpoint` also truncates
-    * but persists OUTSIDE the cache manager, where
-    * `Dataset.unpersist` cannot release it — the blocks would strand
-    * exactly like the PageRank leak this round closed.
-    */
-  /** Returns (materialized frame, row count, order-insensitive row
-    * digest). The digest — Σ xxhash64(row) in wrapping long arithmetic,
-    * computed in the SAME job as the count — is a necessary condition
-    * for set equality: two DISTINCT edge sets with different digests
-    * are provably different, so [[runStar]]'s convergence check can
-    * skip its exact union-count proof in equal-count-but-still-moving
-    * rounds (r17; the proof itself stays exact — the digest only gates
-    * when it runs).
-    */
-  private def materializeRound(df: DataFrame): (DataFrame, Long, Long) = {
-    val out = org.apache.spark.sql.GraftSqlBridge
-      .fromInternalRdd(df.sparkSession, df.queryExecution.toRdd, df.schema)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val r = out.agg(count(lit(1)),
-      sum(xxhash64(out.columns.map(col): _*))).head()
-    (out, r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-  }
-
-  /** Exact components with a BOUNDED driver-local union-find for small
-    * graphs, falling back to [[runStar]] past the bound — the
-    * broadcast-join argument applied to components: the quotient
-    * graphs incremental maintenance feeds a solver are ∝ batch PAIRS
-    * (a few MB), yet every distributed round pays driver/job latency
-    * that dominates data volume there (the stored-labels smoke row
-    * measured ~5 s of round-trips for a graph that fits in one task).
-    * Below `maxCollected` total rows the graph collects (bounded
-    * driver footprint, like the k-means centroid pulls), a union-find
-    * solves it in one pass, and the (id, component) result returns as
-    * a small frame downstream joins broadcast. Same output contract as
-    * runStar: component = minimum member id; the incremental-clusters
-    * gates stay oracle-verbatim through either path.
-    */
-  def solveAuto(vertices: DataFrame, edges: DataFrame,
-                maxCollected: Long = 1000000L): DataFrame = {
-    // PERSIST the edge projection for the scope of the solve (r16
-    // measure-first finding): the routing count and the union-find
-    // collect are two separate materializations — uncached, EACH
-    // re-ran the caller's whole pair-derivation cascade (minhash
-    // banding + bucket expansion for the dedup-incremental gates:
-    // 1.8 s count + 1.7 s collect of identical work at sf0.1).
-    // Bounded: the collect path is ≤ maxCollected rows by
-    // construction; the fallback path pays one edge materialization
-    // before runStar re-derives (the fallback is the rare,
-    // already-expensive branch). Released in the finally — both exits
-    // return frames with no lineage into `es` (the driver path
-    // returns a local frame; runStar checkpoints).
-    val es = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try { solveAutoOn(vertices, edges, es, maxCollected) }
-    finally { es.unpersist(); () }
-  }
-
-  private def solveAutoOn(vertices: DataFrame, edges: DataFrame,
-                          es: DataFrame, maxCollected: Long): DataFrame = {
-    val ne = es.count()
-    if (ne > maxCollected) { starFallbacks.incrementAndGet(); runStar(vertices, edges) }
-    else {
-      // VERDICT r8 #7: the driver path is for BATCH-sized quotient
-      // graphs (a few MB). A future call site routing a corpus-scale
-      // graph through here would silently centralize it — flag any
-      // driver-side solve past 100k edges so the misuse is visible in
-      // logs and counters before it becomes an OOM at a bigger SF.
-      if (ne > DriverPathWarnEdges) {
-        driverPathWarnings.incrementAndGet()
-        System.err.println(
-          s"[graft] ConnectedComponents.solveAuto: driver union-find on $ne edges " +
-          s"(> $DriverPathWarnEdges) — this path is for batch-sized quotient graphs; " +
-          "corpus-scale graphs belong on runStar (raise via a smaller maxCollected)")
-      }
-      val vs = vertices.select(col("id").cast("long")).distinct().collect().map(_.getLong(0))
-      if (vs.length + ne > maxCollected) { starFallbacks.incrementAndGet(); runStar(vertices, edges) }
-      else {
-        val parent = new java.util.HashMap[Long, Long]()
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrDefault(r, r) != r) r = parent.getOrDefault(r, r)
-          var c = x
-          while (parent.getOrDefault(c, c) != c) {
-            val n = parent.getOrDefault(c, c); parent.put(c, r); c = n
-          }
-          r
-        }
-        es.collect().foreach { row =>
-          val (a, b) = (find(row.getLong(0)), find(row.getLong(1)))
-          if (a != b) parent.put(math.max(a, b), math.min(a, b))
-        }
-        // component label = MIN member id: with min-root unions the
-        // root IS the minimum of every id merged through edges; ids
-        // never seen in an edge label themselves
-        val labels = vs.map(v => (v, find(v)))
-        vertices.sparkSession.createDataFrame(labels.toSeq)
-          .toDF("id", "component")
-      }
-    }
-  }
-
   def runStar(vertices: DataFrame, edges: DataFrame, maxRounds: Int = 50): DataFrame = {
     // canonical (child u, parent v) with v < u; parallel edges collapse
-    var (e, ne, dg) = materializeRound(edges.select(
+    var e = Checkpoints.pin(edges.select(
         greatest(col("src"), col("dst")).as("u"), least(col("src"), col("dst")).as("v"))
       .filter(col("u") =!= col("v")).distinct())
     try {
@@ -306,8 +271,8 @@ object ConnectedComponents {
       var converged = false
       while (!converged && round < maxRounds) {
         // large-star over the symmetrized graph
-        val sym = e.select(col("u"), col("v"))
-          .unionByName(e.select(col("v").as("u"), col("u").as("v")))
+        val sym = e.df.select(col("u"), col("v"))
+          .unionByName(e.df.select(col("v").as("u"), col("u").as("v")))
         val lm = sym.groupBy("u").agg(min(least(col("v"), col("u"))).as("m"))
         // no distinct on large (r17, one exchange fewer per round):
         // duplicate (u, m) emissions — several neighbors re-pointing v
@@ -323,30 +288,28 @@ object ConnectedComponents {
           .unionByName(sm.filter(col("u") =!= col("m"))
             .select(col("u"), col("m").as("v")))
           .distinct()
-        val (nextE, nNext, dgNext) = materializeRound(small)
+        val next = Checkpoints.pin(small)
         // Convergence = set equality of two DISTINCT edge sets, checked
         // as |A| == |B| == |A ∪ B| — counts and digests come free (the
-        // materialize action already aggregates them), so a round costs
+        // pin's eager job already aggregates them), so a round costs
         // ONE extra job, and only in the true endgame: && short-circuits
         // past the union while the counts OR the digests still move
         // (r17: an equal-count round with moving parents previously paid
         // the union count just to learn it hadn't converged). The union
         // count remains the exact proof; the digest only gates it.
-        converged = nNext == ne && dgNext == dg &&
-          nNext == nextE.unionByName(e).distinct().count()
-        e.unpersist()
-        e = nextE
-        ne = nNext
-        dg = dgNext
+        converged = next.rows == e.rows && next.digest == e.digest &&
+          next.rows == next.df.unionByName(e.df).distinct().count()
+        e.df.unpersist()
+        e = next
         round += 1
       }
       val labels = vertices
-        .join(e.select(col("u").as("id"), col("v").as("component")), Seq("id"), "left")
+        .join(e.df.select(col("u").as("id"), col("v").as("component")), Seq("id"), "left")
         .select(col("id"), coalesce(col("component"), col("id")).as("component"))
       // write+read-back materialize (r17): the bare checkpoint() ran
       // the final labels join twice (eager count + checkpoint write)
       Checkpoints.materialize(labels)
-    } finally { e.unpersist(); () }
+    } finally { e.df.unpersist(); () }
   }
 
   /** Convergence-checked variant for unknown-diameter graphs: runs one
@@ -357,15 +320,12 @@ object ConnectedComponents {
     * state — recomputing it would replay every round); the caller owns
     * the `unpersist()` when done.
     */
-  def run(vertices: DataFrame, edges: DataFrame, maxIterations: Int = 50): DataFrame = {
-    val sym = edges.select(col("src"), col("dst"))
+  def run(vertices: DataFrame, edges: DataFrame, maxIterations: Int = 50): DataFrame =
+    Checkpoints.withPersisted(edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
       .unionByName(vertices.select(col("id").as("src"), col("id").as("dst")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      var labels = vertices.select(col("id"), col("id").as("component"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct()) { sym =>
+      var labels = vertices.select(col("id"), col("id").as("component")).persist()
       var round = 0
       var converged = false
       while (!converged && round < maxIterations) {
@@ -373,7 +333,7 @@ object ConnectedComponents {
           .join(labels.select(col("id").as("dst"), col("component")), "dst")
           .groupBy(col("src").as("id"))
           .agg(min(col("component")).as("component"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
+          .persist()
         converged = next.join(labels.withColumnRenamed("component", "prev"), "id")
           .filter(col("component") =!= col("prev"))
           .isEmpty
@@ -382,6 +342,5 @@ object ConnectedComponents {
         round += 1
       }
       labels
-    } finally { sym.unpersist(); () }
-  }
+    }
 }

@@ -84,9 +84,8 @@ object FeedConsumer {
           // and a fold that reads the feed more than once (an MV fold
           // filters it twice — inserts and deletes) must not re-run
           // the manifest diff per materialization
-          val feed = VersionedTable.changeFeed(s, tableRoot, upto, target)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
+          Checkpoints.withPersisted(
+              VersionedTable.changeFeed(s, tableRoot, upto, target)) { feed =>
             val prior = Publish.readVersion(s, derivedRoot, dv)
             if (feed.isEmpty)
               // all-property window: state unchanged, offset still moves
@@ -99,7 +98,7 @@ object FeedConsumer {
               (Publish.publish(layout(fold(prior, feed)), derivedRoot,
                 meta = Map("verb" -> "consumer-fold", "consumed_upto" -> target,
                   "consumed_from" -> upto)), "fold")
-          } finally { feed.unpersist(); () }
+          }
         }
     }
   }

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** STORED graph artifact with INCREMENTAL edge-batch maintenance — the
   * graph analogue of [[IvfIndex]] (VERDICT r8 #1): deriving the edge
@@ -102,11 +101,9 @@ object GraphIndex {
              gen: Int): (Stored, Long) = {
     require(gen > stored.spineGen,
       s"append: generation must advance past ${stored.spineGen}, got $gen")
-    val fresh = batchEdges.select(col("src"), col("dst")).distinct()
+    Checkpoints.withPersisted(batchEdges.select(col("src"), col("dst")).distinct()
       .join(spark.table(stored.edgesTable).select(col("src"), col("dst")),
-        Seq("src", "dst"), "left_anti")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+        Seq("src", "dst"), "left_anti")) { fresh =>
       // The anti-join's keys (src, dst) are a SUPERSET of the bucket
       // key (src): with subset-key co-partitioning allowed, the stored
       // side reads bucket-local (no exchange of |E| rows per fold —
@@ -141,7 +138,7 @@ object GraphIndex {
         .bucketBy(NumBuckets, "src").sortBy("src", "dst")
         .saveAsTable(stored.edgesTable)
       (next, nNew)
-    } finally { fresh.unpersist(); () }
+    }
   }
 
   /** Base-vs-appended edge counts off the generation stamps — the
@@ -208,9 +205,7 @@ object GraphIndex {
     */
   def purge(spark: SparkSession, stored: Stored, roster: DataFrame,
             newTable: String, newBase: String): (Stored, Long) = {
-    val ids = roster.select(col("node")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+    Checkpoints.withPersisted(roster.select(col("node")).distinct()) { ids =>
       val edges = spark.table(stored.edgesTable).select(col("src"), col("dst"))
       // spine retraction, pinned before the rewrite: out-edges a
       // SURVIVING src loses are exactly its edges into the roster
@@ -244,7 +239,7 @@ object GraphIndex {
         spark.read.parquet(path)
           .agg(coalesce(sum(col("out_deg")), lit(0L))).head().getLong(0)
       (next, spineEdges(stored.spinePath) - spineEdges(next.spinePath))
-    } finally { ids.unpersist(); () }
+    }
   }
 
   /** Query-time PageRank over the STORED artifacts only — the same
@@ -258,19 +253,16 @@ object GraphIndex {
   def ranks(spark: SparkSession, stored: Stored, iterations: Int,
             dampingPct: Int = 85): DataFrame = {
     require(iterations >= 1, "ranks: iterations must be >= 1")
-    val out = spark.read.parquet(stored.spinePath)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val eo = spark.table(stored.edgesTable)
+    Checkpoints.withPersisted(spark.read.parquet(stored.spinePath)) { out =>
+    Checkpoints.withPersisted(spark.table(stored.edgesTable)
       .select(col("src"), col("dst"))
-      .join(out.select(col("node").as("src"), col("out_deg")), "src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+      .join(out.select(col("node").as("src"), col("out_deg")), "src")) { eo =>
       val n = out.count()
       val result = PageRank.supersteps(eo, out, n, iterations, dampingPct)
       // persist-bracketed checkpoint: a bare checkpoint() re-ran the
       // supersteps twice (once to count, once to write — r16)
       Checkpoints.materialize(result)
-    } finally { eo.unpersist(); out.unpersist(); () }
+    }}
   }
 
   /** WARM-START rank maintenance (the incremental-rank half of VERDICT
@@ -297,13 +289,10 @@ object GraphIndex {
   def warmStartRanks(spark: SparkSession, stored: Stored, initRanks: DataFrame,
                      iterations: Int, dampingPct: Int = 85): DataFrame = {
     require(iterations >= 1, "warmStartRanks: iterations must be >= 1")
-    val out = spark.read.parquet(stored.spinePath)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val eo = spark.table(stored.edgesTable)
+    Checkpoints.withPersisted(spark.read.parquet(stored.spinePath)) { out =>
+    Checkpoints.withPersisted(spark.table(stored.edgesTable)
       .select(col("src"), col("dst"))
-      .join(out.select(col("node").as("src"), col("out_deg")), "src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+      .join(out.select(col("node").as("src"), col("out_deg")), "src")) { eo =>
       val n = out.count()
       val init = out.select(col("node"))
         .join(initRanks.select(col("node"), col("rank_fp")), Seq("node"), "left")
@@ -312,7 +301,7 @@ object GraphIndex {
       val result = PageRank.iterate(eo, out, n, init, iterations, dampingPct)
       // persist-bracketed checkpoint (see ranks — same double-compute)
       Checkpoints.materialize(result)
-    } finally { eo.unpersist(); out.unpersist(); () }
+    }}
   }
 
   /** [[ranks]] as a LAZY plan (no persist/checkpoint lifecycle) — the

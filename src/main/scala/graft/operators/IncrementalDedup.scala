@@ -182,18 +182,16 @@ object IncrementalDedup {
     // materializations each referenced `lifted` separately — uncached,
     // each re-ran the whole batch-pair derivation (pairsAgainst's
     // banding + bucket expansion; 1.4 s of repeated work at sf0.1).
-    // Bounded ∝ batch pairs; released in the finally — `solved` comes
+    // Bounded ∝ batch pairs; released when the loan ends — `solved` comes
     // back with no lineage into it (driver union-find returns a local
     // frame, the runStar fallback checkpoints).
-    val lifted = (newPairs
+    val solved = Checkpoints.withPersisted(newPairs
       .join(labels.select(col("id").as("doc_id_1"), col("component").as("comp_1")),
         Seq("doc_id_1"), "left")
       .join(labels.select(col("id").as("doc_id_2"), col("component").as("comp_2")),
         Seq("doc_id_2"), "left")
       .select(coalesce(col("comp_1"), col("doc_id_1")).as("src"),
-        coalesce(col("comp_2"), col("doc_id_2")).as("dst")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val solved = try {
+        coalesce(col("comp_2"), col("doc_id_2")).as("dst"))) { lifted =>
       val qverts = lifted.select(col("src").as("id"))
         .unionByName(lifted.select(col("dst").as("id"))).distinct()
       // exact components of the quotient graph (merge chains can be long
@@ -202,7 +200,7 @@ object IncrementalDedup {
       // ∝-batch quotient graph is by construction, and falls back to the
       // distributed runStar past the bound)
       ConnectedComponents.solveAuto(qverts, lifted)
-    } finally { lifted.unpersist(); () }
+    }
     val mapping = solved.filter(col("id") =!= col("component"))
       .select(col("id").as("old_component"), col("component").as("new_component"))
     val relabeled = labels

@@ -77,10 +77,8 @@ object KMeans {
   /** @return (cluster_id, centroid) rows, cluster_id = 0..k-1 */
   def fit(vectors: DataFrame, k: Int, iterations: Int,
           idCol: String = "vec_id", vecCol: String = "embedding"): Seq[(Int, Array[Double])] = {
-    val corpus = vectors
-      .select(col(idCol).as("id"), transform(col(vecCol), _.cast("double")).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Checkpoints.withPersisted(vectors
+      .select(col(idCol).as("id"), transform(col(vecCol), _.cast("double")).as("v"))) { corpus =>
       var centroids: Seq[(Int, Array[Double])] =
         corpus.orderBy(col("id").asc_nulls_first).limit(k).collect()
           .zipWithIndex.map { case (r, i) => i -> r.getSeq[Double](1).toArray }.toSeq
@@ -105,7 +103,7 @@ object KMeans {
         centroids = centroids.map { case (cid, c) => cid -> updated.getOrElse(cid, c) }
       }
       centroids
-    } finally { corpus.unpersist(); () }
+    }
   }
 
   /** Top-`nprobe` nearest centroids per vector (the IVF probe set),

@@ -68,10 +68,9 @@ object PageRank {
     // uncached, EACH re-runs the caller's whole edge-derivation
     // cascade (orders⋈lineitem + distinct for the graft graph; the
     // judge-measured 1.6× inflation of this row was exactly the
-    // second cascade run). Bounded at |E| rows, released in the
-    // finally with the others.
-    val e = (if (edgesDistinct) raw else raw.distinct())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // second cascade run). Bounded at |E| rows, released with the
+    // others when the loans end.
+    Checkpoints.withPersisted(if (edgesDistinct) raw else raw.distinct()) { e =>
     // ONE |V|-row aggregate serves as node spine AND degree lookup
     // (every node appears as a src by contract): initial ranks, the
     // per-round left-join spine, and the terminal degree attach all
@@ -83,25 +82,24 @@ object PageRank {
     // edge-derivation cascade (measured 39.8 s → 3.4 s at sf0.1 for 3
     // rounds over the orders⋈lineitem graph). These are bounded
     // intermediates (|E| and |V| rows), not the raw corpus, and are
-    // RELEASED in the finally below.
-    val out = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("out_deg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val eo = e.join(out.select(col("node").as("src"), col("out_deg")), "src")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    // RELEASED when the loans end.
+    Checkpoints.withPersisted(
+      e.groupBy(col("src").as("node")).agg(count(lit(1)).as("out_deg"))) { out =>
+    Checkpoints.withPersisted(
+      e.join(out.select(col("node").as("src"), col("out_deg")), "src")) { eo =>
       // |V| as ONE driver-side long off the cached spine (the KMeans
       // precedent — k centroid rows there, a single count here; a lazy
       // crossJoin(count-agg) would re-aggregate the spine every round)
       val n = out.count()
       val result = supersteps(eo, out, n, iterations, dampingPct)
-      // Materialize the result PAST the caches before releasing them: a
-      // reliable checkpoint writes the |V|-row result once and truncates
+      // Materialize the result PAST the caches before releasing them:
+      // the on-disk write runs the |V|-row result once and cuts
       // lineage, so the frame we return references neither eo nor out
-      // and the finally can unpersist both immediately. materialize
-      // (persist-bracketed) — a bare checkpoint() re-ran all three
-      // supersteps a second time for the checkpoint write (r16).
+      // and the loans can release both immediately — a bare
+      // checkpoint() re-ran all three supersteps a second time for the
+      // checkpoint write (r16).
       Checkpoints.materialize(result)
-    } finally { eo.unpersist(); out.unpersist(); e.unpersist(); () }
+    }}}
   }
 
   /** The damped-update loop shared by [[run]] (edges derived in-flow)

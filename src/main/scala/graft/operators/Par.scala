@@ -1,8 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.storage.StorageLevel
-
 /** Driver-side concurrency for INDEPENDENT Spark actions (guide §2.6
   * "overlap independent jobs"): Spark's scheduler happily runs several
   * jobs at once inside one application — actions are only sequential
@@ -19,8 +16,9 @@ import org.apache.spark.storage.StorageLevel
   * raised), after cancelling and awaiting the surviving thunks so no
   * job is still writing after the driver has thrown. Values are
   * unchanged by construction — overlap is legal only when the thunks
-  * share no uncommitted state (disjoint output paths, read-only or
-  * lineage-truncated inputs); every call site documents why that holds.
+  * share no uncommitted state (disjoint output paths, read-only inputs,
+  * or inputs pinned by `Checkpoints.pin`); every call site documents why
+  * that holds.
   */
 object Par {
 
@@ -44,31 +42,5 @@ object Par {
   def pair[A, B](a: () => A, b: () => B): (A, B) = {
     val r = run[Any](Seq(() => a(), () => b()))
     (r(0).asInstanceOf[A], r(1).asInstanceOf[B])
-  }
-
-  /** Materialize a frame behind a FLAT, persisted `LogicalRDD` plan —
-    * the [[ConnectedComponents]] round-materialization shape, shared so
-    * maintenance folds can pin a delta BEFORE overlapping the writes
-    * that consume it. Two properties matter here beyond a plain
-    * `persist()`:
-    *
-    *  1. LINEAGE CUT: the returned plan no longer references the source
-    *     table, so a concurrent `saveAsTable` append to that table
-    *     cannot invalidate it through the CacheManager's
-    *     recacheByPlan (a persisted-but-lineage-bearing delta would be
-    *     recomputed against the POST-append table — wrong values, the
-    *     Bm25Index spine-before-append hazard);
-    *  2. EAGER: the count() materializes the blocks before any
-    *     concurrent consumer starts, so two overlapping readers never
-    *     race to compute the same cache entry twice.
-    *
-    * The caller owns the `unpersist()` (use a try/finally bracket).
-    */
-  def materialize(df: DataFrame): DataFrame = {
-    val out = org.apache.spark.sql.GraftSqlBridge
-      .fromInternalRdd(df.sparkSession, df.queryExecution.toRdd, df.schema)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    out
   }
 }

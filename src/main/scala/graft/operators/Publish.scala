@@ -338,6 +338,9 @@ object Publish {
     // never both winning one head, never a torn pointer (VERDICT r15
     // #2; the in-JVM lock cannot see another driver)
     val headAtAlloc = currentVersion(rootPath)
+    // no head: this root starts a fresh history, possibly over a
+    // dropped tree whose version-dir paths it is about to reuse
+    if (headAtAlloc.isEmpty) SchemaCache.forgetUnder(rootPath)
     // HEAL a predecessor's crashed claim-release: the pointer names
     // it, so it IS committed — deleting its lingering claim here,
     // BEFORE this commit can move the head past it, preserves the

@@ -803,6 +803,7 @@ object VersionedTable {
     transforms.foreach(t => require(df.columns.contains(t.srcCol),
       s"create: partition transform on unknown column '${t.srcCol}' " +
         s"(batch columns: ${df.columns.mkString(", ")})"))
+    forgetEntries(root)
     val gen = freshGen(root)
     layout(df).write.parquet(gen)
     publishManifest(sidecar(s, gen, spec, transforms), root,
@@ -854,10 +855,9 @@ object VersionedTable {
       // (guide §2.6, r17: disjoint output paths off a persisted input;
       // concurrent first-touch is safe — the block manager's
       // per-partition compute-or-wait lock means each cached block is
-      // computed exactly once). Released below.
-      val holderRows = readFiles(s, current.filter(col("file").isin(holders: _*)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val cdcMeta = try {
+      // computed exactly once). Released when the loan ends.
+      val cdcMeta = Checkpoints.withPersisted(
+          readFiles(s, current.filter(col("file").isin(holders: _*)))) { holderRows =>
         val (_, meta) = Par.pair(
           () => holderRows
             .join(doomed, col(spec.keyCol).cast("string") === col("__doomed_k"), "left_anti")
@@ -871,7 +871,7 @@ object VersionedTable {
                 "left_semi")
               .withColumn("change_type", lit("delete"))))
         meta
-      } finally { holderRows.unpersist(); () }
+      }
       val hf = s.createDataFrame(
         java.util.Arrays.asList(holders.map(org.apache.spark.sql.Row(_)): _*),
         org.apache.spark.sql.types.StructType(Seq(
@@ -975,6 +975,16 @@ object VersionedTable {
   private val MaxEntryCacheSize = 4096
   private val entriesCache = new java.util.concurrent.ConcurrentHashMap[
     String, Array[(String, Option[String])]]()
+
+  /** Drop the cached entries of every version under `root`: [[create]]
+    * and [[shallowCloneAt]] may start a table over a dropped tree, whose
+    * manifest version paths the new history reuses.
+    */
+  private def forgetEntries(root: String): Unit = {
+    val prefix = s"${manifestRoot(root)}/"
+    entriesCache.keySet.removeIf(_.startsWith(prefix))
+    ()
+  }
 
   private def versionEntriesOf(s: SparkSession, root: String,
                                v: String): Array[(String, Option[String])] = {
@@ -2509,9 +2519,8 @@ object VersionedTable {
         aligned
           .withColumn("__mk", col(spec.keyCol).cast("string"))
           .join(src, "__mk")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       }
-    try {
+    def mergeMatched(matched: Option[DataFrame]): String = {
       val delC = matchedDeleteCond.map(coalesce(_, lit(false)))
         .getOrElse(lit(false))
       val updC =
@@ -2563,7 +2572,9 @@ object VersionedTable {
         pub(withBatch, extraMeta ++
           Map("verb" -> "merge", "n_holders" -> holders.length.toString))
       }
-    } finally { matched.foreach(_.unpersist()); () }
+    }
+    matched.fold(mergeMatched(None))(m =>
+      Checkpoints.withPersisted(m)(p => mergeMatched(Some(p))))
   }
 
   /** METADATA-ONLY band DELETE — `DELETE WHERE c BETWEEN lo AND hi`
@@ -2980,11 +2991,9 @@ object VersionedTable {
       // the CDC post-image pass, and the rewrite all read them — one
       // scan of the band's files instead of three (bounded ∝ holders,
       // released before returning)
-      val base = logicalView(
+      Checkpoints.withPersisted(logicalView(
         readFilesKeep(s, current.filter(col("file").isin(holders: _*)))
-          .drop("__file"), headM)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+          .drop("__file"), headM)) { base =>
         val unknown = sets.keySet -- base.columns.toSet
         require(unknown.isEmpty,
           s"updateWhere: SET names unknown column(s): ${unknown.mkString(", ")}")
@@ -3017,7 +3026,7 @@ object VersionedTable {
             sidecar(s, gen, spec, activeTransforms(root))),
           root, cdcMeta ++
             Map("verb" -> "update", "n_holders" -> holders.length.toString))
-      } finally { base.unpersist(); () }
+      }
     }
   }
 
@@ -3164,6 +3173,7 @@ object VersionedTable {
                      v: String): String = {
     require(publishedVersions(srcRoot).contains(v),
       s"shallowCloneAt: $v is not a published version under $srcRoot")
+    forgetEntries(dstRoot)
     publishManifest(Publish.readVersion(s, manifestRoot(srcRoot), v), dstRoot,
       inheritedMetaAt(srcRoot, v) ++ Map("verb" -> "clone",
         "src" -> s"$srcRoot@$v"))

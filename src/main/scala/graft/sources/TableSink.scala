@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.sources.{DataSourceRegister, StreamSinkProvider}
 import org.apache.spark.sql.streaming.OutputMode
 
-import graft.operators.VersionedTable
+import graft.operators.{Checkpoints, VersionedTable}
 
 /** STREAMING SINK into a [[VersionedTable]] — the first-class
   * `df.writeStream.format("graft-table")` form of the foreachBatch
@@ -199,8 +199,7 @@ private[sources] class GraftTableSink(root: String,
     // violation probe plus the keep-side commit, plus the quarantine
     // leg) — persist for the scope of this addBatch (ADVICE r15), or
     // every pass recomputes the micro-batch plan from the source
-    val full = if (expect.isDefined) full0.persist() else full0
-    try {
+    def commit(full: DataFrame): Unit = {
     // EXPECTATIONS (the DLT quality-gate trio): a row KEEPS only when
     // the predicate is TRUE — false or NULL violates (the DLT rule).
     // fail: any violation aborts the batch before anything commits;
@@ -303,7 +302,8 @@ private[sources] class GraftTableSink(root: String,
         .filter(col("action") === "optimize-compact").count()
       if (due >= 4) { VersionedTable.optimizeCompact(s, root, spec, targetBytes); () }
     }
-    } finally { if (expect.isDefined) { full.unpersist(); () } }
+    }
+    if (expect.isDefined) Checkpoints.withPersisted(full0)(commit) else commit(full0)
   }
 
   override def toString: String = s"GraftTableSink($root, mode=$mode)"

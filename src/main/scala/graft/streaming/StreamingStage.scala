@@ -2041,73 +2041,74 @@ object StreamingStage {
     // count, the fold join, the recompute semi-join, the drained
     // anti-join) — persist for the trigger's scope so the batch
     // groupBy runs once, not per consuming job (VERDICT r14 #3)
-    val delta = cs(batch.filter(col("change_type") === "insert"))
-      .select(col("lang"), col("n").as("ins_n"), col("c").as("ins_c"))
-      .join(cs(batch.filter(col("change_type") === "delete"))
-        .select(col("lang"), col("n").as("del_n"), col("c").as("del_c")),
-        Seq("lang"), "full_outer")
-      .persist()
-    try {
-    val affected = delta.count()
-    // the replay watermark gates BEFORE the fold: a redelivered window
-    // recomputed against gold's ALREADY-FOLDED head would fail its own
-    // self-audit (and double-fold if it didn't) — the check
-    // applyChanges runs internally must run here first
-    val stale = VersionedTable.headVersion(gold).exists(hv =>
-      VersionedTable.versionMeta(gold, hv).get("applied_upto")
-        .exists(a => a.drop(1).toLong >= watermark.drop(1).toLong))
-    if (stale) return affected
-    // sign-foldable columns: delta fold against gold's head
-    val folded = VersionedTable.read(spark, gold)
-      .select(col("lang"), col("n_docs"), col("sum_chars"))
-      .join(delta, Seq("lang"), "right_outer")
-      .select(col("lang"),
-        (coalesce(col("n_docs"), lit(0L)) + coalesce(col("ins_n"), lit(0L))
-          - coalesce(col("del_n"), lit(0L))).as("n_docs"),
-        (coalesce(col("sum_chars"), lit(0L)) + coalesce(col("ins_c"), lit(0L))
-          - coalesce(col("del_c"), lit(0L))).as("sum_chars"))
-    // non-sign-foldable columns: recompute the AFFECTED groups from
-    // silver at the window's END version
-    val recomputed = VersionedTable.readVersion(spark, silver, endVersion)
-      .join(delta.select("lang"), Seq("lang"), "left_semi")
-      .groupBy("lang")
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("n_chars").cast("long")).as("sum_chars"),
-        min(col("n_chars").cast("long")).as("min_chars"),
-        max(col("n_chars").cast("long")).as("max_chars"))
-    // self-audit: fold and recompute must agree on the sign-foldable
-    // columns for every surviving affected group
-    val drift = folded.join(recomputed
-        .select(col("lang"), col("n_docs").as("r_n"),
-          col("sum_chars").as("r_c")),
-        Seq("lang"), "inner")
-      .filter(col("n_docs") =!= col("r_n") || col("sum_chars") =!= col("r_c"))
-    require(drift.isEmpty,
-      "gold fold diverged from the recompute on an affected group — a " +
-        "missed pre-image in the window")
-    val survivors = folded.join(recomputed
-        .select(col("lang"), col("min_chars"), col("max_chars")),
-      Seq("lang"), "inner")
-    val drained0 = folded.join(recomputed.select("lang"), Seq("lang"), "left_anti")
-    // the audit must cover DRAINED groups too (ADVICE r14): a group
-    // absent from the silver recompute is about to tombstone — its
-    // folded count/sum must have reached exactly 0, or a missed
-    // pre-image (the bug class this audit exists for) is silently
-    // DELETING a live gold row instead of failing loudly
-    val badDrain = drained0.filter(
-      col("n_docs") =!= 0L || col("sum_chars") =!= 0L)
-    require(badDrain.isEmpty,
-      "gold fold drained a group whose folded count/sum is nonzero — a " +
-        "missed pre-image in the window would silently delete the row")
-    val drained = drained0
-      .withColumn("min_chars", lit(null).cast("long"))
-      .withColumn("max_chars", lit(null).cast("long"))
-    VersionedTable.applyChanges(spark, gold, gSpec,
-      survivors.withColumn("change_type", lit("insert"))
-        .unionByName(drained.withColumn("change_type", lit("delete"))),
-      watermark)
-    affected
-    } finally { delta.unpersist(); () }
+    graft.operators.Checkpoints.withPersisted(
+      cs(batch.filter(col("change_type") === "insert"))
+        .select(col("lang"), col("n").as("ins_n"), col("c").as("ins_c"))
+        .join(cs(batch.filter(col("change_type") === "delete"))
+          .select(col("lang"), col("n").as("del_n"), col("c").as("del_c")),
+          Seq("lang"), "full_outer")) { delta =>
+      val affected = delta.count()
+      // the replay watermark gates BEFORE the fold: a redelivered window
+      // recomputed against gold's ALREADY-FOLDED head would fail its own
+      // self-audit (and double-fold if it didn't) — the check
+      // applyChanges runs internally must run here first
+      val stale = VersionedTable.headVersion(gold).exists(hv =>
+        VersionedTable.versionMeta(gold, hv).get("applied_upto")
+          .exists(a => a.drop(1).toLong >= watermark.drop(1).toLong))
+      if (stale) affected
+      else {
+        // sign-foldable columns: delta fold against gold's head
+        val folded = VersionedTable.read(spark, gold)
+          .select(col("lang"), col("n_docs"), col("sum_chars"))
+          .join(delta, Seq("lang"), "right_outer")
+          .select(col("lang"),
+            (coalesce(col("n_docs"), lit(0L)) + coalesce(col("ins_n"), lit(0L))
+              - coalesce(col("del_n"), lit(0L))).as("n_docs"),
+            (coalesce(col("sum_chars"), lit(0L)) + coalesce(col("ins_c"), lit(0L))
+              - coalesce(col("del_c"), lit(0L))).as("sum_chars"))
+        // non-sign-foldable columns: recompute the AFFECTED groups from
+        // silver at the window's END version
+        val recomputed = VersionedTable.readVersion(spark, silver, endVersion)
+          .join(delta.select("lang"), Seq("lang"), "left_semi")
+          .groupBy("lang")
+          .agg(count(lit(1)).as("n_docs"),
+            sum(col("n_chars").cast("long")).as("sum_chars"),
+            min(col("n_chars").cast("long")).as("min_chars"),
+            max(col("n_chars").cast("long")).as("max_chars"))
+        // self-audit: fold and recompute must agree on the sign-foldable
+        // columns for every surviving affected group
+        val drift = folded.join(recomputed
+            .select(col("lang"), col("n_docs").as("r_n"),
+              col("sum_chars").as("r_c")),
+            Seq("lang"), "inner")
+          .filter(col("n_docs") =!= col("r_n") || col("sum_chars") =!= col("r_c"))
+        require(drift.isEmpty,
+          "gold fold diverged from the recompute on an affected group — a " +
+            "missed pre-image in the window")
+        val survivors = folded.join(recomputed
+            .select(col("lang"), col("min_chars"), col("max_chars")),
+          Seq("lang"), "inner")
+        val drained0 = folded.join(recomputed.select("lang"), Seq("lang"), "left_anti")
+        // the audit must cover DRAINED groups too (ADVICE r14): a group
+        // absent from the silver recompute is about to tombstone — its
+        // folded count/sum must have reached exactly 0, or a missed
+        // pre-image (the bug class this audit exists for) is silently
+        // DELETING a live gold row instead of failing loudly
+        val badDrain = drained0.filter(
+          col("n_docs") =!= 0L || col("sum_chars") =!= 0L)
+        require(badDrain.isEmpty,
+          "gold fold drained a group whose folded count/sum is nonzero — a " +
+            "missed pre-image in the window would silently delete the row")
+        val drained = drained0
+          .withColumn("min_chars", lit(null).cast("long"))
+          .withColumn("max_chars", lit(null).cast("long"))
+        VersionedTable.applyChanges(spark, gold, gSpec,
+          survivors.withColumn("change_type", lit("insert"))
+            .unionByName(drained.withColumn("change_type", lit("delete"))),
+          watermark)
+        affected
+      }
+    }
   }
 
   def streamingGoldAggMinMax(spark: SparkSession, dir: String): DataFrame = {

@@ -32,11 +32,9 @@ object GraftSqlBridge {
     spark.asInstanceOf[classic.SparkSession].cloneSession()
 
   /** Re-root a DataFrame's executed InternalRow RDD as a flat
-    * `LogicalRDD` plan — the lineage-truncation step iterative
-    * operators need (a round that references its predecessor k times
-    * grows a k^rounds-node LOGICAL plan unless each round is
-    * re-rooted; `localCheckpoint` also truncates but persists outside
-    * the cache manager, so `Dataset.unpersist` cannot release it).
+    * `LogicalRDD` plan — the lineage cut behind
+    * `graft.operators.Checkpoints.pin` and the streaming sink's
+    * micro-batch re-root.
     */
   def fromInternalRdd(spark: SparkSession,
                       rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],

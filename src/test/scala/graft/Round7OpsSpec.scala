@@ -8,23 +8,6 @@ import org.apache.spark.sql.functions._
 class Round7OpsSpec extends SparkSpec {
   import spark.implicits._
 
-  test("pageRank: leaves no persistent RDDs behind (materialize-then-release)") {
-    // The registry caller materializes at an unknown later point, so
-    // run() itself must release its persisted intermediates — a
-    // long-lived Verify/Bench session must not accumulate cache
-    // entries across invocations (VERDICT r4 "what's wrong" #1).
-    spark.catalog.clearCache()
-    val before = spark.sparkContext.getPersistentRDDs.size
-    val df = ExtQueries.graphPageRank(spark, sfSmoke)
-    assert(df.count() > 0)
-    // a second consumption of the SAME returned frame must not replay
-    // the iteration cascade against now-cold caches incorrectly either
-    assert(df.agg(sum("rank_fp")).as[Long].head() > 0)
-    val after = spark.sparkContext.getPersistentRDDs.size
-    assert(after == before,
-      s"graphPageRank stranded ${after - before} persistent RDD(s)")
-  }
-
   test("pageRank: result unchanged by the spine collapse (2-cycle + star re-check)") {
     val edges = Seq(("a", "b"), ("b", "a")).toDF("src", "dst")
     val got = operators.PageRank.run(edges, iterations = 3)

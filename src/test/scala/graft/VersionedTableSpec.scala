@@ -25,6 +25,30 @@ class VersionedTableSpec extends SparkSpec {
     root
   }
 
+  test("a dropped root re-created with other columns reads the new table, not cached state") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft-vt-recreate").toString
+    VersionedTable.create(spark, (0L until 50L).map(i => (i, s"v$i")).toDF("k", "v"),
+      root, spec)
+    assert(VersionedTable.read(spark, root).count() == 50L)
+    operators.TableStore.get.deleteTree(root)
+    VersionedTable.create(spark,
+      (100L until 130L).map(i => (i, i * 2, i % 3)).toDF("k", "w", "b"), root, spec)
+    val again = VersionedTable.read(spark, root)
+    assert(again.columns.toSeq == Seq("k", "w", "b"))
+    assert(again.as[(Long, Long, Long)].collect().toSet ==
+      (100L until 130L).map(i => (i, i * 2, i % 3)).toSet)
+    // the same holds for a plain Publish root re-published over its
+    // dropped tree
+    val proot = java.nio.file.Files.createTempDirectory("graft-pub-recreate").toString
+    Publish.publish(Seq((1L, "a")).toDF("x", "y"), proot)
+    assert(Publish.read(spark, proot).count() == 1L)
+    operators.TableStore.get.deleteTree(proot)
+    Publish.publish(Seq((2L, 3L, 4L)).toDF("p", "q", "r"), proot)
+    assert(Publish.read(spark, proot).as[(Long, Long, Long)].collect().toSeq ==
+      Seq((2L, 3L, 4L)))
+  }
+
   test("append folds without rescanning gen0; manifest row counts account for every row") {
     val root = fixture()
     val m = VersionedTable.manifest(spark, root)
