@@ -58,11 +58,6 @@ object TextFunctions {
       "")
   }
 
-  /** Hamming distance between two equal-length bit strings. */
-  def hammingDistance(s1: Column, s2: Column, bits: Int): Column =
-    lit(bits) - size(filter(sequence(lit(1), lit(bits)),
-      i => s1.substr(i, lit(1)) === s2.substr(i, lit(1))))
-
   /** Polynomial rolling hash (base 31, mod 1e9+7) over the characters —
     * a portable document fingerprint computed as a left fold (seed 0 ==
     * seed-first semantics because 0*31+c == c).

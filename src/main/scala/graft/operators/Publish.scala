@@ -209,11 +209,16 @@ object Publish {
     * head's lingering claim is deleted before any successor can move
     * the head past it, so claim+below-head always means never-committed.
     */
-  def isPendingClaim(rootPath0: String, version: String): Boolean = {
-    val rootPath = canon(rootPath0)
-    store.exists(s"$rootPath/$version.claim") &&
-      !currentVersion(rootPath).contains(version)
-  }
+  def isPendingClaim(rootPath0: String, version: String): Boolean =
+    isPendingClaim(rootPath0, version, currentVersion(rootPath0))
+
+  /** [[isPendingClaim]] against a head the caller resolved (evaluated
+    * only when a claim is outstanding).
+    */
+  def isPendingClaim(rootPath0: String, version: String,
+                     head: => Option[String]): Boolean =
+    store.exists(s"${canon(rootPath0)}/$version.claim") &&
+      !head.contains(version)
 
   /** The currently published version name, if any. */
   def currentVersion(rootPath: String): Option[String] = {
@@ -249,7 +254,7 @@ object Publish {
               audit: DataFrame => Unit = _ => (),
               partitionBy: Seq[String] = Nil,
               meta: Map[String, String] = Map.empty): String =
-    publishGuarded(df, rootPath, audit, partitionBy, () => meta, () => ())
+    publishGuarded(df, rootPath, audit, partitionBy, _ => meta, () => ())
 
   /** [[publish]] with the `_META` pairs COMPUTED INSIDE the per-root
     * commit critical section (ADVICE r15): a meta value derived from
@@ -258,12 +263,13 @@ object Publish {
     * commit, or two writers read the same predecessor and mint
     * identical stamps (breaking the strictly-increasing contract the
     * stamp exists for). `metaFn` runs exactly once, after the write +
-    * audit pass, immediately before `_META` lands in the version dir.
+    * audit pass, immediately before `_META` lands in the version dir,
+    * and receives the head the commit lands on (read at allocation).
     */
   def publishWith(df: DataFrame, rootPath: String,
                   audit: DataFrame => Unit = _ => (),
                   partitionBy: Seq[String] = Nil,
-                  metaFn: () => Map[String, String] = () => Map.empty): String =
+                  metaFn: Option[String] => Map[String, String] = _ => Map.empty): String =
     publishGuarded(df, rootPath, audit, partitionBy, metaFn, () => ())
 
   /** OPTIMISTIC-CONCURRENCY publish: commit only if the published head
@@ -284,7 +290,7 @@ object Publish {
                 audit: DataFrame => Unit = _ => (),
                 partitionBy: Seq[String] = Nil,
                 meta: Map[String, String] = Map.empty): String =
-    publishGuarded(df, rootPath, audit, partitionBy, () => meta, () => {
+    publishGuarded(df, rootPath, audit, partitionBy, _ => meta, () => {
       val found = currentVersion(rootPath)
       if (found != expectedHead) throw new PublishConflict(expectedHead, found)
     })
@@ -313,7 +319,7 @@ object Publish {
   private def publishGuarded(df: DataFrame, rootPath0: String,
                              audit: DataFrame => Unit,
                              partitionBy: Seq[String],
-                             metaFn: () => Map[String, String],
+                             metaFn: Option[String] => Map[String, String],
                              headGuard: () => Unit): String = {
     // lock key = CANONICAL root (VERDICT r15 #1): without this, two
     // in-JVM writers addressing one table as `/a/tbl` and `/a/tbl/`
@@ -328,7 +334,7 @@ object Publish {
   private def publishLocked(df: DataFrame, rootPath: String,
                             audit: DataFrame => Unit,
                             partitionBy: Seq[String],
-                            metaFn: () => Map[String, String],
+                            metaFn: Option[String] => Map[String, String],
                             headGuard: () => Unit): String = {
     val spark = df.sparkSession
     store.createDirectories(rootPath)
@@ -429,7 +435,7 @@ object Publish {
       // meta computed HERE, inside the commit critical section (ADVICE
       // r15): state-derived values (ICT stamps, watermarks) see a head
       // no concurrent writer can move until this commit's pointer swap
-      val meta = metaFn()
+      val meta = metaFn(headAtAlloc)
       if (meta.nonEmpty)
         store.writeString(s"$dir/_META",
           meta.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }
@@ -593,12 +599,19 @@ object Publish {
     */
   def read(spark: SparkSession, rootPath0: String): DataFrame = {
     val rootPath = canon(rootPath0)
-    val v = currentVersion(rootPath).getOrElse(
-      throw new IllegalStateException(s"Publish.read: no published version under $rootPath"))
-    // version dirs are immutable after their pointer swap — the schema
-    // is pinned through the per-JVM cache so only the FIRST read of a
-    // version pays the inference job (r17, guide §6)
-    val dir = s"$rootPath/$v"
+    readCommitted(spark, rootPath, currentVersion(rootPath).getOrElse(
+      throw new IllegalStateException(s"Publish.read: no published version under $rootPath")))
+  }
+
+  /** Read a version the caller already resolved as COMMITTED (the
+    * pointer named it, or a history walk checked its claim): no store
+    * call. Version dirs are immutable after their pointer swap — the
+    * schema is pinned through the per-JVM cache so only the FIRST read
+    * of a version pays the inference job (r17, guide §6).
+    */
+  def readCommitted(spark: SparkSession, rootPath: String,
+                    version: String): DataFrame = {
+    val dir = s"${canon(rootPath)}/$version"
     spark.read.schema(SchemaCache.of(spark, dir)).parquet(dir)
   }
 
@@ -635,6 +648,6 @@ object Publish {
       s"Publish.readVersion: $version is an UNDECIDED attempt (its claim " +
         "is outstanding and the pointer does not name it) — a stalled or " +
         "doomed writer's dir, not committed history")
-    spark.read.schema(SchemaCache.of(spark, dir)).parquet(dir)
+    readCommitted(spark, rootPath, version)
   }
 }

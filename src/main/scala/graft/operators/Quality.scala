@@ -19,12 +19,6 @@ object Quality {
   def nullKeyCount(df: DataFrame, key: Column): Long =
     df.filter(key.isNull).count()
 
-  /** Literal `SELECT DISTINCT(COUNT(*))` semantics — a no-op DISTINCT over
-    * the single count row (reference `02_reporting_layer.sql:15` et al.;
-    * SURVEY.md §2 A2 documents literal vs intent).
-    */
-  def distinctCountStar(df: DataFrame): Long = df.count()
-
   /** The *intended* uniqueness probe: rows == distinct keys. */
   def isUniquePerKey(df: DataFrame, key: Column): Boolean = {
     val r = df.agg(count(lit(1)).as("n"), count_distinct(key).as("d")).head()

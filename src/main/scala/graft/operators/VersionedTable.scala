@@ -38,6 +38,15 @@ import org.apache.spark.sql.functions._
   * exist, and every named file is present on disk — a manifest that
   * names a missing file is vetoed before the pointer moves.
   *
+  * ONE HEAD READ PER VERB: every verb and read resolves the head — the
+  * `_CURRENT` pointer and that version's `_META` — once at entry and
+  * passes the snapshot (`Head`) to its helpers; no helper re-reads the
+  * pointer or `_META` by root. A commit's INHERITED properties come
+  * from the head it lands on, read inside Publish's commit lock (reusing
+  * the snapshot's `_META` when the head did not move). Each store call
+  * is an object-store request at scale: a commit verb reads `_CURRENT`
+  * at most twice (its snapshot, the lock's), a read once.
+  *
   * Scale shape (100 TB): planning reads the manifest (≈ file count
   * rows), appends cost ∝ batch, deletes cost ∝ holder files, and the
   * atomic pointer swap is O(1) — Delta-log economics with the log
@@ -151,15 +160,37 @@ object VersionedTable {
     */
   private val ConstraintPrefix = "constraint:"
 
-  private def constraintMeta(root: String): Map[String, String] =
-    headVersion(root)
-      .map(v => Publish.readMeta(manifestRoot(root), v)
-        .filter(_._1.startsWith(ConstraintPrefix)))
-      .getOrElse(Map.empty)
-
   /** The table's active CHECK constraints (name → SQL expression). */
   def constraints(root: String): Map[String, String] =
-    constraintMeta(root).map { case (k, v) => k.stripPrefix(ConstraintPrefix) -> v }
+    headOf(root).fold(Map.empty[String, String])(h => withPrefix(h.meta, ConstraintPrefix))
+
+  /** The `prefix`-keyed table properties of a `_META` map, prefix
+    * stripped — every property family below is one of these.
+    */
+  private def withPrefix(meta: Map[String, String],
+                         prefix: String): Map[String, String] =
+    meta.collect { case (k, v) if k.startsWith(prefix) => k.stripPrefix(prefix) -> v }
+
+  /** A verb's head snapshot (ONE HEAD READ PER VERB, object doc): it
+    * never outlives the verb's own publish — a verb that commits more
+    * than once takes a fresh one after each commit.
+    */
+  private final case class Head(root: String, version: String,
+                                meta: Map[String, String]) {
+    /** The head's manifest, read from the version already resolved —
+      * no second pointer read and no claim check: the pointer named
+      * it, so it committed ([[Publish.read]]'s own assumption).
+      */
+    def manifest(s: SparkSession): DataFrame =
+      Publish.readCommitted(s, manifestRoot(root), version)
+  }
+
+  private def headOf(root: String): Option[Head] =
+    headVersion(root).map(v => Head(root, v, versionMeta(root, v)))
+
+  private def head(root: String): Head =
+    headOf(root).getOrElse(throw new IllegalStateException(
+      s"Publish.read: no published version under ${manifestRoot(root)}"))
 
 
   /** SCHEMA ENFORCEMENT (Delta's writer-side contract): a batch may
@@ -206,11 +237,10 @@ object VersionedTable {
     }
   }
 
-  private def enforceSchema(s: SparkSession, root: String, df: DataFrame,
+  private def enforceSchema(s: SparkSession, h: Head, df: DataFrame,
                             allowEvolution: Boolean): Unit = {
-    val head = read(s, root).schema
-    val headByName = head.map(f => f.name -> f.dataType).toMap
-    val declaredWiden = widenOf(headMetaOf(root)).keySet
+    val headByName = readHead(s, h).schema.map(f => f.name -> f.dataType).toMap
+    val declaredWiden = withPrefix(h.meta, WidenPrefix).keySet
     val drift = df.schema.flatMap { f =>
       headByName.get(f.name) match {
         case None =>
@@ -221,7 +251,7 @@ object VersionedTable {
         // [[toPhysical]] upcasts it at write (the Delta implicit-upcast
         // posture after a widen commit)
         case Some(t) if widensTo(f.dataType, t) &&
-          declaredWiden.contains(physicalNameOf(root, f.name)) => None
+          declaredWiden.contains(physicalOf(h.meta, f.name)) => None
         case Some(t) if widensTo(t, f.dataType) =>
           Some(s"${f.name}: ${t.simpleString} -> ${f.dataType.simpleString} " +
             "(declare it: widenColumn)")
@@ -263,28 +293,22 @@ object VersionedTable {
     */
   private val ColmapPrefix = "colmap:"
 
-  private def metaAt(root: String, v: String): Map[String, String] =
-    Publish.readMeta(manifestRoot(root), v)
-
-  private def colmapOf(meta: Map[String, String]): Map[String, String] =
-    meta.collect { case (k, v) if k.startsWith(ColmapPrefix) =>
-      k.stripPrefix(ColmapPrefix) -> v }
-
   /** The head's physical→logical column mapping (empty = no renames). */
   def columnMapping(root: String): Map[String, String] =
-    headVersion(root).map(v => colmapOf(metaAt(root, v))).getOrElse(Map.empty)
+    headOf(root).fold(Map.empty[String, String])(h => withPrefix(h.meta, ColmapPrefix))
 
-  private def applyColmap(df: DataFrame, m: Map[String, String]): DataFrame =
-    m.foldLeft(df) { case (d, (phys, logi)) => d.withColumnRenamed(phys, logi) }
+  /** The physical (on-file) name of LOGICAL column `logical`. */
+  private def physicalOf(meta: Map[String, String], logical: String): String =
+    withPrefix(meta, ColmapPrefix).find(_._2 == logical).map(_._1).getOrElse(logical)
 
-  private def toPhysical(df: DataFrame, root: String): DataFrame = {
-    val renamed = columnMapping(root).foldLeft(df) {
+  private def toPhysical(df: DataFrame, meta: Map[String, String]): DataFrame = {
+    val renamed = withPrefix(meta, ColmapPrefix).foldLeft(df) {
       case (d, (phys, logi)) => d.withColumnRenamed(logi, phys)
     }
     // upcast to declared widened types at write, so every generation
     // written after a widen commit stores the wide width (narrow
     // batches remain accepted — the Delta implicit-upcast posture)
-    widenOf(headMetaOf(root)).foldLeft(renamed) { case (d, (phys, ddl)) =>
+    withPrefix(meta, WidenPrefix).foldLeft(renamed) { case (d, (phys, ddl)) =>
       if (d.columns.contains(phys)) d.withColumn(phys, col(phys).cast(ddl))
       else d
     }
@@ -331,13 +355,6 @@ object VersionedTable {
     */
   private val DropPrefix = "dropcol:"
 
-  private def droppedPhysical(meta: Map[String, String]): Seq[String] =
-    meta.collect { case (k, _) if k.startsWith(DropPrefix) =>
-      k.stripPrefix(DropPrefix) }.toSeq
-
-  private def headMetaOf(root: String): Map[String, String] =
-    headVersion(root).map(metaAt(root, _)).getOrElse(Map.empty)
-
   /** TYPE WIDENING properties (`widen:<physical>` → target type DDL,
     * the Delta type-widening feature): declared promotions along the
     * safe numeric chains only. Physical files keep the width they
@@ -363,29 +380,49 @@ object VersionedTable {
       i >= 0 && j > i
     }
 
-  private def widenOf(meta: Map[String, String]): Map[String, String] =
-    meta.collect { case (k, v) if k.startsWith(WidenPrefix) =>
-      k.stripPrefix(WidenPrefix) -> v
-    }
-
   /** A version's LOGICAL view of physical rows: dropped columns hidden,
     * declared type widenings applied (on physical names — stats and
     * files track physical columns), then the rename mapping.
     */
   private def logicalView(df: DataFrame, meta: Map[String, String]): DataFrame = {
-    val widened = widenOf(meta).foldLeft(df.drop(droppedPhysical(meta): _*)) {
+    val dropped = withPrefix(meta, DropPrefix).keys.toSeq
+    val widened = withPrefix(meta, WidenPrefix).foldLeft(df.drop(dropped: _*)) {
       case (d, (phys, ddl)) =>
         if (d.columns.contains(phys)) d.withColumn(phys, col(phys).cast(ddl))
         else d
     }
-    applyColmap(widened, colmapOf(meta))
+    withPrefix(meta, ColmapPrefix).foldLeft(widened) {
+      case (d, (phys, logi)) => d.withColumnRenamed(phys, logi)
+    }
   }
 
-  private def guardDropped(root: String, df: DataFrame): Unit = {
-    val dead = df.columns.toSet intersect droppedPhysical(headMetaOf(root)).toSet
+  private def guardDropped(meta: Map[String, String], df: DataFrame): Unit = {
+    val dead = df.columns.toSet intersect withPrefix(meta, DropPrefix).keySet
     require(dead.isEmpty,
       s"batch re-introduces dropped column(s) ${dead.mkString(", ")} — old " +
         "files' bytes would resurrect through the merged schema; use a new name")
+  }
+
+  /** The checks every row-introducing commit runs against its head:
+    * the schema contract, no resurrected dropped column, CHECK
+    * constraints — all before anything is written.
+    */
+  private def admit(s: SparkSession, h: Head, df: DataFrame,
+                    allowEvolution: Boolean): Unit = {
+    enforceSchema(s, h, df, allowEvolution)
+    guardDropped(h.meta, df)
+    enforce(df, withPrefix(h.meta, ConstraintPrefix))
+  }
+
+  /** Write a batch (logical names) as a fresh generation under the
+    * head's physical names and declared widths; returns its sidecar
+    * manifest rows under the head's partition spec.
+    */
+  private def writeBatch(s: SparkSession, h: Head, spec: Spec, df: DataFrame,
+                         layout: DataFrame => DataFrame): DataFrame = {
+    val gen = freshGen(h.root)
+    layout(toPhysical(df, h.meta)).write.parquet(gen)
+    sidecar(s, gen, spec, transformsOf(h.meta))
   }
 
   /** DROP COLUMN as a property commit (zero rewrite): reads hide the
@@ -398,23 +435,23 @@ object VersionedTable {
     */
   def dropColumn(s: SparkSession, root: String, spec: Spec,
                  logical: String): String = {
-    val head = read(s, root)
-    require(head.schema.fieldNames.contains(logical),
+    val h = head(root)
+    val cur = readHead(s, h)
+    require(cur.schema.fieldNames.contains(logical),
       s"dropColumn: no such column $logical")
-    val physical = columnMapping(root).find(_._2 == logical).map(_._1)
-      .getOrElse(logical)
+    val physical = physicalOf(h.meta, logical)
     require(physical != spec.keyCol && !spec.statCols.contains(physical),
       s"dropColumn: $logical is a stat/key column — the pruning spine depends on it")
-    require(!activeTransforms(root).exists(_.srcCol == physical),
+    require(!transformsOf(h.meta).exists(_.srcCol == physical),
       s"dropColumn: $logical is a partition-transform source — dropping it " +
         "would silently end transform stats (and pruning) for every future " +
         "batch; evolvePartitioning away from it first")
-    val post = head.drop(logical)
-    constraints(root).foreach { case (n, e) =>
+    val post = cur.drop(logical)
+    withPrefix(h.meta, ConstraintPrefix).foreach { case (n, e) =>
       require(scala.util.Try(post.limit(0).filter(expr(e))).isSuccess,
         s"dropColumn: constraint $n references $logical — drop the constraint first")
     }
-    publishManifest(Publish.read(s, manifestRoot(root)), root,
+    publishManifest(h.manifest(s), root, Some(h),
       Map("verb" -> "drop-column", DropPrefix + physical -> logical))
   }
 
@@ -439,21 +476,21 @@ object VersionedTable {
     */
   def widenColumn(s: SparkSession, root: String, spec: Spec,
                   logical: String, toType: String): String = {
-    val head = read(s, root)
-    val field = head.schema.find(_.name == logical).getOrElse(
+    val h = head(root)
+    val field = readHead(s, h).schema.find(_.name == logical).getOrElse(
       throw new IllegalArgumentException(s"widenColumn: no such column $logical"))
     val target = org.apache.spark.sql.types.DataType.fromDDL(toType)
     require(widensTo(field.dataType, target),
       s"widenColumn: ${field.dataType.simpleString} -> " +
         s"${target.simpleString} is not a safe widening promotion")
-    val physical = physicalNameOf(root, logical)
+    val physical = physicalOf(h.meta, logical)
     require(physical != spec.keyCol,
       s"widenColumn: $logical is the bloom key — the bitmap hashes the " +
         "value's string rendering, which widening can change")
-    require(!activeTransforms(root).exists(_.srcCol == physical),
+    require(!transformsOf(h.meta).exists(_.srcCol == physical),
       s"widenColumn: $logical is a partition-transform source — transform " +
         "images derive from the value's rendering, which widening can change")
-    publishManifest(Publish.read(s, manifestRoot(root)), root,
+    publishManifest(h.manifest(s), root, Some(h),
       Map("verb" -> "widen-column",
         WidenPrefix + physical -> target.catalogString))
   }
@@ -468,16 +505,11 @@ object VersionedTable {
     * erased by them — a redelivered window would then RE-APPLY, and
     * an out-of-order redelivery of an OLDER window would re-insert
     * stale key values over newer ones, diverging the replica despite
-    * the exactly-once contract.
+    * the exactly-once contract. A time-addressed clone carries the set
+    * AS OF its version (the policies in force THEN).
     */
-  private def inheritedMeta(root: String): Map[String, String] =
-    headVersion(root).map(v => inheritedMetaAt(root, v)).getOrElse(Map.empty)
-
-  /** The inheritable property set AS OF a named version — what a
-    * time-addressed clone carries (the policies in force THEN).
-    */
-  private def inheritedMetaAt(root: String, v: String): Map[String, String] =
-    metaAt(root, v).filter { case (k, _) =>
+  private def inheritedOf(meta: Map[String, String]): Map[String, String] =
+    meta.filter { case (k, _) =>
       k.startsWith(ConstraintPrefix) || k.startsWith(ColmapPrefix) ||
         k.startsWith(DropPrefix) || k.startsWith(PtSpecPrefix) ||
         // both replay watermarks MUST inherit (the r12 applied_upto
@@ -492,15 +524,24 @@ object VersionedTable {
         k == "ict"
     }
 
+  /** Publish `manifest` as the next version of `root`, carrying the
+    * inheritable properties of the head it lands on. `seen` is the
+    * verb's head snapshot: when the commit lands on that same version
+    * its `_META` (immutable once the pointer named it) is reused, and
+    * only a head that moved under the verb costs a `_META` read.
+    */
   private def publishManifest(manifest: DataFrame, root: String,
+                              seen: Option[Head],
                               meta: Map[String, String],
                               dropConstraints: Set[String] = Set.empty,
                               dropMetaKeys: Set[String] = Set.empty): String =
     // the meta closure runs INSIDE Publish's per-root commit lock
-    // (ADVICE r15): the ICT stamp and the inherited head properties are
-    // state-derived — minting them outside the critical section let two
-    // concurrent same-table writers read the same predecessor and stamp
-    // identical timestamps (non-strict monotonicity); under the lock
+    // (ADVICE r15) on the head the lock read: the ICT stamp and the
+    // inherited head properties are state-derived — minting them
+    // outside the critical section let two concurrent same-table
+    // writers read the same predecessor and stamp identical timestamps
+    // (non-strict monotonicity), and a property committed between the
+    // verb's snapshot and its publish would be dropped; under the lock
     // the stamp is STRICTLY increasing across this JVM's writers
     // ONE parquet file per manifest version (r16, guide §6 small-files):
     // a manifest holds one row per data file and is re-read by every
@@ -510,8 +551,10 @@ object VersionedTable {
     // open cost. coalesce (no exchange) collapses the write to one task;
     // the Delta/Iceberg posture (one commit artifact per version).
     Publish.publishWith(manifest.coalesce(1), manifestRoot(root),
-      audit = auditFilesExist, metaFn = () => {
-        val base = (inheritedMeta(root) -- dropConstraints.map(ConstraintPrefix + _)
+      audit = auditFilesExist, metaFn = landsOn => {
+        val landedMeta = landsOn.fold(Map.empty[String, String])(v =>
+          seen.filter(_.version == v).fold(versionMeta(root, v))(_.meta))
+        val base = (inheritedOf(landedMeta) -- dropConstraints.map(ConstraintPrefix + _)
           -- dropMetaKeys) ++ meta
         stampCommitTs(root, base, explicit = meta.contains("commit_ts"))
       })
@@ -631,17 +674,18 @@ object VersionedTable {
     * no data read or moved.
     */
   def repairMissingFiles(s: SparkSession, root: String): (String, Int) = {
-    val current = Publish.read(s, manifestRoot(root))
+    val h = head(root)
+    val current = h.manifest(s)
     val entries = current.select("file").collect().map(_.getString(0))
     val missing = entries.filterNot(f =>
       TableStore.get.exists(f.stripPrefix("file:"))).toSet
-    if (missing.isEmpty) (headVersion(root).get, 0)
+    if (missing.isEmpty) (h.version, 0)
     else {
       require(missing.size < entries.length,
         s"repairMissingFiles: every data file of $root is missing — " +
           "refusing to publish an empty table as a 'repair'")
       val repaired = current.filter(!col("file").isin(missing.toSeq: _*))
-      (publishManifest(repaired, root,
+      (publishManifest(repaired, root, Some(h),
         Map("verb" -> "fsck", "n_dropped" -> missing.size.toString)),
         missing.size)
     }
@@ -652,9 +696,11 @@ object VersionedTable {
     * monotone auto-stamping of `commit_ts` for this and every later
     * commit — see [[publishManifest]]. Idempotent to re-enable.
     */
-  def setInCommitTimestamps(s: SparkSession, root: String): String =
-    publishManifest(Publish.read(s, manifestRoot(root)), root,
+  def setInCommitTimestamps(s: SparkSession, root: String): String = {
+    val h = head(root)
+    publishManifest(h.manifest(s), root, Some(h),
       Map("verb" -> "set-ict", "ict" -> "on"))
+  }
 
   /** Manifest ∪ batch-sidecar with a FAIL-FAST on stat-spec drift
     * (ADVICE r12): `allowMissingColumns = true` exists for the
@@ -698,9 +744,11 @@ object VersionedTable {
     * declares none), sorted by stat name for deterministic order.
     */
   def activeTransforms(root: String): Seq[PartitionTransform] =
-    headVersion(root).map(v => metaAt(root, v)
-      .filter(_._1.startsWith(PtSpecPrefix)).toSeq.sortBy(_._1)
-      .map(kv => PartitionTransform.parse(kv._2))).getOrElse(Nil)
+    headOf(root).fold(Seq.empty[PartitionTransform])(h => transformsOf(h.meta))
+
+  private def transformsOf(meta: Map[String, String]): Seq[PartitionTransform] =
+    withPrefix(meta, PtSpecPrefix).toSeq.sortBy(_._1)
+      .map(kv => PartitionTransform.parse(kv._2))
 
   private def ptSpecMeta(ts: Seq[PartitionTransform]): Map[String, String] =
     ts.map(t => (PtSpecPrefix + t.statName) -> t.serial).toMap
@@ -720,16 +768,16 @@ object VersionedTable {
     // stable PHYSICAL name — a transform declared against a renamed
     // column must not silently produce no stats forever (the sidecar
     // skips absent columns by contract)
-    val logical = read(s, root).schema.fieldNames.toSet
+    val h = head(root)
+    val logical = readHead(s, h).schema.fieldNames.toSet
     val resolved = transforms.map { t =>
       require(logical.contains(t.srcCol),
         s"evolvePartitioning: no such column '${t.srcCol}' " +
           s"(columns: ${logical.mkString(", ")})")
-      PartitionTransform.withSrc(t, physicalNameOf(root, t.srcCol))
+      PartitionTransform.withSrc(t, physicalOf(h.meta, t.srcCol))
     }
-    val stale = headVersion(root).map(v => metaAt(root, v).keySet
-      .filter(_.startsWith(PtSpecPrefix))).getOrElse(Set.empty)
-    publishManifest(Publish.read(s, manifestRoot(root)), root,
+    val stale = h.meta.keySet.filter(_.startsWith(PtSpecPrefix))
+    publishManifest(h.manifest(s), root, Some(h),
       ptSpecMeta(resolved) + ("verb" -> "evolve-partitioning"),
       dropMetaKeys = stale)
   }
@@ -749,14 +797,15 @@ object VersionedTable {
     */
   def renameColumn(s: SparkSession, root: String, spec: Spec,
                    from: String, to: String): String = {
-    val logical = read(s, root).schema.fieldNames.toSet
+    val h = head(root)
+    val logical = readHead(s, h).schema.fieldNames.toSet
     require(logical.contains(from), s"renameColumn: no such column $from")
     require(!logical.contains(to), s"renameColumn: $to already exists")
-    val physical = columnMapping(root).find(_._2 == from).map(_._1).getOrElse(from)
+    val physical = physicalOf(h.meta, from)
     require(physical != spec.keyCol,
       s"renameColumn: $from is the bloom key column — upsertDV/deleteRoster " +
         "select it by name on logical frames; the table would wedge")
-    publishManifest(Publish.read(s, manifestRoot(root)), root,
+    publishManifest(h.manifest(s), root, Some(h),
       Map("verb" -> "rename-column", ColmapPrefix + physical -> to))
   }
 
@@ -772,16 +821,19 @@ object VersionedTable {
                     name: String, checkSql: String): String = {
     require(name.nonEmpty && !name.contains("="),
       s"constraint name must be non-empty without '=': $name")
-    enforce(read(s, root), Map(name -> checkSql))
-    publishManifest(Publish.read(s, manifestRoot(root)), root,
+    val h = head(root)
+    enforce(readHead(s, h), Map(name -> checkSql))
+    publishManifest(h.manifest(s), root, Some(h),
       Map("verb" -> "set-constraint", ConstraintPrefix + name -> checkSql))
   }
 
   /** Drop a CHECK constraint (a property-only commit). */
   def dropConstraint(s: SparkSession, root: String, name: String): String = {
-    require(constraints(root).contains(name),
-      s"no such constraint: $name (active: ${constraints(root).keys.mkString(", ")})")
-    publishManifest(Publish.read(s, manifestRoot(root)), root,
+    val h = head(root)
+    val active = withPrefix(h.meta, ConstraintPrefix)
+    require(active.contains(name),
+      s"no such constraint: $name (active: ${active.keys.mkString(", ")})")
+    publishManifest(h.manifest(s), root, Some(h),
       Map("verb" -> "drop-constraint", "dropped" -> name),
       dropConstraints = Set(name))
   }
@@ -806,7 +858,7 @@ object VersionedTable {
     forgetEntries(root)
     val gen = freshGen(root)
     layout(df).write.parquet(gen)
-    publishManifest(sidecar(s, gen, spec, transforms), root,
+    publishManifest(sidecar(s, gen, spec, transforms), root, None,
       extraMeta ++ ptSpecMeta(transforms) + ("verb" -> "create"))
   }
 
@@ -817,15 +869,11 @@ object VersionedTable {
              layout: DataFrame => DataFrame = identity,
              extraMeta: Map[String, String] = Map.empty,
              allowEvolution: Boolean = false): String = {
-    enforceSchema(s, root, df, allowEvolution)
-    guardDropped(root, df)
-    enforce(df, constraints(root))
-    val gen = freshGen(root)
-    layout(toPhysical(df, root)).write.parquet(gen)
-    publishManifest(
-      unionSidecar(Publish.read(s, manifestRoot(root)),
-        sidecar(s, gen, spec, activeTransforms(root))),
-      root, extraMeta + ("verb" -> "append"))
+    val h = head(root)
+    admit(s, h, df, allowEvolution)
+    val batchRows = writeBatch(s, h, spec, df, layout)
+    publishManifest(unionSidecar(h.manifest(s), batchRows),
+      root, Some(h), extraMeta + ("verb" -> "append"))
   }
 
   /** Targeted delete of a roster DataFrame: bloom-probe the CURRENT
@@ -838,12 +886,13 @@ object VersionedTable {
     */
   def deleteRoster(s: SparkSession, root: String, spec: Spec,
                    roster: DataFrame): String = {
-    val current = Publish.read(s, manifestRoot(root))
+    val h = head(root)
+    val current = h.manifest(s)
     val holders = StatsSpine.rosterHolders(
         current.select(col("file"), col("bloom")), roster, spec.keyCol, spec.mBits)
       .collect().map(_.getString(0)).toSeq
     if (holders.isEmpty)
-      publishManifest(current, root, Map("verb" -> "delete-noop"))
+      publishManifest(current, root, Some(h), Map("verb" -> "delete-noop"))
     else {
       val gen = freshGen(root)
       val doomed = roster.select(col(spec.keyCol).cast("string").as("__doomed_k"))
@@ -879,8 +928,8 @@ object VersionedTable {
             "file", org.apache.spark.sql.types.StringType, nullable = false))))
       publishManifest(
         unionSidecar(current.join(hf, Seq("file"), "left_anti"),
-          sidecar(s, gen, spec, activeTransforms(root))),
-        root, cdcMeta ++
+          sidecar(s, gen, spec, transformsOf(h.meta))),
+        root, Some(h), cdcMeta ++
           Map("verb" -> "delete", "n_holders" -> holders.length.toString))
     }
   }
@@ -986,17 +1035,23 @@ object VersionedTable {
     ()
   }
 
-  private def versionEntriesOf(s: SparkSession, root: String,
-                               v: String): Array[(String, Option[String])] = {
+  /** `committed` = the caller already resolved `v` as committed (the
+    * head snapshot, or a feed step whose claim it checked): no
+    * existence or claim probe is repeated.
+    */
+  private def versionEntriesOf(s: SparkSession, root: String, v: String,
+                               committed: Boolean = false): Array[(String, Option[String])] = {
     val key = s"${manifestRoot(root)}/$v"
     Option(entriesCache.get(key)).map { hit =>
       // a vacuumed version must keep failing loudly, cache or no cache
-      require(TableStore.get.isDirectory(key),
+      require(committed || TableStore.get.isDirectory(key),
         s"Publish.readVersion: $v does not exist under ${manifestRoot(root)} (retired or never written)")
       hit
     }.getOrElse {
-      val e = Publish.readVersion(s, manifestRoot(root), v)
-        .select("file", "dv_path").collect()
+      val m =
+        if (committed) Publish.readCommitted(s, manifestRoot(root), v)
+        else Publish.readVersion(s, manifestRoot(root), v)
+      val e = m.select("file", "dv_path").collect()
         .map(r => (r.getString(0), Option(r.getString(1))))
       if (entriesCache.size() > MaxEntryCacheSize) entriesCache.clear()
       entriesCache.put(key, e)
@@ -1007,9 +1062,13 @@ object VersionedTable {
   /** [[readFiles]] of one published version, planned off the cached
     * entry list — no manifest scan, no collect job.
     */
-  private def readFilesAtVersion(s: SparkSession, root: String,
-                                 v: String): DataFrame =
-    readFilesEntries(s, versionEntriesOf(s, root, v)).drop("__file")
+  private def readFilesAtVersion(s: SparkSession, root: String, v: String,
+                                 committed: Boolean = false): DataFrame =
+    readFilesEntries(s, versionEntriesOf(s, root, v, committed)).drop("__file")
+
+  /** The head snapshot's rows under its logical column names. */
+  private def readHead(s: SparkSession, h: Head): DataFrame =
+    logicalView(readFilesAtVersion(s, h.root, h.version, committed = true), h.meta)
 
   /** Resolve (file, pos) pairs back to FULL ROWS by a position join —
     * the vectored bytes are still on disk, so a feed can carry the
@@ -1027,52 +1086,25 @@ object VersionedTable {
       .drop("__dv_file", "__dv_pos")
   }
 
-  /** The row-level content diff between two manifests — file diff plus
-    * DV-delta algebra, each side resolved through its own vectors:
-    * inserts = files B lists that A doesn't (through B's vectors) plus
-    * UN-deletes (positions vectored in A but not in B on common
-    * files); deletes = files A lists that B doesn't (through A's
-    * vectors) plus fresh vectors (positions in B but not in A on
-    * common files). [[changeFeed]] segments use the forward half
-    * (A-before-B inside a window can't un-delete); [[restore]]'s CDC
-    * uses the full algebra (head → restored content can).
-    */
-  private def manifestDiff(s: SparkSession, mA: DataFrame,
-                           mB: DataFrame): Seq[DataFrame] = {
-    val addedFiles = mB.join(mA.select("file"), Seq("file"), "left_anti")
-    val droppedFiles = mA.join(mB.select("file"), Seq("file"), "left_anti")
-    val (dvA, dvB) = (dvPositions(s, mA), dvPositions(s, mB))
-    // common-file vector deltas, each restricted to files BOTH list
-    def common(x: Option[DataFrame], y: Option[DataFrame]): Option[DataFrame] =
-      x.map { xx =>
-        val d = y.fold(xx)(yy => xx.join(yy, Seq("file", "pos"), "left_anti"))
-          .join(mA.select("file"), Seq("file"), "left_semi")
-          .join(mB.select("file"), Seq("file"), "left_semi")
-        d
-      }.filter(!_.isEmpty)
-    val inserts =
-      (if (addedFiles.isEmpty) None else Some(readFiles(s, addedFiles))) ++
-        common(dvA, dvB).map(rowsAtPositions(s, _)) // un-deletes
-    val deletes =
-      (if (droppedFiles.isEmpty) None else Some(readFiles(s, droppedFiles))) ++
-        common(dvB, dvA).map(rowsAtPositions(s, _)) // fresh vectors
-    (inserts.map(_.withColumn("change_type", lit("insert"))) ++
-      deletes.map(_.withColumn("change_type", lit("delete")))).toSeq
-  }
-
-  /** [[manifestDiff]] planned off the CACHED per-version entry lists
-    * (r17, guide §6): the forward-only diff a [[changeFeed]] segment
-    * needs — file-set membership, the added/dropped splits and their
+  /** The row-level content diff between two manifest versions, given
+    * as their entry lists — file diff plus DV-delta algebra, each side
+    * resolved through its own vectors: inserts = files B lists that A
+    * doesn't (through B's vectors) plus UN-deletes (positions vectored
+    * in A but not in B on common files); deletes = files A lists that B
+    * doesn't (through A's vectors) plus fresh vectors (positions in B
+    * but not in A on common files). [[changeFeed]] segments use the
+    * forward half (A-before-B inside a window can't un-delete);
+    * [[restore]]'s CDC uses the full algebra (head → restored content
+    * can). Planned off the CACHED per-version entry lists (r17, guide
+    * §6): file-set membership, the added/dropped splits and their
     * emptiness are driver-side set math over the immutable manifests
-    * instead of five small Spark jobs per segment (two manifest scans,
-    * two anti-join isEmpty probes, one dv-path collect per side). The
-    * DV-delta frames and their data-dependent isEmpty probes are
-    * unchanged — those read data, not metadata.
+    * instead of small Spark jobs (manifest scans, anti-join isEmpty
+    * probes, dv-path collects). The DV-delta frames and their
+    * data-dependent isEmpty probes read data, not metadata.
     */
-  private def manifestDiffAt(s: SparkSession, root: String,
-                             a: String, b: String): Seq[DataFrame] = {
-    val eA = versionEntriesOf(s, root, a)
-    val eB = versionEntriesOf(s, root, b)
+  private def manifestDiff(s: SparkSession,
+                           eA: Array[(String, Option[String])],
+                           eB: Array[(String, Option[String])]): Seq[DataFrame] = {
     val filesA = eA.map(_._1).toSet
     val filesB = eB.map(_._1).toSet
     val added = eB.filter(e => !filesA.contains(e._1))
@@ -1147,17 +1179,19 @@ object VersionedTable {
     val lo = fromV.drop(1).toLong
     val hi = toV.drop(1).toLong
     require(lo < hi, s"changeFeed: $fromV must precede $toV")
+    // the pointer is read at most once, and only if a claim is up
+    lazy val headV = headVersion(root)
+    // each committed step with its `_META`, read once
     val steps = (lo + 1 to hi).map("v%05d".format(_)).flatMap { v =>
       // a live-named dir with its `.claim` still outstanding (and the
       // pointer not naming it) is an UNDECIDED attempt — a stalled
       // writer the window's winner has already doomed — never a
       // committed step: serving it would feed rows that may yet
       // tombstone (Publish.isPendingClaim)
-      if (TableStore.get.isDirectory(s"$mroot/$v") &&
-          !Publish.isPendingClaim(mroot, v))
-        Some((v, Publish.readMeta(mroot, v).getOrElse("verb", "?")))
-      else if (Publish.isFailedAttempt(mroot, v) ||
-               Publish.isPendingClaim(mroot, v)) None // never committed
+      if (Publish.isPendingClaim(mroot, v, headV)) None
+      else if (TableStore.get.isDirectory(s"$mroot/$v"))
+        Some((v, versionMeta(root, v)))
+      else if (Publish.isFailedAttempt(mroot, v)) None // never committed
       else {
         // a plain gap (crashed attempt that left nothing) is safe to
         // skip; a RECLAIMED commit is not — its content diff is gone
@@ -1167,8 +1201,9 @@ object VersionedTable {
         None
       }
     }
-    steps.foreach { case (v, verb) =>
-      val meta = Publish.readMeta(mroot, v)
+    def verbOf(meta: Map[String, String]) = meta.getOrElse("verb", "?")
+    steps.foreach { case (v, meta) =>
+      val verb = verbOf(meta)
       require(FeedSafeVerbs.contains(verb) ||
           ContentIdenticalVerbs.contains(verb) ||
           (CdcVerbs.contains(verb) &&
@@ -1183,14 +1218,18 @@ object VersionedTable {
     // writer-emitted rows in window order.
     val ordered = fromV +: steps.map(_._1)
     val pieces = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    // window steps were checked above; only fromV is probed
     def segment(a: String, b: String): Unit =
-      pieces ++= manifestDiffAt(s, root, a, b)
+      pieces ++= manifestDiff(s,
+        versionEntriesOf(s, root, a, committed = a != fromV),
+        versionEntriesOf(s, root, b, committed = true))
     var segStart = 0
-    steps.zipWithIndex.foreach { case ((v, verb), i) =>
+    steps.zipWithIndex.foreach { case ((_, meta), i) =>
+      val verb = verbOf(meta)
       if (ContentIdenticalVerbs.contains(verb) || CdcVerbs.contains(verb)) {
         if (i > segStart) segment(ordered(segStart), ordered(i))
         if (CdcVerbs.contains(verb))
-          Publish.readMeta(mroot, v).get("cdc_path")
+          meta.get("cdc_path")
             // CDC dirs are write-once — pin the schema (r17, guide §6)
             .foreach(p => pieces += s.read.schema(SchemaCache.of(s, p)).parquet(p))
         segStart = i + 1
@@ -1200,13 +1239,14 @@ object VersionedTable {
       segment(ordered(segStart), ordered(steps.length))
     // window-end logical names (rename/drop tolerance): change_type
     // is never mapped, data columns follow toV's view
+    val endStep = steps.lastOption.filter(_._1 == toV)
+    val toMeta = endStep.fold(versionMeta(root, toV))(_._2)
     if (pieces.isEmpty)
-      logicalView(readFilesAtVersion(s, root, toV), metaAt(root, toV))
-        .withColumn("change_type", lit("insert")).limit(0)
+      logicalView(readFilesAtVersion(s, root, toV, committed = endStep.isDefined),
+        toMeta).withColumn("change_type", lit("insert")).limit(0)
     else
       logicalView(
-        pieces.reduce(_.unionByName(_, allowMissingColumns = true)),
-        metaAt(root, toV))
+        pieces.reduce(_.unionByName(_, allowMissingColumns = true)), toMeta)
   }
 
   /** [[changeFeed]] with PER-ROW COMMIT ATTRIBUTION — Delta CDF's
@@ -1346,7 +1386,7 @@ object VersionedTable {
     val gap = publishedVersionsInRange(root, maxIdxBelow, fromN)
     val need = (gap ++ window).filterNot(idx0.contains)
     val fresh = need.map(v => v ->
-      Publish.readMeta(manifestRoot(root), v).get("commit_ts").map(_.toLong))
+      versionMeta(root, v).get("commit_ts").map(_.toLong))
       .toMap
     tsIndexMerge(root, fresh)
     val all = (idx0 ++ fresh).toSeq.filter(e => vNum(e._1) <= hiN)
@@ -1401,7 +1441,7 @@ object VersionedTable {
   def history(s: SparkSession, root: String): DataFrame = {
     import s.implicits._
     publishedVersions(root).map { v =>
-      val m = metaAt(root, v)
+      val m = versionMeta(root, v)
       (v, m.getOrElse("verb", "?"), m.get("commit_ts").map(_.toLong),
         m.removedAll(Seq("verb", "commit_ts")))
     }.toDF("version", "verb", "commit_ts", "meta")
@@ -1415,8 +1455,7 @@ object VersionedTable {
     * `batchId` a streaming ingest stamped its commit with.
     */
   def headMeta(root: String, key: String): Option[String] =
-    headVersion(root).flatMap(v =>
-      Publish.readMeta(manifestRoot(root), v).get(key))
+    headOf(root).flatMap(_.meta.get(key))
 
   /** A named version's `_META` pairs (provenance surface). */
   def versionMeta(root: String, v: String): Map[String, String] =
@@ -1425,11 +1464,7 @@ object VersionedTable {
   /** Read the current version: exactly the manifest's file list,
     * under the head's logical column names.
     */
-  def read(s: SparkSession, root: String): DataFrame = {
-    val v = headVersion(root).getOrElse(throw new IllegalStateException(
-      s"Publish.read: no published version under ${manifestRoot(root)}"))
-    logicalView(readFilesAtVersion(s, root, v), headMetaOf(root))
-  }
+  def read(s: SparkSession, root: String): DataFrame = readHead(s, head(root))
 
   /** TIME TRAVEL: read version `v`'s file set — immutable generations
     * mean the result is byte-identical to what `v`'s publish
@@ -1437,7 +1472,7 @@ object VersionedTable {
     * version's logical names (a later rename is invisible to it).
     */
   def readVersion(s: SparkSession, root: String, v: String): DataFrame =
-    logicalView(readFilesAtVersion(s, root, v), metaAt(root, v))
+    logicalView(readFilesAtVersion(s, root, v), versionMeta(root, v))
 
   /** Range-pruned read off the current manifest: only files whose
     * [min, max] interval intersects the band are listed; the caller
@@ -1445,8 +1480,7 @@ object VersionedTable {
     */
   def prunedRead(s: SparkSession, root: String, c: String,
                  lo: Any, hi: Any): DataFrame =
-    logicalView(readFiles(s, StatsSpine.survivors(manifest(s, root), c, lo, hi)),
-      headMetaOf(root))
+    prunedReadBands(s, root, Seq((c, lo, hi)))
 
   /** BOX-pruned read: only files whose stats interval intersects
     * EVERY band survive — the multi-dimension skipping a Z-order
@@ -1457,15 +1491,14 @@ object VersionedTable {
     * superset contract: the caller re-applies the exact predicates.
     */
   def prunedReadBands(s: SparkSession, root: String,
-                      bands: Seq[(String, Any, Any)]): DataFrame =
-    logicalView(readFiles(s, bands.foldLeft(manifest(s, root)) {
+                      bands: Seq[(String, Any, Any)]): DataFrame = {
+    val h = head(root)
+    logicalView(readFiles(s, bands.foldLeft(h.manifest(s)) {
       case (m, (c, lo, hi)) => StatsSpine.survivors(m, c, lo, hi)
-    }), headMetaOf(root))
+    }), h.meta)
+  }
 
   // ---- hidden-partitioning reads (transform-aware pruning) ----
-
-  private def physicalNameOf(root: String, logical: String): String =
-    columnMapping(root).find(_._2 == logical).map(_._1).getOrElse(logical)
 
   /** The head schema's declared type for LOGICAL column `c` — probe
     * literals must cast to it before a transform image is computed
@@ -1479,9 +1512,9 @@ object VersionedTable {
     * transforms gain the same defense for free. None when the head
     * schema can't be resolved → the probe passes through uncast.
     */
-  private def probeType(s: SparkSession, root: String,
+  private def probeType(s: SparkSession, h: Head,
                         c: String): Option[org.apache.spark.sql.types.DataType] =
-    scala.util.Try(read(s, root).schema).toOption
+    scala.util.Try(readHead(s, h).schema).toOption
       .flatMap(_.find(_.name == c)).map(_.dataType)
 
   /** Manifest rows surviving a transform-pruned predicate on LOGICAL
@@ -1492,26 +1525,31 @@ object VersionedTable {
     * whose batch omitted the column) has NULL stats and SURVIVES —
     * partition-spec evolution's correctness contract. A transform
     * whose stat column hasn't reached the manifest yet (evolution
-    * with no append since) prunes nothing.
+    * with no append since) prunes nothing. `points` (an IN list,
+    * one value for a point lookup) prunes through every transform on
+    * `c`, a `band` only through the order-preserving ones.
     */
-  private def ptSurvivors(s: SparkSession, root: String, c: String,
-                          point: Option[Any],
+  private def ptSurvivors(s: SparkSession, h: Head, c: String,
+                          points: Seq[Any],
                           band: Option[(Any, Any)]): DataFrame = {
-    val phys = physicalNameOf(root, c)
-    val all = activeTransforms(root).filter(_.srcCol == phys)
+    val phys = physicalOf(h.meta, c)
+    val all = transformsOf(h.meta).filter(_.srcCol == phys)
     require(all.nonEmpty,
       s"no partition transform on '$c' — declare one at create() or " +
         "evolvePartitioning(), or use prunedRead's raw stats")
-    val usable = if (point.isDefined) all else all.filter(_.orderPreserving)
-    val m = manifest(s, root)
-    val dt = probeType(s, root, c)
+    val usable = if (points.nonEmpty) all else all.filter(_.orderPreserving)
+    val m = h.manifest(s)
+    val dt = probeType(s, h, c)
     def probe(v: Any): Column = dt.fold(lit(v))(t => lit(v).cast(t))
     usable.filter(t => m.columns.contains(s"min_${t.statName}"))
       .foldLeft(m) { (mm, t) =>
-        val (lo, hi) = point.map { v => val p = t(probe(v)); (p, p) }
-          .getOrElse { val (l, h) = band.get; (t(probe(l)), t(probe(h))) }
-        mm.filter(col(s"min_${t.statName}").isNull ||
-          (col(s"min_${t.statName}") <= hi && col(s"max_${t.statName}") >= lo))
+        val (mn, mx) = (col(s"min_${t.statName}"), col(s"max_${t.statName}"))
+        val hit =
+          if (points.nonEmpty)
+            points.map { v => val img = t(probe(v)); mn <= img && mx >= img }
+              .reduce(_ || _)
+          else { val (l, u) = band.get; mn <= t(probe(u)) && mx >= t(probe(l)) }
+        mm.filter(mn.isNull || hit)
       }
   }
 
@@ -1527,9 +1565,10 @@ object VersionedTable {
     * files instead of the table.
     */
   def partitionPrunedRead(s: SparkSession, root: String,
-                          c: String, v: Any): DataFrame =
-    logicalView(readFiles(s, ptSurvivors(s, root, c, Some(v), None)),
-      headMetaOf(root))
+                          c: String, v: Any): DataFrame = {
+    val h = head(root)
+    logicalView(readFiles(s, ptSurvivors(s, h, c, Seq(v), None)), h.meta)
+  }
 
   /** HIDDEN-PARTITION BAND READ: `c BETWEEN lo AND hi` pruned through
     * the ORDER-PRESERVING transforms on `c` (truncate, day — a bucket
@@ -1541,9 +1580,10 @@ object VersionedTable {
     * retire.
     */
   def partitionPrunedBandRead(s: SparkSession, root: String,
-                              c: String, lo: Any, hi: Any): DataFrame =
-    logicalView(readFiles(s, ptSurvivors(s, root, c, None, Some((lo, hi)))),
-      headMetaOf(root))
+                              c: String, lo: Any, hi: Any): DataFrame = {
+    val h = head(root)
+    logicalView(readFiles(s, ptSurvivors(s, h, c, Nil, Some((lo, hi)))), h.meta)
+  }
 
   /** The surviving file names of a transform-pruned point lookup —
     * the audit surface gates and planners use to PROVE pruning
@@ -1551,7 +1591,7 @@ object VersionedTable {
     */
   def partitionSurvivorFiles(s: SparkSession, root: String,
                              c: String, v: Any): Array[String] =
-    ptSurvivors(s, root, c, Some(v), None)
+    ptSurvivors(s, head(root), c, Seq(v), None)
       .select("file").collect().map(_.getString(0))
 
   /** HIDDEN-PARTITION ROSTER LOOKUP — `c IN (values)` pruned through
@@ -1572,23 +1612,8 @@ object VersionedTable {
     require(values.length <= 1000,
       s"partitionPrunedIn: ${values.length} probe values — a roster this " +
         "large belongs in a semi-join, not a manifest predicate")
-    val phys = physicalNameOf(root, c)
-    val all = activeTransforms(root).filter(_.srcCol == phys)
-    require(all.nonEmpty,
-      s"no partition transform on '$c' — declare one at create() or " +
-        "evolvePartitioning(), or use prunedRead's raw stats")
-    val m = manifest(s, root)
-    val dt = probeType(s, root, c)
-    def probe(v: Any): Column = dt.fold(lit(v))(t => lit(v).cast(t))
-    val pruned = all.filter(t => m.columns.contains(s"min_${t.statName}"))
-      .foldLeft(m) { (mm, t) =>
-        val anyHit = values.map { v =>
-          val img = t(probe(v))
-          col(s"min_${t.statName}") <= img && col(s"max_${t.statName}") >= img
-        }.reduce(_ || _)
-        mm.filter(col(s"min_${t.statName}").isNull || anyHit)
-      }
-    logicalView(readFiles(s, pruned), headMetaOf(root))
+    val h = head(root)
+    logicalView(readFiles(s, ptSurvivors(s, h, c, values, None)), h.meta)
   }
 
   /** RUNTIME FILE PRUNING FROM A JOIN — the Delta dynamic-file-pruning
@@ -1627,8 +1652,9 @@ object VersionedTable {
                      dim: DataFrame, dimKey: String,
                      bloomSpec: Option[Spec] = None,
                      maxImages: Int = 1024): DataFrame = {
-    val phys = physicalNameOf(root, c)
-    val dt = probeType(s, root, c)
+    val h = head(root)
+    val phys = physicalOf(h.meta, c)
+    val dt = probeType(s, h, c)
     val keys = {
       val k = dim.select(col(dimKey).as("k")).filter(col("k").isNotNull)
       dt.fold(k)(t => k.select(col("k").cast(t).as("k"))).distinct()
@@ -1640,7 +1666,7 @@ object VersionedTable {
     require(!bounds.isNullAt(0),
       "joinPrunedRead: the dim side carries no join keys")
     val (lo, hi) = (bounds.get(0), bounds.get(1))
-    val m = manifest(s, root)
+    val m = h.manifest(s)
     // null-keeping SUPERSET contract needs BOTH bounds guarded (ADVICE
     // r13): a row with non-null min and NULL max would evaluate the OR
     // to NULL and be filtered out — a pruned file, not a kept one
@@ -1648,7 +1674,7 @@ object VersionedTable {
       if (!m.columns.contains(s"min_$phys")) m
       else m.filter(col(s"min_$phys").isNull || col(s"max_$phys").isNull ||
         (col(s"min_$phys") <= lit(hi) && col(s"max_$phys") >= lit(lo)))
-    val imaged = activeTransforms(root).filter(_.srcCol == phys)
+    val imaged = transformsOf(h.meta).filter(_.srcCol == phys)
       .filter(t => m.columns.contains(s"min_${t.statName}"))
       .foldLeft(banded) { (mm, t) =>
         val imgs = keys.select(t(col("k")).as("img")).distinct()
@@ -1670,7 +1696,7 @@ object VersionedTable {
       imaged.filter(col("bloom").isNull)
         .unionByName(imaged.join(hits, Seq("file"), "left_semi"))
     }
-    logicalView(readFiles(s, pruned), headMetaOf(root))
+    logicalView(readFiles(s, pruned), h.meta)
   }
 
   /** METADATA-ONLY aggregates: COUNT(*), MIN(c), MAX(c) answered from
@@ -1755,10 +1781,11 @@ object VersionedTable {
     * file-count rows.
     */
   def partitionsTable(s: SparkSession, root: String): DataFrame = {
-    val ts = activeTransforms(root)
+    val h = head(root)
+    val ts = transformsOf(h.meta)
     require(ts.nonEmpty,
       s"partitionsTable: no partition transforms declared under $root")
-    val m = manifest(s, root)
+    val m = h.manifest(s)
     val names = ts.map(_.statName)
     val haveStats = ts.forall(t =>
       m.columns.contains(s"min_${t.statName}") &&
@@ -1815,32 +1842,33 @@ object VersionedTable {
                    feed: DataFrame, upTo: String,
                    layout: DataFrame => DataFrame = identity): Option[String] = {
     require(upTo.matches("v\\d+"), s"applyChanges: upTo must be a version name, got $upTo")
-    val applied = headMeta(root, "applied_upto")
-    if (applied.exists(a => vNum(a) >= vNum(upTo))) None
+    val h = head(root)
+    if (h.meta.get("applied_upto").exists(a => vNum(a) >= vNum(upTo))) None
     else {
-      val ins = feed.filter(col("change_type") === "insert").drop("change_type")
-      val del = feed.filter(col("change_type") === "delete").drop("change_type")
-      enforceSchema(s, root, ins, allowEvolution = false)
-      guardDropped(root, ins)
-      enforce(ins, constraints(root))
-      val current = Publish.read(s, manifestRoot(root))
-      val doomed = del.select(col(spec.keyCol))
-        .unionByName(ins.select(col(spec.keyCol))).distinct()
-      val base = vectorize(s, current, root, spec, doomed).map(_._1)
-        .getOrElse(current)
-      val meta = Map("applied_upto" -> upTo)
-      if (ins.isEmpty)
-        Some(publishManifest(base, root,
-          meta + ("verb" -> (if (base eq current) "apply-changes-noop"
-            else "apply-changes"))))
-      else {
-        val gen = freshGen(root)
-        layout(toPhysical(ins, root)).write.parquet(gen)
-        Some(publishManifest(
-          unionSidecar(base, sidecar(s, gen, spec, activeTransforms(root))),
-          root, meta + ("verb" -> "apply-changes")))
-      }
+      val (manifest, changed) = foldFeed(s, h, spec, feed, layout)
+      Some(publishManifest(manifest, root, Some(h), Map("applied_upto" -> upTo,
+        "verb" -> (if (changed) "apply-changes" else "apply-changes-noop"))))
     }
+  }
+
+  /** The merge-on-read fold of a net change feed onto head `h` (shared
+    * by [[applyChanges]] and [[rebaseBranch]]): every key among the
+    * feed's deletes or inserts is deletion-vectored, the inserts land
+    * as one fresh generation. Returns the manifest rows and whether
+    * the fold changed anything.
+    */
+  private def foldFeed(s: SparkSession, h: Head, spec: Spec, feed: DataFrame,
+                       layout: DataFrame => DataFrame): (DataFrame, Boolean) = {
+    val ins = feed.filter(col("change_type") === "insert").drop("change_type")
+    val del = feed.filter(col("change_type") === "delete").drop("change_type")
+    admit(s, h, ins, allowEvolution = false)
+    val current = h.manifest(s)
+    val doomed = del.select(col(spec.keyCol))
+      .unionByName(ins.select(col(spec.keyCol))).distinct()
+    val base = vectorize(s, current, h.root, spec, doomed).map(_._1)
+      .getOrElse(current)
+    if (ins.isEmpty) (base, !(base eq current))
+    else (unionSidecar(base, writeBatch(s, h, spec, ins, layout)), true)
   }
 
   /** APPLY CHANGES ... SEQUENCE BY (the DLT contract for EXTERNAL
@@ -1885,9 +1913,9 @@ object VersionedTable {
       .orderBy(col(seqCol).desc, col("change_type").desc)
     val net0 = feed.withColumn("__seq_rn", row_number().over(w))
       .filter(col("__seq_rn") === 1).drop("__seq_rn")
-    val keepSeq = headVersion(root).isDefined &&
-      scala.util.Try(read(s, root).schema.fieldNames.contains(seqCol))
-        .getOrElse(false)
+    val keepSeq = headOf(root).exists(h =>
+      scala.util.Try(readHead(s, h).schema.fieldNames.contains(seqCol))
+        .getOrElse(false))
     applyChanges(s, root, spec,
       if (keepSeq) net0 else net0.drop(seqCol), upTo, layout)
   }
@@ -1911,8 +1939,9 @@ object VersionedTable {
   def maintenancePlan(s: SparkSession, root: String,
                       targetBytes: Long): DataFrame = {
     import s.implicits._
-    val m = manifest(s, root)
-    val ts = activeTransforms(root)
+    val h = head(root)
+    val m = h.manifest(s)
+    val ts = transformsOf(h.meta)
     val looseCond =
       if (ts.isEmpty) lit(false)
       else ts.map { t =>
@@ -2121,35 +2150,30 @@ object VersionedTable {
     */
   private def tsIndexMerge(root: String,
                            fresh: Map[String, Option[Long]]): Unit =
-    if (fresh.nonEmpty) {
-      val p = s"${manifestRoot(root)}/_ts_index"
-      val all = tsIndexRead(root) ++ fresh
-      val tmp = p + ".tmp-" + java.util.UUID.randomUUID().toString.take(8)
-      TableStore.get.writeString(tmp,
-        all.toSeq.sortBy(e => vNum(e._1))
-          .map { case (v, t) => s"$v=${t.fold("-")(_.toString)}" }
-          .mkString("\n"))
-      TableStore.get.atomicSwap(tmp, p)
-    }
+    if (fresh.nonEmpty) tsIndexWrite(root, tsIndexRead(root) ++ fresh)
+
+  /** Replace `_ts_index` atomically (staged + swap). */
+  private def tsIndexWrite(root: String, all: Map[String, Option[Long]]): Unit = {
+    val p = s"${manifestRoot(root)}/_ts_index"
+    val tmp = p + ".tmp-" + java.util.UUID.randomUUID().toString.take(8)
+    TableStore.get.writeString(tmp,
+      all.toSeq.sortBy(e => vNum(e._1))
+        .map { case (v, t) => s"$v=${t.fold("-")(_.toString)}" }
+        .mkString("\n"))
+    TableStore.get.atomicSwap(tmp, p)
+  }
 
   private def tsIndex(root: String,
                       versions: Seq[String]): Map[String, Option[Long]] = {
-    val p = s"${manifestRoot(root)}/_ts_index"
     val existing: Map[String, Option[Long]] = tsIndexRead(root)
     val missing = versions.filterNot(existing.contains)
     if (missing.isEmpty) existing
     else {
       val fresh = missing.map(v => v ->
-        Publish.readMeta(manifestRoot(root), v).get("commit_ts").map(_.toLong))
+        versionMeta(root, v).get("commit_ts").map(_.toLong))
       val keep = versions.toSet
       val all = (existing ++ fresh).filter { case (v, _) => keep(v) }
-      val tmp = s"${manifestRoot(root)}/_ts_index.tmp-" +
-        java.util.UUID.randomUUID().toString.take(8)
-      TableStore.get.writeString(tmp,
-        all.toSeq.sortBy(e => vNum(e._1))
-          .map { case (v, t) => s"$v=${t.fold("-")(_.toString)}" }
-          .mkString("\n"))
-      TableStore.get.atomicSwap(tmp, p)
+      tsIndexWrite(root, all)
       all
     }
   }
@@ -2241,7 +2265,7 @@ object VersionedTable {
           org.apache.spark.sql.types.StringType, nullable = false))))
     logicalView(readFilesKeep(s, Publish.readVersion(s, mroot, v))
       .join(broadcast(fv), Seq("__file"))
-      .drop("__file"), metaAt(root, v))
+      .drop("__file"), versionMeta(root, v))
   }
 
   /** MERGE-ON-READ targeted delete (the deletion-vector sibling of
@@ -2267,12 +2291,13 @@ object VersionedTable {
   def deleteRosterDV(s: SparkSession, root: String, spec: Spec,
                      roster: DataFrame,
                      extraMeta: Map[String, String] = Map.empty): String = {
-    val current = Publish.read(s, manifestRoot(root))
+    val h = head(root)
+    val current = h.manifest(s)
     vectorize(s, current, root, spec, roster) match {
       case None =>
-        publishManifest(current, root, extraMeta + ("verb" -> "delete-dv-noop"))
+        publishManifest(current, root, Some(h), extraMeta + ("verb" -> "delete-dv-noop"))
       case Some((rows, nHolders)) =>
-        publishManifest(rows, root,
+        publishManifest(rows, root, Some(h),
           extraMeta + ("verb" -> "delete-dv", "n_holders" -> nHolders.toString))
     }
   }
@@ -2351,20 +2376,17 @@ object VersionedTable {
                updates: DataFrame,
                layout: DataFrame => DataFrame = identity,
                allowEvolution: Boolean = false): String = {
-    enforceSchema(s, root, updates, allowEvolution)
-    guardDropped(root, updates)
-    enforce(updates, constraints(root))
-    val current = Publish.read(s, manifestRoot(root))
-    val gen = freshGen(root)
-    layout(toPhysical(updates, root)).write.parquet(gen)
-    val batchRows = sidecar(s, gen, spec, activeTransforms(root))
+    val h = head(root)
+    admit(s, h, updates, allowEvolution)
+    val current = h.manifest(s)
+    val batchRows = writeBatch(s, h, spec, updates, layout)
     val base = vectorize(s, current, root, spec,
       updates.select(col(spec.keyCol))) match {
       case None => current
       case Some((rows, _)) => rows
     }
     publishManifest(unionSidecar(base, batchRows),
-      root, Map("verb" -> "upsert-dv"))
+      root, Some(h), Map("verb" -> "upsert-dv"))
   }
 
   /** MERGE — the full three-clause conditional upsert (SQL/Delta
@@ -2431,22 +2453,25 @@ object VersionedTable {
             extraMeta: Map[String, String] = Map.empty,
             expectedHead: Option[String] = None,
             allowEvolution: Boolean = false): String = {
-    // expectedHead = the OCC conditional commit ([[Publish.publishIf]]):
-    // the pointer swaps only if the head is still what the caller read
-    // — [[mergeOcc]] threads it; direct callers are single-writer
-    def pub(m: DataFrame, meta: Map[String, String]): String =
-      expectedHead match {
-        case None => publishManifest(m, root, meta)
-        case some => Publish.publishIf(m, manifestRoot(root), some,
-          audit = auditFilesExist, meta = inheritedMeta(root) ++ meta)
-      }
     require(matchedUpdate.nonEmpty || matchedDeleteCond.nonEmpty ||
       insertNotMatched, "merge: no clauses (update, delete, or insert)")
     require(matchedUpdateCond.isEmpty || matchedUpdate.nonEmpty,
       "merge: matchedUpdateCond without matchedUpdate SET expressions")
-    guardDropped(root, source)
-    val headM = headMetaOf(root)
-    val headSchema = read(s, root).schema
+    val h = head(root)
+    // expectedHead = the OCC conditional commit ([[Publish.publishIf]]):
+    // the pointer swaps only if the head is still what the caller read
+    // — [[mergeOcc]] threads it; direct callers are single-writer. A
+    // conditional commit lands only on `expectedHead`: either that is
+    // the snapshot (whose properties it inherits) or the head has moved
+    // past it and the commit loses with PublishConflict
+    def pub(m: DataFrame, meta: Map[String, String]): String =
+      expectedHead match {
+        case None => publishManifest(m, root, Some(h), meta)
+        case some => Publish.publishIf(m, manifestRoot(root), some,
+          audit = auditFilesExist, meta = inheritedOf(h.meta) ++ meta)
+      }
+    guardDropped(h.meta, source)
+    val headSchema = readHead(s, h).schema
     val tableCols = headSchema.fieldNames.toSeq
     // SCHEMA EVOLUTION on MERGE (the Delta autoMerge posture, opt-in):
     // source columns the table lacks become new table columns — the
@@ -2480,7 +2505,7 @@ object VersionedTable {
     require(dupes.isEmpty,
       "merge: multiple source rows share a key — a target row would " +
         "match more than one source row (SQL MERGE refuses this)")
-    val current = Publish.read(s, manifestRoot(root))
+    val current = h.manifest(s)
     val holders = StatsSpine.rosterHolders(
         current.select(col("file"), col("bloom")),
         source.select(col(spec.keyCol)), spec.keyCol, spec.mBits)
@@ -2511,7 +2536,7 @@ object VersionedTable {
         // carry it yet (the full-table read gets this from mergeSchema;
         // a subset read must state it explicitly — found by the
         // evolve-then-merge-old-keys spec)
-        val aligned = headSchema.fields.foldLeft(logicalView(live, headM)) {
+        val aligned = headSchema.fields.foldLeft(logicalView(live, h.meta)) {
           (f, fl) =>
             if (f.columns.contains(fl.name)) f
             else f.withColumn(fl.name, lit(null).cast(fl.dataType))
@@ -2558,17 +2583,14 @@ object VersionedTable {
         pub(current, extraMeta + ("verb" -> "merge-noop"))
       else {
         batch.filter(_ => nBatch > 0).foreach { b =>
-          enforceSchema(s, root, b, allowEvolution = allowEvolution)
-          enforce(b, constraints(root))
+          enforceSchema(s, h, b, allowEvolution = allowEvolution)
+          enforce(b, withPrefix(h.meta, ConstraintPrefix))
         }
         val base = claimedPos.filter(_ => anyClaimed)
           .map(cp => commitDv(s, current, root, cp))
           .getOrElse(current)
-        val withBatch = batch.filter(_ => nBatch > 0).fold(base) { b =>
-          val gen = freshGen(root)
-          layout(toPhysical(b, root)).write.parquet(gen)
-          unionSidecar(base, sidecar(s, gen, spec, activeTransforms(root)))
-        }
+        val withBatch = batch.filter(_ => nBatch > 0).fold(base)(b =>
+          unionSidecar(base, writeBatch(s, h, spec, b, layout)))
         pub(withBatch, extraMeta ++
           Map("verb" -> "merge", "n_holders" -> holders.length.toString))
       }
@@ -2602,35 +2624,46 @@ object VersionedTable {
                  lo: Any, hi: Any): String = {
     require(spec.statCols.contains(c),
       s"deleteBand: $c carries no min/max stats (statCols: ${spec.statCols})")
-    val current = Publish.read(s, manifestRoot(root))
+    val h = head(root)
+    val current = h.manifest(s)
+    val (base, nDropped, nStraddlers) = dropBand(s, root, current, c, lo, hi)
+    if (nDropped + nStraddlers == 0)
+      publishManifest(current, root, Some(h), Map("verb" -> "delete-band-noop"))
+    else
+      publishManifest(base, root, Some(h), Map("verb" -> "delete-band",
+        "n_dropped_files" -> nDropped.toString, "n_straddlers" -> nStraddlers.toString))
+  }
+
+  /** The band half of [[deleteBand]] and [[replaceWhere]]: files whose
+    * stats prove every row in `[lo, hi]` drop from `current` unread,
+    * and only the straddlers pay a position scan whose in-band rows are
+    * deletion-vectored. Returns the manifest rows and the counts of
+    * dropped and straddling files.
+    */
+  private def dropBand(s: SparkSession, root: String, current: DataFrame,
+                       c: String, lo: Any, hi: Any): (DataFrame, Int, Int) = {
     val inBand = col(s"min_$c") >= lit(lo) && col(s"max_$c") <= lit(hi)
     val overlaps = col(s"min_$c") <= lit(hi) && col(s"max_$c") >= lit(lo)
     val fullFiles = current.filter(inBand)
       .select("file").collect().map(_.getString(0)).toSeq
     val stFiles = current.filter(overlaps && !inBand)
       .select("file").collect().map(_.getString(0)).toSeq
-    if (fullFiles.isEmpty && stFiles.isEmpty)
-      publishManifest(current, root, Map("verb" -> "delete-band-noop"))
-    else {
-      val afterDrop =
-        if (fullFiles.isEmpty) current
-        else current.filter(!col("file").isin(fullFiles: _*))
-      val base =
-        if (stFiles.isEmpty) afterDrop
-        else {
-          // position scan of ONLY the straddlers; re-deletes of
-          // already-vectored positions are absorbed by the DV fold
-          val fresh = s.read.parquet(stFiles: _*)
-            .select(col("_metadata.file_path").as("file"),
-              col("_metadata.row_index").as("pos"), col(c).as("__c"))
-            .filter(col("__c") >= lit(lo) && col("__c") <= lit(hi))
-            .select("file", "pos")
-          commitDv(s, afterDrop, root, fresh)
-        }
-      publishManifest(base, root, Map("verb" -> "delete-band",
-        "n_dropped_files" -> fullFiles.length.toString,
-        "n_straddlers" -> stFiles.length.toString))
-    }
+    val afterDrop =
+      if (fullFiles.isEmpty) current
+      else current.filter(!col("file").isin(fullFiles: _*))
+    val base =
+      if (stFiles.isEmpty) afterDrop
+      else {
+        // position scan of ONLY the straddlers; re-deletes of
+        // already-vectored positions are absorbed by the DV fold
+        val fresh = s.read.parquet(stFiles: _*)
+          .select(col("_metadata.file_path").as("file"),
+            col("_metadata.row_index").as("pos"), col(c).as("__c"))
+          .filter(col("__c") >= lit(lo) && col("__c") <= lit(hi))
+          .select("file", "pos")
+        commitDv(s, afterDrop, root, fresh)
+      }
+    (base, fullFiles.length, stFiles.length)
   }
 
   /** TRANSACTIONAL BAND OVERWRITE (Delta's
@@ -2659,9 +2692,8 @@ object VersionedTable {
                    layout: DataFrame => DataFrame = identity): String = {
     require(spec.statCols.contains(c),
       s"replaceWhere: $c carries no min/max stats (statCols: ${spec.statCols})")
-    enforceSchema(s, root, batch, allowEvolution = false)
-    guardDropped(root, batch)
-    enforce(batch, constraints(root))
+    val h = head(root)
+    admit(s, h, batch, allowEvolution = false)
     // NULL never matches a band (the stats-pruning rule) — so a NULL
     // band value VIOLATES the replace contract rather than slipping
     // past a bare negation (coalesce, the expectation-sink NULL rule)
@@ -2671,33 +2703,10 @@ object VersionedTable {
       s"replaceWhere: $outside batch row(s) fall outside $c in [$lo, $hi] " +
         "(NULL counts as outside) — a replace must only write rows the " +
         "predicate claims")
-    val current = Publish.read(s, manifestRoot(root))
-    val inBand = col(s"min_$c") >= lit(lo) && col(s"max_$c") <= lit(hi)
-    val overlaps = col(s"min_$c") <= lit(hi) && col(s"max_$c") >= lit(lo)
-    val fullFiles = current.filter(inBand)
-      .select("file").collect().map(_.getString(0)).toSeq
-    val stFiles = current.filter(overlaps && !inBand)
-      .select("file").collect().map(_.getString(0)).toSeq
-    val afterDrop =
-      if (fullFiles.isEmpty) current
-      else current.filter(!col("file").isin(fullFiles: _*))
-    val base =
-      if (stFiles.isEmpty) afterDrop
-      else {
-        val fresh = s.read.parquet(stFiles: _*)
-          .select(col("_metadata.file_path").as("file"),
-            col("_metadata.row_index").as("pos"), col(c).as("__c"))
-          .filter(col("__c") >= lit(lo) && col("__c") <= lit(hi))
-          .select("file", "pos")
-        commitDv(s, afterDrop, root, fresh)
-      }
-    val gen = freshGen(root)
-    layout(toPhysical(batch, root)).write.parquet(gen)
-    publishManifest(
-      unionSidecar(base, sidecar(s, gen, spec, activeTransforms(root))),
-      root, Map("verb" -> "replace-where",
-        "n_dropped_files" -> fullFiles.length.toString,
-        "n_straddlers" -> stFiles.length.toString))
+    val (base, nDropped, nStraddlers) = dropBand(s, root, h.manifest(s), c, lo, hi)
+    publishManifest(unionSidecar(base, writeBatch(s, h, spec, batch, layout)),
+      root, Some(h), Map("verb" -> "replace-where",
+        "n_dropped_files" -> nDropped.toString, "n_straddlers" -> nStraddlers.toString))
   }
 
   /** OPTIMISTIC-CONCURRENCY MERGE: [[merge]] with the conditional
@@ -2761,14 +2770,7 @@ object VersionedTable {
   def vacuumOlderThan(s: SparkSession, root: String, cutoffTs: Long,
                       consumers: Seq[String] = Nil,
                       spoolRetainMs: Option[Long] = None): (Seq[String], Int, Int) = {
-    val versions = publishedVersions(root)
-    val idx = tsIndex(root, versions)
-    var effective = Option.empty[Long]
-    val instants = versions.map { v =>
-      effective = idx.getOrElse(v, None).orElse(effective)
-      v -> effective
-    }
-    val keep = instants.count(_._2.exists(_ >= cutoffTs)).max(1)
+    val keep = effectiveCommitTs(root).values.count(_.exists(_ >= cutoffTs)).max(1)
     vacuum(s, root, keepLast = keep, consumers = consumers,
       spoolRetainMs = spoolRetainMs)
   }
@@ -2935,17 +2937,18 @@ object VersionedTable {
     * until the next DV commit.
     */
   def compactDeletes(s: SparkSession, root: String, spec: Spec): String = {
-    val current = Publish.read(s, manifestRoot(root))
+    val h = head(root)
+    val current = h.manifest(s)
     val dvd = current.filter(col("dv_path").isNotNull)
     if (dvd.isEmpty)
-      publishManifest(current, root, Map("verb" -> "compact-dv-noop"))
+      publishManifest(current, root, Some(h), Map("verb" -> "compact-dv-noop"))
     else {
       val gen = freshGen(root)
       readFiles(s, dvd).write.parquet(gen)
       publishManifest(
         unionSidecar(current.filter(col("dv_path").isNull),
-          sidecar(s, gen, spec, activeTransforms(root))),
-        root,
+          sidecar(s, gen, spec, transformsOf(h.meta))),
+        root, Some(h),
         Map("verb" -> "compact-dv", "n_compacted" -> dvd.count().toString))
     }
   }
@@ -2979,13 +2982,13 @@ object VersionedTable {
                   cond: Column, sets: Map[String, Column],
                   layout: DataFrame => DataFrame = identity): String = {
     require(sets.nonEmpty, "updateWhere: no SET expressions")
-    val current = Publish.read(s, manifestRoot(root))
-    val headM = headMetaOf(root)
-    val holders = logicalView(readFilesKeep(s, current), headM)
+    val h = head(root)
+    val current = h.manifest(s)
+    val holders = logicalView(readFilesKeep(s, current), h.meta)
       .filter(cond)
       .select("__file").distinct().collect().map(_.getString(0)).toSeq
     if (holders.isEmpty)
-      publishManifest(current, root, Map("verb" -> "update-noop"))
+      publishManifest(current, root, Some(h), Map("verb" -> "update-noop"))
     else {
       // holder rows persisted for the verb: the CDC pre-image pass,
       // the CDC post-image pass, and the rewrite all read them — one
@@ -2993,7 +2996,7 @@ object VersionedTable {
       // released before returning)
       Checkpoints.withPersisted(logicalView(
         readFilesKeep(s, current.filter(col("file").isin(holders: _*)))
-          .drop("__file"), headM)) { base =>
+          .drop("__file"), h.meta)) { base =>
         val unknown = sets.keySet -- base.columns.toSet
         require(unknown.isEmpty,
           s"updateWhere: SET names unknown column(s): ${unknown.mkString(", ")}")
@@ -3006,8 +3009,9 @@ object VersionedTable {
             .map(e => when(col("__match"), e).otherwise(col(c)).as(c))
             .getOrElse(col(c))
         } :+ col("__match"): _*)
-        enforceSchema(s, root, updated.drop("__match"), allowEvolution = false)
-        enforce(updated.filter(col("__match")).drop("__match"), constraints(root))
+        enforceSchema(s, h, updated.drop("__match"), allowEvolution = false)
+        enforce(updated.filter(col("__match")).drop("__match"),
+          withPrefix(h.meta, ConstraintPrefix))
         // CDC emission and the holder rewrite both read the persisted
         // base and write disjoint paths — overlapped (guide §2.6, r17);
         // concurrent first-touch of the cache is safe (per-partition
@@ -3015,16 +3019,16 @@ object VersionedTable {
         val gen = freshGen(root)
         val (cdcMeta, _) = Par.pair(
           () => writeCdc(s, root,
-            toPhysical(matched.filter(col("__match")).drop("__match"), root)
+            toPhysical(matched.filter(col("__match")).drop("__match"), h.meta)
               .withColumn("change_type", lit("delete"))
               .unionByName(
-                toPhysical(updated.filter(col("__match")).drop("__match"), root)
+                toPhysical(updated.filter(col("__match")).drop("__match"), h.meta)
                   .withColumn("change_type", lit("insert")))),
-          () => layout(toPhysical(updated.drop("__match"), root)).write.parquet(gen))
+          () => layout(toPhysical(updated.drop("__match"), h.meta)).write.parquet(gen))
         publishManifest(
           unionSidecar(current.filter(!col("file").isin(holders: _*)),
-            sidecar(s, gen, spec, activeTransforms(root))),
-          root, cdcMeta ++
+            sidecar(s, gen, spec, transformsOf(h.meta))),
+          root, Some(h), cdcMeta ++
             Map("verb" -> "update", "n_holders" -> holders.length.toString))
       }
     }
@@ -3051,13 +3055,14 @@ object VersionedTable {
                       targetBytes: Long,
                       layout: DataFrame => DataFrame = identity): String = {
     require(targetBytes > 0, s"optimizeCompact: targetBytes must be > 0")
-    val current = Publish.read(s, manifestRoot(root))
+    val h = head(root)
+    val current = h.manifest(s)
     val files = current.select("file").collect().map(_.getString(0))
     val sized = files.map(f =>
       f -> TableStore.get.size(f.stripPrefix("file:")))
     val small = sized.filter(_._2 < targetBytes).map(_._1)
     if (small.length < 2)
-      publishManifest(current, root, Map("verb" -> "optimize-noop"))
+      publishManifest(current, root, Some(h), Map("verb" -> "optimize-noop"))
     else {
       val smallBytes = sized.filter(_._2 < targetBytes).map(_._2).sum
       val nOut = math.max(1L, (smallBytes + targetBytes - 1) / targetBytes).toInt
@@ -3067,8 +3072,8 @@ object VersionedTable {
         .write.parquet(gen)
       publishManifest(
         unionSidecar(current.filter(!col("file").isin(small: _*)),
-          sidecar(s, gen, spec, activeTransforms(root))),
-        root, Map("verb" -> "optimize-compact",
+          sidecar(s, gen, spec, transformsOf(h.meta))),
+        root, Some(h), Map("verb" -> "optimize-compact",
           "n_small" -> small.length.toString, "n_out" -> nOut.toString))
     }
   }
@@ -3091,17 +3096,17 @@ object VersionedTable {
     * restore to the previous commit diffs one commit's worth).
     */
   def restore(s: SparkSession, root: String, v: String): String = {
-    val head = headVersion(root)
-    require(!head.contains(v), s"restore: $v is already the head")
-    val mroot = manifestRoot(root)
-    val mHead = Publish.read(s, mroot)
-    val mTo = Publish.readVersion(s, mroot, v)
-    val diff = manifestDiff(s, mHead, mTo)
+    val h = head(root)
+    require(h.version != v, s"restore: $v is already the head")
+    val eTo = versionEntriesOf(s, root, v)
+    val diff = manifestDiff(s,
+      versionEntriesOf(s, root, h.version, committed = true), eTo)
     val cdcMeta = writeCdc(s, root,
       if (diff.isEmpty)
-        readFiles(s, mTo).withColumn("change_type", lit("insert")).limit(0)
+        readFilesEntries(s, eTo).drop("__file")
+          .withColumn("change_type", lit("insert")).limit(0)
       else diff.reduce(_.unionByName(_, allowMissingColumns = true)))
-    publishManifest(mTo, root,
+    publishManifest(Publish.readCommitted(s, manifestRoot(root), v), root, Some(h),
       cdcMeta ++ Map("verb" -> "restore", "restored" -> v))
   }
 
@@ -3174,8 +3179,8 @@ object VersionedTable {
     require(publishedVersions(srcRoot).contains(v),
       s"shallowCloneAt: $v is not a published version under $srcRoot")
     forgetEntries(dstRoot)
-    publishManifest(Publish.readVersion(s, manifestRoot(srcRoot), v), dstRoot,
-      inheritedMetaAt(srcRoot, v) ++ Map("verb" -> "clone",
+    publishManifest(Publish.readVersion(s, manifestRoot(srcRoot), v), dstRoot, None,
+      inheritedOf(versionMeta(srcRoot, v)) ++ Map("verb" -> "clone",
         "src" -> s"$srcRoot@$v"))
   }
 
@@ -3224,22 +3229,14 @@ object VersionedTable {
     */
   def fastForward(s: SparkSession, mainRoot: String,
                   branchRoot: String): String = {
-    val vs = publishedVersions(branchRoot)
-    require(vs.nonEmpty, s"fastForward: no published versions under $branchRoot")
-    val born = metaAt(branchRoot, vs.head)
-    val src = born.get("src")
-    require(born.get("verb").contains("clone") && src.isDefined,
-      s"fastForward: $branchRoot is not a branch (its v1 is not a clone)")
-    val at = src.get.lastIndexOf('@')
-    val (srcRoot, vBase) = (src.get.substring(0, at), src.get.substring(at + 1))
-    require(srcRoot == mainRoot,
-      s"fastForward: branch was cut from $srcRoot, not $mainRoot")
+    val (vs, vBase) = branchBase("fastForward", mainRoot, branchRoot)
     // fast-path refusal before burning a version number; publishIf
     // re-checks under the same contract at the pointer swap
     val mainHead = Publish.currentVersion(manifestRoot(mainRoot))
     if (!mainHead.contains(vBase))
       throw new Publish.PublishConflict(Some(vBase), mainHead)
-    val branchHead = Publish.currentVersion(manifestRoot(branchRoot)).get
+    val branch = head(branchRoot)
+    val branchHead = branch.version
     // the FF commit's content diff is the branch's OWN change feed
     // (clone → head) — segmentation and writer-side CDC already
     // resolved by the branch's commits — written as this commit's CDC
@@ -3252,16 +3249,35 @@ object VersionedTable {
       if (branchHead == vs.head) Map("cdc_empty" -> "true")
       else {
         val feed = changeFeed(s, branchRoot, vs.head, branchHead)
-        val toPhys = columnMapping(branchRoot).map(_.swap).toMap
+        val toPhys = withPrefix(branch.meta, ColmapPrefix).map(_.swap)
         writeCdc(s, mainRoot, feed.columns.foldLeft(feed) { (f, c) =>
           toPhys.get(c).fold(f)(p => f.withColumnRenamed(c, p))
         })
       }
-    Publish.publishIf(Publish.read(s, manifestRoot(branchRoot)),
+    Publish.publishIf(branch.manifest(s),
       manifestRoot(mainRoot), expectedHead = Some(vBase),
       audit = auditFilesExist,
-      meta = inheritedMeta(branchRoot) ++ cdcMeta ++
+      meta = inheritedOf(branch.meta) ++ cdcMeta ++
         Map("verb" -> "fast-forward", "src" -> s"$branchRoot@$branchHead"))
+  }
+
+  /** A branch's published versions and the main version it was cut
+    * from (its v1 clone's `src = <mainRoot>@<vBase>`), refusing a root
+    * that is not a branch of `mainRoot`.
+    */
+  private def branchBase(verb: String, mainRoot: String,
+                         branchRoot: String): (Seq[String], String) = {
+    val vs = publishedVersions(branchRoot)
+    require(vs.nonEmpty, s"$verb: no published versions under $branchRoot")
+    val born = versionMeta(branchRoot, vs.head)
+    val src = born.get("src")
+    require(born.get("verb").contains("clone") && src.isDefined,
+      s"$verb: $branchRoot is not a branch (its v1 is not a clone)")
+    val at = src.get.lastIndexOf('@')
+    val (srcRoot, vBase) = (src.get.substring(0, at), src.get.substring(at + 1))
+    require(srcRoot == mainRoot,
+      s"$verb: branch was cut from $srcRoot, not $mainRoot")
+    (vs, vBase)
   }
 
   /** BRANCH REBASE onto a MOVED main (VERDICT r13 frontier gap #3 —
@@ -3296,24 +3312,17 @@ object VersionedTable {
   def rebaseBranch(s: SparkSession, mainRoot: String, branchRoot: String,
                    spec: Spec,
                    layout: DataFrame => DataFrame = identity): String = {
-    val vs = publishedVersions(branchRoot)
-    require(vs.nonEmpty, s"rebaseBranch: no published versions under $branchRoot")
-    val born = metaAt(branchRoot, vs.head)
-    val src = born.get("src")
-    require(born.get("verb").contains("clone") && src.isDefined,
-      s"rebaseBranch: $branchRoot is not a branch (its v1 is not a clone)")
-    val at = src.get.lastIndexOf('@')
-    val (srcRoot, vBase) = (src.get.substring(0, at), src.get.substring(at + 1))
-    require(srcRoot == mainRoot,
-      s"rebaseBranch: branch was cut from $srcRoot, not $mainRoot")
-    val mainHead = Publish.currentVersion(manifestRoot(mainRoot)).getOrElse(
+    val (vs, vBase) = branchBase("rebaseBranch", mainRoot, branchRoot)
+    val main = headOf(mainRoot).getOrElse(
       throw new IllegalStateException(
         s"rebaseBranch: no published version under $mainRoot"))
+    val mainHead = main.version
     if (mainHead == vBase) return fastForward(s, mainRoot, branchRoot)
-    val branchHead = Publish.currentVersion(manifestRoot(branchRoot)).get
+    val branch = head(branchRoot)
+    val branchHead = branch.version
     require(branchHead != vs.head,
       "rebaseBranch: the branch never committed — drop it instead of rebasing")
-    val (bs, ms) = (read(s, branchRoot).schema, read(s, mainRoot).schema)
+    val (bs, ms) = (readHead(s, branch).schema, readHead(s, main).schema)
     require(bs.length == ms.length && bs.zip(ms).forall { case (a, b) =>
       a.name == b.name && sameTypeIgnoreNull(a.dataType, b.dataType) },
       s"rebaseBranch: branch schema (${bs.simpleString}) diverged from " +
@@ -3332,32 +3341,12 @@ object VersionedTable {
         "re-derive the branch from main's head")
     // the applyChanges fold, WITHOUT its applied_upto watermark (main
     // may be a replica carrying its own), fenced on the head we read
-    val ins = branchFeed.filter(col("change_type") === "insert")
-      .drop("change_type")
-    val del = branchFeed.filter(col("change_type") === "delete")
-      .drop("change_type")
-    enforceSchema(s, mainRoot, ins, allowEvolution = false)
-    guardDropped(mainRoot, ins)
-    enforce(ins, constraints(mainRoot))
-    val current = Publish.read(s, manifestRoot(mainRoot))
-    val doomed = del.select(col(spec.keyCol))
-      .unionByName(ins.select(col(spec.keyCol))).distinct()
-    val base = vectorize(s, current, mainRoot, spec, doomed).map(_._1)
-      .getOrElse(current)
-    val meta = Map(
-      "verb" -> (if (ins.isEmpty && (base eq current)) "branch-rebase-noop"
-        else "branch-rebase"),
-      "src" -> s"$branchRoot@$branchHead", "base" -> vBase, "onto" -> mainHead)
-    val manifest =
-      if (ins.isEmpty) base
-      else {
-        val gen = freshGen(mainRoot)
-        layout(toPhysical(ins, mainRoot)).write.parquet(gen)
-        unionSidecar(base, sidecar(s, gen, spec, activeTransforms(mainRoot)))
-      }
+    val (manifest, changed) = foldFeed(s, main, spec, branchFeed, layout)
     Publish.publishIf(manifest, manifestRoot(mainRoot),
       expectedHead = Some(mainHead), audit = auditFilesExist,
-      meta = inheritedMeta(mainRoot) ++ meta)
+      meta = inheritedOf(main.meta) ++ Map(
+        "verb" -> (if (changed) "branch-rebase" else "branch-rebase-noop"),
+        "src" -> s"$branchRoot@$branchHead", "base" -> vBase, "onto" -> mainHead))
   }
 
   /** RE-CLUSTER the table (the OPTIMIZE/Z-ORDER verb as a manifest
@@ -3377,10 +3366,10 @@ object VersionedTable {
     */
   def recluster(s: SparkSession, root: String, spec: Spec,
                 layout: DataFrame => DataFrame): String = {
-    val current = Publish.read(s, manifestRoot(root))
+    val h = head(root)
     val gen = freshGen(root)
-    layout(readFiles(s, current)).write.parquet(gen)
-    publishManifest(sidecar(s, gen, spec, activeTransforms(root)), root,
+    layout(readFiles(s, h.manifest(s))).write.parquet(gen)
+    publishManifest(sidecar(s, gen, spec, transformsOf(h.meta)), root, Some(h),
       Map("verb" -> "recluster"))
   }
 
@@ -3402,19 +3391,20 @@ object VersionedTable {
                      layout: DataFrame => DataFrame): String = {
     require(spec.statCols.contains(c),
       s"reclusterWhere: $c carries no min/max stats (statCols: ${spec.statCols})")
-    val current = Publish.read(s, manifestRoot(root))
+    val h = head(root)
+    val current = h.manifest(s)
     val hot = StatsSpine.survivors(current, c, lo, hi)
       .select("file").collect().map(_.getString(0)).toSeq
     if (hot.isEmpty)
-      publishManifest(current, root, Map("verb" -> "recluster-where-noop"))
+      publishManifest(current, root, Some(h), Map("verb" -> "recluster-where-noop"))
     else {
       val gen = freshGen(root)
       layout(readFiles(s, current.filter(col("file").isin(hot: _*))))
         .write.parquet(gen)
       publishManifest(
         unionSidecar(current.filter(!col("file").isin(hot: _*)),
-          sidecar(s, gen, spec, activeTransforms(root))),
-        root, Map("verb" -> "recluster-where",
+          sidecar(s, gen, spec, transformsOf(h.meta))),
+        root, Some(h), Map("verb" -> "recluster-where",
           "n_rewritten" -> hot.length.toString))
     }
   }
@@ -3449,35 +3439,36 @@ object VersionedTable {
     // valid across a concurrent rename — physical names never move —
     // so only the checks re-run, never the write.
     var validatedHead: Option[String] = None
-    def validateAgainst(head: Option[String]): Unit =
-      if (validatedHead != head) {
-        enforceSchema(s, root, df, allowEvolution)
-        guardDropped(root, df)
-        enforce(df, constraints(root))
-        validatedHead = head
+    def validateAgainst(h: Head): Unit =
+      if (!validatedHead.contains(h.version)) {
+        admit(s, h, df, allowEvolution)
+        validatedHead = Some(h.version)
       }
-    val entryHead = Publish.currentVersion(manifestRoot(root))
-    require(entryHead.isDefined, s"appendOcc: no published version under $root")
-    validateAgainst(entryHead)
-    val gen = freshGen(root)
-    layout(toPhysical(df, root)).write.parquet(gen)
-    val batchRows = sidecar(s, gen, spec, activeTransforms(root))
+    def headNow(): Head = {
+      val h = headOf(root)
+      require(h.isDefined, s"appendOcc: no published version under $root")
+      h.get
+    }
+    val entry = headNow()
+    validateAgainst(entry)
+    val batchRows = writeBatch(s, entry, spec, df, layout)
     var attempts = 0
     while (attempts < maxAttempts) {
       attempts += 1
-      val head = Publish.currentVersion(manifestRoot(root))
-      require(head.isDefined, s"appendOcc: no published version under $root")
-      validateAgainst(head)
-      val base = Publish.readVersion(s, manifestRoot(root), head.get)
+      // a fresh snapshot per attempt, taken after the batch write: the
+      // fold and the inherited properties follow the head it fences on
+      val h = headNow()
+      validateAgainst(h)
+      val base = h.manifest(s)
       beforeCommit()
       try {
         return (Publish.publishIf(
           unionSidecar(base, batchRows),
-          manifestRoot(root), head,
+          manifestRoot(root), Some(h.version),
           audit = auditFilesExist,
-          meta = inheritedMeta(root) ++
+          meta = inheritedOf(h.meta) ++
             Map("verb" -> "append-occ", "attempt" -> attempts.toString,
-              "base" -> head.get)), attempts)
+              "base" -> h.version)), attempts)
       } catch {
         case _: Publish.PublishConflict if attempts < maxAttempts => ()
       }

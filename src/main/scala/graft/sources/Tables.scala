@@ -82,13 +82,10 @@ object Tables {
     out.write.option("header", "true").mode("overwrite").csv(path)
   }
 
-  /** Parquet sink; optional bucketing by key for shuffle-free downstream
-    * joins (the scale-out replacement for the reference's B-tree index,
+  /** Bucketed parquet sink for shuffle-free downstream joins (the
+    * scale-out replacement for the reference's B-tree index,
     * `01_staging_layer.sql:13-14`).
     */
-  def writeParquet(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").parquet(path)
-
   def writeBucketed(df: DataFrame, table: String, bucketCol: String, buckets: Int): Unit =
     df.write.mode("overwrite")
       .bucketBy(buckets, bucketCol)
