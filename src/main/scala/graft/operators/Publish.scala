@@ -104,10 +104,10 @@ object Publish {
     * next allocator probes the claimed number, collides on the claim
     * file and moves up — correctness never rests on the hint.
     */
-  private def nextHint(rootPath: String): Option[Long] = {
+  private def nextHint(rootPath: String): Option[String] = {
     val f = s"$rootPath/$Next"
     if (!store.exists(f)) None
-    else Some(store.readString(f).trim.toLong)
+    else Some(store.readString(f).trim)
   }
 
   /** CAS advance-if-greater of the `_NEXT` watermark (never regresses
@@ -115,16 +115,22 @@ object Publish {
     * mutable watermark needs CAS, not last-writer-wins). `attempt`
     * names the staged tmp uniquely: claim allocation already
     * guarantees no two live attempts share a number, in-process or
-    * across drivers.
+    * across drivers. `known0` is the raw value [[nextHint]] just read
+    * under the same lock: the first CAS attempt expects it, and only a
+    * lost swap re-reads (one `_NEXT` read per commit).
     */
-  private def advanceNext(rootPath: String, to: Long, attempt: String): Unit = {
+  private def advanceNext(rootPath: String, to: Long, attempt: String,
+                          known0: Option[String]): Unit = {
     val f = s"$rootPath/$Next"
+    var known: Option[Option[String]] = Some(known0)
     var done = false
     while (!done) {
       // expected = the RAW stored string (trimmed exactly as the CAS
       // compare reads it) — a re-rendered value that didn't match the
       // stored bytes would refuse every swap and livelock
-      val cur = if (store.exists(f)) Some(store.readString(f).trim) else None
+      val cur = known.getOrElse(
+        if (store.exists(f)) Some(store.readString(f).trim) else None)
+      known = None
       if (cur.exists(_.toLong >= to)) done = true
       else {
         val tmp = s"$rootPath/$Next.tmp-$attempt"
@@ -344,9 +350,6 @@ object Publish {
     // never both winning one head, never a torn pointer (VERDICT r15
     // #2; the in-JVM lock cannot see another driver)
     val headAtAlloc = currentVersion(rootPath)
-    // no head: this root starts a fresh history, possibly over a
-    // dropped tree whose version-dir paths it is about to reuse
-    if (headAtAlloc.isEmpty) SchemaCache.forgetUnder(rootPath)
     // HEAL a predecessor's crashed claim-release: the pointer names
     // it, so it IS committed — deleting its lingering claim here,
     // BEFORE this commit can move the head past it, preserves the
@@ -362,7 +365,8 @@ object Publish {
     // advances BEFORE any write lands under the claimed name, keeping
     // the allocation floor ahead of every number that ever held an
     // artifact — see [[nextHint]] for the full invariant.
-    val floor = nextHint(rootPath)
+    val nextRaw = nextHint(rootPath)
+    val floor = nextRaw.map(_.toLong)
       .getOrElse(versionDirs(rootPath).foldLeft(0L)(math.max) + 1)
     var n = math.max(floor,
       headAtAlloc.map(h => h.drop(1).takeWhile(_.isDigit).toLong + 1)
@@ -382,7 +386,7 @@ object Publish {
       n += 1
     val version = "v%05d".format(n)
     val claim = s"$rootPath/$version.claim"
-    try advanceNext(rootPath, n + 1, version)
+    try advanceNext(rootPath, n + 1, version, nextRaw)
     catch {
       case e: Throwable =>
         // nothing exists under v<n> yet — releasing the claim while
@@ -423,14 +427,13 @@ object Publish {
       require(obs.get("n").asInstanceOf[Long] > 0L,
         s"publish: $version is empty")
       // the read-back still reads the BYTES on disk; only its schema is
-      // pinned from the frame just written (r17, guide §6): inference
-      // would re-derive exactly this schema from the footers at the
-      // cost of one planning job per commit. Partitioned publishes keep
-      // inference — directory-derived partition columns re-order the
-      // read-back schema, and the audit must see what a reader sees.
-      val back =
-        if (partitionBy.isEmpty) spark.read.schema(df.schema).parquet(dir)
-        else spark.read.parquet(dir)
+      // pinned, so no inference job runs: an unpartitioned version's is
+      // the frame just written, a partitioned one's comes from a data
+      // file's footer — the schema [[readCommitted]] gives readers, with
+      // the directory-derived partition columns appended by Spark
+      val back = spark.read.schema(
+        if (partitionBy.isEmpty) df.schema else Footers.schemaOf(spark, dir))
+        .parquet(dir)
       audit(back)
       // meta computed HERE, inside the commit critical section (ADVICE
       // r15): state-derived values (ICT stamps, watermarks) see a head
@@ -605,14 +608,14 @@ object Publish {
 
   /** Read a version the caller already resolved as COMMITTED (the
     * pointer named it, or a history walk checked its claim): no store
-    * call. Version dirs are immutable after their pointer swap — the
-    * schema is pinned through the per-JVM cache so only the FIRST read
-    * of a version pays the inference job (r17, guide §6).
+    * call. Version dirs are written once, by one job, so the schema is
+    * the footer of one data file, read on the driver — no inference
+    * job.
     */
   def readCommitted(spark: SparkSession, rootPath: String,
                     version: String): DataFrame = {
     val dir = s"${canon(rootPath)}/$version"
-    spark.read.schema(SchemaCache.of(spark, dir)).parquet(dir)
+    spark.read.schema(Footers.schemaOf(spark, dir)).parquet(dir)
   }
 
   /** The `_META` pairs a version was published with (empty map if the
@@ -639,15 +642,21 @@ object Publish {
     * never-committed until a janitor reclaims it).
     */
   def readVersion(spark: SparkSession, rootPath: String, version: String): DataFrame = {
+    requireCommitted(rootPath, version)
+    readCommitted(spark, rootPath, version)
+  }
+
+  /** [[readVersion]]'s refusals without the read: `version` must be a
+    * live, decided version dir under `rootPath`.
+    */
+  private[operators] def requireCommitted(rootPath: String, version: String): Unit = {
     require(version.matches("v\\d+"),
       s"Publish.readVersion: '$version' is not a live version name")
-    val dir = s"${canon(rootPath)}/$version"
-    require(store.isDirectory(dir),
+    require(store.isDirectory(s"${canon(rootPath)}/$version"),
       s"Publish.readVersion: $version does not exist under $rootPath (retired or never written)")
     require(!isPendingClaim(rootPath, version),
       s"Publish.readVersion: $version is an UNDECIDED attempt (its claim " +
         "is outstanding and the pointer does not name it) — a stalled or " +
         "doomed writer's dir, not committed history")
-    readCommitted(spark, rootPath, version)
   }
 }

@@ -97,10 +97,9 @@ object VersionedTable {
   private def sidecar(s: SparkSession, dataDir: String, spec: Spec,
                       transforms: Seq[PartitionTransform] = Nil): DataFrame = {
     // one relation resolve for the freshly written generation: the
-    // schema probe and the stats scan share it (r17 — the second
-    // resolve re-ran inference per commit), and the inferred schema
-    // lands in the immutable-path cache for every later read
-    val gen = s.read.schema(SchemaCache.of(s, dataDir)).parquet(dataDir)
+    // schema probe and the stats scan share it, and its schema is the
+    // footer of one of its files — no inference job
+    val gen = s.read.schema(Footers.schemaOf(s, dataDir)).parquet(dataDir)
     val present = gen.schema.fieldNames.toSet
     // nnull makes "every row of this file belongs to value min"
     // PROVABLE from the manifest (min/max ignore NULLs, so min == max
@@ -142,10 +141,12 @@ object VersionedTable {
 
   /** WAP audit run against every read-back manifest before its
     * pointer swap: each named file must exist — the one invariant
-    * whose violation makes every downstream read wrong.
+    * whose violation makes every downstream read wrong. The names come
+    * from the read-back's own files, read on the driver.
     */
   private def auditFilesExist(back: DataFrame): Unit = {
-    val missing = back.select("file").collect().map(_.getString(0))
+    val missing = back.inputFiles.toSeq
+      .flatMap(Footers.entriesOf(back.sparkSession, _)).map(_._1)
       .filterNot(f => TableStore.get.exists(f.stripPrefix("file:")))
     require(missing.isEmpty,
       s"versioned-table manifest names ${missing.length} missing file(s): " +
@@ -183,6 +184,25 @@ object VersionedTable {
       */
     def manifest(s: SparkSession): DataFrame =
       Publish.readCommitted(s, manifestRoot(root), version)
+
+    private var entries0: Option[Entries] = None
+
+    /** The head manifest's `(file, dv_path)` entries, read on the
+      * driver at most once per snapshot.
+      */
+    def entries(s: SparkSession): Entries = synchronized {
+      if (entries0.isEmpty)
+        entries0 = Some(Footers.entriesOf(s, s"${manifestRoot(root)}/$version"))
+      entries0.get
+    }
+  }
+
+  private type Entries = Footers.Entries
+
+  /** The entries naming one of `files`. */
+  private def entriesIn(es: Entries, files: Seq[String]): Entries = {
+    val keep = files.toSet
+    es.filter(e => keep(e._1))
   }
 
   private def headOf(root: String): Option[Head] =
@@ -204,7 +224,7 @@ object VersionedTable {
     * medium): `allowEvolution` admits NEW columns only — a type
     * change on an existing column is refused either way. Written
     * as-is, an incompatible batch (long vs string) would make every
-    * later read throw in [[wideMergedSchema]] — an unreadable table
+    * later read throw in [[Footers.mergedSchemaOf]] — an unreadable table
     * from a "successful" commit; a WIDER batch would implicitly widen
     * the footer-merged schema while leaving later same-width-as-head
     * producers refused (no declared upcast) — width changes go
@@ -250,9 +270,9 @@ object VersionedTable {
         // a batch NARROWER than a DECLARED widen target is conforming —
         // [[toPhysical]] upcasts it at write (the Delta implicit-upcast
         // posture after a widen commit)
-        case Some(t) if widensTo(f.dataType, t) &&
+        case Some(t) if Footers.widensTo(f.dataType, t) &&
           declaredWiden.contains(physicalOf(h.meta, f.name)) => None
-        case Some(t) if widensTo(t, f.dataType) =>
+        case Some(t) if Footers.widensTo(t, f.dataType) =>
           Some(s"${f.name}: ${t.simpleString} -> ${f.dataType.simpleString} " +
             "(declare it: widenColumn)")
         case Some(t) =>
@@ -314,36 +334,6 @@ object VersionedTable {
     }
   }
 
-  /** Field-by-field schema merge with WIDENING tolerance, over one
-    * footer per generation dir (manifest generations are bounded by
-    * maintenance cadence, and a footer read is metadata-only): equal
-    * types keep, a [[widensTo]] pair keeps the wider, anything else
-    * re-throws as the schema conflict it is. All fields read back
-    * nullable (a file missing an evolved column fills NULL).
-    */
-  private def wideMergedSchema(s: SparkSession,
-                               files: Seq[String]): org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types.{StructField, StructType}
-    val perGen = files.groupBy(f => f.substring(0, f.lastIndexOf('/')))
-      .map(_._2.head).toSeq.sorted
-    val fields = scala.collection.mutable.LinkedHashMap.empty[String, StructField]
-    perGen.foreach { f =>
-      SchemaCache.of(s, f).foreach { fl =>
-        fields.get(fl.name) match {
-          case None => fields(fl.name) = fl.copy(nullable = true)
-          case Some(prev) if prev.dataType == fl.dataType => ()
-          case Some(prev) if widensTo(prev.dataType, fl.dataType) =>
-            fields(fl.name) = fl.copy(nullable = true)
-          case Some(prev) if widensTo(fl.dataType, prev.dataType) => ()
-          case Some(prev) => throw new IllegalArgumentException(
-            s"cannot merge generation schemas: ${fl.name} is " +
-              s"${prev.dataType.simpleString} vs ${fl.dataType.simpleString}")
-        }
-      }
-    }
-    StructType(fields.values.toSeq)
-  }
-
   /** Logical column DROPs (`dropcol:<physical>` → the logical name at
     * drop time) — the zero-rewrite sibling of the rename mapping: the
     * bytes stay in the old files, reads hide them, new generations
@@ -363,22 +353,11 @@ object VersionedTable {
     * INSTANT the property commits — and every generation written
     * after the commit upcasts at write ([[toPhysical]]), so the wide
     * value range is storable immediately. Mixed-width file sets read
-    * under an explicitly wide-merged schema ([[readFilesKeep]]'s
-    * fallback — Spark 4's Parquet readers upcast int32 under a
-    * BIGINT read schema, SPARK-40876).
+    * under the wide merged schema ([[Footers.mergedSchemaOf]] — Spark
+    * 4's Parquet readers upcast int32 under a BIGINT read schema,
+    * SPARK-40876).
     */
   private val WidenPrefix = "widen:"
-
-  private val WidenChains = Seq(
-    Seq("tinyint", "smallint", "int", "bigint"), Seq("float", "double"))
-
-  /** Is `from` → `to` a safe promotion along one widening chain? */
-  private def widensTo(from: org.apache.spark.sql.types.DataType,
-                       to: org.apache.spark.sql.types.DataType): Boolean =
-    WidenChains.exists { c =>
-      val (i, j) = (c.indexOf(from.simpleString), c.indexOf(to.simpleString))
-      i >= 0 && j > i
-    }
 
   /** A version's LOGICAL view of physical rows: dropped columns hidden,
     * declared type widenings applied (on physical names — stats and
@@ -480,7 +459,7 @@ object VersionedTable {
     val field = readHead(s, h).schema.find(_.name == logical).getOrElse(
       throw new IllegalArgumentException(s"widenColumn: no such column $logical"))
     val target = org.apache.spark.sql.types.DataType.fromDDL(toType)
-    require(widensTo(field.dataType, target),
+    require(Footers.widensTo(field.dataType, target),
       s"widenColumn: ${field.dataType.simpleString} -> " +
         s"${target.simpleString} is not a safe widening promotion")
     val physical = physicalOf(h.meta, logical)
@@ -676,7 +655,7 @@ object VersionedTable {
   def repairMissingFiles(s: SparkSession, root: String): (String, Int) = {
     val h = head(root)
     val current = h.manifest(s)
-    val entries = current.select("file").collect().map(_.getString(0))
+    val entries = h.entries(s).map(_._1)
     val missing = entries.filterNot(f =>
       TableStore.get.exists(f.stripPrefix("file:"))).toSet
     if (missing.isEmpty) (h.version, 0)
@@ -855,7 +834,6 @@ object VersionedTable {
     transforms.foreach(t => require(df.columns.contains(t.srcCol),
       s"create: partition transform on unknown column '${t.srcCol}' " +
         s"(batch columns: ${df.columns.mkString(", ")})"))
-    forgetEntries(root)
     val gen = freshGen(root)
     layout(df).write.parquet(gen)
     publishManifest(sidecar(s, gen, spec, transforms), root, None,
@@ -906,7 +884,7 @@ object VersionedTable {
       // per-partition compute-or-wait lock means each cached block is
       // computed exactly once). Released when the loan ends.
       val cdcMeta = Checkpoints.withPersisted(
-          readFiles(s, current.filter(col("file").isin(holders: _*)))) { holderRows =>
+          readEntries(s, entriesIn(h.entries(s), holders))) { holderRows =>
         val (_, meta) = Par.pair(
           () => holderRows
             .join(doomed, col(spec.keyCol).cast("string") === col("__doomed_k"), "left_anti")
@@ -999,76 +977,45 @@ object VersionedTable {
     } else Map("cdc_path" -> dir)
   }
 
-  /** A manifest's distinct deletion-vector positions, if any. */
-  private def dvPositions(s: SparkSession, m: DataFrame): Option[DataFrame] = {
-    val paths = m.filter(col("dv_path").isNotNull)
-      .select("dv_path").distinct().collect().map(_.getString(0)).toSeq
-    dvPositionsOf(s, paths)
-  }
+  /** Deletion-vector sidecars hold `(file, pos)` rows: the
+    * `_metadata.file_path` and `_metadata.row_index` of each deleted
+    * row. They are read under this fixed schema, never inferred.
+    */
+  private val DvSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "file STRING, pos BIGINT")
 
+  private def readDv(s: SparkSession, paths: Seq[String]): DataFrame =
+    s.read.schema(DvSchema).parquet(paths: _*)
+
+  /** The distinct deletion-vector positions of `paths`, if any. */
   private def dvPositionsOf(s: SparkSession,
                             paths: Seq[String]): Option[DataFrame] =
     if (paths.isEmpty) None
-    else Some(s.read.parquet(paths: _*).select("file", "pos").distinct())
+    else Some(readDv(s, paths).distinct())
 
-  /** PER-VERSION MANIFEST ENTRIES — the (file, dv_path) rows of a
-    * published manifest version, collected ONCE per JVM (r17, guide §6
-    * control-plane): a manifest version is immutable after its pointer
-    * swap, yet every read/feed-segment/verb re-collected it as a fresh
-    * one-task Spark job (plus driver gap). Manifests are
-    * planning-sized by design (one row per data file — the same
-    * driver-side footprint every holder collect in this file already
-    * accepts), so the cached entry list is metadata, not data. Bounded;
-    * on overflow the map clears and the next reads re-collect.
-    */
-  private val MaxEntryCacheSize = 4096
-  private val entriesCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Array[(String, Option[String])]]()
+  /** The distinct deletion-vector sidecars `es` names. */
+  private def dvPathsOf(es: Entries): Seq[String] = es.flatMap(_._2).distinct.toSeq
 
-  /** Drop the cached entries of every version under `root`: [[create]]
-    * and [[shallowCloneAt]] may start a table over a dropped tree, whose
-    * manifest version paths the new history reuses.
-    */
-  private def forgetEntries(root: String): Unit = {
-    val prefix = s"${manifestRoot(root)}/"
-    entriesCache.keySet.removeIf(_.startsWith(prefix))
-    ()
-  }
-
-  /** `committed` = the caller already resolved `v` as committed (the
-    * head snapshot, or a feed step whose claim it checked): no
+  /** A manifest version's `(file, dv_path)` entries, read on the
+    * driver. `committed` = the caller already resolved `v` as committed
+    * (the head snapshot, or a feed step whose claim it checked): no
     * existence or claim probe is repeated.
     */
-  private def versionEntriesOf(s: SparkSession, root: String, v: String,
-                               committed: Boolean = false): Array[(String, Option[String])] = {
-    val key = s"${manifestRoot(root)}/$v"
-    Option(entriesCache.get(key)).map { hit =>
-      // a vacuumed version must keep failing loudly, cache or no cache
-      require(committed || TableStore.get.isDirectory(key),
-        s"Publish.readVersion: $v does not exist under ${manifestRoot(root)} (retired or never written)")
-      hit
-    }.getOrElse {
-      val m =
-        if (committed) Publish.readCommitted(s, manifestRoot(root), v)
-        else Publish.readVersion(s, manifestRoot(root), v)
-      val e = m.select("file", "dv_path").collect()
-        .map(r => (r.getString(0), Option(r.getString(1))))
-      if (entriesCache.size() > MaxEntryCacheSize) entriesCache.clear()
-      entriesCache.put(key, e)
-      e
-    }
+  private def versionEntries(s: SparkSession, root: String, v: String,
+                             committed: Boolean = false): Entries = {
+    val mroot = manifestRoot(root)
+    if (!committed) Publish.requireCommitted(mroot, v)
+    Footers.entriesOf(s, s"$mroot/$v")
   }
 
-  /** [[readFiles]] of one published version, planned off the cached
-    * entry list — no manifest scan, no collect job.
-    */
+  /** [[readEntries]] of one published version. */
   private def readFilesAtVersion(s: SparkSession, root: String, v: String,
                                  committed: Boolean = false): DataFrame =
-    readFilesEntries(s, versionEntriesOf(s, root, v, committed)).drop("__file")
+    readEntries(s, versionEntries(s, root, v, committed))
 
   /** The head snapshot's rows under its logical column names. */
   private def readHead(s: SparkSession, h: Head): DataFrame =
-    logicalView(readFilesAtVersion(s, h.root, h.version, committed = true), h.meta)
+    logicalView(readEntries(s, h.entries(s)), h.meta)
 
   /** Resolve (file, pos) pairs back to FULL ROWS by a position join —
     * the vectored bytes are still on disk, so a feed can carry the
@@ -1076,9 +1023,7 @@ object VersionedTable {
     */
   private def rowsAtPositions(s: SparkSession, delta: DataFrame): DataFrame = {
     val files = delta.select("file").distinct().collect().map(_.getString(0)).toSeq
-    val schema = SchemaCache.ofFiles(files,
-      s.read.option("mergeSchema", "true").parquet(files: _*).schema)
-    s.read.schema(schema).parquet(files: _*)
+    s.read.schema(Footers.mergedSchemaOf(s, files)).parquet(files: _*)
       .withColumn("__dv_file", col("_metadata.file_path"))
       .withColumn("__dv_pos", col("_metadata.row_index"))
       .join(broadcast(delta.select(col("file").as("__dv_file"),
@@ -1095,22 +1040,21 @@ object VersionedTable {
     * but not in A on common files). [[changeFeed]] segments use the
     * forward half (A-before-B inside a window can't un-delete);
     * [[restore]]'s CDC uses the full algebra (head → restored content
-    * can). Planned off the CACHED per-version entry lists (r17, guide
-    * §6): file-set membership, the added/dropped splits and their
+    * can). Planned off the per-version entry lists read on the driver:
+    * file-set membership, the added/dropped splits and their
     * emptiness are driver-side set math over the immutable manifests
     * instead of small Spark jobs (manifest scans, anti-join isEmpty
     * probes, dv-path collects). The DV-delta frames and their
     * data-dependent isEmpty probes read data, not metadata.
     */
   private def manifestDiff(s: SparkSession,
-                           eA: Array[(String, Option[String])],
-                           eB: Array[(String, Option[String])]): Seq[DataFrame] = {
+                           eA: Entries, eB: Entries): Seq[DataFrame] = {
     val filesA = eA.map(_._1).toSet
     val filesB = eB.map(_._1).toSet
     val added = eB.filter(e => !filesA.contains(e._1))
     val dropped = eA.filter(e => !filesB.contains(e._1))
-    val dvA = dvPositionsOf(s, eA.flatMap(_._2).distinct.toSeq)
-    val dvB = dvPositionsOf(s, eB.flatMap(_._2).distinct.toSeq)
+    val dvA = dvPositionsOf(s, dvPathsOf(eA))
+    val dvB = dvPositionsOf(s, dvPathsOf(eB))
     // common-file restriction as a broadcast semi-join against a local
     // relation (the same planning-sized list every holder collect in
     // this file already holds driver-side)
@@ -1124,11 +1068,11 @@ object VersionedTable {
       }.filter(!_.isEmpty)
     val inserts =
       (if (added.isEmpty) None
-       else Some(readFilesEntries(s, added).drop("__file"))) ++
+       else Some(readEntries(s, added))) ++
         common(dvA, dvB).map(rowsAtPositions(s, _)) // un-deletes
     val deletes =
       (if (dropped.isEmpty) None
-       else Some(readFilesEntries(s, dropped).drop("__file"))) ++
+       else Some(readEntries(s, dropped))) ++
         common(dvB, dvA).map(rowsAtPositions(s, _)) // fresh vectors
     (inserts.map(_.withColumn("change_type", lit("insert"))) ++
       deletes.map(_.withColumn("change_type", lit("delete")))).toSeq
@@ -1221,8 +1165,8 @@ object VersionedTable {
     // window steps were checked above; only fromV is probed
     def segment(a: String, b: String): Unit =
       pieces ++= manifestDiff(s,
-        versionEntriesOf(s, root, a, committed = a != fromV),
-        versionEntriesOf(s, root, b, committed = true))
+        versionEntries(s, root, a, committed = a != fromV),
+        versionEntries(s, root, b, committed = true))
     var segStart = 0
     steps.zipWithIndex.foreach { case ((_, meta), i) =>
       val verb = verbOf(meta)
@@ -1230,8 +1174,8 @@ object VersionedTable {
         if (i > segStart) segment(ordered(segStart), ordered(i))
         if (CdcVerbs.contains(verb))
           meta.get("cdc_path")
-            // CDC dirs are write-once — pin the schema (r17, guide §6)
-            .foreach(p => pieces += s.read.schema(SchemaCache.of(s, p)).parquet(p))
+            // CDC dirs are write-once — the schema is a file's footer
+            .foreach(p => pieces += s.read.schema(Footers.schemaOf(s, p)).parquet(p))
         segStart = i + 1
       }
     }
@@ -1416,8 +1360,7 @@ object VersionedTable {
     val mroot = manifestRoot(root)
     if (!TableStore.get.isDirectory(s"$mroot/$v")) return 0L
     def filesOf(vn: String): Set[String] =
-      Publish.readVersion(s, mroot, vn).select("file")
-        .collect().map(_.getString(0)).toSet
+      versionEntries(s, root, vn).map(_._1).toSet
     val cur = filesOf(v)
     // predecessor by downward probe, not a full listing: admission
     // control calls this once per NEW version, and a listing here
@@ -1791,10 +1734,9 @@ object VersionedTable {
       m.columns.contains(s"min_${t.statName}") &&
         m.columns.contains(s"nnull_${t.statName}"))
     def scanOf(rows: DataFrame): DataFrame =
-      readFiles(s, rows)
-        .groupBy(ts.map(t => t(col(t.srcCol)).as(t.statName)): _*)
+      rows.groupBy(ts.map(t => t(col(t.srcCol)).as(t.statName)): _*)
         .agg(count(lit(1)).as("n_live"))
-    if (!haveStats) scanOf(m)
+    if (!haveStats) scanOf(readEntries(s, h.entries(s)))
     else {
       val exactCond = ts.map(t =>
         col(s"min_${t.statName}").isNotNull &&
@@ -1807,7 +1749,7 @@ object VersionedTable {
         .groupBy(names.map(n => col(s"min_$n").as(n)): _*)
         .agg(sum(col("n_rows")).as("n_live"))
       if (loose.isEmpty) fromManifest
-      else fromManifest.unionByName(scanOf(loose))
+      else fromManifest.unionByName(scanOf(readFiles(s, loose)))
         .groupBy(names.map(col(_)): _*)
         .agg(sum(col("n_live")).as("n_live"))
     }
@@ -1865,9 +1807,9 @@ object VersionedTable {
     val current = h.manifest(s)
     val doomed = del.select(col(spec.keyCol))
       .unionByName(ins.select(col(spec.keyCol))).distinct()
-    val base = vectorize(s, current, h.root, spec, doomed).map(_._1)
-      .getOrElse(current)
-    if (ins.isEmpty) (base, !(base eq current))
+    val vectored = vectorize(s, h, current, spec, doomed).map(_._1)
+    val base = vectored.getOrElse(current)
+    if (ins.isEmpty) (base, vectored.isDefined)
     else (unionSidecar(base, writeBatch(s, h, spec, ins, layout)), true)
   }
 
@@ -1972,7 +1914,15 @@ object VersionedTable {
     plan.toSeq.toDF("action", "file", "reason")
   }
 
-  /** Resolve a manifest's rows to live data: list exactly its files
+  /** [[readEntries]] of the rows of a DATA-DEPENDENT manifest frame (a
+    * stats- or bloom-pruned survivor set): its entries are collected
+    * first. Entry lists already on the driver go to [[readEntries]].
+    */
+  private def readFiles(s: SparkSession, manifestRows: DataFrame): DataFrame =
+    readEntries(s, manifestRows.select("file", "dv_path").collect()
+      .map(r => (r.getString(0), Option(r.getString(1)))))
+
+  /** Resolve manifest entries to live data: list exactly their files
     * (schema MERGED across generations — an evolved append's new
     * column reads back NULL for older files), then apply any deletion
     * vectors as ONE broadcast anti-join on (file, row-position). The
@@ -1980,58 +1930,25 @@ object VersionedTable {
     * so the corpus never shuffles for a merge-on-read read — spec-
     * pinned as a BroadcastHashJoin LeftAnti.
     */
-  private def readFiles(s: SparkSession, manifestRows: DataFrame): DataFrame =
-    readFilesKeep(s, manifestRows).drop("__file")
+  private def readEntries(s: SparkSession, entries: Entries): DataFrame =
+    readEntriesKeep(s, entries).drop("__file")
 
-  /** [[readFiles]] retaining each row's source file as `__file` — the
+  /** [[readEntries]] retaining each row's source file as `__file` — the
     * lineage and per-file-audit reads join on it, everyone else drops
     * it.
     */
-  private def readFilesKeep(s: SparkSession, manifestRows: DataFrame): DataFrame =
-    readFilesEntries(s, manifestRows.select("file", "dv_path").collect()
-      .map(r => (r.getString(0), Option(r.getString(1)))))
-
-  private def readFilesEntries(s: SparkSession,
-                               entries: Array[(String, Option[String])]): DataFrame = {
+  private def readEntriesKeep(s: SparkSession, entries: Entries): DataFrame = {
     require(entries.nonEmpty, "versioned table manifest lists no files")
     val files = entries.map(_._1).toSeq
-    val dvPaths = entries.flatMap(_._2).distinct.toSeq
-    // mergeSchema covers the add-column evolution direction; a WIDTH
-    // conflict (a type-widened table whose old generations are still
-    // narrow) falls back to an explicitly wide-merged read schema —
-    // Spark 4's Parquet readers upcast narrow pages under it. Matched
-    // by ERROR CLASS, not message text (ADVICE r13): message strings
-    // are version-fragile, and some StructType.merge failures surface
-    // as CANNOT_MERGE_INCOMPATIBLE_DATA_TYPES.
-    def isSchemaMergeConflict(e: Throwable): Boolean = e match {
-      case st: org.apache.spark.SparkThrowable =>
-        Option(st.getCondition).exists(c =>
-          c.startsWith("CANNOT_MERGE_SCHEMAS") ||
-            c.startsWith("CANNOT_MERGE_INCOMPATIBLE_DATA_TYPES"))
-      case _ => false
-    }
-    // the files are immutable generations, so their merged read schema
-    // can never change: infer it ONCE per file set (the mergeSchema
-    // footer-merge is a distributed JOB per read — one small job plus
-    // its driver gap on every head read of every verb) and hand later
-    // reads the pinned schema (r17, guide §6)
-    val mergedSchema = SchemaCache.ofFiles(files, {
-      try s.read.option("mergeSchema", "true").parquet(files: _*).schema
-      catch {
-        case e: Exception
-            if isSchemaMergeConflict(e) ||
-              Option(e.getCause).exists(isSchemaMergeConflict) =>
-          wideMergedSchema(s, files)
-      }
-    })
-    val raw = s.read.schema(mergedSchema).parquet(files: _*)
+    val dvPaths = dvPathsOf(entries)
+    val raw = s.read.schema(Footers.mergedSchemaOf(s, files)).parquet(files: _*)
     val base = raw.withColumn("__file", col("_metadata.file_path"))
     if (dvPaths.isEmpty) base
     else {
       // row identity at read time = (_metadata.file_path, row_index);
       // the DV was BUILT from the same metadata columns over the same
       // immutable files, so the pairs are bit-identical across commits
-      val dv = s.read.parquet(dvPaths: _*)
+      val dv = readDv(s, dvPaths)
         .select(col("file").as("__dv_file"), col("pos").as("__dv_pos"))
         .distinct()
       base
@@ -2245,15 +2162,16 @@ object VersionedTable {
     */
   def readVersionWithCommitVersion(s: SparkSession, root: String,
                                    v: String): DataFrame = {
-    val mroot = manifestRoot(root)
     val upto = publishedVersions(root).filter(x => vNum(x) <= vNum(v))
     require(upto.nonEmpty && vNum(upto.last) == vNum(v),
       s"readVersionWithCommitVersion: $v is not a published version under $root")
-    val fileVer = upto.foldLeft(Map.empty[String, String]) {
-      (acc, vn) =>
-        Publish.readVersion(s, mroot, vn).select("file").collect()
-          .map(_.getString(0)).foldLeft(acc)((a, f) =>
-            if (a.contains(f)) a else a.updated(f, vn))
+    // the listing already skipped undecided claims: every walked
+    // version is committed
+    val entries = upto.map(vn => vn -> versionEntries(s, root, vn, committed = true))
+    val fileVer = entries.foldLeft(Map.empty[String, String]) {
+      case (acc, (vn, es)) =>
+        es.map(_._1).foldLeft(acc)((a, f) =>
+          if (a.contains(f)) a else a.updated(f, vn))
     }
     val fv = s.createDataFrame(
       java.util.Arrays.asList(fileVer.toSeq.map { case (f, vn) =>
@@ -2263,7 +2181,7 @@ object VersionedTable {
           org.apache.spark.sql.types.StringType, nullable = false),
         org.apache.spark.sql.types.StructField("_commit_version",
           org.apache.spark.sql.types.StringType, nullable = false))))
-    logicalView(readFilesKeep(s, Publish.readVersion(s, mroot, v))
+    logicalView(readEntriesKeep(s, entries.last._2)
       .join(broadcast(fv), Seq("__file"))
       .drop("__file"), versionMeta(root, v))
   }
@@ -2293,7 +2211,7 @@ object VersionedTable {
                      extraMeta: Map[String, String] = Map.empty): String = {
     val h = head(root)
     val current = h.manifest(s)
-    vectorize(s, current, root, spec, roster) match {
+    vectorize(s, h, current, spec, roster) match {
       case None =>
         publishManifest(current, root, Some(h), extraMeta + ("verb" -> "delete-dv-noop"))
       case Some((rows, nHolders)) =>
@@ -2308,9 +2226,9 @@ object VersionedTable {
     * newest dv_path is each covered file's complete vector; distinct
     * absorbs re-deletes of already-vectored rows) and return the
     * repointed manifest rows — or None when no file holds any roster
-    * key. The caller publishes.
+    * key. `current` is `h`'s manifest. The caller publishes.
     */
-  private def vectorize(s: SparkSession, current: DataFrame, root: String,
+  private def vectorize(s: SparkSession, h: Head, current: DataFrame,
                         spec: Spec, roster: DataFrame): Option[(DataFrame, Int)] = {
     val holders = StatsSpine.rosterHolders(
         current.select(col("file"), col("bloom")), roster, spec.keyCol, spec.mBits)
@@ -2321,13 +2239,13 @@ object VersionedTable {
         .filter(col("__doomed_k").isNotNull).distinct()
       // position scan over ONLY the bloom-probed holder files: the
       // row identity the read path will anti-join on
-      val fresh = s.read.parquet(holders: _*)
+      val fresh = s.read.schema(Footers.mergedSchemaOf(s, holders)).parquet(holders: _*)
         .select(col("_metadata.file_path").as("file"),
           col("_metadata.row_index").as("pos"),
           col(spec.keyCol).cast("string").as("__k"))
         .join(doomed, col("__k") === col("__doomed_k"), "left_semi")
         .select("file", "pos")
-      Some((commitDv(s, current, root, fresh), holders.length))
+      Some((commitDv(s, current, h.entries(s), h.root, fresh), holders.length))
     }
   }
 
@@ -2335,22 +2253,20 @@ object VersionedTable {
     * (file, pos) rows — every prior DV row folds forward so the
     * newest dv_path is each covered file's complete vector; distinct
     * absorbs re-deletes — and return the repointed manifest rows.
-    * The caller publishes.
+    * `entries` are `current`'s. The caller publishes.
     */
-  private def commitDv(s: SparkSession, current: DataFrame, root: String,
-                       fresh: DataFrame): DataFrame = {
+  private def commitDv(s: SparkSession, current: DataFrame, entries: Entries,
+                       root: String, fresh: DataFrame): DataFrame = {
     val dvDir = s"${filesDir(root)}/dv-" +
       java.util.UUID.randomUUID().toString.replace("-", "")
-    val priorPaths = current.filter(col("dv_path").isNotNull)
-      .select("dv_path").distinct().collect().map(_.getString(0)).toSeq
+    val priorPaths = dvPathsOf(entries)
     val dvAll =
       if (priorPaths.isEmpty) fresh.distinct()
-      else fresh.unionByName(
-        s.read.parquet(priorPaths: _*).select("file", "pos")).distinct()
+      else fresh.unionByName(readDv(s, priorPaths)).distinct()
     dvAll.repartition(1).write.parquet(dvDir)
     // account from what LANDED (the publish-audit posture), and
     // repoint every covered file at the one new complete vector
-    val counts = s.read.parquet(dvDir)
+    val counts = readDv(s, Seq(dvDir))
       .groupBy("file").agg(count(lit(1)).as("__nd"))
     current.join(counts, Seq("file"), "left")
       .withColumn("dv_path",
@@ -2380,7 +2296,7 @@ object VersionedTable {
     admit(s, h, updates, allowEvolution)
     val current = h.manifest(s)
     val batchRows = writeBatch(s, h, spec, updates, layout)
-    val base = vectorize(s, current, root, spec,
+    val base = vectorize(s, h, current, spec,
       updates.select(col(spec.keyCol))) match {
       case None => current
       case Some((rows, _)) => rows
@@ -2522,19 +2438,20 @@ object VersionedTable {
     val matched =
       if (holders.isEmpty) None
       else Some {
-        val withId = s.read.option("mergeSchema", "true").parquet(holders: _*)
+        val withId = s.read.schema(Footers.mergedSchemaOf(s, holders))
+          .parquet(holders: _*)
           .withColumn("__file", col("_metadata.file_path"))
           .withColumn("__pos", col("_metadata.row_index"))
-        val live = dvPositions(s,
-          current.filter(col("file").isin(holders: _*))).fold(withId)(dv =>
+        val live = dvPositionsOf(s,
+          dvPathsOf(entriesIn(h.entries(s), holders))).fold(withId)(dv =>
           withId.join(
             broadcast(dv.select(col("file").as("__file"),
               col("pos").as("__pos"))),
             Seq("__file", "__pos"), "left_anti"))
         // align the holder subset to the HEAD schema: a column a prior
         // evolution added reads NULL when none of THESE holder files
-        // carry it yet (the full-table read gets this from mergeSchema;
-        // a subset read must state it explicitly — found by the
+        // carry it yet (the full-table read gets this from the merged
+        // schema; a subset read must state it explicitly — found by the
         // evolve-then-merge-old-keys spec)
         val aligned = headSchema.fields.foldLeft(logicalView(live, h.meta)) {
           (f, fl) =>
@@ -2587,7 +2504,7 @@ object VersionedTable {
           enforce(b, withPrefix(h.meta, ConstraintPrefix))
         }
         val base = claimedPos.filter(_ => anyClaimed)
-          .map(cp => commitDv(s, current, root, cp))
+          .map(cp => commitDv(s, current, h.entries(s), root, cp))
           .getOrElse(current)
         val withBatch = batch.filter(_ => nBatch > 0).fold(base)(b =>
           unionSidecar(base, writeBatch(s, h, spec, b, layout)))
@@ -2626,7 +2543,7 @@ object VersionedTable {
       s"deleteBand: $c carries no min/max stats (statCols: ${spec.statCols})")
     val h = head(root)
     val current = h.manifest(s)
-    val (base, nDropped, nStraddlers) = dropBand(s, root, current, c, lo, hi)
+    val (base, nDropped, nStraddlers) = dropBand(s, h, current, c, lo, hi)
     if (nDropped + nStraddlers == 0)
       publishManifest(current, root, Some(h), Map("verb" -> "delete-band-noop"))
     else
@@ -2637,10 +2554,10 @@ object VersionedTable {
   /** The band half of [[deleteBand]] and [[replaceWhere]]: files whose
     * stats prove every row in `[lo, hi]` drop from `current` unread,
     * and only the straddlers pay a position scan whose in-band rows are
-    * deletion-vectored. Returns the manifest rows and the counts of
-    * dropped and straddling files.
+    * deletion-vectored. `current` is `h`'s manifest. Returns the
+    * manifest rows and the counts of dropped and straddling files.
     */
-  private def dropBand(s: SparkSession, root: String, current: DataFrame,
+  private def dropBand(s: SparkSession, h: Head, current: DataFrame,
                        c: String, lo: Any, hi: Any): (DataFrame, Int, Int) = {
     val inBand = col(s"min_$c") >= lit(lo) && col(s"max_$c") <= lit(hi)
     val overlaps = col(s"min_$c") <= lit(hi) && col(s"max_$c") >= lit(lo)
@@ -2656,12 +2573,15 @@ object VersionedTable {
       else {
         // position scan of ONLY the straddlers; re-deletes of
         // already-vectored positions are absorbed by the DV fold
-        val fresh = s.read.parquet(stFiles: _*)
+        val fresh = s.read.schema(Footers.mergedSchemaOf(s, stFiles))
+          .parquet(stFiles: _*)
           .select(col("_metadata.file_path").as("file"),
             col("_metadata.row_index").as("pos"), col(c).as("__c"))
           .filter(col("__c") >= lit(lo) && col("__c") <= lit(hi))
           .select("file", "pos")
-        commitDv(s, afterDrop, root, fresh)
+        val dropped = fullFiles.toSet
+        commitDv(s, afterDrop, h.entries(s).filterNot(e => dropped(e._1)),
+          h.root, fresh)
       }
     (base, fullFiles.length, stFiles.length)
   }
@@ -2703,7 +2623,7 @@ object VersionedTable {
       s"replaceWhere: $outside batch row(s) fall outside $c in [$lo, $hi] " +
         "(NULL counts as outside) — a replace must only write rows the " +
         "predicate claims")
-    val (base, nDropped, nStraddlers) = dropBand(s, root, h.manifest(s), c, lo, hi)
+    val (base, nDropped, nStraddlers) = dropBand(s, h, h.manifest(s), c, lo, hi)
     publishManifest(unionSidecar(base, writeBatch(s, h, spec, batch, layout)),
       root, Some(h), Map("verb" -> "replace-where",
         "n_dropped_files" -> nDropped.toString, "n_straddlers" -> nStraddlers.toString))
@@ -2890,9 +2810,7 @@ object VersionedTable {
     def fsPath(uri: String): String =
       java.nio.file.Paths.get(uri.stripPrefix("file:")).toString
     val referenced = liveVersions.flatMap { v =>
-      Publish.readVersion(s, mroot, v)
-        .select("file", "dv_path").collect()
-        .flatMap(r => Seq(Option(r.getString(0)), Option(r.getString(1))).flatten) ++
+      versionEntries(s, root, v).flatMap(e => e._1 +: e._2.toSeq) ++
         // a live version's CDC sidecar is custody too: its feed rows
         // must outlive exactly as long as the commit is in a window a
         // retained consumer could still read
@@ -2939,17 +2857,17 @@ object VersionedTable {
   def compactDeletes(s: SparkSession, root: String, spec: Spec): String = {
     val h = head(root)
     val current = h.manifest(s)
-    val dvd = current.filter(col("dv_path").isNotNull)
+    val dvd = h.entries(s).filter(_._2.isDefined)
     if (dvd.isEmpty)
       publishManifest(current, root, Some(h), Map("verb" -> "compact-dv-noop"))
     else {
       val gen = freshGen(root)
-      readFiles(s, dvd).write.parquet(gen)
+      readEntries(s, dvd).write.parquet(gen)
       publishManifest(
         unionSidecar(current.filter(col("dv_path").isNull),
           sidecar(s, gen, spec, transformsOf(h.meta))),
         root, Some(h),
-        Map("verb" -> "compact-dv", "n_compacted" -> dvd.count().toString))
+        Map("verb" -> "compact-dv", "n_compacted" -> dvd.length.toString))
     }
   }
 
@@ -2984,7 +2902,7 @@ object VersionedTable {
     require(sets.nonEmpty, "updateWhere: no SET expressions")
     val h = head(root)
     val current = h.manifest(s)
-    val holders = logicalView(readFilesKeep(s, current), h.meta)
+    val holders = logicalView(readEntriesKeep(s, h.entries(s)), h.meta)
       .filter(cond)
       .select("__file").distinct().collect().map(_.getString(0)).toSeq
     if (holders.isEmpty)
@@ -2995,8 +2913,7 @@ object VersionedTable {
       // scan of the band's files instead of three (bounded ∝ holders,
       // released before returning)
       Checkpoints.withPersisted(logicalView(
-        readFilesKeep(s, current.filter(col("file").isin(holders: _*)))
-          .drop("__file"), h.meta)) { base =>
+        readEntries(s, entriesIn(h.entries(s), holders)), h.meta)) { base =>
         val unknown = sets.keySet -- base.columns.toSet
         require(unknown.isEmpty,
           s"updateWhere: SET names unknown column(s): ${unknown.mkString(", ")}")
@@ -3057,7 +2974,7 @@ object VersionedTable {
     require(targetBytes > 0, s"optimizeCompact: targetBytes must be > 0")
     val h = head(root)
     val current = h.manifest(s)
-    val files = current.select("file").collect().map(_.getString(0))
+    val files = h.entries(s).map(_._1)
     val sized = files.map(f =>
       f -> TableStore.get.size(f.stripPrefix("file:")))
     val small = sized.filter(_._2 < targetBytes).map(_._1)
@@ -3067,7 +2984,7 @@ object VersionedTable {
       val smallBytes = sized.filter(_._2 < targetBytes).map(_._2).sum
       val nOut = math.max(1L, (smallBytes + targetBytes - 1) / targetBytes).toInt
       val gen = freshGen(root)
-      layout(readFiles(s, current.filter(col("file").isin(small: _*))))
+      layout(readEntries(s, entriesIn(h.entries(s), small)))
         .repartition(nOut)
         .write.parquet(gen)
       publishManifest(
@@ -3098,12 +3015,11 @@ object VersionedTable {
   def restore(s: SparkSession, root: String, v: String): String = {
     val h = head(root)
     require(h.version != v, s"restore: $v is already the head")
-    val eTo = versionEntriesOf(s, root, v)
-    val diff = manifestDiff(s,
-      versionEntriesOf(s, root, h.version, committed = true), eTo)
+    val eTo = versionEntries(s, root, v)
+    val diff = manifestDiff(s, h.entries(s), eTo)
     val cdcMeta = writeCdc(s, root,
       if (diff.isEmpty)
-        readFilesEntries(s, eTo).drop("__file")
+        readEntries(s, eTo)
           .withColumn("change_type", lit("insert")).limit(0)
       else diff.reduce(_.unionByName(_, allowMissingColumns = true)))
     publishManifest(Publish.readCommitted(s, manifestRoot(root), v), root, Some(h),
@@ -3178,7 +3094,6 @@ object VersionedTable {
                      v: String): String = {
     require(publishedVersions(srcRoot).contains(v),
       s"shallowCloneAt: $v is not a published version under $srcRoot")
-    forgetEntries(dstRoot)
     publishManifest(Publish.readVersion(s, manifestRoot(srcRoot), v), dstRoot, None,
       inheritedOf(versionMeta(srcRoot, v)) ++ Map("verb" -> "clone",
         "src" -> s"$srcRoot@$v"))
@@ -3368,7 +3283,7 @@ object VersionedTable {
                 layout: DataFrame => DataFrame): String = {
     val h = head(root)
     val gen = freshGen(root)
-    layout(readFiles(s, h.manifest(s))).write.parquet(gen)
+    layout(readEntries(s, h.entries(s))).write.parquet(gen)
     publishManifest(sidecar(s, gen, spec, transformsOf(h.meta)), root, Some(h),
       Map("verb" -> "recluster"))
   }
@@ -3399,7 +3314,7 @@ object VersionedTable {
       publishManifest(current, root, Some(h), Map("verb" -> "recluster-where-noop"))
     else {
       val gen = freshGen(root)
-      layout(readFiles(s, current.filter(col("file").isin(hot: _*))))
+      layout(readEntries(s, entriesIn(h.entries(s), hot)))
         .write.parquet(gen)
       publishManifest(
         unionSidecar(current.filter(!col("file").isin(hot: _*)),

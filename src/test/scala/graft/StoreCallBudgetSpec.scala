@@ -3,18 +3,30 @@ package graft
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
 
+import scala.jdk.CollectionConverters._
+
 import graft.operators.{ForwardingTableStore, LocalTableStore, TableStore, VersionedTable}
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, lit}
 
 /** Control-plane budget of the `VersionedTable` verbs, counted through
-  * the `TableStore` seam: every verb reads the table's head — the
-  * `_CURRENT` pointer and the head version's `_META` — ONCE and hands
-  * that snapshot to its helpers. A commit verb may read the pointer
-  * twice (its snapshot, plus the publish lock's read of the head the
-  * commit lands on) and a read once; no version's `_META` is read more
-  * than twice. Each store call is an object-store request at scale, so
-  * these counts are the regression gate, not wall time.
+  * the `TableStore` seam and a Spark job listener:
+  *
+  *  - every verb reads the table's head — the `_CURRENT` pointer and the
+  *    head version's `_META` — ONCE and hands that snapshot to its
+  *    helpers. A commit verb may read the pointer twice (its snapshot,
+  *    plus the publish lock's read of the head the commit lands on) and
+  *    a read once; no version's `_META` is read more than twice, and a
+  *    commit reads the `_NEXT` allocation watermark once;
+  *  - schemas and manifest entry lists are read on the driver, so no
+  *    Spark job is a schema inference or a manifest collect, and each
+  *    verb stays within its job budget (the `jobs` column).
+  *
+  * Each store call is an object-store request at scale and each job a
+  * scheduling round trip, so these counts are the regression gate, not
+  * wall time.
   */
 class StoreCallBudgetSpec extends SparkSpec {
 
@@ -39,54 +51,90 @@ class StoreCallBudgetSpec extends SparkSpec {
   private def head(root: String): Long =
     VersionedTable.headVersion(root).get.drop(1).toLong
 
-  /** Pointer reads and per-path `_META` reads under `root`. */
+  /** Pointer, `_NEXT` and per-path `_META` reads under `root`. */
   private final class Reads(root: String)
       extends ForwardingTableStore(LocalTableStore) {
     val pointer = new AtomicLong
+    val next = new AtomicLong
     val meta = new ConcurrentHashMap[String, AtomicLong]()
     override def readString(p: String): String = {
       if (p.startsWith(root)) {
         if (p.endsWith("/_CURRENT")) pointer.incrementAndGet()
+        else if (p.endsWith("/_NEXT")) next.incrementAndGet()
         else if (p.endsWith("/_META"))
           meta.computeIfAbsent(p, _ => new AtomicLong).incrementAndGet()
       }
       super.readString(p)
     }
-    def metaMax: Long = {
-      import scala.jdk.CollectionConverters._
+    def metaMax: Long =
       meta.values.asScala.map(_.get).maxOption.getOrElse(0L)
-    }
   }
 
-  private case class Row(name: String, commits: Boolean,
+  /** The call site of every Spark job `action` starts, in Spark's long
+    * form: the outermost Spark frame the job came from, then the
+    * caller's frames, innermost first.
+    */
+  private def jobSites(action: => Any): Seq[String] = {
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        sites.add(j.stageInfos.sortBy(_.stageId).lastOption.fold("")(_.details))
+        ()
+      }
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      action
+      ListenerBusDrain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(l)
+    sites.asScala.toSeq
+  }
+
+  /** A job that only answers a metadata question: a schema inference
+    * (started inside a `DataFrameReader` call — a read with a given
+    * schema starts none) or a manifest collect of the table's control
+    * plane, named by its frame.
+    */
+  private def controlPlane(site: String): Boolean =
+    site.linesIterator.nextOption().exists(_.contains("DataFrameReader")) ||
+      Seq("SchemaCache", "versionEntriesOf", "auditFilesExist",
+        "VersionedTable$.vacuum").exists(site.contains)
+
+  /** The innermost engine frame of a call site (for failure messages). */
+  private def engineFrame(site: String): String =
+    site.linesIterator.find(_.startsWith("graft.")).getOrElse(site.linesIterator.nextOption().getOrElse(""))
+
+  private case class Row(name: String, commits: Boolean, jobs: Int,
                          setup: String => Unit, action: String => Any)
 
   private val budget = Seq(
-    Row("append", commits = true, _ => (),
+    Row("append", commits = true, 3, _ => (),
       r => VersionedTable.append(spark, rows(200 until 210), r, spec)),
-    Row("merge", commits = true, _ => (),
+    Row("merge", commits = true, 25, _ => (),
       r => VersionedTable.merge(spark, r, spec, rows(195 until 205, _ => 7L),
         matchedUpdate = Map("n" -> col("src_n")))),
-    Row("upsertDV", commits = true, _ => (),
+    Row("upsertDV", commits = true, 15, _ => (),
       r => VersionedTable.upsertDV(spark, r, spec, rows(10 until 15, _ => 3L))),
-    Row("deleteRoster", commits = true, _ => (),
+    Row("deleteRoster", commits = true, 16, _ => (),
       r => VersionedTable.deleteRoster(spark, r, spec, rows(3 until 8))),
-    Row("deleteRosterDV", commits = true, _ => (),
+    Row("deleteRosterDV", commits = true, 13, _ => (),
       r => VersionedTable.deleteRosterDV(spark, r, spec, rows(3 until 8))),
-    Row("updateWhere", commits = true, _ => (),
+    Row("updateWhere", commits = true, 6, _ => (),
       r => VersionedTable.updateWhere(spark, r, spec, col("id") < 5,
         Map("n" -> lit(99L)))),
-    Row("optimizeCompact", commits = true, _ => (),
+    Row("optimizeCompact", commits = true, 4, _ => (),
       r => VersionedTable.optimizeCompact(spark, r, spec, targetBytes = 1L << 30)),
-    Row("compactDeletes", commits = true,
+    Row("compactDeletes", commits = true, 5,
       r => VersionedTable.deleteRosterDV(spark, r, spec, rows(3 until 8)),
       r => VersionedTable.compactDeletes(spark, r, spec)),
-    Row("read", commits = false, _ => (),
+    Row("read", commits = false, 2, _ => (),
       r => VersionedTable.read(spark, r).count()),
-    Row("readVersion", commits = false,
+    // the version the append wrote: no earlier call has read it
+    Row("readVersion", commits = false, 2,
       r => VersionedTable.append(spark, rows(200 until 210), r, spec),
-      r => VersionedTable.readVersion(spark, r, "v00001").count()),
-    Row("changeFeed", commits = false,
+      r => VersionedTable.readVersion(spark, r, "v00002").count()),
+    Row("changeFeed", commits = false, 2,
       r => VersionedTable.append(spark, rows(200 until 210), r, spec),
       r => VersionedTable.changeFeed(spark, r, "v00001", "v00002").count())
   )
@@ -107,6 +155,26 @@ class StoreCallBudgetSpec extends SparkSpec {
         s"${row.name} read _CURRENT ${reads.pointer.get} times (budget $pointerBudget)")
       assert(reads.metaMax <= 2L,
         s"${row.name} re-read a version's _META: ${reads.meta}")
+    }
+  }
+
+  budget.foreach { row =>
+    test(s"${row.name} runs at most ${row.jobs} Spark jobs, none a schema inference " +
+      s"or a manifest collect${if (row.commits) "; _NEXT is read once" else ""}") {
+      val root = table()
+      row.setup(root)
+      val reads = new Reads(root)
+      TableStore.set(reads)
+      val sites =
+        try jobSites(row.action(root)) finally TableStore.set(LocalTableStore)
+      def listed = sites.map(engineFrame).mkString("\n  ")
+      assert(!sites.exists(controlPlane),
+        s"${row.name} started control-plane job(s):\n  " +
+          sites.filter(controlPlane).map(_.linesIterator.take(4).mkString(" <- ")).mkString("\n  "))
+      assert(sites.size <= row.jobs,
+        s"${row.name} ran ${sites.size} jobs (budget ${row.jobs}):\n  $listed")
+      if (row.commits)
+        assert(reads.next.get == 1L, s"${row.name} read _NEXT ${reads.next.get} times")
     }
   }
 
