@@ -70,8 +70,7 @@ object Publish {
     * name).
     */
   private def versionDirs(rootPath: String): Seq[Long] =
-    if (!store.isDirectory(rootPath)) Seq.empty
-    else store.listNames(rootPath)
+    store.listNames(rootPath)
       .collect { case n if n.matches("v\\d+(\\.failed|\\.purged|\\.claim)?") =>
         n.drop(1).takeWhile(_.isDigit).toLong } :+ burnedWatermark(rootPath)
 
@@ -162,20 +161,17 @@ object Publish {
     */
   def compactPurgedMarkers(rootPath0: String): Int = {
     val rootPath = canon(rootPath0)
-    if (!store.isDirectory(rootPath)) 0
+    val markers = store.listNames(rootPath)
+      .filter(_.matches("v\\d+\\.purged"))
+    if (markers.isEmpty) 0
     else {
-      val markers = store.listNames(rootPath)
-        .filter(_.matches("v\\d+\\.purged"))
-      if (markers.isEmpty) 0
-      else {
-        val hi = (markers.map(_.drop(1).takeWhile(_.isDigit).toLong)
-          :+ burnedWatermark(rootPath)).max
-        val tmp = s"$rootPath/$Burned.tmp"
-        store.writeString(tmp, hi.toString)
-        store.atomicSwap(tmp, s"$rootPath/$Burned")
-        markers.foreach(n => store.deleteIfExists(s"$rootPath/$n"))
-        markers.size
-      }
+      val hi = (markers.map(_.drop(1).takeWhile(_.isDigit).toLong)
+        :+ burnedWatermark(rootPath)).max
+      val tmp = s"$rootPath/$Burned.tmp"
+      store.writeString(tmp, hi.toString)
+      store.atomicSwap(tmp, s"$rootPath/$Burned")
+      markers.foreach(n => store.deleteIfExists(s"$rootPath/$n"))
+      markers.size
     }
   }
 
@@ -260,7 +256,7 @@ object Publish {
               audit: DataFrame => Unit = _ => (),
               partitionBy: Seq[String] = Nil,
               meta: Map[String, String] = Map.empty): String =
-    publishGuarded(df, rootPath, audit, partitionBy, _ => meta, () => ())
+    publishGuarded(df, rootPath, _ => audit, partitionBy, _ => meta, () => ())
 
   /** [[publish]] with the `_META` pairs COMPUTED INSIDE the per-root
     * commit critical section (ADVICE r15): a meta value derived from
@@ -271,9 +267,12 @@ object Publish {
     * stamp exists for). `metaFn` runs exactly once, after the write +
     * audit pass, immediately before `_META` lands in the version dir,
     * and receives the head the commit lands on (read at allocation).
+    * `audit` receives that same head, so it can check only what the
+    * version adds to it: the pointer swap is conditional on that head,
+    * so the commit can land on no other.
     */
   def publishWith(df: DataFrame, rootPath: String,
-                  audit: DataFrame => Unit = _ => (),
+                  audit: Option[String] => DataFrame => Unit = _ => _ => (),
                   partitionBy: Seq[String] = Nil,
                   metaFn: Option[String] => Map[String, String] = _ => Map.empty): String =
     publishGuarded(df, rootPath, audit, partitionBy, metaFn, () => ())
@@ -296,7 +295,7 @@ object Publish {
                 audit: DataFrame => Unit = _ => (),
                 partitionBy: Seq[String] = Nil,
                 meta: Map[String, String] = Map.empty): String =
-    publishGuarded(df, rootPath, audit, partitionBy, _ => meta, () => {
+    publishGuarded(df, rootPath, _ => audit, partitionBy, _ => meta, () => {
       val found = currentVersion(rootPath)
       if (found != expectedHead) throw new PublishConflict(expectedHead, found)
     })
@@ -323,7 +322,7 @@ object Publish {
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
   private def publishGuarded(df: DataFrame, rootPath0: String,
-                             audit: DataFrame => Unit,
+                             audit: Option[String] => DataFrame => Unit,
                              partitionBy: Seq[String],
                              metaFn: Option[String] => Map[String, String],
                              headGuard: () => Unit): String = {
@@ -338,7 +337,7 @@ object Publish {
   }
 
   private def publishLocked(df: DataFrame, rootPath: String,
-                            audit: DataFrame => Unit,
+                            audit: Option[String] => DataFrame => Unit,
                             partitionBy: Seq[String],
                             metaFn: Option[String] => Map[String, String],
                             headGuard: () => Unit): String = {
@@ -434,7 +433,7 @@ object Publish {
       val back = spark.read.schema(
         if (partitionBy.isEmpty) df.schema else Footers.schemaOf(spark, dir))
         .parquet(dir)
-      audit(back)
+      audit(headAtAlloc)(back)
       // meta computed HERE, inside the commit critical section (ADVICE
       // r15): state-derived values (ICT stamps, watermarks) see a head
       // no concurrent writer can move until this commit's pointer swap
@@ -497,11 +496,9 @@ object Publish {
   def retireHistory(rootPath0: String): Seq[String] = {
     val rootPath = canon(rootPath0)
     val current = currentVersion(rootPath)
-    if (!store.isDirectory(rootPath)) Seq.empty
-    else reclaim(rootPath, current,
-      store.listNames(rootPath)
-        .filter(n => n.matches("v\\d+(\\.failed)?") && !current.contains(n))
-        .sorted)
+    val names = store.listNames(rootPath)
+    reclaim(rootPath, current, names.toSet,
+      names.filter(n => n.matches("v\\d+(\\.failed)?") && !current.contains(n)).sorted)
   }
 
   /** Claim-aware physical reclaim shared by the janitors. An
@@ -521,24 +518,33 @@ object Publish {
     *
     * Committed versions and `.failed` tombstones (claim already
     * released) reclaim as before, with their `.purged` marker.
+    *
+    * Claim status comes from `listed`, the root's listing taken AFTER
+    * `current` was read — no probe per victim. That order keeps the
+    * rule exact: a claim the listing shows below a head read before it
+    * is dead (the head's own claim is healed before any successor moves
+    * past it), and a claim released after the listing only makes the
+    * janitor skip a number a later run reclaims.
     */
   private def reclaim(rootPath: String, current: Option[String],
-                      names: Seq[String]): Seq[String] = {
-    val headNum = current.map(v => v.drop(1).takeWhile(_.isDigit).toLong)
-    names.flatMap { n =>
-      val dir = s"$rootPath/$n"
-      val claimed = n.matches("v\\d+") && store.exists(s"$dir.claim")
-      val num = n.drop(1).takeWhile(_.isDigit).toLong
-      if (claimed && !headNum.exists(num < _)) None // undecided in-flight
+                      listed: Set[String], victims: Seq[String]): Seq[String] = {
+    val headNum = current.map(versionNumber)
+    victims.flatMap { n =>
+      val claimed = n.matches("v\\d+") && listed(s"$n.claim")
+      if (claimed && !headNum.exists(versionNumber(n) < _)) None // undecided in-flight
       else {
-        if (store.isDirectory(dir)) store.deleteTree(dir)
-        else store.deleteIfExists(dir)
+        // a dir or a file alike: deleteTree is the store's idempotent
+        // delete of either
+        store.deleteTree(s"$rootPath/$n")
         if (!claimed)
           store.createMarker(s"$rootPath/${n.stripSuffix(".failed")}.purged")
         Some(n)
       }
     }
   }
+
+  /** The number of a `v<N>` name (any suffix ignored). */
+  private def versionNumber(n: String): Long = n.drop(1).takeWhile(_.isDigit).toLong
 
   /** VACUUM with a RETENTION WINDOW — the bounded-history sibling of
     * [[retireHistory]] (which keeps only the current version, the
@@ -560,27 +566,35 @@ object Publish {
     * Scale shape (100 TB): cost ∝ removed versions (directory deletes
     * + one marker file each) — no data is read, rewritten, or moved;
     * the retained window's bytes are exactly as the commits left them.
+    * Beyond its deletes it reads the pointer and lists the root once.
     */
   def vacuumRetain(rootPath0: String, keepLast: Int,
                    alsoKeep: Set[String] = Set.empty): Seq[String] = {
-    require(keepLast >= 1, s"vacuumRetain: keepLast must be >= 1, got $keepLast")
     val rootPath = canon(rootPath0)
     val current = currentVersion(rootPath)
-    if (!store.isDirectory(rootPath)) Seq.empty
-    else {
-      val names = store.listNames(rootPath)
-        .filter(_.matches("v\\d+(\\.failed)?"))
-        // numeric order, not lexicographic: past v99999 the %05d
-        // padding overflows and "v100000" sorts before "v99999"
-        .sortBy(n => n.drop(1).takeWhile(_.isDigit).toLong)
-      // retention slots count COMMITTED versions only: a claim-marked
-      // live dir is an attempt, not a version — letting it occupy a
-      // slot would silently shrink the time-travel window it displaces
-      val retained = names.filter(n => n.matches("v\\d+") &&
-          !store.exists(s"$rootPath/$n.claim"))
-        .takeRight(keepLast).toSet ++ current ++ alsoKeep
-      reclaim(rootPath, current, names.filterNot(retained.contains))
-    }
+    vacuumListed(rootPath, current, store.listNames(rootPath), keepLast, alsoKeep)
+  }
+
+  /** [[vacuumRetain]] of a root the caller has already read: `current`
+    * is its head and `names` its listing, taken after that head was
+    * read (the order [[reclaim]]'s claim rule needs). Committed and
+    * claim status come from the names, so the retention step makes no
+    * store call beyond its deletes and markers.
+    */
+  private[operators] def vacuumListed(rootPath: String, current: Option[String],
+                                      names: Seq[String], keepLast: Int,
+                                      alsoKeep: Set[String]): Seq[String] = {
+    require(keepLast >= 1, s"vacuumRetain: keepLast must be >= 1, got $keepLast")
+    val listed = names.toSet
+    // numeric order, not lexicographic: past v99999 the %05d padding
+    // overflows and "v100000" sorts before "v99999"
+    val versions = names.filter(_.matches("v\\d+(\\.failed)?")).sortBy(versionNumber)
+    // retention slots count COMMITTED versions only: a claim-marked
+    // live dir is an attempt, not a version — letting it occupy a slot
+    // would silently shrink the time-travel window it displaces
+    val retained = versions.filter(n => n.matches("v\\d+") && !listed(s"$n.claim"))
+      .takeRight(keepLast).toSet ++ current ++ alsoKeep
+    reclaim(rootPath, current, listed, versions.filterNot(retained.contains))
   }
 
   /** Live (readable-by-name) versions other than the current one —
@@ -591,8 +605,7 @@ object Publish {
   def staleVersions(rootPath0: String): Seq[String] = {
     val rootPath = canon(rootPath0)
     val current = currentVersion(rootPath)
-    if (!store.isDirectory(rootPath)) Seq.empty
-    else store.listNames(rootPath)
+    store.listNames(rootPath)
       .filter(n => n.matches("v\\d+(\\.failed)?") && !current.contains(n))
       .sorted
   }

@@ -1,7 +1,7 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicBoolean
 
 import scala.jdk.CollectionConverters._
 
@@ -22,7 +22,14 @@ import org.apache.spark.sql.functions.{col, lit}
   *    commit reads the `_NEXT` allocation watermark once;
   *  - schemas and manifest entry lists are read on the driver, so no
   *    Spark job is a schema inference or a manifest collect, and each
-  *    verb stays within its job budget (the `jobs` column).
+  *    verb stays within its job budget (the `jobs` column);
+  *  - a commit's store calls do not grow with the table's file count:
+  *    its audit probes only the files it adds, so a commit makes as
+  *    many calls on a 128-file table as on a 4-file one;
+  *  - a vacuum lists the manifest root once and takes committed and
+  *    claim status from that listing: beyond its deletes it makes a
+  *    fixed handful of calls, two per surviving version (its `_META`)
+  *    and one listing per generation directory.
   *
   * Each store call is an object-store request at scale and each job a
   * scheduling round trip, so these counts are the regression gate, not
@@ -51,23 +58,46 @@ class StoreCallBudgetSpec extends SparkSpec {
   private def head(root: String): Long =
     VersionedTable.headVersion(root).get.drop(1).toLong
 
-  /** Pointer, `_NEXT` and per-path `_META` reads under `root`. */
-  private final class Reads(root: String)
+  /** Every store call under `root`, as (method, path). */
+  private final class Calls(root: String)
       extends ForwardingTableStore(LocalTableStore) {
-    val pointer = new AtomicLong
-    val next = new AtomicLong
-    val meta = new ConcurrentHashMap[String, AtomicLong]()
-    override def readString(p: String): String = {
-      if (p.startsWith(root)) {
-        if (p.endsWith("/_CURRENT")) pointer.incrementAndGet()
-        else if (p.endsWith("/_NEXT")) next.incrementAndGet()
-        else if (p.endsWith("/_META"))
-          meta.computeIfAbsent(p, _ => new AtomicLong).incrementAndGet()
-      }
-      super.readString(p)
+    val seen = new ConcurrentLinkedQueue[(String, String)]()
+    private def at[A](op: String, p: String)(call: => A): A = {
+      if (p.startsWith(root)) seen.add(op -> p)
+      call
     }
-    def metaMax: Long =
-      meta.values.asScala.map(_.get).maxOption.getOrElse(0L)
+    def of(op: String): Seq[String] =
+      seen.asScala.toSeq.collect { case (`op`, p) => p }
+    /** How often each path ending in `/name` was read. */
+    def reads(name: String): Map[String, Int] =
+      of("readString").filter(_.endsWith(s"/$name")).groupMapReduce(identity)(_ => 1)(_ + _)
+    override def exists(p: String): Boolean = at("exists", p)(super.exists(p))
+    override def isDirectory(p: String): Boolean =
+      at("isDirectory", p)(super.isDirectory(p))
+    override def listNames(p: String): Seq[String] =
+      at("listNames", p)(super.listNames(p))
+    override def readString(p: String): String =
+      at("readString", p)(super.readString(p))
+    override def writeString(p: String, c: String): Unit =
+      at("writeString", p)(super.writeString(p, c))
+    override def createDirectories(p: String): Unit =
+      at("createDirectories", p)(super.createDirectories(p))
+    override def createMarker(p: String): Unit =
+      at("createMarker", p)(super.createMarker(p))
+    override def deleteIfExists(p: String): Boolean =
+      at("deleteIfExists", p)(super.deleteIfExists(p))
+    override def deleteTree(p: String): Unit = at("deleteTree", p)(super.deleteTree(p))
+    override def atomicSwap(t: String, d: String): Unit =
+      at("atomicSwap", d)(super.atomicSwap(t, d))
+    override def createExclusive(p: String): Boolean =
+      at("createExclusive", p)(super.createExclusive(p))
+    override def swapIfContentIs(t: String, d: String, e: Option[String]): Boolean =
+      at("swapIfContentIs", d)(super.swapIfContentIs(t, d, e))
+    override def rename(src: String, dst: String): Unit =
+      at("rename", src)(super.rename(src, dst))
+    override def size(p: String): Long = at("size", p)(super.size(p))
+    override def lastModifiedMs(p: String): Long =
+      at("lastModifiedMs", p)(super.lastModifiedMs(p))
   }
 
   /** The call site of every Spark job `action` starts, in Spark's long
@@ -75,7 +105,7 @@ class StoreCallBudgetSpec extends SparkSpec {
     * caller's frames, innermost first.
     */
   private def jobSites(action: => Any): Seq[String] = {
-    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val sites = new ConcurrentLinkedQueue[String]()
     val l = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = {
         sites.add(j.stageInfos.sortBy(_.stageId).lastOption.fold("")(_.details))
@@ -136,7 +166,10 @@ class StoreCallBudgetSpec extends SparkSpec {
       r => VersionedTable.readVersion(spark, r, "v00002").count()),
     Row("changeFeed", commits = false, 2,
       r => VersionedTable.append(spark, rows(200 until 210), r, spec),
-      r => VersionedTable.changeFeed(spark, r, "v00001", "v00002").count())
+      r => VersionedTable.changeFeed(spark, r, "v00001", "v00002").count()),
+    Row("vacuum", commits = false, 0,
+      r => VersionedTable.append(spark, rows(200 until 210), r, spec),
+      r => VersionedTable.vacuum(spark, r, keepLast = 1))
   )
 
   budget.foreach { row =>
@@ -145,16 +178,17 @@ class StoreCallBudgetSpec extends SparkSpec {
       val root = table()
       row.setup(root)
       val before = head(root)
-      val reads = new Reads(root)
-      TableStore.set(reads)
+      val calls = new Calls(root)
+      TableStore.set(calls)
       try row.action(root) finally TableStore.set(LocalTableStore)
       assert(head(root) == before + (if (row.commits) 1 else 0),
         s"${row.name} must ${if (row.commits) "commit once" else "not commit"}")
-      val pointerBudget = if (row.commits) 2L else 1L
-      assert(reads.pointer.get <= pointerBudget,
-        s"${row.name} read _CURRENT ${reads.pointer.get} times (budget $pointerBudget)")
-      assert(reads.metaMax <= 2L,
-        s"${row.name} re-read a version's _META: ${reads.meta}")
+      val pointerBudget = if (row.commits) 2 else 1
+      val pointer = calls.reads("_CURRENT").values.sum
+      assert(pointer <= pointerBudget,
+        s"${row.name} read _CURRENT $pointer times (budget $pointerBudget)")
+      assert(calls.reads("_META").values.forall(_ <= 2),
+        s"${row.name} re-read a version's _META: ${calls.reads("_META")}")
     }
   }
 
@@ -163,8 +197,8 @@ class StoreCallBudgetSpec extends SparkSpec {
       s"or a manifest collect${if (row.commits) "; _NEXT is read once" else ""}") {
       val root = table()
       row.setup(root)
-      val reads = new Reads(root)
-      TableStore.set(reads)
+      val calls = new Calls(root)
+      TableStore.set(calls)
       val sites =
         try jobSites(row.action(root)) finally TableStore.set(LocalTableStore)
       def listed = sites.map(engineFrame).mkString("\n  ")
@@ -174,8 +208,84 @@ class StoreCallBudgetSpec extends SparkSpec {
       assert(sites.size <= row.jobs,
         s"${row.name} ran ${sites.size} jobs (budget ${row.jobs}):\n  $listed")
       if (row.commits)
-        assert(reads.next.get == 1L, s"${row.name} read _NEXT ${reads.next.get} times")
+        assert(calls.reads("_NEXT").values.sum == 1,
+          s"${row.name} read _NEXT ${calls.reads("_NEXT")} times")
     }
+  }
+
+  /** A 2,000-row table over `files` live files: ids 0-15 in one file,
+    * the rest spread over the others. The changes below touch ids 0-15
+    * only, so each is the same change at any file count. The Bloom
+    * sidecar is wide enough that no other file probes as a holder.
+    */
+  private val wide = spec.copy(mBits = 1 << 16)
+
+  private def tableOf(files: Int): String = {
+    val root = tmp()
+    VersionedTable.create(spark, rows(0 until 16), root, wide, layout = _.coalesce(1))
+    VersionedTable.append(spark, rows(16 until 2000), root, wide,
+      layout = _.repartition(files - 1))
+    assert(graft.operators.Footers.entriesOf(spark,
+      s"$root/manifest/${VersionedTable.headVersion(root).get}").length == files)
+    root
+  }
+
+  private val scaleFree = Seq[(String, String => Any)](
+    "append" -> (r => VersionedTable.append(spark, rows(2000 until 2010), r, wide)),
+    "merge" -> (r => VersionedTable.merge(spark, r, wide, rows(5 until 15, _ => 7L),
+      matchedUpdate = Map("n" -> col("src_n")))),
+    "deleteRoster" -> (r => VersionedTable.deleteRoster(spark, r, wide, rows(3 until 8))),
+    "upsertDV" -> (r => VersionedTable.upsertDV(spark, r, wide, rows(10 until 15, _ => 3L))))
+
+  scaleFree.foreach { case (name, verb) =>
+    test(s"$name makes as many store calls on a 128-file table as on a 4-file one") {
+      val calls = Seq(4, 128).map { files =>
+        val root = tableOf(files)
+        val c = new Calls(root)
+        TableStore.set(c)
+        try verb(root) finally TableStore.set(LocalTableStore)
+        c.seen.asScala.toSeq
+      }
+      def byOp(cs: Seq[(String, String)]) =
+        cs.groupMapReduce(_._1)(_ => 1)(_ + _).toSeq.sorted.mkString(", ")
+      assert(calls(0).size == calls(1).size,
+        s"$name: ${calls(0).size} store calls at 4 files (${byOp(calls(0))}) but " +
+          s"${calls(1).size} at 128 (${byOp(calls(1))})")
+    }
+  }
+
+  test("vacuum lists the manifest root once: two reads per surviving version, " +
+    "one listing per generation, no isDirectory or claim probe") {
+    val root = table()
+    (0 until 4).foreach(i =>
+      VersionedTable.append(spark, rows(210 + 10 * i until 220 + 10 * i), root, spec))
+    VersionedTable.deleteRoster(spark, root, spec, rows(3 until 8))
+    VersionedTable.optimizeCompact(spark, root, spec, targetBytes = 1L << 30)
+    val generations = LocalTableStore.listNames(s"$root/files")
+      .count(n => !n.startsWith("dv-") && !n.startsWith("cdc-"))
+    val c = new Calls(root)
+    TableStore.set(c)
+    val (retired, nFiles, _) =
+      try VersionedTable.vacuum(spark, root, keepLast = 2)
+      finally TableStore.set(LocalTableStore)
+    val surviving = VersionedTable.publishedVersions(root)
+    assert(retired.size == 5 && surviving == Seq("v00006", "v00007"),
+      s"retired $retired, surviving $surviving")
+    assert(nFiles > 0, "the compaction left superseded files to reclaim")
+    assert(VersionedTable.read(spark, root).count() == 235L)
+    assert(c.of("isDirectory").isEmpty, s"isDirectory probes: ${c.of("isDirectory")}")
+    assert(!c.of("exists").exists(_.endsWith(".claim")),
+      s"claim probes: ${c.of("exists").filter(_.endsWith(".claim"))}")
+    assert(c.of("listNames").count(_ == s"$root/manifest") == 1,
+      s"manifest listings: ${c.of("listNames")}")
+    // the pointer (2), the manifest, tag and data-root listings (3), then
+    // each surviving version's `_META` (2) and each generation's listing
+    val reads = Seq("exists", "isDirectory", "listNames", "readString")
+      .map(c.of(_).size).sum
+    val budget = 5 + 2 * surviving.size + generations
+    assert(reads <= budget, s"vacuum made $reads reads (budget $budget): " +
+      c.seen.asScala.filter(x => Set("exists", "listNames", "readString")(x._1))
+        .map { case (op, p) => s"$op ${p.stripPrefix(root)}" }.mkString(", "))
   }
 
   test("a property committed while an append runs is inherited by the append's version") {

@@ -1,13 +1,15 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
-import graft.operators.{Publish, VersionedTable}
+import graft.operators.{ForwardingTableStore, LocalTableStore, Publish, TableStore, VersionedTable}
 
 /** Manifest-as-table claims the `layout_versioned_publish` hash gate
   * can't see: pruning actually drops files, superseded generations
   * stay on disk but invisible to the head version, time travel is
   * byte-identical after a later delete, and the manifest audit vetoes
-  * a manifest naming missing files.
+  * a manifest naming a missing file it adds.
   */
 class VersionedTableSpec extends SparkSpec {
 
@@ -124,14 +126,29 @@ class VersionedTableSpec extends SparkSpec {
     import spark.implicits._
     val root = fixture()
     val current = Publish.currentVersion(s"$root/manifest").get
-    // corrupt the table root: physically remove one live generation
-    // file, then attempt a verb that republishes the manifest
-    val victim = VersionedTable.manifest(spark, root)
-      .select("file").as[String].head().stripPrefix("file:")
-    java.nio.file.Files.delete(java.nio.file.Paths.get(victim))
-    intercept[IllegalArgumentException] {
-      VersionedTable.deleteRoster(spark, root, spec, Seq(999999L).toDF("k"))
+    val live = VersionedTable.manifest(spark, root)
+      .select("file").as[String].collect().map(_.stripPrefix("file:")).toSet
+    // corrupt the table root mid-commit: once the delete's manifest is
+    // written (its `_SUCCESS` probe), physically remove a data file the
+    // commit adds — the audit probes exactly those
+    val corrupting = new ForwardingTableStore(LocalTableStore) {
+      override def exists(p: String): Boolean = {
+        if (p.startsWith(s"$root/manifest/") && p.endsWith("/_SUCCESS")) {
+          val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(s"$root/files"))
+          try walk.iterator().asScala.map(_.toString)
+            .find(f => f.contains("/files/g-") && f.endsWith(".parquet") && !live(f))
+            .foreach(f => java.nio.file.Files.delete(java.nio.file.Paths.get(f)))
+          finally walk.close()
+        }
+        super.exists(p)
+      }
     }
+    TableStore.set(corrupting)
+    val e =
+      try intercept[IllegalArgumentException] {
+        VersionedTable.deleteRoster(spark, root, spec, Seq(5L).toDF("k"))
+      } finally TableStore.set(LocalTableStore)
+    assert(e.getMessage.contains("missing file"), e.getMessage)
     assert(Publish.currentVersion(s"$root/manifest").contains(current),
       "a vetoed publish must leave the pointer untouched")
   }
