@@ -207,21 +207,27 @@ object StatsSpine {
     * (`conv(substring(md5(k), 1+8i, 8), 16, 10) % m`), so the
     * distributed probe addresses bit-identical positions to the
     * driver-side [[bloomSurvives]] and the aggregate that built the
-    * bitmaps.
+    * bitmaps. The words are a pure function of the key, so they come
+    * from one projection per key, with no aggregation or self-join.
+    * The key stays `distinct()`: a duplicate key would double its
+    * `hits` in [[rosterHolders]] and turn holders into false negatives.
     */
   private[graft] def rosterWords(roster: DataFrame, keyCol: String,
                                  mBits: Int): DataFrame = {
     val keys = roster.select(col(keyCol).cast("string").as("k"))
       .filter(col("k").isNotNull).distinct()
-    val pos = keys.select(col("k"), explode(array(
-      (0 until graft.functions.BloomFilterAgg.NumHashes).map(i =>
-        expr(s"CAST(conv(substring(md5(k), ${1 + 8 * i}, 8), 16, 10) AS BIGINT) % $mBits")): _*))
-      .as("p"))
-    val words = pos.groupBy(col("k"), expr("p DIV 64").as("word_idx"))
-      .agg(expr("CAST(bit_or(shiftleft(CAST(1 AS BIGINT), CAST(p % 64 AS INT))) AS BIGINT)")
-        .as("mask"))
-    val nw = words.groupBy("k").agg(count(lit(1)).as("n_words"))
-    words.join(nw, "k")
+    val ps = (0 until graft.functions.BloomFilterAgg.NumHashes).map(i =>
+      s"CAST(conv(substring(md5(k), ${1 + 8 * i}, 8), 16, 10) AS BIGINT) % $mBits")
+    keys.select(col("k"), expr(ps.mkString("array(", ", ", ")")).as("ps"))
+      .select(col("k"), col("ps"),
+        expr("array_distinct(transform(ps, p -> p DIV 64))").as("ws"))
+      .select(col("k"), size(col("ws")).cast("long").as("n_words"),
+        explode(expr("transform(ws, w -> named_struct('word_idx', w, 'mask', " +
+          "aggregate(filter(ps, p -> p DIV 64 = w), CAST(0 AS BIGINT), " +
+          "(m, p) -> m | shiftleft(CAST(1 AS BIGINT), CAST(p % 64 AS INT)))))"))
+          .as("w"))
+      .select(col("k"), col("w.word_idx").as("word_idx"), col("w.mask").as("mask"),
+        col("n_words"))
   }
 
   /** Files whose bloom says they might hold ANY roster key — the

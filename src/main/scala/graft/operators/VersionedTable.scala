@@ -281,9 +281,20 @@ object VersionedTable {
 
   private def enforceSchema(s: SparkSession, h: Head, df: DataFrame,
                             allowEvolution: Boolean): Unit = {
+    val drift = schemaDrift(s, h, df, allowEvolution)
+    require(drift.isEmpty,
+      (if (allowEvolution)
+        "type change refused (evolution admits new columns only): "
+      else "schema drift refused (pass allowEvolution=true to evolve): ") +
+        drift.mkString("; "))
+  }
+
+  /** The ways `df`'s schema breaks [[enforceSchema]]'s contract. */
+  private def schemaDrift(s: SparkSession, h: Head, df: DataFrame,
+                          allowEvolution: Boolean): Seq[String] = {
     val headByName = readHead(s, h).schema.map(f => f.name -> f.dataType).toMap
     val declaredWiden = withPrefix(h.meta, WidenPrefix).keySet
-    val drift = df.schema.flatMap { f =>
+    df.schema.flatMap { f =>
       headByName.get(f.name) match {
         case None =>
           if (allowEvolution) None
@@ -301,11 +312,6 @@ object VersionedTable {
           Some(s"${f.name}: ${t.simpleString} -> ${f.dataType.simpleString}")
       }
     }
-    require(drift.isEmpty,
-      (if (allowEvolution)
-        "type change refused (evolution admits new columns only): "
-      else "schema drift refused (pass allowEvolution=true to evolve): ") +
-        drift.mkString("; "))
   }
 
   /** SQL CHECK semantics: a row violates only when the expression
@@ -417,13 +423,31 @@ object VersionedTable {
 
   /** Write a batch (logical names) as a fresh generation under the
     * head's physical names and declared widths; returns its sidecar
-    * manifest rows under the head's partition spec.
+    * manifest rows under the head's partition spec, or None when the
+    * batch held no row (its empty directory is deleted).
     */
   private def writeBatch(s: SparkSession, h: Head, spec: Spec, df: DataFrame,
-                         layout: DataFrame => DataFrame): DataFrame = {
+                         layout: DataFrame => DataFrame): Option[DataFrame] = {
     val gen = freshGen(h.root)
-    layout(toPhysical(df, h.meta)).write.parquet(gen)
-    sidecar(s, gen, spec, transformsOf(h.meta))
+    Option.when(writeIfAny(layout(toPhysical(df, h.meta)), gen))(
+      sidecar(s, gen, spec, transformsOf(h.meta)))
+  }
+
+  /** Write `shape(rows)` as parquet at `dir` under an observed row
+    * count of `rows` — emptiness comes from the write itself, not from
+    * a probe job that would compute `rows` once more — and delete
+    * `dir` when `rows` held none. Returns whether `rows` held any.
+    */
+  private def writeIfAny(rows: DataFrame, dir: String,
+                         shape: DataFrame => DataFrame = identity): Boolean = {
+    val obs = org.apache.spark.sql.Observation()
+    shape(rows.observe(obs, count(lit(1)).as("n"))).write.parquet(dir)
+    // adaptive execution drops a stage that produced no row from the
+    // final plan, and an observed count inside `shape` with it: only
+    // then does `rows` answer a probe
+    val any = obs.get.get("n").fold(!rows.isEmpty)(_.asInstanceOf[Long] > 0L)
+    if (!any) TableStore.get.deleteTree(dir)
+    any
   }
 
   /** DROP COLUMN as a property commit (zero rewrite): reads hide the
@@ -876,7 +900,8 @@ object VersionedTable {
     val h = head(root)
     admit(s, h, df, allowEvolution)
     val batchRows = writeBatch(s, h, spec, df, layout)
-    publishManifest(unionSidecar(h.manifest(s), batchRows),
+    val current = h.manifest(s)
+    publishManifest(batchRows.fold(current)(unionSidecar(current, _)),
       root, Some(h), extraMeta + ("verb" -> "append"))
   }
 
@@ -995,12 +1020,8 @@ object VersionedTable {
     // dir has no readable schema).
     val dir = s"${filesDir(root)}/cdc-" +
       java.util.UUID.randomUUID().toString.replace("-", "")
-    val obs = org.apache.spark.sql.Observation()
-    changes.observe(obs, count(lit(1)).as("n")).write.parquet(dir)
-    if (obs.get("n").asInstanceOf[Long] == 0L) {
-      TableStore.get.deleteTree(dir)
-      Map("cdc_empty" -> "true")
-    } else Map("cdc_path" -> dir)
+    if (writeIfAny(changes, dir)) Map("cdc_path" -> dir)
+    else Map("cdc_empty" -> "true")
   }
 
   /** Deletion-vector sidecars hold `(file, pos)` rows: the
@@ -1013,11 +1034,13 @@ object VersionedTable {
   private def readDv(s: SparkSession, paths: Seq[String]): DataFrame =
     s.read.schema(DvSchema).parquet(paths: _*)
 
-  /** The distinct deletion-vector positions of `paths`, if any. */
-  private def dvPositionsOf(s: SparkSession,
-                            paths: Seq[String]): Option[DataFrame] =
+  /** The deletion-vector positions `es` holds on `files`, if any. */
+  private def dvOn(s: SparkSession, es: Entries,
+                   files: Seq[String]): Option[DataFrame] = {
+    val paths = dvPathsOf(entriesIn(es, files))
     if (paths.isEmpty) None
-    else Some(readDv(s, paths).distinct())
+    else Some(readDv(s, paths).filter(col("file").isInCollection(files)))
+  }
 
   /** The distinct deletion-vector sidecars `es` names. */
   private def dvPathsOf(es: Entries): Seq[String] = es.flatMap(_._2).distinct.toSeq
@@ -1043,63 +1066,58 @@ object VersionedTable {
   private def readHead(s: SparkSession, h: Head): DataFrame =
     logicalView(readEntries(s, h.entries(s)), h.meta)
 
-  /** Resolve (file, pos) pairs back to FULL ROWS by a position join —
-    * the vectored bytes are still on disk, so a feed can carry the
-    * deleted payload, not just a key.
+  /** Resolve (file, pos) pairs on `files` back to FULL ROWS by a
+    * position join — the vectored bytes are still on disk, so a feed
+    * can carry the deleted payload, not just a key. `files` are every
+    * file `delta` may name, known from the entry lists.
     */
-  private def rowsAtPositions(s: SparkSession, delta: DataFrame): DataFrame = {
-    val files = delta.select("file").distinct().collect().map(_.getString(0)).toSeq
+  private def rowsAtPositions(s: SparkSession, files: Seq[String],
+                              delta: DataFrame): DataFrame =
     s.read.schema(Footers.mergedSchemaOf(s, files)).parquet(files: _*)
       .withColumn("__dv_file", col("_metadata.file_path"))
       .withColumn("__dv_pos", col("_metadata.row_index"))
       .join(broadcast(delta.select(col("file").as("__dv_file"),
         col("pos").as("__dv_pos"))), Seq("__dv_file", "__dv_pos"), "left_semi")
       .drop("__dv_file", "__dv_pos")
-  }
 
   /** The row-level content diff between two manifest versions, given
-    * as their entry lists — file diff plus DV-delta algebra, each side
-    * resolved through its own vectors: inserts = files B lists that A
-    * doesn't (through B's vectors) plus UN-deletes (positions vectored
-    * in A but not in B on common files); deletes = files A lists that B
-    * doesn't (through A's vectors) plus fresh vectors (positions in B
-    * but not in A on common files). [[changeFeed]] segments use the
-    * forward half (A-before-B inside a window can't un-delete);
-    * [[restore]]'s CDC uses the full algebra (head → restored content
-    * can). Planned off the per-version entry lists read on the driver:
-    * file-set membership, the added/dropped splits and their
-    * emptiness are driver-side set math over the immutable manifests
-    * instead of small Spark jobs (manifest scans, anti-join isEmpty
-    * probes, dv-path collects). The DV-delta frames and their
-    * data-dependent isEmpty probes read data, not metadata.
+    * as their entry lists. Inserts are the rows of files B lists that
+    * A doesn't (through B's vectors); deletes are the rows of files A
+    * lists that B doesn't (through A's vectors) plus the FRESH vectors
+    * (positions in B but not in A on common files). `undeletes` adds
+    * the reverse DV delta (positions in A but not in B) as inserts:
+    * [[restore]]'s CDC needs it, since head → restored content can
+    * un-delete. A [[changeFeed]] segment computes the forward half
+    * only: every commit inside it is a [[FeedSafeVerbs]] commit, whose
+    * [[commitDv]] folds each prior vector forward, so B's vector of a
+    * common file contains A's.
+    *
+    * Planned from the entry lists alone, with no probe job. Sidecars
+    * are immutable and each holds every covered file's complete
+    * vector, so a common file's vector changed only if its `dv_path`
+    * differs between A and B. No such file plans no DV piece;
+    * otherwise the DV pieces read exactly those files and their
+    * sidecars, and the position semi-join keeps the true delta (a file
+    * repointed at a new sidecar with the same vector emits no row).
     */
-  private def manifestDiff(s: SparkSession,
-                           eA: Entries, eB: Entries): Seq[DataFrame] = {
-    val filesA = eA.map(_._1).toSet
+  private def manifestDiff(s: SparkSession, eA: Entries, eB: Entries,
+                           undeletes: Boolean): Seq[DataFrame] = {
+    val dvA = eA.toMap
     val filesB = eB.map(_._1).toSet
-    val added = eB.filter(e => !filesA.contains(e._1))
+    val added = eB.filter(e => !dvA.contains(e._1))
     val dropped = eA.filter(e => !filesB.contains(e._1))
-    val dvA = dvPositionsOf(s, dvPathsOf(eA))
-    val dvB = dvPositionsOf(s, dvPathsOf(eB))
-    // common-file restriction as a broadcast semi-join against a local
-    // relation (the same planning-sized list every holder collect in
-    // this file already holds driver-side)
-    val commonFiles = (filesA intersect filesB).toSeq.sorted
-    import s.implicits._
-    lazy val commonDf = commonFiles.toDF("file")
-    def common(x: Option[DataFrame], y: Option[DataFrame]): Option[DataFrame] =
-      x.map { xx =>
-        xx.transform(d => y.fold(d)(yy => d.join(yy, Seq("file", "pos"), "left_anti")))
-          .join(broadcast(commonDf), Seq("file"), "left_semi")
-      }.filter(!_.isEmpty)
-    val inserts =
-      (if (added.isEmpty) None
-       else Some(readEntries(s, added))) ++
-        common(dvA, dvB).map(rowsAtPositions(s, _)) // un-deletes
-    val deletes =
-      (if (dropped.isEmpty) None
-       else Some(readEntries(s, dropped))) ++
-        common(dvB, dvA).map(rowsAtPositions(s, _)) // fresh vectors
+    val changed = eB.collect { case (f, dv) if dvA.get(f).exists(_ != dv) => f }.toSeq
+    // the rows `from` vectors on the changed files and `minus` does not
+    def dvDelta(from: Entries, minus: Entries): Option[DataFrame] =
+      dvOn(s, from, changed).map { d =>
+        val fresh = dvOn(s, minus, changed)
+          .fold(d)(m => d.join(m, Seq("file", "pos"), "left_anti"))
+        rowsAtPositions(s, changed, fresh)
+      }
+    val inserts = Option.when(added.nonEmpty)(readEntries(s, added)) ++
+      (if (undeletes) dvDelta(eA, eB) else None)
+    val deletes = Option.when(dropped.nonEmpty)(readEntries(s, dropped)) ++
+      dvDelta(eB, eA)
     (inserts.map(_.withColumn("change_type", lit("insert"))) ++
       deletes.map(_.withColumn("change_type", lit("delete")))).toSeq
   }
@@ -1111,10 +1129,18 @@ object VersionedTable {
     *  - INSERTS = rows of files a segment's end lists that its start
     *    doesn't, resolved through the end's vectors (a row inserted
     *    AND deleted inside the segment nets out, CDF semantics);
-    *  - DELETES = the DV delta (end's vector positions minus start's)
-    *    on files BOTH endpoints list, resolved back to FULL OLD ROWS
-    *    by a position join — the vectored bytes are still on disk, so
-    *    the feed can carry the deleted payload, not just a key.
+    *  - DELETES = rows of files the start lists that the end doesn't,
+    *    plus the DV delta (end's vector positions minus start's) on
+    *    files BOTH endpoints list, resolved back to FULL OLD ROWS by a
+    *    position join — the vectored bytes are still on disk, so the
+    *    feed can carry the deleted payload, not just a key. Only the
+    *    forward half: inside a segment no commit un-deletes
+    *    ([[manifestDiff]]).
+    *
+    * Each segment is planned from its two endpoints' entry lists on
+    * the driver: the file splits, and the common files whose
+    * `dv_path` changed, are set math with no probe job. The one job
+    * the feed starts is the caller's action on the returned frame.
     *
     * Windows may span CONTENT-IDENTICAL rewrites (OPTIMIZE in both
     * halves, DV compaction, property commits — Delta CDF's
@@ -1192,7 +1218,7 @@ object VersionedTable {
     def segment(a: String, b: String): Unit =
       pieces ++= manifestDiff(s,
         versionEntries(s, root, a, committed = a != fromV),
-        versionEntries(s, root, b, committed = true))
+        versionEntries(s, root, b, committed = true), undeletes = false)
     var segStart = 0
     steps.zipWithIndex.foreach { case ((_, meta), i) =>
       val verb = verbOf(meta)
@@ -1835,8 +1861,9 @@ object VersionedTable {
       .unionByName(ins.select(col(spec.keyCol))).distinct()
     val vectored = vectorize(s, h, current, spec, doomed).map(_._1)
     val base = vectored.getOrElse(current)
-    if (ins.isEmpty) (base, vectored.isDefined)
-    else (unionSidecar(base, writeBatch(s, h, spec, ins, layout)), true)
+    val batchRows = writeBatch(s, h, spec, ins, layout)
+    (batchRows.fold(base)(unionSidecar(base, _)),
+      vectored.isDefined || batchRows.isDefined)
   }
 
   /** APPLY CHANGES ... SEQUENCE BY (the DLT contract for EXTERNAL
@@ -2271,34 +2298,39 @@ object VersionedTable {
           col(spec.keyCol).cast("string").as("__k"))
         .join(doomed, col("__k") === col("__doomed_k"), "left_semi")
         .select("file", "pos")
-      Some((commitDv(s, current, h.entries(s), h.root, fresh), holders.length))
+      Some((commitDv(s, current, h.entries(s), h.root, fresh).getOrElse(current),
+        holders.length))
     }
   }
 
   /** Write a new COMPLETE deletion-vector sidecar covering `fresh`
     * (file, pos) rows — every prior DV row folds forward so the
     * newest dv_path is each covered file's complete vector; distinct
-    * absorbs re-deletes — and return the repointed manifest rows.
-    * `entries` are `current`'s. The caller publishes.
+    * absorbs re-deletes — and return the repointed manifest rows, or
+    * None when `fresh` held no row (the sidecar is deleted; `current`
+    * stands). `entries` are `current`'s. The caller publishes.
     */
   private def commitDv(s: SparkSession, current: DataFrame, entries: Entries,
-                       root: String, fresh: DataFrame): DataFrame = {
+                       root: String, fresh: DataFrame): Option[DataFrame] = {
     val dvDir = s"${filesDir(root)}/dv-" +
       java.util.UUID.randomUUID().toString.replace("-", "")
     val priorPaths = dvPathsOf(entries)
-    val dvAll =
-      if (priorPaths.isEmpty) fresh.distinct()
-      else fresh.unionByName(readDv(s, priorPaths)).distinct()
-    dvAll.repartition(1).write.parquet(dvDir)
-    // account from what LANDED (the publish-audit posture), and
-    // repoint every covered file at the one new complete vector
-    val counts = readDv(s, Seq(dvDir))
-      .groupBy("file").agg(count(lit(1)).as("__nd"))
-    current.join(counts, Seq("file"), "left")
-      .withColumn("dv_path",
-        when(col("__nd").isNotNull, lit(dvDir)).otherwise(col("dv_path")))
-      .withColumn("n_deleted", coalesce(col("__nd"), lit(0L)))
-      .drop("__nd")
+    // emptiness is observed on the fresh positions, not on the prior
+    // vectors folded in with them
+    val landed = writeIfAny(fresh, dvDir, f =>
+      (if (priorPaths.isEmpty) f.distinct()
+       else f.unionByName(readDv(s, priorPaths)).distinct()).repartition(1))
+    Option.when(landed) {
+      // account from what LANDED (the publish-audit posture), and
+      // repoint every covered file at the one new complete vector
+      val counts = readDv(s, Seq(dvDir))
+        .groupBy("file").agg(count(lit(1)).as("__nd"))
+      current.join(counts, Seq("file"), "left")
+        .withColumn("dv_path",
+          when(col("__nd").isNotNull, lit(dvDir)).otherwise(col("dv_path")))
+        .withColumn("n_deleted", coalesce(col("__nd"), lit(0L)))
+        .drop("__nd")
+    }
   }
 
   /** MERGE-ON-READ UPSERT — replace-by-key in ONE commit: every
@@ -2327,7 +2359,7 @@ object VersionedTable {
       case None => current
       case Some((rows, _)) => rows
     }
-    publishManifest(unionSidecar(base, batchRows),
+    publishManifest(batchRows.fold(base)(unionSidecar(base, _)),
       root, Some(h), Map("verb" -> "upsert-dv"))
   }
 
@@ -2468,8 +2500,7 @@ object VersionedTable {
           .parquet(holders: _*)
           .withColumn("__file", col("_metadata.file_path"))
           .withColumn("__pos", col("_metadata.row_index"))
-        val live = dvPositionsOf(s,
-          dvPathsOf(entriesIn(h.entries(s), holders))).fold(withId)(dv =>
+        val live = dvOn(s, h.entries(s), holders).fold(withId)(dv =>
           withId.join(
             broadcast(dv.select(col("file").as("__file"),
               col("pos").as("__pos"))),
@@ -2520,21 +2551,23 @@ object VersionedTable {
         }
       val batch = (updated.toSeq ++ inserts.toSeq)
         .reduceOption(_.unionByName(_))
-      val nBatch = batch.map(_.count()).getOrElse(0L)
-      val anyClaimed = claimedPos.exists(!_.isEmpty)
-      if (nBatch == 0 && !anyClaimed)
+      batch.foreach { b =>
+        // schema drift refuses only a batch that holds rows: the probe
+        // runs on that path alone
+        if (schemaDrift(s, h, b, allowEvolution).nonEmpty && !b.isEmpty)
+          enforceSchema(s, h, b, allowEvolution)
+        enforce(b, withPrefix(h.meta, ConstraintPrefix))
+      }
+      // emptiness comes from the writes themselves: a vector or batch
+      // with no row leaves no directory, and a merge with neither is a
+      // no-op
+      val vectored = claimedPos.flatMap(commitDv(s, current, h.entries(s), root, _))
+      val batchRows = batch.flatMap(writeBatch(s, h, spec, _, layout))
+      if (vectored.isEmpty && batchRows.isEmpty)
         pub(current, extraMeta + ("verb" -> "merge-noop"))
       else {
-        batch.filter(_ => nBatch > 0).foreach { b =>
-          enforceSchema(s, h, b, allowEvolution = allowEvolution)
-          enforce(b, withPrefix(h.meta, ConstraintPrefix))
-        }
-        val base = claimedPos.filter(_ => anyClaimed)
-          .map(cp => commitDv(s, current, h.entries(s), root, cp))
-          .getOrElse(current)
-        val withBatch = batch.filter(_ => nBatch > 0).fold(base)(b =>
-          unionSidecar(base, writeBatch(s, h, spec, b, layout)))
-        pub(withBatch, extraMeta ++
+        val base = vectored.getOrElse(current)
+        pub(batchRows.fold(base)(unionSidecar(base, _)), extraMeta ++
           Map("verb" -> "merge", "n_holders" -> holders.length.toString))
       }
     }
@@ -2607,7 +2640,7 @@ object VersionedTable {
           .select("file", "pos")
         val dropped = fullFiles.toSet
         commitDv(s, afterDrop, h.entries(s).filterNot(e => dropped(e._1)),
-          h.root, fresh)
+          h.root, fresh).getOrElse(afterDrop)
       }
     (base, fullFiles.length, stFiles.length)
   }
@@ -2650,7 +2683,8 @@ object VersionedTable {
         "(NULL counts as outside) — a replace must only write rows the " +
         "predicate claims")
     val (base, nDropped, nStraddlers) = dropBand(s, h, h.manifest(s), c, lo, hi)
-    publishManifest(unionSidecar(base, writeBatch(s, h, spec, batch, layout)),
+    publishManifest(
+      writeBatch(s, h, spec, batch, layout).fold(base)(unionSidecar(base, _)),
       root, Some(h), Map("verb" -> "replace-where",
         "n_dropped_files" -> nDropped.toString, "n_straddlers" -> nStraddlers.toString))
   }
@@ -3066,7 +3100,7 @@ object VersionedTable {
     val h = head(root)
     require(h.version != v, s"restore: $v is already the head")
     val eTo = versionEntries(s, root, v)
-    val diff = manifestDiff(s, h.entries(s), eTo)
+    val diff = manifestDiff(s, h.entries(s), eTo, undeletes = true)
     val cdcMeta = writeCdc(s, root,
       if (diff.isEmpty)
         readEntries(s, eTo)
@@ -3427,7 +3461,7 @@ object VersionedTable {
       beforeCommit()
       try {
         return (Publish.publishIf(
-          unionSidecar(base, batchRows),
+          batchRows.fold(base)(unionSidecar(base, _)),
           manifestRoot(root), Some(h.version),
           audit = auditFilesExist(h.entries(s)),
           meta = inheritedOf(h.meta) ++

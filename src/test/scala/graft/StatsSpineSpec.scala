@@ -242,4 +242,58 @@ class StatsSpineSpec extends SparkSpec {
     }.toMap
     assert(got == want)
   }
+
+  /** [[StatsSpine.rosterWords]] as it was built before its one
+    * projection: positions exploded, grouped per (key, word), and the
+    * per-key word count self-joined back.
+    */
+  private def groupedRosterWords(roster: org.apache.spark.sql.DataFrame, keyCol: String,
+                                 mBits: Int): org.apache.spark.sql.DataFrame = {
+    val keys = roster.select(col(keyCol).cast("string").as("k"))
+      .filter(col("k").isNotNull).distinct()
+    val pos = keys.select(col("k"), explode(array(
+      (0 until graft.functions.BloomFilterAgg.NumHashes).map(i =>
+        expr(s"CAST(conv(substring(md5(k), ${1 + 8 * i}, 8), 16, 10) AS BIGINT) % $mBits")): _*))
+      .as("p"))
+    val words = pos.groupBy(col("k"), expr("p DIV 64").as("word_idx"))
+      .agg(expr("CAST(bit_or(shiftleft(CAST(1 AS BIGINT), CAST(p % 64 AS INT))) AS BIGINT)")
+        .as("mask"))
+    words.join(words.groupBy("k").agg(count(lit(1)).as("n_words")), "k")
+  }
+
+  test("rosterHolders matches the grouped word build on duplicate, NULL and word-sharing keys") {
+    import spark.implicits._
+    val mBits = 1 << 13
+    val (_, _, bloom0) = deleteFixture()
+    def words(k: Long) = graft.functions.BloomFilterAgg.positions(
+      k.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8), mBits).map(_ / 64).toSet
+    // two table keys whose positions share a bitmap word
+    val (a, b) = (0L until 200L).combinations(2).map(p => (p(0), p(1)))
+      .find { case (x, y) => (words(x) intersect words(y)).nonEmpty }.get
+    // a key with two positions in one word, and a key no file holds
+    val twoBits = (0L until 1000L).find(k => words(k).size < 4).get
+    val roster = Seq(Some(a), Some(a), None, Some(b), Some(twoBits), Some(5000L), None)
+      .toDF("k")
+    val got = StatsSpine.rosterWords(roster, "k", mBits)
+    val want = groupedRosterWords(roster, "k", mBits)
+    val cols = Seq("k", "word_idx", "mask", "n_words").map(col)
+    assert(got.select(cols: _*).as[(String, Long, Long, Long)].collect().sorted.toSeq ==
+      want.select(cols: _*).as[(String, Long, Long, Long)].collect().sorted.toSeq)
+    val holders = StatsSpine.rosterHolders(bloom0, roster, "k", mBits)
+      .as[String].collect().toSet
+    val bw = bloom0.select(col("file"), posexplode(col("bloom")).as(Seq("wi", "word")))
+      .select(col("file"), col("wi").cast("long").as("word_idx"), col("word"))
+    val reference = bw.join(want, "word_idx")
+      .filter(col("word").bitwiseAND(col("mask")) === col("mask"))
+      .groupBy(col("file"), col("k"), col("n_words"))
+      .agg(count(lit(1)).as("hits"))
+      .filter(col("hits") === col("n_words"))
+      .select("file").distinct().as[String].collect().toSet
+    assert(holders == reference)
+    // no false negative: every file holding a roster key is a holder
+    val trueHolders = bloom0.select("file").as[String].collect().filter { f =>
+      spark.read.parquet(f).filter(col("k").isin(a, b, twoBits)).count() > 0
+    }.toSet
+    assert(trueHolders.nonEmpty && trueHolders.subsetOf(holders))
+  }
 }

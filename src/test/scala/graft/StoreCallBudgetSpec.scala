@@ -1,14 +1,16 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import java.util.concurrent.atomic.AtomicBoolean
 
 import scala.jdk.CollectionConverters._
 
 import graft.operators.{ForwardingTableStore, LocalTableStore, TableStore, VersionedTable}
 import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions.{col, lit}
 
 /** Control-plane budget of the `VersionedTable` verbs, counted through
@@ -22,7 +24,9 @@ import org.apache.spark.sql.functions.{col, lit}
   *    commit reads the `_NEXT` allocation watermark once;
   *  - schemas and manifest entry lists are read on the driver, so no
   *    Spark job is a schema inference or a manifest collect, and each
-  *    verb stays within its job budget (the `jobs` column);
+  *    verb stays within its job budget (the `jobs` column). A change
+  *    feed plans its DV delta from the entry lists and a merge learns
+  *    its emptiness from its writes, so neither starts a probe job;
   *  - a commit's store calls do not grow with the table's file count:
   *    its audit probes only the files it adds, so a commit makes as
   *    many calls on a 128-file table as on a 4-file one;
@@ -102,13 +106,26 @@ class StoreCallBudgetSpec extends SparkSpec {
 
   /** The call site of every Spark job `action` starts, in Spark's long
     * form: the outermost Spark frame the job came from, then the
-    * caller's frames, innermost first.
+    * caller's frames, innermost first. A job of a SQL execution is
+    * named by the execution's call site: AQE starts one job per
+    * exchange, and those stage jobs carry no frame of the caller.
     */
   private def jobSites(action: => Any): Seq[String] = {
     val sites = new ConcurrentLinkedQueue[String]()
+    val executions = new ConcurrentHashMap[Long, String]()
     val l = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart =>
+          executions.put(x.executionId, x.details)
+          ()
+        case _ => ()
+      }
       override def onJobStart(j: SparkListenerJobStart): Unit = {
-        sites.add(j.stageInfos.sortBy(_.stageId).lastOption.fold("")(_.details))
+        val execution = Option(j.properties)
+          .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+          .flatMap(id => Option(executions.get(id.toLong)))
+        sites.add(execution.getOrElse(
+          j.stageInfos.sortBy(_.stageId).lastOption.fold("")(_.details)))
         ()
       }
     }
@@ -121,15 +138,25 @@ class StoreCallBudgetSpec extends SparkSpec {
     sites.asScala.toSeq
   }
 
-  /** A job that only answers a metadata question: a schema inference
-    * (started inside a `DataFrameReader` call — a read with a given
-    * schema starts none) or a manifest collect of the table's control
-    * plane, named by its frame.
+  /** A job that only answers a question the driver can answer or the
+    * next write observes: a schema inference (started inside a
+    * `DataFrameReader` call — a read with a given schema starts none), a
+    * manifest collect of the table's control plane, a change feed's
+    * DV-delta emptiness probe or changed-file collect (the entry lists
+    * name those files), or a merge's batch count (its write observes
+    * it), named by its frame.
     */
-  private def controlPlane(site: String): Boolean =
-    site.linesIterator.nextOption().exists(_.contains("DataFrameReader")) ||
+  private def controlPlane(site: String): Boolean = {
+    val outer = site.linesIterator.nextOption().getOrElse("")
+    outer.contains("DataFrameReader") ||
       Seq("SchemaCache", "versionEntriesOf", "auditFilesExist",
-        "VersionedTable$.vacuum").exists(site.contains)
+        "VersionedTable$.vacuum", "VersionedTable$.manifestDiff",
+        "VersionedTable$.rowsAtPositions").exists(site.contains) ||
+      (outer.contains("Dataset.count(") && MergeFrame.findFirstIn(site).isDefined)
+  }
+
+  /** A frame of `VersionedTable.merge` or of a closure inside it. */
+  private val MergeFrame = """VersionedTable\$\.(\$anonfun\$)?merge""".r
 
   /** The innermost engine frame of a call site (for failure messages). */
   private def engineFrame(site: String): String =
@@ -141,7 +168,7 @@ class StoreCallBudgetSpec extends SparkSpec {
   private val budget = Seq(
     Row("append", commits = true, 3, _ => (),
       r => VersionedTable.append(spark, rows(200 until 210), r, spec)),
-    Row("merge", commits = true, 25, _ => (),
+    Row("merge", commits = true, 19, _ => (),
       r => VersionedTable.merge(spark, r, spec, rows(195 until 205, _ => 7L),
         matchedUpdate = Map("n" -> col("src_n")))),
     Row("upsertDV", commits = true, 15, _ => (),
@@ -166,6 +193,13 @@ class StoreCallBudgetSpec extends SparkSpec {
       r => VersionedTable.readVersion(spark, r, "v00002").count()),
     Row("changeFeed", commits = false, 2,
       r => VersionedTable.append(spark, rows(200 until 210), r, spec),
+      r => VersionedTable.changeFeed(spark, r, "v00001", "v00002").count()),
+    // the DV delta of one common file, planned from the entry lists
+    Row("changeFeed over deleteRosterDV", commits = false, 3,
+      r => VersionedTable.deleteRosterDV(spark, r, spec, rows(3 until 8)),
+      r => VersionedTable.changeFeed(spark, r, "v00001", "v00002").count()),
+    Row("changeFeed over upsertDV", commits = false, 3,
+      r => VersionedTable.upsertDV(spark, r, spec, rows(10 until 15, _ => 3L)),
       r => VersionedTable.changeFeed(spark, r, "v00001", "v00002").count()),
     Row("vacuum", commits = false, 0,
       r => VersionedTable.append(spark, rows(200 until 210), r, spec),
