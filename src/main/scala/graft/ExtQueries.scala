@@ -5510,9 +5510,9 @@ object ExtQueries {
     * [[graft.operators.VersionedTable.appendOcc]]): writer A captures
     * head v00001 and — in the window between its head read and its
     * commit — a competing writer B lands an append (v00002). A's
-    * first attempt writes v00003, passes its audit, and is VETOED by
-    * the [[graft.operators.Publish.publishIf]] head check (tombstoned
-    * `.failed`, number burned); A rebases onto v00002 and commits
+    * first attempt writes v00003 and is VETOED by its conditional
+    * commit's head fence ([[graft.operators.Publish.requireHead]];
+    * tombstoned `.failed`, number burned); A rebases onto v00002 and commits
     * v00004. The gate reads all three live versions back; the oracle
     * restates each membership from the raw table, so the hash proves
     * NO LOST UPDATE (B's rows survive in A's final fold) and NO

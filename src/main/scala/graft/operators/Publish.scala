@@ -245,8 +245,7 @@ object Publish {
     * @param audit invariant checks run against the READ-BACK version
     *              (throw to veto); row-count > 0 and Spark's _SUCCESS
     *              marker are always checked first
-    */
-  /** @param meta key=value pairs written as a `_META` file INSIDE the
+    * @param meta key=value pairs written as a `_META` file INSIDE the
     *             version directory before the pointer swap — part of
     *             the immutable version atom (like `_SUCCESS`), so a
     *             version's provenance (e.g. the micro-batch id that
@@ -256,26 +255,7 @@ object Publish {
               audit: DataFrame => Unit = _ => (),
               partitionBy: Seq[String] = Nil,
               meta: Map[String, String] = Map.empty): String =
-    publishGuarded(df, rootPath, _ => audit, partitionBy, _ => meta, () => ())
-
-  /** [[publish]] with the `_META` pairs COMPUTED INSIDE the per-root
-    * commit critical section (ADVICE r15): a meta value derived from
-    * the table's current state — the in-commit-timestamp stamp, a
-    * running watermark — must be minted while no concurrent writer can
-    * commit, or two writers read the same predecessor and mint
-    * identical stamps (breaking the strictly-increasing contract the
-    * stamp exists for). `metaFn` runs exactly once, after the write +
-    * audit pass, immediately before `_META` lands in the version dir,
-    * and receives the head the commit lands on (read at allocation).
-    * `audit` receives that same head, so it can check only what the
-    * version adds to it: the pointer swap is conditional on that head,
-    * so the commit can land on no other.
-    */
-  def publishWith(df: DataFrame, rootPath: String,
-                  audit: Option[String] => DataFrame => Unit = _ => _ => (),
-                  partitionBy: Seq[String] = Nil,
-                  metaFn: Option[String] => Map[String, String] = _ => Map.empty): String =
-    publishGuarded(df, rootPath, audit, partitionBy, metaFn, () => ())
+    publishWith(df, rootPath, _ => audit, partitionBy, _ => meta)
 
   /** OPTIMISTIC-CONCURRENCY publish: commit only if the published head
     * is still `expectedHead` (as the caller read it when deriving
@@ -283,24 +263,34 @@ object Publish {
     * [[PublishConflict]]. This is the conditional-put half of a
     * Delta/Iceberg commit: a writer that derived its new version from
     * head N must not swap the pointer over a head N+1 someone else
-    * published meanwhile (lost update). The check runs after the
-    * write+audit, immediately before the pointer swap — and the swap
-    * itself is ADDITIONALLY conditional on the head observed at
-    * allocation ([[TableStore.swapIfContentIs]]), so a foreign
-    * PROCESS's commit the in-JVM check cannot see also loses loudly
-    * instead of overwriting.
+    * published meanwhile (lost update). The check is [[requireHead]]
+    * on the head the commit lands on, run first in the audit hook.
     */
   def publishIf(df: DataFrame, rootPath: String,
                 expectedHead: Option[String],
                 audit: DataFrame => Unit = _ => (),
                 partitionBy: Seq[String] = Nil,
                 meta: Map[String, String] = Map.empty): String =
-    publishGuarded(df, rootPath, _ => audit, partitionBy, _ => meta, () => {
-      val found = currentVersion(rootPath)
-      if (found != expectedHead) throw new PublishConflict(expectedHead, found)
-    })
+    publishWith(df, rootPath, landsOn => {
+      requireHead(expectedHead, landsOn)
+      audit
+    }, partitionBy, _ => meta)
 
-  /** Per-root commit lock: version allocation, the CAS head check and
+  /** The conditional commit's fence: `landsOn` is the head
+    * [[publishWith]] hands its audit hook, the one read at allocation.
+    * That check is the whole fence. The per-root lock is held from
+    * allocation to the pointer swap, so no writer in this JVM can move
+    * the head in between. The swap is conditional on that same head
+    * ([[TableStore.swapIfContentIs]]), so a foreign process that moves
+    * it in between makes the swap fail, and the attempt loses with the
+    * same tombstone and [[PublishConflict]]. The number is claimed
+    * before the fence runs, so a loser burns it (`v<N>.failed`).
+    */
+  private[operators] def requireHead(expectedHead: Option[String],
+                                     landsOn: Option[String]): Unit =
+    if (landsOn != expectedHead) throw new PublishConflict(expectedHead, landsOn)
+
+  /** Per-root commit lock: version allocation, the head fence and
     * the pointer swap must be one critical section for CONCURRENT
     * writers in this JVM — without it two writers can allocate the
     * same max+1 number (colliding version dirs) or both pass the
@@ -321,26 +311,38 @@ object Publish {
   private val rootLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  private def publishGuarded(df: DataFrame, rootPath0: String,
-                             audit: Option[String] => DataFrame => Unit,
-                             partitionBy: Seq[String],
-                             metaFn: Option[String] => Map[String, String],
-                             headGuard: () => Unit): String = {
+  /** [[publish]] with the audit and the `_META` pairs COMPUTED INSIDE
+    * the per-root commit critical section (ADVICE r15): a meta value
+    * derived from the table's current state — the in-commit-timestamp
+    * stamp, a running watermark — must be minted while no concurrent
+    * writer can commit, or two writers read the same predecessor and
+    * mint identical stamps (breaking the strictly-increasing contract
+    * the stamp exists for). Both receive the head the commit lands on
+    * (read at allocation): `audit` runs on the read-back version first,
+    * so it can fence on that head ([[requireHead]]) and check only what
+    * the version adds to it — the pointer swap is conditional on that
+    * head, so the commit can land on no other. `metaFn` runs exactly
+    * once, after the audit passes, immediately before `_META` lands in
+    * the version dir.
+    */
+  def publishWith(df: DataFrame, rootPath0: String,
+                  audit: Option[String] => DataFrame => Unit = _ => _ => (),
+                  partitionBy: Seq[String] = Nil,
+                  metaFn: Option[String] => Map[String, String] = _ => Map.empty): String = {
     // lock key = CANONICAL root (VERDICT r15 #1): without this, two
     // in-JVM writers addressing one table as `/a/tbl` and `/a/tbl/`
     // get different lock objects, both compute the same max+1 and the
     // advertised serialization silently doesn't hold
     val rootPath = canon(rootPath0)
     rootLocks.computeIfAbsent(rootPath, _ => new Object).synchronized {
-      publishLocked(df, rootPath, audit, partitionBy, metaFn, headGuard)
+      publishLocked(df, rootPath, audit, partitionBy, metaFn)
     }
   }
 
   private def publishLocked(df: DataFrame, rootPath: String,
                             audit: Option[String] => DataFrame => Unit,
                             partitionBy: Seq[String],
-                            metaFn: Option[String] => Map[String, String],
-                            headGuard: () => Unit): String = {
+                            metaFn: Option[String] => Map[String, String]): String = {
     val spark = df.sparkSession
     store.createDirectories(rootPath)
     // head observed at allocation: the CONDITIONAL pointer swap below
@@ -442,9 +444,6 @@ object Publish {
         store.writeString(s"$dir/_META",
           meta.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }
             .mkString("\n"))
-      // CAS head check (publishIf): a moved head vetoes the commit the
-      // same way a failed audit does — attempt tombstoned, no swap
-      headGuard()
     } catch {
       case e: Throwable =>
         tombstone()
@@ -454,7 +453,7 @@ object Publish {
     // staging simultaneously must not collide), then ONE conditional
     // atomic move. The compare half detects a foreign process's commit
     // since allocation and vetoes this one loudly — the same
-    // tombstone-and-conflict a failed publishIf head check takes. An
+    // tombstone-and-conflict a failed head fence takes. An
     // EXCEPTION here (staging IO, lock-file IO) tombstones too: the
     // fully-written live-named dir would otherwise read as committed
     // history once a later publish raises the head past it.

@@ -25,16 +25,24 @@ import org.apache.spark.sql.functions._
   *    delete — commit a deletion vector instead of rewriting, reads
   *    resolve it as a broadcast anti-join, compaction materializes
   *    it back to copy-on-write at maintenance cadence;
-  *  - [[appendOcc]]: multi-writer append through the
-  *    [[Publish.publishIf]] conditional commit — conflict detection +
-  *    rebase-and-retry, no lost updates;
+  *  - [[appendOcc]]: multi-writer append through a conditional
+  *    commit — conflict detection + rebase-and-retry, no lost updates;
   *  - reads resolve through the POINTER: [[read]] /
   *    [[readVersion]] list exactly the manifest's files — a directory
   *    is never trusted, so superseded generations sitting on disk
   *    (time-travel history) are invisible to the current version and
   *    old versions read back byte-identical after later deletes.
   *
-  * Every publish runs the WAP audit on the READ-BACK manifest: rows
+  * ONE COMMIT PATH: every verb describes what it changed (a `Change`:
+  * rows repointed, files retracted, sidecar rows added — or nothing)
+  * and hands it to [[commit]], the one caller of [[Publish]]. The
+  * commit folds the change onto the head's manifest, writes it as one
+  * file, inherits the head's table properties, stamps in-commit
+  * timestamps, and fences the optimistic-concurrency verbs on their
+  * expected head — for blind and conditional commits alike, as the
+  * Delta log runs every commit through one append protocol.
+  *
+  * Every commit runs the WAP audit on the READ-BACK manifest: rows
   * exist, and every file the commit ADDS to the head it lands on is
   * present on disk — a manifest that names a missing file is vetoed
   * before the pointer moves. Files the head already names need no
@@ -50,7 +58,8 @@ import org.apache.spark.sql.functions._
   * from the head it lands on, read inside Publish's commit lock (reusing
   * the snapshot's `_META` when the head did not move). Each store call
   * is an object-store request at scale: a commit verb reads `_CURRENT`
-  * at most twice (its snapshot, the lock's), a read once.
+  * at most twice (its snapshot, the lock's), a read once; an
+  * optimistic-concurrency verb adds the head read it fences on.
   *
   * Scale shape (100 TB): planning reads the manifest (≈ file count
   * rows), appends cost ∝ batch, deletes cost ∝ holder files, and the
@@ -156,10 +165,10 @@ object VersionedTable {
     * because vacuum never deletes a file the current head names, and
     * the pointer swap is conditional on the head the commit lands on:
     * while that head is current its files stay. A verb whose head
-    * moved under it passes an empty `base` ([[publishManifest]]): its
+    * moved under it passes an empty `base` ([[commit]]): its
     * snapshot's files may since have been vacuumed. A conditional
-    * commit ([[Publish.publishIf]]) always passes its expected head's
-    * entries, since its swap refuses any other head.
+    * commit always passes its expected head's entries, since it lands
+    * on no other head.
     */
   private def auditFilesExist(base: Entries)(back: DataFrame): Unit = {
     def named(es: Entries) = es.iterator.flatMap(e => e._1 +: e._2.toSeq)
@@ -198,12 +207,19 @@ object VersionedTable {
     */
   private final case class Head(root: String, version: String,
                                 meta: Map[String, String]) {
+    private var manifest0: Option[DataFrame] = None
+
     /** The head's manifest, read from the version already resolved —
       * no second pointer read and no claim check: the pointer named
-      * it, so it committed ([[Publish.read]]'s own assumption).
+      * it, so it committed ([[Publish.read]]'s own assumption). Resolved
+      * at most once per snapshot: a verb's probes and its commit share
+      * the one frame.
       */
-    def manifest(s: SparkSession): DataFrame =
-      Publish.readCommitted(s, manifestRoot(root), version)
+    def manifest(s: SparkSession): DataFrame = synchronized {
+      if (manifest0.isEmpty)
+        manifest0 = Some(Publish.readCommitted(s, manifestRoot(root), version))
+      manifest0.get
+    }
 
     private var entries0: Option[Entries] = None
 
@@ -341,10 +357,6 @@ object VersionedTable {
     */
   private val ColmapPrefix = "colmap:"
 
-  /** The head's physical→logical column mapping (empty = no renames). */
-  def columnMapping(root: String): Map[String, String] =
-    headOf(root).fold(Map.empty[String, String])(h => withPrefix(h.meta, ColmapPrefix))
-
   /** The physical (on-file) name of LOGICAL column `logical`. */
   private def physicalOf(meta: Map[String, String], logical: String): String =
     withPrefix(meta, ColmapPrefix).find(_._2 == logical).map(_._1).getOrElse(logical)
@@ -476,7 +488,7 @@ object VersionedTable {
       require(scala.util.Try(post.limit(0).filter(expr(e))).isSuccess,
         s"dropColumn: constraint $n references $logical — drop the constraint first")
     }
-    publishManifest(h.manifest(s), root, Some(h),
+    commit(s, root, Some(h), Some(SameRows),
       Map("verb" -> "drop-column", DropPrefix + physical -> logical))
   }
 
@@ -515,7 +527,7 @@ object VersionedTable {
     require(!transformsOf(h.meta).exists(_.srcCol == physical),
       s"widenColumn: $logical is a partition-transform source — transform " +
         "images derive from the value's rendering, which widening can change")
-    publishManifest(h.manifest(s), root, Some(h),
+    commit(s, root, Some(h), Some(SameRows),
       Map("verb" -> "widen-column",
         WidenPrefix + physical -> target.catalogString))
   }
@@ -549,26 +561,64 @@ object VersionedTable {
         k == "ict"
     }
 
-  /** Publish `manifest` as the next version of `root`, carrying the
-    * inheritable properties of the head it lands on. `seen` is the
-    * verb's head snapshot: when the commit lands on that same version
-    * its `_META` (immutable once the pointer named it) is reused and the
-    * audit probes only the files the commit adds to it; a head that
-    * moved under the verb costs a `_META` read and a full audit.
+  /** What a verb changed, as [[commit]] folds it onto the head's
+    * manifest: `base` replaces the head's rows (a deletion-vector
+    * repoint, or a whole manifest — a create, a restore, a clone),
+    * `retract` drops the rows of those files, and `add` unions sidecar
+    * rows on (a batch's, or a rewrite's fresh generation's). `meta` is
+    * what the change records beside the verb's own meta, `unset` the
+    * head properties it removes, and `props` the properties the commit
+    * carries in place of the landed head's (a clone's source version's,
+    * a fast-forward's branch's).
     */
-  private def publishManifest(manifest: DataFrame, root: String,
-                              seen: Option[Head],
-                              meta: Map[String, String],
-                              dropConstraints: Set[String] = Set.empty,
-                              dropMetaKeys: Set[String] = Set.empty): String =
-    // the meta closure runs INSIDE Publish's per-root commit lock
-    // (ADVICE r15) on the head the lock read: the ICT stamp and the
-    // inherited head properties are state-derived — minting them
-    // outside the critical section let two concurrent same-table
-    // writers read the same predecessor and stamp identical timestamps
-    // (non-strict monotonicity), and a property committed between the
-    // verb's snapshot and its publish would be dropped; under the lock
-    // the stamp is STRICTLY increasing across this JVM's writers
+  private final case class Change(base: Option[DataFrame] = None,
+                                  retract: Seq[String] = Nil,
+                                  add: Option[DataFrame] = None,
+                                  meta: Map[String, String] = Map.empty,
+                                  unset: Set[String] = Set.empty,
+                                  props: Option[Map[String, String]] = None)
+
+  /** A property commit's change: the rows stay the head's. */
+  private val SameRows = Change()
+
+  /** THE commit of every verb: fold `change` onto `seen`'s manifest and
+    * publish it as the next version of `root`, carrying the inheritable
+    * properties of the head it lands on. No change (`None`) republishes
+    * the head's manifest under `<verb>-noop`, a content-identical
+    * commit ([[isContentIdentical]]).
+    *
+    * `seen` is the verb's head snapshot: when the commit lands on that
+    * same version its `_META` (immutable once the pointer named it) is
+    * reused and the audit probes only the files the commit adds to it;
+    * a head that moved under the verb costs a `_META` read and a full
+    * audit. `landsOn` makes the commit conditional (the optimistic-
+    * concurrency verbs): it lands only on that head, or loses with
+    * [[Publish.PublishConflict]] at [[Publish.requireHead]] — run first
+    * in the audit, after the version number is claimed, so a loser
+    * burns its number and mints no stamp. Its audit skips the files
+    * that head names.
+    */
+  private def commit(s: SparkSession, root: String, seen: Option[Head],
+                     change: Option[Change], meta: Map[String, String],
+                     landsOn: Option[String] = None): String = {
+    val c = change.getOrElse(SameRows)
+    // only a create, a clone and a fast-forward commit without a
+    // snapshot, and each brings its whole manifest as `base`
+    val kept = c.base.getOrElse(seen.get.manifest(s))
+    val retracted =
+      if (c.retract.isEmpty) kept else kept.filter(!col("file").isin(c.retract: _*))
+    val manifest = c.add.fold(retracted)(unionSidecar(retracted, _))
+    val verbMeta = change.fold(meta + ("verb" -> (meta("verb") + "-noop")))(meta ++ _.meta)
+    def landed(at: String): Option[Head] = seen.filter(_.version == at)
+    // the files of the head the commit lands on need no probe: the
+    // snapshot's when it is that head, the expected head's for a
+    // conditional commit (it lands on no other), none when the head
+    // moved under the verb
+    def known(at: Option[String]): Entries = at match {
+      case Some(v) if landed(v).isDefined => landed(v).get.entries(s)
+      case Some(v) if landsOn.contains(v) => versionEntries(s, root, v, committed = true)
+      case _ => NoEntries
+    }
     // ONE parquet file per manifest version (r16, guide §6 small-files):
     // a manifest holds one row per data file and is re-read by every
     // verb, every readVersion and every feed segment — writing it
@@ -577,16 +627,25 @@ object VersionedTable {
     // open cost. coalesce (no exchange) collapses the write to one task;
     // the Delta/Iceberg posture (one commit artifact per version).
     Publish.publishWith(manifest.coalesce(1), manifestRoot(root),
-      audit = landsOn => auditFilesExist(
-        seen.filter(h => landsOn.contains(h.version))
-          .fold(NoEntries)(_.entries(manifest.sparkSession))),
-      metaFn = landsOn => {
-        val landedMeta = landsOn.fold(Map.empty[String, String])(v =>
-          seen.filter(_.version == v).fold(versionMeta(root, v))(_.meta))
-        val base = (inheritedOf(landedMeta) -- dropConstraints.map(ConstraintPrefix + _)
-          -- dropMetaKeys) ++ meta
-        stampCommitTs(root, base, explicit = meta.contains("commit_ts"))
+      audit = at => {
+        landsOn.foreach(v => Publish.requireHead(Some(v), at))
+        auditFilesExist(known(at))
+      },
+      // the meta closure runs INSIDE Publish's per-root commit lock
+      // (ADVICE r15) on the head the lock read: the ICT stamp and the
+      // inherited head properties are state-derived — minting them
+      // outside the critical section let two concurrent same-table
+      // writers read the same predecessor and stamp identical timestamps
+      // (non-strict monotonicity), and a property committed between the
+      // verb's snapshot and its publish would be dropped; under the lock
+      // the stamp is STRICTLY increasing across this JVM's writers
+      metaFn = at => {
+        val props = c.props.orElse(at.map(v => landed(v).fold(versionMeta(root, v))(_.meta)))
+          .getOrElse(Map.empty)
+        stampCommitTs(root, (inheritedOf(props) -- c.unset) ++ verbMeta,
+          explicit = verbMeta.contains("commit_ts"))
       })
+  }
 
   /** Running-max commit stamp (`manifest/_ts_max`, VERDICT r15 #3):
     * the single-line file holding the highest `commit_ts` ever minted
@@ -704,7 +763,6 @@ object VersionedTable {
     */
   def repairMissingFiles(s: SparkSession, root: String): (String, Int) = {
     val h = head(root)
-    val current = h.manifest(s)
     val entries = h.entries(s).map(_._1)
     val missing = entries.filterNot(f =>
       TableStore.get.exists(f.stripPrefix("file:"))).toSet
@@ -713,8 +771,7 @@ object VersionedTable {
       require(missing.size < entries.length,
         s"repairMissingFiles: every data file of $root is missing — " +
           "refusing to publish an empty table as a 'repair'")
-      val repaired = current.filter(!col("file").isin(missing.toSeq: _*))
-      (publishManifest(repaired, root, Some(h),
+      (commit(s, root, Some(h), Some(Change(retract = missing.toSeq)),
         Map("verb" -> "fsck", "n_dropped" -> missing.size.toString)),
         missing.size)
     }
@@ -723,13 +780,11 @@ object VersionedTable {
   /** Enable IN-COMMIT TIMESTAMPS: a property commit (content-
     * identical, feed windows segment across it) that turns on
     * monotone auto-stamping of `commit_ts` for this and every later
-    * commit — see [[publishManifest]]. Idempotent to re-enable.
+    * commit — see [[stampCommitTs]]. Idempotent to re-enable.
     */
-  def setInCommitTimestamps(s: SparkSession, root: String): String = {
-    val h = head(root)
-    publishManifest(h.manifest(s), root, Some(h),
+  def setInCommitTimestamps(s: SparkSession, root: String): String =
+    commit(s, root, Some(head(root)), Some(SameRows),
       Map("verb" -> "set-ict", "ict" -> "on"))
-  }
 
   /** Manifest ∪ batch-sidecar with a FAIL-FAST on stat-spec drift
     * (ADVICE r12): `allowMissingColumns = true` exists for the
@@ -806,9 +861,8 @@ object VersionedTable {
       PartitionTransform.withSrc(t, physicalOf(h.meta, t.srcCol))
     }
     val stale = h.meta.keySet.filter(_.startsWith(PtSpecPrefix))
-    publishManifest(h.manifest(s), root, Some(h),
-      ptSpecMeta(resolved) + ("verb" -> "evolve-partitioning"),
-      dropMetaKeys = stale)
+    commit(s, root, Some(h), Some(Change(unset = stale)),
+      ptSpecMeta(resolved) + ("verb" -> "evolve-partitioning"))
   }
 
   /** RENAME COLUMN as a property commit (zero rewrite): the logical
@@ -834,7 +888,7 @@ object VersionedTable {
     require(physical != spec.keyCol,
       s"renameColumn: $from is the bloom key column — upsertDV/deleteRoster " +
         "select it by name on logical frames; the table would wedge")
-    publishManifest(h.manifest(s), root, Some(h),
+    commit(s, root, Some(h), Some(SameRows),
       Map("verb" -> "rename-column", ColmapPrefix + physical -> to))
   }
 
@@ -852,7 +906,7 @@ object VersionedTable {
       s"constraint name must be non-empty without '=': $name")
     val h = head(root)
     enforce(readHead(s, h), Map(name -> checkSql))
-    publishManifest(h.manifest(s), root, Some(h),
+    commit(s, root, Some(h), Some(SameRows),
       Map("verb" -> "set-constraint", ConstraintPrefix + name -> checkSql))
   }
 
@@ -862,9 +916,8 @@ object VersionedTable {
     val active = withPrefix(h.meta, ConstraintPrefix)
     require(active.contains(name),
       s"no such constraint: $name (active: ${active.keys.mkString(", ")})")
-    publishManifest(h.manifest(s), root, Some(h),
-      Map("verb" -> "drop-constraint", "dropped" -> name),
-      dropConstraints = Set(name))
+    commit(s, root, Some(h), Some(Change(unset = Set(ConstraintPrefix + name))),
+      Map("verb" -> "drop-constraint", "dropped" -> name))
   }
 
   private def freshGen(root: String): String = {
@@ -886,7 +939,7 @@ object VersionedTable {
         s"(batch columns: ${df.columns.mkString(", ")})"))
     val gen = freshGen(root)
     layout(df).write.parquet(gen)
-    publishManifest(sidecar(s, gen, spec, transforms), root, None,
+    commit(s, root, None, Some(Change(base = Some(sidecar(s, gen, spec, transforms)))),
       extraMeta ++ ptSpecMeta(transforms) + ("verb" -> "create"))
   }
 
@@ -899,10 +952,8 @@ object VersionedTable {
              allowEvolution: Boolean = false): String = {
     val h = head(root)
     admit(s, h, df, allowEvolution)
-    val batchRows = writeBatch(s, h, spec, df, layout)
-    val current = h.manifest(s)
-    publishManifest(batchRows.fold(current)(unionSidecar(current, _)),
-      root, Some(h), extraMeta + ("verb" -> "append"))
+    commit(s, root, Some(h), Some(Change(add = writeBatch(s, h, spec, df, layout))),
+      extraMeta + ("verb" -> "append"))
   }
 
   /** Targeted delete of a roster DataFrame: bloom-probe the CURRENT
@@ -920,9 +971,7 @@ object VersionedTable {
     val holders = StatsSpine.rosterHolders(
         current.select(col("file"), col("bloom")), roster, spec.keyCol, spec.mBits)
       .collect().map(_.getString(0)).toSeq
-    if (holders.isEmpty)
-      publishManifest(current, root, Some(h), Map("verb" -> "delete-noop"))
-    else {
+    commit(s, root, Some(h), Option.when(holders.nonEmpty) {
       val gen = freshGen(root)
       val doomed = roster.select(col(spec.keyCol).cast("string").as("__doomed_k"))
         .filter(col("__doomed_k").isNotNull).distinct()
@@ -950,24 +999,16 @@ object VersionedTable {
               .withColumn("change_type", lit("delete"))))
         meta
       }
-      val hf = s.createDataFrame(
-        java.util.Arrays.asList(holders.map(org.apache.spark.sql.Row(_)): _*),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField(
-            "file", org.apache.spark.sql.types.StringType, nullable = false))))
-      publishManifest(
-        unionSidecar(current.join(hf, Seq("file"), "left_anti"),
-          sidecar(s, gen, spec, transformsOf(h.meta))),
-        root, Some(h), cdcMeta ++
-          Map("verb" -> "delete", "n_holders" -> holders.length.toString))
-    }
+      Change(retract = holders, add = Some(sidecar(s, gen, spec, transformsOf(h.meta))),
+        meta = cdcMeta + ("n_holders" -> holders.length.toString))
+    }, Map("verb" -> "delete"))
   }
 
   /** Verbs after which a manifest's file-level diff IS the content
     * diff — the commits a feed segment reads directly.
     */
   private val FeedSafeVerbs = Set(
-    "create", "append", "append-occ", "delete-dv", "delete-dv-noop",
+    "create", "append", "append-occ", "delete-dv",
     "upsert-dv", "merge", "delete-band", "apply-changes",
     // the rebase replay is DV + append — the apply-changes shape
     "branch-rebase",
@@ -981,16 +1022,16 @@ object VersionedTable {
     * instead of refusing: they contribute no feed rows by definition,
     * and each data segment's file diff is computed against its own
     * endpoint manifests, so the churned file names never masquerade
-    * as inserts.
+    * as inserts. Every `<verb>-noop` commit is one too: [[commit]]
+    * republishes the head's manifest, which diffs to nothing.
     */
   private val ContentIdenticalVerbs = Set(
-    "recluster", "optimize-compact", "optimize-noop",
-    "compact-dv", "compact-dv-noop", "delete-noop", "update-noop",
-    "merge-noop", "delete-band-noop",
+    "recluster", "optimize-compact", "compact-dv",
     "set-constraint", "drop-constraint", "rename-column", "drop-column",
-    "widen-column", "set-ict",
-    "evolve-partitioning", "recluster-where", "recluster-where-noop",
-    "apply-changes-noop", "branch-rebase-noop")
+    "widen-column", "set-ict", "evolve-partitioning", "recluster-where")
+
+  private def isContentIdentical(verb: String): Boolean =
+    ContentIdenticalVerbs.contains(verb) || verb.endsWith("-noop")
 
   /** CONTENT-CHANGING rewrites that carry WRITER-SIDE CDC (Delta's
     * `_change_data` files): their file diff is NOT their content diff
@@ -1200,8 +1241,7 @@ object VersionedTable {
     def verbOf(meta: Map[String, String]) = meta.getOrElse("verb", "?")
     steps.foreach { case (v, meta) =>
       val verb = verbOf(meta)
-      require(FeedSafeVerbs.contains(verb) ||
-          ContentIdenticalVerbs.contains(verb) ||
+      require(FeedSafeVerbs.contains(verb) || isContentIdentical(verb) ||
           (CdcVerbs.contains(verb) &&
             (meta.contains("cdc_path") || meta.contains("cdc_empty"))),
         s"changeFeed: window contains content-changing rewrite $v " +
@@ -1222,7 +1262,7 @@ object VersionedTable {
     var segStart = 0
     steps.zipWithIndex.foreach { case ((_, meta), i) =>
       val verb = verbOf(meta)
-      if (ContentIdenticalVerbs.contains(verb) || CdcVerbs.contains(verb)) {
+      if (isContentIdentical(verb) || CdcVerbs.contains(verb)) {
         if (i > segStart) segment(ordered(segStart), ordered(i))
         if (CdcVerbs.contains(verb))
           meta.get("cdc_path")
@@ -1838,21 +1878,18 @@ object VersionedTable {
     require(upTo.matches("v\\d+"), s"applyChanges: upTo must be a version name, got $upTo")
     val h = head(root)
     if (h.meta.get("applied_upto").exists(a => vNum(a) >= vNum(upTo))) None
-    else {
-      val (manifest, changed) = foldFeed(s, h, spec, feed, layout)
-      Some(publishManifest(manifest, root, Some(h), Map("applied_upto" -> upTo,
-        "verb" -> (if (changed) "apply-changes" else "apply-changes-noop"))))
-    }
+    else Some(commit(s, root, Some(h), foldFeed(s, h, spec, feed, layout),
+      Map("applied_upto" -> upTo, "verb" -> "apply-changes")))
   }
 
   /** The merge-on-read fold of a net change feed onto head `h` (shared
     * by [[applyChanges]] and [[rebaseBranch]]): every key among the
     * feed's deletes or inserts is deletion-vectored, the inserts land
-    * as one fresh generation. Returns the manifest rows and whether
-    * the fold changed anything.
+    * as one fresh generation. Returns the change, or None when the fold
+    * changed nothing.
     */
   private def foldFeed(s: SparkSession, h: Head, spec: Spec, feed: DataFrame,
-                       layout: DataFrame => DataFrame): (DataFrame, Boolean) = {
+                       layout: DataFrame => DataFrame): Option[Change] = {
     val ins = feed.filter(col("change_type") === "insert").drop("change_type")
     val del = feed.filter(col("change_type") === "delete").drop("change_type")
     admit(s, h, ins, allowEvolution = false)
@@ -1860,10 +1897,9 @@ object VersionedTable {
     val doomed = del.select(col(spec.keyCol))
       .unionByName(ins.select(col(spec.keyCol))).distinct()
     val vectored = vectorize(s, h, current, spec, doomed).map(_._1)
-    val base = vectored.getOrElse(current)
     val batchRows = writeBatch(s, h, spec, ins, layout)
-    (batchRows.fold(base)(unionSidecar(base, _)),
-      vectored.isDefined || batchRows.isDefined)
+    Option.when(vectored.isDefined || batchRows.isDefined)(
+      Change(base = vectored, add = batchRows))
   }
 
   /** APPLY CHANGES ... SEQUENCE BY (the DLT contract for EXTERNAL
@@ -2263,14 +2299,10 @@ object VersionedTable {
                      roster: DataFrame,
                      extraMeta: Map[String, String] = Map.empty): String = {
     val h = head(root)
-    val current = h.manifest(s)
-    vectorize(s, h, current, spec, roster) match {
-      case None =>
-        publishManifest(current, root, Some(h), extraMeta + ("verb" -> "delete-dv-noop"))
-      case Some((rows, nHolders)) =>
-        publishManifest(rows, root, Some(h),
-          extraMeta + ("verb" -> "delete-dv", "n_holders" -> nHolders.toString))
-    }
+    commit(s, root, Some(h), vectorize(s, h, h.manifest(s), spec, roster).map {
+      case (rows, nHolders) =>
+        Change(base = Some(rows), meta = Map("n_holders" -> nHolders.toString))
+    }, extraMeta + ("verb" -> "delete-dv"))
   }
 
   /** Shared DV core for the delete and upsert commits: write a new
@@ -2352,15 +2384,11 @@ object VersionedTable {
                allowEvolution: Boolean = false): String = {
     val h = head(root)
     admit(s, h, updates, allowEvolution)
-    val current = h.manifest(s)
     val batchRows = writeBatch(s, h, spec, updates, layout)
-    val base = vectorize(s, h, current, spec,
-      updates.select(col(spec.keyCol))) match {
-      case None => current
-      case Some((rows, _)) => rows
-    }
-    publishManifest(batchRows.fold(base)(unionSidecar(base, _)),
-      root, Some(h), Map("verb" -> "upsert-dv"))
+    val vectored = vectorize(s, h, h.manifest(s), spec,
+      updates.select(col(spec.keyCol))).map(_._1)
+    commit(s, root, Some(h), Some(Change(base = vectored, add = batchRows)),
+      Map("verb" -> "upsert-dv"))
   }
 
   /** MERGE — the full three-clause conditional upsert (SQL/Delta
@@ -2432,18 +2460,6 @@ object VersionedTable {
     require(matchedUpdateCond.isEmpty || matchedUpdate.nonEmpty,
       "merge: matchedUpdateCond without matchedUpdate SET expressions")
     val h = head(root)
-    // expectedHead = the OCC conditional commit ([[Publish.publishIf]]):
-    // the pointer swaps only if the head is still what the caller read
-    // — [[mergeOcc]] threads it; direct callers are single-writer. A
-    // conditional commit lands only on `expectedHead`: either that is
-    // the snapshot (whose properties it inherits) or the head has moved
-    // past it and the commit loses with PublishConflict
-    def pub(m: DataFrame, meta: Map[String, String]): String =
-      expectedHead match {
-        case None => publishManifest(m, root, Some(h), meta)
-        case some => Publish.publishIf(m, manifestRoot(root), some,
-          audit = auditFilesExist(h.entries(s)), meta = inheritedOf(h.meta) ++ meta)
-      }
     guardDropped(h.meta, source)
     val headSchema = readHead(s, h).schema
     val tableCols = headSchema.fieldNames.toSeq
@@ -2563,13 +2579,12 @@ object VersionedTable {
       // no-op
       val vectored = claimedPos.flatMap(commitDv(s, current, h.entries(s), root, _))
       val batchRows = batch.flatMap(writeBatch(s, h, spec, _, layout))
-      if (vectored.isEmpty && batchRows.isEmpty)
-        pub(current, extraMeta + ("verb" -> "merge-noop"))
-      else {
-        val base = vectored.getOrElse(current)
-        pub(batchRows.fold(base)(unionSidecar(base, _)), extraMeta ++
-          Map("verb" -> "merge", "n_holders" -> holders.length.toString))
-      }
+      // expectedHead = the OCC conditional commit: [[mergeOcc]] threads
+      // it, direct callers are single-writer
+      commit(s, root, Some(h), Option.when(vectored.isDefined || batchRows.isDefined)(
+        Change(base = vectored, add = batchRows,
+          meta = Map("n_holders" -> holders.length.toString))),
+        extraMeta + ("verb" -> "merge"), landsOn = expectedHead)
     }
     matched.fold(mergeMatched(None))(m =>
       Checkpoints.withPersisted(m)(p => mergeMatched(Some(p))))
@@ -2601,13 +2616,11 @@ object VersionedTable {
     require(spec.statCols.contains(c),
       s"deleteBand: $c carries no min/max stats (statCols: ${spec.statCols})")
     val h = head(root)
-    val current = h.manifest(s)
-    val (base, nDropped, nStraddlers) = dropBand(s, h, current, c, lo, hi)
-    if (nDropped + nStraddlers == 0)
-      publishManifest(current, root, Some(h), Map("verb" -> "delete-band-noop"))
-    else
-      publishManifest(base, root, Some(h), Map("verb" -> "delete-band",
-        "n_dropped_files" -> nDropped.toString, "n_straddlers" -> nStraddlers.toString))
+    val (base, nDropped, nStraddlers) = dropBand(s, h, h.manifest(s), c, lo, hi)
+    commit(s, root, Some(h), Option.when(nDropped + nStraddlers > 0)(
+      Change(base = Some(base), meta = Map("n_dropped_files" -> nDropped.toString,
+        "n_straddlers" -> nStraddlers.toString))),
+      Map("verb" -> "delete-band"))
   }
 
   /** The band half of [[deleteBand]] and [[replaceWhere]]: files whose
@@ -2683,9 +2696,9 @@ object VersionedTable {
         "(NULL counts as outside) — a replace must only write rows the " +
         "predicate claims")
     val (base, nDropped, nStraddlers) = dropBand(s, h, h.manifest(s), c, lo, hi)
-    publishManifest(
-      writeBatch(s, h, spec, batch, layout).fold(base)(unionSidecar(base, _)),
-      root, Some(h), Map("verb" -> "replace-where",
+    commit(s, root, Some(h), Some(Change(base = Some(base),
+      add = writeBatch(s, h, spec, batch, layout))),
+      Map("verb" -> "replace-where",
         "n_dropped_files" -> nDropped.toString, "n_straddlers" -> nStraddlers.toString))
   }
 
@@ -2698,7 +2711,8 @@ object VersionedTable {
     * rebase is recomputing the merge against the freshly-read head,
     * which is exactly what each retry does: [[merge]] re-reads the
     * manifest, re-probes, re-validates against the new head's schema/
-    * constraints, and [[Publish.publishIf]] fences the pointer swap.
+    * constraints, and the conditional [[commit]] fences the pointer
+    * swap.
     * A lost attempt's batch generation is unreferenced garbage the
     * next [[vacuum]] reclaims.
     *
@@ -2940,19 +2954,14 @@ object VersionedTable {
     */
   def compactDeletes(s: SparkSession, root: String, spec: Spec): String = {
     val h = head(root)
-    val current = h.manifest(s)
     val dvd = h.entries(s).filter(_._2.isDefined)
-    if (dvd.isEmpty)
-      publishManifest(current, root, Some(h), Map("verb" -> "compact-dv-noop"))
-    else {
+    commit(s, root, Some(h), Option.when(dvd.nonEmpty) {
       val gen = freshGen(root)
       readEntries(s, dvd).write.parquet(gen)
-      publishManifest(
-        unionSidecar(current.filter(col("dv_path").isNull),
-          sidecar(s, gen, spec, transformsOf(h.meta))),
-        root, Some(h),
-        Map("verb" -> "compact-dv", "n_compacted" -> dvd.length.toString))
-    }
+      Change(retract = dvd.map(_._1).toSeq,
+        add = Some(sidecar(s, gen, spec, transformsOf(h.meta))),
+        meta = Map("n_compacted" -> dvd.length.toString))
+    }, Map("verb" -> "compact-dv"))
   }
 
   /** UPDATE ... SET ... WHERE as a COPY-ON-WRITE commit (the Delta
@@ -2985,13 +2994,10 @@ object VersionedTable {
                   layout: DataFrame => DataFrame = identity): String = {
     require(sets.nonEmpty, "updateWhere: no SET expressions")
     val h = head(root)
-    val current = h.manifest(s)
     val holders = logicalView(readEntriesKeep(s, h.entries(s)), h.meta)
       .filter(cond)
       .select("__file").distinct().collect().map(_.getString(0)).toSeq
-    if (holders.isEmpty)
-      publishManifest(current, root, Some(h), Map("verb" -> "update-noop"))
-    else {
+    commit(s, root, Some(h), Option.when(holders.nonEmpty) {
       // holder rows persisted for the verb: the CDC pre-image pass,
       // the CDC post-image pass, and the rewrite all read them — one
       // scan of the band's files instead of three (bounded ∝ holders,
@@ -3026,13 +3032,10 @@ object VersionedTable {
                 toPhysical(updated.filter(col("__match")).drop("__match"), h.meta)
                   .withColumn("change_type", lit("insert")))),
           () => layout(toPhysical(updated.drop("__match"), h.meta)).write.parquet(gen))
-        publishManifest(
-          unionSidecar(current.filter(!col("file").isin(holders: _*)),
-            sidecar(s, gen, spec, transformsOf(h.meta))),
-          root, Some(h), cdcMeta ++
-            Map("verb" -> "update", "n_holders" -> holders.length.toString))
+        Change(retract = holders, add = Some(sidecar(s, gen, spec, transformsOf(h.meta))),
+          meta = cdcMeta + ("n_holders" -> holders.length.toString))
       }
-    }
+    }, Map("verb" -> "update"))
   }
 
   /** OPTIMIZE (bin-packing compaction) as a manifest commit — the
@@ -3057,26 +3060,20 @@ object VersionedTable {
                       layout: DataFrame => DataFrame = identity): String = {
     require(targetBytes > 0, s"optimizeCompact: targetBytes must be > 0")
     val h = head(root)
-    val current = h.manifest(s)
     val files = h.entries(s).map(_._1)
     val sized = files.map(f =>
       f -> TableStore.get.size(f.stripPrefix("file:")))
     val small = sized.filter(_._2 < targetBytes).map(_._1)
-    if (small.length < 2)
-      publishManifest(current, root, Some(h), Map("verb" -> "optimize-noop"))
-    else {
+    commit(s, root, Some(h), Option.when(small.length >= 2) {
       val smallBytes = sized.filter(_._2 < targetBytes).map(_._2).sum
       val nOut = math.max(1L, (smallBytes + targetBytes - 1) / targetBytes).toInt
       val gen = freshGen(root)
       layout(readEntries(s, entriesIn(h.entries(s), small)))
         .repartition(nOut)
         .write.parquet(gen)
-      publishManifest(
-        unionSidecar(current.filter(!col("file").isin(small: _*)),
-          sidecar(s, gen, spec, transformsOf(h.meta))),
-        root, Some(h), Map("verb" -> "optimize-compact",
-          "n_small" -> small.length.toString, "n_out" -> nOut.toString))
-    }
+      Change(retract = small.toSeq, add = Some(sidecar(s, gen, spec, transformsOf(h.meta))),
+        meta = Map("n_small" -> small.length.toString, "n_out" -> nOut.toString))
+    }, Map("verb" -> "optimize-compact"))
   }
 
   /** RESTORE (Delta `RESTORE TABLE ... VERSION AS OF`): make an old
@@ -3106,8 +3103,9 @@ object VersionedTable {
         readEntries(s, eTo)
           .withColumn("change_type", lit("insert")).limit(0)
       else diff.reduce(_.unionByName(_, allowMissingColumns = true)))
-    publishManifest(Publish.readCommitted(s, manifestRoot(root), v), root, Some(h),
-      cdcMeta ++ Map("verb" -> "restore", "restored" -> v))
+    commit(s, root, Some(h), Some(Change(
+      base = Some(Publish.readCommitted(s, manifestRoot(root), v)), meta = cdcMeta)),
+      Map("verb" -> "restore", "restored" -> v))
   }
 
   /** Named REFS (Iceberg tags): a tag pins a version name durably
@@ -3177,9 +3175,10 @@ object VersionedTable {
                      v: String): String = {
     require(publishedVersions(srcRoot).contains(v),
       s"shallowCloneAt: $v is not a published version under $srcRoot")
-    publishManifest(Publish.readVersion(s, manifestRoot(srcRoot), v), dstRoot, None,
-      inheritedOf(versionMeta(srcRoot, v)) ++ Map("verb" -> "clone",
-        "src" -> s"$srcRoot@$v"))
+    commit(s, dstRoot, None, Some(Change(
+      base = Some(Publish.readVersion(s, manifestRoot(srcRoot), v)),
+      props = Some(versionMeta(srcRoot, v)))),
+      Map("verb" -> "clone", "src" -> s"$srcRoot@$v"))
   }
 
   /** [[shallowCloneAt]] of the version the source had AT an instant
@@ -3204,8 +3203,8 @@ object VersionedTable {
     * is still the branch's base version (the fast-forward contract:
     * no merge — a moved main means the branch must re-derive, which
     * is exactly [[Publish.PublishConflict]]'s rebase posture, and
-    * that is what's thrown; [[Publish.publishIf]] re-fences at the
-    * pointer swap for racing writers). Table properties the branch
+    * that is what's thrown; the conditional [[commit]] re-fences at
+    * the pointer swap for racing writers). Table properties the branch
     * evolved — constraints, column mapping, partition spec — carry
     * through its inherited meta.
     *
@@ -3252,11 +3251,12 @@ object VersionedTable {
           toPhys.get(c).fold(f)(p => f.withColumnRenamed(c, p))
         })
       }
-    Publish.publishIf(branch.manifest(s),
-      manifestRoot(mainRoot), expectedHead = Some(vBase),
-      audit = auditFilesExist(versionEntries(s, mainRoot, vBase, committed = true)),
-      meta = inheritedOf(branch.meta) ++ cdcMeta ++
-        Map("verb" -> "fast-forward", "src" -> s"$branchRoot@$branchHead"))
+    // main's properties give way to the branch's: a constraint the
+    // branch dropped stays dropped
+    commit(s, mainRoot, None, Some(Change(base = Some(branch.manifest(s)),
+      meta = cdcMeta, props = Some(branch.meta))),
+      Map("verb" -> "fast-forward", "src" -> s"$branchRoot@$branchHead"),
+      landsOn = Some(vBase))
   }
 
   /** A branch's published versions and the main version it was cut
@@ -3284,7 +3284,7 @@ object VersionedTable {
     * this REPLAYS the branch's own change feed (clone → branch head)
     * onto main's current head as one merge-on-read commit — the
     * [[applyChanges]] fold shape (vectorize replaced/deleted keys +
-    * append the inserts), fenced by [[Publish.publishIf]] on the head
+    * append the inserts), a conditional [[commit]] fenced on the head
     * the replay was computed against.
     *
     * Safe subset only: the replay is order-independent — and therefore
@@ -3339,12 +3339,9 @@ object VersionedTable {
         "re-derive the branch from main's head")
     // the applyChanges fold, WITHOUT its applied_upto watermark (main
     // may be a replica carrying its own), fenced on the head we read
-    val (manifest, changed) = foldFeed(s, main, spec, branchFeed, layout)
-    Publish.publishIf(manifest, manifestRoot(mainRoot),
-      expectedHead = Some(mainHead), audit = auditFilesExist(main.entries(s)),
-      meta = inheritedOf(main.meta) ++ Map(
-        "verb" -> (if (changed) "branch-rebase" else "branch-rebase-noop"),
-        "src" -> s"$branchRoot@$branchHead", "base" -> vBase, "onto" -> mainHead))
+    commit(s, mainRoot, Some(main), foldFeed(s, main, spec, branchFeed, layout),
+      Map("verb" -> "branch-rebase", "src" -> s"$branchRoot@$branchHead",
+        "base" -> vBase, "onto" -> mainHead), landsOn = Some(mainHead))
   }
 
   /** RE-CLUSTER the table (the OPTIMIZE/Z-ORDER verb as a manifest
@@ -3367,7 +3364,8 @@ object VersionedTable {
     val h = head(root)
     val gen = freshGen(root)
     layout(readEntries(s, h.entries(s))).write.parquet(gen)
-    publishManifest(sidecar(s, gen, spec, transformsOf(h.meta)), root, Some(h),
+    commit(s, root, Some(h),
+      Some(Change(base = Some(sidecar(s, gen, spec, transformsOf(h.meta))))),
       Map("verb" -> "recluster"))
   }
 
@@ -3390,21 +3388,15 @@ object VersionedTable {
     require(spec.statCols.contains(c),
       s"reclusterWhere: $c carries no min/max stats (statCols: ${spec.statCols})")
     val h = head(root)
-    val current = h.manifest(s)
-    val hot = StatsSpine.survivors(current, c, lo, hi)
+    val hot = StatsSpine.survivors(h.manifest(s), c, lo, hi)
       .select("file").collect().map(_.getString(0)).toSeq
-    if (hot.isEmpty)
-      publishManifest(current, root, Some(h), Map("verb" -> "recluster-where-noop"))
-    else {
+    commit(s, root, Some(h), Option.when(hot.nonEmpty) {
       val gen = freshGen(root)
       layout(readEntries(s, entriesIn(h.entries(s), hot)))
         .write.parquet(gen)
-      publishManifest(
-        unionSidecar(current.filter(!col("file").isin(hot: _*)),
-          sidecar(s, gen, spec, transformsOf(h.meta))),
-        root, Some(h), Map("verb" -> "recluster-where",
-          "n_rewritten" -> hot.length.toString))
-    }
+      Change(retract = hot, add = Some(sidecar(s, gen, spec, transformsOf(h.meta))),
+        meta = Map("n_rewritten" -> hot.length.toString))
+    }, Map("verb" -> "recluster-where"))
   }
 
   /** OPTIMISTIC-CONCURRENCY append: the multi-writer commit loop every
@@ -3412,7 +3404,7 @@ object VersionedTable {
     * then each attempt (1) reads the CURRENT head version name, (2)
     * folds the batch sidecar onto THAT version's manifest (head-pinned
     * — never "whatever is current at write time"), and (3) commits
-    * with [[Publish.publishIf]] conditional on the head not having
+    * conditionally ([[commit]]'s `landsOn`) on the head not having
     * moved. A competing writer landing in between costs the loser a
     * tombstoned attempt and a REBASE onto the new head — never a lost
     * update (the competing commit's rows survive in the winner's fold)
@@ -3457,16 +3449,11 @@ object VersionedTable {
       // fold and the inherited properties follow the head it fences on
       val h = headNow()
       validateAgainst(h)
-      val base = h.manifest(s)
       beforeCommit()
       try {
-        return (Publish.publishIf(
-          batchRows.fold(base)(unionSidecar(base, _)),
-          manifestRoot(root), Some(h.version),
-          audit = auditFilesExist(h.entries(s)),
-          meta = inheritedOf(h.meta) ++
-            Map("verb" -> "append-occ", "attempt" -> attempts.toString,
-              "base" -> h.version)), attempts)
+        return (commit(s, root, Some(h), Some(Change(add = batchRows)),
+          Map("verb" -> "append-occ", "attempt" -> attempts.toString,
+            "base" -> h.version), landsOn = Some(h.version)), attempts)
       } catch {
         case _: Publish.PublishConflict if attempts < maxAttempts => ()
       }

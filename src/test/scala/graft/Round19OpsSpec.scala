@@ -378,6 +378,50 @@ class Round19OpsSpec extends SparkSpec {
     graft.operators.Checkpoints.deleteTree(java.nio.file.Paths.get(root))
   }
 
+  /** The conditional commits, each run on a table whose head is stamped
+    * (a branch, if any, next to it); each returns the version it commits.
+    */
+  private val conditionalCommits = Seq[(String, String => String)](
+    "appendOcc" -> (root =>
+      VersionedTable.appendOcc(spark, rows(10, 20), root, spec, maxAttempts = 1)._1),
+    "mergeOcc" -> (root =>
+      VersionedTable.mergeOcc(spark, root, spec, rows(5, 15),
+        matchedUpdate = Map("n" -> col("src_n")), maxAttempts = 1)._1),
+    "fastForward" -> { root =>
+      val br = s"$root-branch"
+      VersionedTable.shallowClone(spark, root, br)
+      VersionedTable.append(spark, rows(10, 20), br, spec)
+      VersionedTable.fastForward(spark, root, br)
+    },
+    "rebaseBranch" -> { root =>
+      val br = s"$root-branch"
+      VersionedTable.shallowClone(spark, root, br)
+      VersionedTable.append(spark, rows(10, 20), br, spec)
+      VersionedTable.append(spark, rows(20, 30), root, spec)
+      VersionedTable.rebaseBranch(spark, root, br, spec)
+    })
+
+  conditionalCommits.foreach { case (verb, run) =>
+    test(s"in-commit timestamps: $verb stamps its version above its predecessor's, " +
+      "in a one-file manifest") {
+      val root = java.nio.file.Files.createTempDirectory("graft-ict-c").toString + "/t"
+      VersionedTable.create(spark, rows(0, 10), root, spec)
+      VersionedTable.setInCommitTimestamps(spark, root)
+      val v = run(root)
+      val prev = VersionedTable.publishedVersions(root).takeWhile(_ != v).last
+      def stamp(x: String) = VersionedTable.versionMeta(root, x).get("commit_ts").map(_.toLong)
+      assert(stamp(prev).isDefined, s"$verb: the predecessor $prev is stamped")
+      assert(stamp(v).exists(_ > stamp(prev).get),
+        s"$verb: $v carries ${stamp(v)}, predecessor $prev ${stamp(prev)}")
+      assert(VersionedTable.versionAsOfTs(root, stamp(prev).get) == prev,
+        s"$verb: the predecessor's instant resolves to a later version")
+      val manifestFiles = graft.operators.LocalTableStore.listNames(s"$root/manifest/$v")
+        .filter(_.endsWith(".parquet"))
+      assert(manifestFiles.size == 1, s"$verb: manifest files $manifestFiles")
+      graft.operators.Checkpoints.deleteTree(java.nio.file.Paths.get(root).getParent)
+    }
+  }
+
   test("fsck repair: missing-file references drop in one manifest commit; the feed refuses across it; total loss refuses") {
     import graft.operators.{LocalTableStore, VersionedTable => VT}
     val root = java.nio.file.Files.createTempDirectory("graft-fsck").toString

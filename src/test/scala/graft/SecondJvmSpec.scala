@@ -6,7 +6,7 @@ import java.util.concurrent.TimeUnit
 
 import scala.jdk.CollectionConverters._
 
-import graft.operators.{TableStore, VersionedTable}
+import graft.operators.{ForwardingTableStore, LocalTableStore, Publish, TableStore, VersionedTable}
 import org.apache.spark.sql.SparkSession
 
 /** Two JVMs on one table root. Every other concurrency spec runs its
@@ -19,10 +19,10 @@ class SecondJvmSpec extends SparkSpec {
 
   private val spec = VersionedTable.Spec(Seq("n"), "id", 1 << 10)
 
-  /** Run [[SecondJvmWriter]] on `root` in a child JVM; its output goes
-    * to a log that a failure message quotes.
+  /** Run [[SecondJvmWriter]] in `mode` on `root` in a child JVM; its
+    * output goes to a log that a failure message quotes.
     */
-  private def runChild(root: String): Unit = {
+  private def runChild(root: String, mode: String = "recreate"): Unit = {
     val dir = Files.createTempDirectory("graft-2jvm-child")
     val log = dir.resolve("child.log").toFile
     // the module flags Spark needs on JDK 17, as this JVM was given them
@@ -36,7 +36,7 @@ class SecondJvmSpec extends SparkSpec {
       opens ++ Seq("-Xmx768m", "-Dspark.ui.enabled=false",
         s"-Dspark.sql.warehouse.dir=${dir.resolve("warehouse")}",
         "-cp", System.getProperty("java.class.path"),
-        SecondJvmWriter.getClass.getName.stripSuffix("$"), root)
+        SecondJvmWriter.getClass.getName.stripSuffix("$"), root, mode)
     val p = new ProcessBuilder(cmd: _*).directory(dir.toFile)
       .redirectErrorStream(true).redirectOutput(log).start()
     val done = p.waitFor(240, TimeUnit.SECONDS)
@@ -58,13 +58,54 @@ class SecondJvmSpec extends SparkSpec {
     assert(got.orderBy("id").as[(Long, String, Long)].collect().toSeq ==
       SecondJvmWriter.rows)
   }
+
+  test("a child JVM that commits inside the parent's conditional commit wins; " +
+    "the parent loses at the pointer swap") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-2jvm").toString + "/t"
+    VersionedTable.create(spark,
+      (0L until 50L).map(i => (i, i % 5)).toDF("id", "n"), root, spec)
+    // the child appends while the parent's attempt sits between its
+    // version's write and its pointer swap: the head the parent fences on
+    // is still v00001 there, so only the conditional swap can refuse it
+    val mroot = s"$root/manifest"
+    val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val hook = new ForwardingTableStore(LocalTableStore) {
+      override def exists(p: String): Boolean = {
+        if (p.startsWith(s"$mroot/v") && p.endsWith("/_SUCCESS") &&
+            fired.compareAndSet(false, true))
+          runChild(root, "append")
+        super.exists(p)
+      }
+    }
+    TableStore.set(hook)
+    val lost =
+      try intercept[Publish.PublishConflict] {
+        VersionedTable.appendOcc(spark,
+          (500L until 510L).map(i => (i, 9L)).toDF("id", "n"), root, spec,
+          maxAttempts = 1)
+      } finally TableStore.set(LocalTableStore)
+    assert(fired.get, "the parent's commit never probed its _SUCCESS")
+    assert(lost.expectedHead.contains("v00001") && lost.foundHead.contains("v00003"),
+      lost.getMessage)
+    assert(LocalTableStore.exists(s"$mroot/v00002.failed"),
+      "the parent's attempt must be tombstoned")
+    assert(VersionedTable.headVersion(root).contains("v00003"))
+    assert(!LocalTableStore.listNames(mroot).exists(_.endsWith(".claim")),
+      s"claims left: ${LocalTableStore.listNames(mroot)}")
+    val ids = VersionedTable.read(spark, root).select("id").as[Long].collect().toSet
+    assert(ids == ((0L until 50L) ++ SecondJvmWriter.appended.map(_._1)).toSet,
+      s"read ${ids.size} ids")
+  }
 }
 
-/** The second JVM of [[SecondJvmSpec]]: drops the table at `args(0)`
-  * and re-creates it with other rows and columns.
+/** The second JVM of [[SecondJvmSpec]]. Mode `recreate` (`args(1)`)
+  * drops the table at `args(0)` and re-creates it with other rows and
+  * columns; mode `append` appends [[appended]] to it.
   */
 object SecondJvmWriter {
   val rows: Seq[(Long, String, Long)] = (1000L until 1007L).map(i => (i, s"r$i", i * 2))
+  val appended: Seq[(Long, Long)] = (2000L until 2005L).map(i => (i, i % 5))
 
   def main(args: Array[String]): Unit = {
     val spark = Sessions.tuned(
@@ -72,9 +113,14 @@ object SecondJvmWriter {
       shufflePartitions = 1).getOrCreate()
     import spark.implicits._
     val root = args(0)
-    TableStore.get.deleteTree(root)
-    VersionedTable.create(spark, rows.toDF("id", "label", "n"), root,
-      VersionedTable.Spec(Seq("n"), "id", 1 << 10))
+    val spec = VersionedTable.Spec(Seq("n"), "id", 1 << 10)
+    args(1) match {
+      case "recreate" =>
+        TableStore.get.deleteTree(root)
+        VersionedTable.create(spark, rows.toDF("id", "label", "n"), root, spec)
+      case "append" =>
+        VersionedTable.append(spark, appended.toDF("id", "n"), root, spec)
+    }
     spark.stop()
   }
 }
