@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
-import graft.operators.{Buckets, Checkpoints, ConnectedComponents, KMeans, LatestPerKey, Multimodal, Par, Similarity}
+import graft.operators.{Buckets, Checkpoints, ConnectedComponents, KMeans, LatestPerKey, Multimodal, Par, Scratch, Similarity}
 import graft.sources.Tables
 import graft.streaming.StreamingStage
 
@@ -1250,17 +1250,6 @@ object ExtQueries {
     (aug, s1, s2, s3, ids)
   }
 
-  private val buildCorpusPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-
-  private val buildCorpusAuditPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-
-  private def retirePrevDir(ref: java.util.concurrent.atomic.AtomicReference[String],
-                            base: String): Unit =
-    Option(ref.getAndSet(base)).foreach(p =>
-      deleteTree(java.nio.file.Paths.get(p)))
-
   /** `pipeline_build_corpus`: the [[buildCorpusStages]] chain
     * WAP-PUBLISHED as pack_group-partitioned shard files (the
     * [[graft.operators.Publish]] write-audit-publish lifecycle, audit =
@@ -1273,13 +1262,12 @@ object ExtQueries {
     */
   def pipelineBuildCorpus(s: SparkSession, dir: String): DataFrame = {
     val (_, _, _, _, ids) = buildCorpusStages(s, dir)
-    val root = java.nio.file.Files.createTempDirectory("graft_corpus_pub").toString
+    val root = Scratch.dir("graft_corpus_pub")
     graft.operators.Publish.publish(ids, root,
       audit = b => require(
         b.select("global_id").distinct().count() == b.count(),
         "pipeline_build_corpus: duplicate global ids in published shards"),
       partitionBy = Seq("pack_group"))
-    retirePrevDir(buildCorpusPrev, root)
     graft.operators.Publish.read(s, root)
       .groupBy(col("pack_group").cast("long").as("pack_group"))
       .agg(count(lit(1)).as("n_docs"),
@@ -1299,9 +1287,8 @@ object ExtQueries {
     */
   def pipelineBuildCorpusAudit(s: SparkSession, dir: String): DataFrame = {
     val (aug, s1, s2, s3, ids) = buildCorpusStages(s, dir)
-    val root = java.nio.file.Files.createTempDirectory("graft_corpus_pub_a").toString
+    val root = Scratch.dir("graft_corpus_pub_a")
     graft.operators.Publish.publish(ids, root, partitionBy = Seq("pack_group"))
-    retirePrevDir(buildCorpusAuditPrev, root)
     val n5 = graft.operators.Publish.read(s, root).count()
     val c = aug.agg(count(lit(1)).as("n0"))
       .crossJoin(broadcast(s1.agg(count(lit(1)).as("n1"))))
@@ -1551,9 +1538,6 @@ object ExtQueries {
     operators.IncrementalDedup.cosinePairsAgainst(state, banded(all.filter(isBatch)))
   }
 
-  private val bandStatePublishPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-
   /** [[pipelineDedupIncremental]] with the band state routed through
     * WRITE-AUDIT-PUBLISH storage (operators.Publish — the E97 commit
     * pattern applied to the E85 artifact): the corpus state publishes
@@ -1571,7 +1555,7 @@ object ExtQueries {
     import operators.{Buckets, IncrementalDedup, Publish}
     val nd = withNearDups(docs(s, dir))
     val isBatch = col("doc_id") % 7 === 0
-    val root = java.nio.file.Files.createTempDirectory("graft_band_pub").toString
+    val root = Scratch.dir("graft_band_pub")
     val cap = Buckets.DefaultCap
     val audit: DataFrame => Unit = st => {
       require(st.filter(col("band").isNull).isEmpty, "state audit: null band key")
@@ -1583,8 +1567,6 @@ object ExtQueries {
     Publish.publish(
       IncrementalDedup.bandState(minhashBanded(nd.filter(!isBatch))), root, audit)
     val state = Publish.read(s, root)
-    Option(bandStatePublishPrev.getAndSet(root))
-      .foreach(p => deleteTree(java.nio.file.Paths.get(p)))
     IncrementalDedup.pairsAgainst(state, minhashBanded(nd.filter(isBatch)))
   }
 
@@ -1694,9 +1676,6 @@ object ExtQueries {
     operators.IncrementalDedup.exactAgainst(state, all.filter(isBatch))
   }
 
-  private val statePublishPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-
   /** The digest-state fold chain THROUGH write-audit-publish
     * (operators.Publish — VERDICT r5 #3): day 1 publishes the corpus
     * digest state as v1; day 2 reads the PUBLISHED state back through
@@ -1713,7 +1692,7 @@ object ExtQueries {
     import operators.{IncrementalDedup, Publish}
     val all = withExactDups(docs(s, dir))
     val isBatch = col("doc_id") % 7 === 0
-    val root = java.nio.file.Files.createTempDirectory("graft_state_pub").toString
+    val root = Scratch.dir("graft_state_pub")
     // both invariants in ONE aggregate pass (r17, guide §2.6 job-count:
     // the two isEmpty probes each scanned the read-back per publish)
     val audit: DataFrame => Unit = st => {
@@ -1728,8 +1707,6 @@ object ExtQueries {
     Publish.publish(IncrementalDedup.digestState(all.filter(!isBatch)), root, audit)
     val day1 = Publish.read(s, root)
     Publish.publish(IncrementalDedup.foldDigestState(day1, all.filter(isBatch)), root, audit)
-    Option(statePublishPrev.getAndSet(root))
-      .foreach(p => deleteTree(java.nio.file.Paths.get(p)))
     Publish.read(s, root)
   }
 
@@ -2092,32 +2069,17 @@ object ExtQueries {
     * INVOCATION just to decide cache validity (at 100 TB: a corpus
     * read before every stored-path query). Every invocation (and
     * bench rep) now reads only the stored bucketed edges + degree
-    * spine.
+    * spine. The base sits under [[Checkpoints.root]] — per JVM, because
+    * the TABLE half lives in this JVM's catalog: a shared tmpdir path
+    * let a second JVM's rebuild overwrite files the first was reading
+    * (r17) — and, unlike a [[graft.operators.Scratch]] fixture, it is
+    * reused across calls until the corpus commits anew.
     */
-  /** Per-JVM root for the commit-keyed stored artifacts (r17): the
-    * bases were shared tmpdir paths keyed on corpus commit alone, but
-    * the TABLE half of each artifact lives in the JVM's own catalog —
-    * two concurrent JVMs (the grouped test runner's forked JVMs, a
-    * Verify and a Bench side by side) would each see "files ready,
-    * table missing", and the second's rebuild OVERWRITES the files the
-    * first is actively reading (FILE_NOT_EXIST mid-query, measured as
-    * a grouped-suite flake). A per-process root keeps the within-JVM
-    * reuse that matters (bench reps, repeated invocations) and removes
-    * the cross-process sharing that was never sound; the shutdown hook
-    * reclaims it.
-    */
-  private lazy val artifactRoot: java.nio.file.Path = {
-    val p = java.nio.file.Files.createTempDirectory("graft-artifacts")
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      graft.operators.Checkpoints.deleteTree(p)))
-    p
-  }
-
   private[graft] def graphStoredArtifact(s: SparkSession, dir: String): graft.operators.GraphIndex.Stored = {
     val key = graft.operators.ArtifactKey.compositeKey(
       s"gv$GraphArtifactVersion",
       Seq(s"$dir/orders.parquet", s"$dir/lineitem.parquet"))
-    val base = artifactRoot.resolve(s"graft-graph-$key")
+    val base = Checkpoints.root.resolve(s"graft-graph-$key")
     val tbl = s"graft_graph_edges_$key"
     val stored = graft.operators.GraphIndex.Stored(tbl, base.toString, 0)
     val ready = java.nio.file.Files.exists(
@@ -2158,14 +2120,12 @@ object ExtQueries {
     */
   def graphPageRankAppend(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.GraphIndex
-    val base = java.nio.file.Files.createTempDirectory("graft_graph_app").toString
-    val tbl = "graft_graph_append_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
+    val base = Scratch.dir("graft_graph_app")
+    val tbl = Scratch.table(s, "graft_graph_app")
     val stored0 = GraphIndex.build(s,
       graphEdges(s, dir, col("o_orderkey") % 7 =!= 0), tbl, base)
     val (stored1, _) = GraphIndex.append(s, stored0,
       graphEdges(s, dir, col("o_orderkey") % 7 === 0), gen = 1)
-    retirePrev(graphAppendPrev, s, tbl, base)
     GraphIndex.ranks(s, stored1, iterations = 3)
   }
 
@@ -2183,9 +2143,8 @@ object ExtQueries {
     */
   def graphPageRankWarmstart(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.GraphIndex
-    val base = java.nio.file.Files.createTempDirectory("graft_graph_ws").toString
-    val tbl = "graft_graph_ws_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
+    val base = Scratch.dir("graft_graph_ws")
+    val tbl = Scratch.table(s, "graft_graph_ws")
     val stored0 = GraphIndex.build(s,
       graphEdges(s, dir, col("o_orderkey") % 7 =!= 0), tbl, base)
     GraphIndex.ranks(s, stored0, iterations = 3)
@@ -2193,7 +2152,6 @@ object ExtQueries {
       .write.parquet(s"$base/ranks-g0")
     val (stored1, _) = GraphIndex.append(s, stored0,
       graphEdges(s, dir, col("o_orderkey") % 7 === 0), gen = 1)
-    retirePrev(graphWarmstartPrev, s, tbl, base)
     GraphIndex.warmStartRanks(s, stored1,
       s.read.parquet(s"$base/ranks-g0"), iterations = 2)
   }
@@ -2215,22 +2173,15 @@ object ExtQueries {
     */
   def graphPageRankPurge(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.GraphIndex
-    val base = java.nio.file.Files.createTempDirectory("graft_graph_prg").toString
-    val tbl = "graft_graph_prg_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
+    val base = Scratch.dir("graft_graph_prg")
+    val tbl = Scratch.table(s, "graft_graph_prg")
     val stored0 = GraphIndex.build(s, graphEdges(s, dir), tbl, base)
     val roster = Tables.load(s, dir, "customer")
       .filter(col("c_custkey") % 89 === 0)
       .select(concat(lit("c"), col("c_custkey")).as("node"))
-    val base2 = java.nio.file.Files.createTempDirectory("graft_graph_prgd").toString
-    val tbl2 = "graft_graph_prgd_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
+    val base2 = Scratch.dir("graft_graph_prgd")
+    val tbl2 = Scratch.table(s, "graft_graph_prgd")
     val (stored1, _) = GraphIndex.purge(s, stored0, roster, tbl2, base2)
-    // the unpurged artifact is dead within this invocation (it still
-    // holds roster edges); the purged one follows the usual lifecycle
-    s.sql(s"DROP TABLE IF EXISTS $tbl")
-    deleteTree(java.nio.file.Paths.get(base))
-    retirePrev(graphPurgePrev, s, tbl2, base2)
     GraphIndex.ranks(s, stored1, iterations = 3)
   }
 
@@ -2246,20 +2197,14 @@ object ExtQueries {
     */
   def graphPageRankMaintain(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.GraphIndex
-    val base = java.nio.file.Files.createTempDirectory("graft_graph_mnt").toString
-    val suffix = java.util.UUID.randomUUID().toString.replace("-", "")
-    val tbl = s"graft_graph_mnt_$suffix"
-    val rebuildTbl = s"graft_graph_mnt_rb_$suffix"
+    val base = Scratch.dir("graft_graph_mnt")
+    val tbl = Scratch.table(s, "graft_graph_mnt")
+    val rebuildTbl = Scratch.table(s, "graft_graph_mnt")
     val stored0 = GraphIndex.build(s,
       graphEdges(s, dir, col("o_orderkey") % 2 =!= 0), tbl, s"$base/a")
     val r = GraphIndex.maintain(s, stored0,
       graphEdges(s, dir, col("o_orderkey") % 2 === 0), gen = 1,
       rebuildTbl, s"$base/b")
-    // dead-branch retirement within the invocation (the IvfIndex
-    // discipline): on rebuild the pre-maintenance artifact is dead; on
-    // append the rebuild table was never created
-    if (r.rebuilt) s.sql(s"DROP TABLE IF EXISTS $tbl")
-    retirePrev(graphMaintainPrev, s, r.stored.edgesTable, base)
     GraphIndex.ranks(s, r.stored, iterations = 3)
       .agg(count(lit(1)).as("n_nodes"), sum(col("rank_fp")).as("rank_sum"))
       .select(lit(r.nBase).as("n_base"), lit(r.nNew).as("n_new"),
@@ -2285,7 +2230,7 @@ object ExtQueries {
   private[graft] def bm25StoredArtifact(s: SparkSession, dir: String): graft.operators.Bm25Index.Stored = {
     val key = graft.operators.ArtifactKey.compositeKey(
       s"bm$Bm25ArtifactVersion", Seq(s"$dir/documents.parquet"))
-    val base = artifactRoot.resolve(s"graft-bm25-$key")
+    val base = Checkpoints.root.resolve(s"graft-bm25-$key")
     val tbl = s"graft_bm25_postings_$key"
     val stored = graft.operators.Bm25Index.Stored(tbl, base.toString, 0)
     val ready = Seq(stored.postingsPath, stored.dfPath, stored.statsPath)
@@ -2331,13 +2276,11 @@ object ExtQueries {
   def textBm25AppendTopK(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Bm25Index
     val d = docs(s, dir)
-    val base = java.nio.file.Files.createTempDirectory("graft_bm25_app").toString
-    val tbl = "graft_bm25_app_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
+    val base = Scratch.dir("graft_bm25_app")
+    val tbl = Scratch.table(s, "graft_bm25_app")
     val stored0 = Bm25Index.build(s, d.filter(col("doc_id") % 3 =!= 0), tbl, base)
     val (stored1, _) = Bm25Index.append(s, stored0,
       d.filter(col("doc_id") % 3 === 0), gen = 1)
-    retirePrev(bm25AppendPrev, s, tbl, base)
     Bm25Index.scoredTopK(s, stored1, bm25QueryTerms(s, stored1))
   }
 
@@ -2357,21 +2300,13 @@ object ExtQueries {
   def textBm25PurgeTopK(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Bm25Index
     val d = docs(s, dir)
-    val base = java.nio.file.Files.createTempDirectory("graft_bm25_prg").toString
-    val tbl = "graft_bm25_prg_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
+    val base = Scratch.dir("graft_bm25_prg")
+    val tbl = Scratch.table(s, "graft_bm25_prg")
     val stored0 = Bm25Index.build(s, d, tbl, base)
     val roster = d.filter(purgeRule()).select(col("doc_id"))
-    val base2 = java.nio.file.Files.createTempDirectory("graft_bm25_prgd").toString
-    val tbl2 = "graft_bm25_prgd_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
+    val base2 = Scratch.dir("graft_bm25_prgd")
+    val tbl2 = Scratch.table(s, "graft_bm25_prgd")
     val (stored1, _) = Bm25Index.purge(s, stored0, roster, tbl2, base2)
-    // the unpurged index is dead within this invocation (it still
-    // holds roster postings); the purged one follows the usual
-    // cross-invocation lifecycle
-    s.sql(s"DROP TABLE IF EXISTS $tbl")
-    deleteTree(java.nio.file.Paths.get(base))
-    retirePrev(bm25PurgePrev, s, tbl2, base2)
     Bm25Index.scoredTopK(s, stored1, bm25QueryTerms(s, stored1))
   }
 
@@ -2394,8 +2329,7 @@ object ExtQueries {
   def pipelinePurgeIndexesAudit(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.{Bm25Index, GraphIndex, Par}
     val d = docs(s, dir)
-    val suffix = java.util.UUID.randomUUID().toString.replace("-", "")
-    val base = java.nio.file.Files.createTempDirectory("graft_prgaudit").toString
+    val base = Scratch.dir("graft_prgaudit")
     // The BM25 and graph families are INDEPENDENT artifact chains on
     // disjoint tables and paths (guide §2.6, r17 — the same
     // independence audit the three purge-state families got): each
@@ -2404,8 +2338,8 @@ object ExtQueries {
     // one scan's tail back-fills with the next. Values unchanged by
     // construction; row order is fixed by the Seq below.
     def bmFamily(): Seq[(String, Long, Long, Long, Long)] = {
-      val bmTbl = s"graft_prgaudit_bm_$suffix"
-      val bmTbl2 = s"graft_prgaudit_bmd_$suffix"
+      val bmTbl = Scratch.table(s, "graft_prgaudit")
+      val bmTbl2 = Scratch.table(s, "graft_prgaudit")
       val bm0 = Bm25Index.build(s, d, bmTbl, s"$base/bm")
       val roster = d.filter(purgeRule()).select(col("doc_id"))
       val Seq(postB, dfB, statsB) = Par.run[Long](Seq(
@@ -2420,14 +2354,13 @@ object ExtQueries {
         () => s.read.parquet(bm1.dfPath).count(),
         () => s.read.parquet(bm1.dfPath).filter(col("df") <= 0).count(),
         () => s.read.parquet(bm1.statsPath).head().getLong(0)))
-      Seq(bmTbl, bmTbl2).foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
       Seq(("bm25_postings", postB, postA, postB - postA, postLeak),
         ("bm25_df_spine", dfB, dfA, dfB - dfA, dfLeak),
         ("bm25_stats", statsB, statsA, statsB - statsA, 0L))
     }
     def gFamily(): Seq[(String, Long, Long, Long, Long)] = {
-      val gTbl = s"graft_prgaudit_g_$suffix"
-      val gTbl2 = s"graft_prgaudit_gd_$suffix"
+      val gTbl = Scratch.table(s, "graft_prgaudit")
+      val gTbl2 = Scratch.table(s, "graft_prgaudit")
       val g0 = GraphIndex.build(s, graphEdges(s, dir), gTbl, s"$base/g")
       val gRoster = Tables.load(s, dir, "customer")
         .filter(col("c_custkey") % 89 === 0)
@@ -2453,12 +2386,10 @@ object ExtQueries {
         () => s.read.parquet(g1.spinePath).count(),
         () => s.read.parquet(g1.spinePath)
           .join(broadcast(gRoster), Seq("node"), "left_semi").count()))
-      Seq(gTbl, gTbl2).foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
       Seq(("graph_edges", edgeB, edgeA, nRetracted, edgeLeak),
         ("graph_spine", spineB, spineA, spineB - spineA, spineLeak))
     }
     val fams = Par.pair(() => bmFamily(), () => gFamily())
-    deleteTree(java.nio.file.Paths.get(base))
     def row(t: (String, Long, Long, Long, Long)) =
       s.range(1).select(lit(t._1).as("artifact"), lit(t._2).as("n_before"),
         lit(t._3).as("n_after"), lit(t._4).as("n_refs_purged"),
@@ -2481,10 +2412,9 @@ object ExtQueries {
     */
   def graphPageRankPurgeWarmstart(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.GraphIndex
-    val base = java.nio.file.Files.createTempDirectory("graft_graph_pws").toString
-    val suffix = java.util.UUID.randomUUID().toString.replace("-", "")
-    val tbl = s"graft_graph_pws_$suffix"
-    val tbl2 = s"graft_graph_pwsd_$suffix"
+    val base = Scratch.dir("graft_graph_pws")
+    val tbl = Scratch.table(s, "graft_graph_pws")
+    val tbl2 = Scratch.table(s, "graft_graph_pws")
     val stored0 = GraphIndex.build(s, graphEdges(s, dir), tbl, s"$base/a")
     GraphIndex.ranks(s, stored0, iterations = 3)
       .select(col("node"), col("rank_fp"))
@@ -2493,14 +2423,9 @@ object ExtQueries {
       .filter(col("c_custkey") % 89 === 0)
       .select(concat(lit("c"), col("c_custkey")).as("node"))
     val (stored1, _) = GraphIndex.purge(s, stored0, roster, tbl2, s"$base/b")
-    s.sql(s"DROP TABLE IF EXISTS $tbl")
-    retirePrev(graphPurgeWarmstartPrev, s, tbl2, base)
     GraphIndex.warmStartRanks(s, stored1,
       s.read.parquet(s"$base/ranks-g0"), iterations = 2)
   }
-
-  private val hybridStoredPrev =
-    new java.util.concurrent.atomic.AtomicReference[(String, String)](null)
 
   /** `sim_hybrid_stored_rrf`: the production RAG retrieval stack —
     * BOTH hybrid legs served from NIGHTLY STORED ARTIFACTS with zero
@@ -2525,9 +2450,8 @@ object ExtQueries {
       .select(col("query_id"), col("cand_id"), col("rank").as("r_lex"))
     // vector leg: the simIvfStoredTopK build + lifecycle, top-20
     val all = vecs(s, dir)
-    val base = java.nio.file.Files.createTempDirectory("graft_hyb_ivf").toString
-    val tbl = "graft_hyb_ivf_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
+    val base = Scratch.dir("graft_hyb_ivf")
+    val tbl = Scratch.table(s, "graft_hyb_ivf")
     val centroids = KMeans.fit(all, k = 8, iterations = 3)
     s.createDataFrame(centroids.map { case (cid, v) => (cid, v.toSeq) })
       .toDF("cid", "vec")
@@ -2536,7 +2460,6 @@ object ExtQueries {
       .write.mode("overwrite").format("parquet")
       .option("path", s"$base/lists")
       .bucketBy(8, "cid").saveAsTable(tbl)
-    retirePrev(hybridStoredPrev, s, tbl, base)
     val storedCentroids = s.read.parquet(s"$base/centroids")
       .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).toSeq
     val lists = s.table(tbl)
@@ -2573,18 +2496,12 @@ object ExtQueries {
   def textBm25MaintainTopK(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Bm25Index
     val d = docs(s, dir)
-    val base = java.nio.file.Files.createTempDirectory("graft_bm25_mnt").toString
-    val suffix = java.util.UUID.randomUUID().toString.replace("-", "")
-    val tbl = s"graft_bm25_mnt_$suffix"
-    val rebuildTbl = s"graft_bm25_mnt_rb_$suffix"
+    val base = Scratch.dir("graft_bm25_mnt")
+    val tbl = Scratch.table(s, "graft_bm25_mnt")
+    val rebuildTbl = Scratch.table(s, "graft_bm25_mnt")
     val stored0 = Bm25Index.build(s, d.filter(col("doc_id") % 3 === 0), tbl, s"$base/a")
     val r = Bm25Index.maintain(s, stored0, d.filter(col("doc_id") % 3 =!= 0),
       gen = 1, rebuildTbl, s"$base/b")
-    // dead-branch retirement within the invocation (the GraphIndex
-    // discipline): on rebuild the pre-maintenance artifact is dead; on
-    // append the rebuild table was never created
-    if (r.rebuilt) s.sql(s"DROP TABLE IF EXISTS $tbl")
-    retirePrev(bm25MaintainPrev, s, r.stored.postingsTable, base)
     Bm25Index.scoredTopK(s, r.stored, bm25QueryTerms(s, r.stored))
       .agg(count(lit(1)).as("n_topk"), sum(col("score_fp")).as("score_sum"))
       .select(lit(r.nBase).as("n_base"), lit(r.nNew).as("n_new"),
@@ -2973,93 +2890,12 @@ object ExtQueries {
     * [[simIvfKmeansTopK]]'s oracle verbatim: index build is
     * deterministic, so going through storage must change nothing.
     */
-  /** The previous stored-IVF invocation's (table, dir), retired when the
-    * NEXT invocation finishes its build: per-invocation names mean a
-    * mid-build failure cannot strand a half-written table under the
-    * name a reader uses, concurrent invocations cannot race on one
-    * catalog entry, and repeated bench reps hold at most one dead
-    * index at a time instead of leaking one per rep (ADVICE r5). The
-    * retire happens AFTER the new build succeeds — never a window with
-    * no intact index — and the quiesce argument for deleting the old
-    * files is operators.Checkpoints': the previous rep's frames are
-    * fully consumed by then.
-    */
-  private val ivfStoredPrev =
-    new java.util.concurrent.atomic.AtomicReference[(String, String)](null)
-
-  private val ivfAppendPrev =
-    new java.util.concurrent.atomic.AtomicReference[(String, String)](null)
-
-  private val ivfDriftPrev =
-    new java.util.concurrent.atomic.AtomicReference[(String, String)](null)
-
-  private val ivfCompactPrev =
-    new java.util.concurrent.atomic.AtomicReference[(String, String)](null)
-
-  private val ivfMaintainPrev =
-    new java.util.concurrent.atomic.AtomicReference[(String, String)](null)
-
-  private val ivfMaintainRtPrev =
-    new java.util.concurrent.atomic.AtomicReference[(String, String)](null)
-
-  private val graphAppendPrev =
-    new java.util.concurrent.atomic.AtomicReference[(String, String)](null)
-
-  private val graphMaintainPrev =
-    new java.util.concurrent.atomic.AtomicReference[(String, String)](null)
-
-  private val graphWarmstartPrev =
-    new java.util.concurrent.atomic.AtomicReference[(String, String)](null)
-
-  private val bm25AppendPrev =
-    new java.util.concurrent.atomic.AtomicReference[(String, String)](null)
-
-  private val bm25PurgePrev =
-    new java.util.concurrent.atomic.AtomicReference[(String, String)](null)
-
-  private val bm25MaintainPrev =
-    new java.util.concurrent.atomic.AtomicReference[(String, String)](null)
-
-  private val graphPurgePrev =
-    new java.util.concurrent.atomic.AtomicReference[(String, String)](null)
-
-  private val graphPurgeWarmstartPrev =
-    new java.util.concurrent.atomic.AtomicReference[(String, String)](null)
-
-  private def deleteTree(p: java.nio.file.Path): Unit =
-    operators.Checkpoints.deleteTree(p)
-
-  /** Retire the PREVIOUS invocation's stored artifact (table + dir) now
-    * that the new one is intact — the per-invocation-name lifecycle the
-    * stored-index queries share (see [[ivfStoredPrev]]'s rationale).
-    */
-  private def retirePrev(ref: java.util.concurrent.atomic.AtomicReference[(String, String)],
-                         s: SparkSession, tbl: String, base: String): Unit =
-    Option(ref.getAndSet((tbl, base))).foreach { case (pt, pb) =>
-      s.sql(s"DROP TABLE IF EXISTS $pt")
-      deleteTree(java.nio.file.Paths.get(pb))
-    }
-
-  /** After `IvfIndex.maintain` decides, exactly one artifact is dead
-    * WITHIN the invocation: the pre-maintenance index when a retrain
-    * replaced it, or the (empty) would-be retrain dir when the append
-    * branch kept the old index live. Retire it now; the surviving
-    * artifact goes through the usual cross-invocation [[retirePrev]].
-    */
-  private def retireDeadBranch(s: SparkSession, stored: graft.operators.IvfIndex.Stored,
-                               base: String, rbase: String, retrained: Boolean): Unit =
-    if (retrained) {
-      s.sql(s"DROP TABLE IF EXISTS ${stored.listsTable}")
-      deleteTree(java.nio.file.Paths.get(base))
-    } else deleteTree(java.nio.file.Paths.get(rbase))
-
   def simIvfStoredTopK(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.KMeans
     val all = vecs(s, dir)
     // offline build + store (per-invocation here; nightly in production)
-    val base = java.nio.file.Files.createTempDirectory("graft_ivf").toString
-    val tbl = "graft_ivf_lists_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
+    val base = Scratch.dir("graft_ivf")
+    val tbl = Scratch.table(s, "graft_ivf")
     val centroids = KMeans.fit(all, k = 8, iterations = 3)
     s.createDataFrame(centroids.map { case (cid, v) => (cid, v.toSeq) })
       .toDF("cid", "vec")
@@ -3068,8 +2904,6 @@ object ExtQueries {
       .write.mode("overwrite").format("parquet")
       .option("path", s"$base/lists")
       .bucketBy(8, "cid").saveAsTable(tbl)
-    // new index intact — retire the previous invocation's
-    retirePrev(ivfStoredPrev, s, tbl, base)
     // query path — stored artifacts only
     val storedCentroids = s.read.parquet(s"$base/centroids")
       .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).toSeq
@@ -3098,12 +2932,10 @@ object ExtQueries {
     import graft.operators.IvfIndex
     val all = vecs(s, dir)
     val isBatch = col("vec_id") % 7 === 0
-    val base = java.nio.file.Files.createTempDirectory("graft_ivf_app").toString
-    val tbl = "graft_ivf_append_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
+    val base = Scratch.dir("graft_ivf_app")
+    val tbl = Scratch.table(s, "graft_ivf_app")
     val stored = IvfIndex.build(s, all.filter(!isBatch), k = 8, iterations = 3, tbl, base)
     IvfIndex.append(s, stored, all.filter(isBatch), gen = 1)
-    retirePrev(ivfAppendPrev, s, tbl, base)
     // query path — stored artifacts only (appended lists + frozen centroids)
     val centroids = IvfIndex.readCentroids(s, stored)
     val lists = s.table(tbl)
@@ -3125,12 +2957,10 @@ object ExtQueries {
     import graft.operators.IvfIndex
     val all = vecs(s, dir)
     val isBatch = col("vec_id") % 7 === 0
-    val base = java.nio.file.Files.createTempDirectory("graft_ivf_drift").toString
-    val tbl = "graft_ivf_drift_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
+    val base = Scratch.dir("graft_ivf_drift")
+    val tbl = Scratch.table(s, "graft_ivf_drift")
     val stored = IvfIndex.build(s, all.filter(!isBatch), k = 8, iterations = 3, tbl, base)
     IvfIndex.append(s, stored, all.filter(isBatch), gen = 1)
-    retirePrev(ivfDriftPrev, s, tbl, base)
     IvfIndex.drift(s.table(tbl))
   }
 
@@ -3153,19 +2983,13 @@ object ExtQueries {
     import graft.operators.IvfIndex
     val all = vecs(s, dir)
     val isBatch = col("vec_id") % 7 === 0
-    val base = java.nio.file.Files.createTempDirectory("graft_ivf_cpt").toString
-    val sfx = java.util.UUID.randomUUID().toString.replace("-", "")
+    val base = Scratch.dir("graft_ivf_cpt")
     val stored = IvfIndex.build(s, all.filter(!isBatch), k = 8, iterations = 3,
-      "graft_ivf_cpt_" + sfx, base)
+      Scratch.table(s, "graft_ivf_cpt"), base)
     IvfIndex.append(s, stored, all.filter(isBatch && col("vec_id") % 2 === 0), gen = 1)
     IvfIndex.append(s, stored, all.filter(isBatch && col("vec_id") % 2 =!= 0), gen = 2)
-    val cbase = java.nio.file.Files.createTempDirectory("graft_ivf_cptc").toString
-    val compacted = IvfIndex.compact(s, stored, "graft_ivf_cptc_" + sfx, cbase)
-    // compacted artifact intact — retire the fragmented one NOW (the
-    // point of compaction), and the previous invocation's compacted one
-    s.sql(s"DROP TABLE IF EXISTS ${stored.listsTable}")
-    deleteTree(java.nio.file.Paths.get(base))
-    retirePrev(ivfCompactPrev, s, compacted.listsTable, cbase)
+    val cbase = Scratch.dir("graft_ivf_cptc")
+    val compacted = IvfIndex.compact(s, stored, Scratch.table(s, "graft_ivf_cptc"), cbase)
     // query path — compacted artifacts only
     val centroids = IvfIndex.readCentroids(s, compacted)
     val lists = s.table(compacted.listsTable)
@@ -3190,15 +3014,12 @@ object ExtQueries {
     import graft.operators.IvfIndex
     val all = vecs(s, dir)
     val isBatch = col("vec_id") % 7 === 0
-    val base = java.nio.file.Files.createTempDirectory("graft_ivf_mnt").toString
-    val sfx = java.util.UUID.randomUUID().toString.replace("-", "")
+    val base = Scratch.dir("graft_ivf_mnt")
     val stored = IvfIndex.build(s, all.filter(!isBatch), k = 8, iterations = 3,
-      "graft_ivf_mnt_" + sfx, base)
-    val rbase = java.nio.file.Files.createTempDirectory("graft_ivf_mntr").toString
+      Scratch.table(s, "graft_ivf_mnt"), base)
+    val rbase = Scratch.dir("graft_ivf_mntr")
     val (live, retrained) = IvfIndex.maintain(s, stored, all.filter(isBatch), gen = 1,
-      k = 8, iterations = 3, "graft_ivf_mntr_" + sfx, rbase)
-    retireDeadBranch(s, stored, base, rbase, retrained)
-    retirePrev(ivfMaintainPrev, s, live.listsTable, if (retrained) rbase else base)
+      k = 8, iterations = 3, Scratch.table(s, "graft_ivf_mntr"), rbase)
     maintainResult(s, live, all, retrained)
   }
 
@@ -3219,15 +3040,12 @@ object ExtQueries {
     val isBatch = col("vec_id") % 7 === 0
     val drifted = all.filter(isBatch).select(col("vec_id"),
       transform(col("embedding"), x => x.cast("double") + lit(3.0)).as("embedding"))
-    val base = java.nio.file.Files.createTempDirectory("graft_ivf_mrt").toString
-    val sfx = java.util.UUID.randomUUID().toString.replace("-", "")
+    val base = Scratch.dir("graft_ivf_mrt")
     val stored = IvfIndex.build(s, all.filter(!isBatch), k = 8, iterations = 3,
-      "graft_ivf_mrt_" + sfx, base)
-    val rbase = java.nio.file.Files.createTempDirectory("graft_ivf_mrtr").toString
+      Scratch.table(s, "graft_ivf_mrt"), base)
+    val rbase = Scratch.dir("graft_ivf_mrtr")
     val (live, retrained) = IvfIndex.maintain(s, stored, drifted, gen = 1,
-      k = 8, iterations = 3, "graft_ivf_mrtr_" + sfx, rbase)
-    retireDeadBranch(s, stored, base, rbase, retrained)
-    retirePrev(ivfMaintainRtPrev, s, live.listsTable, if (retrained) rbase else base)
+      k = 8, iterations = 3, Scratch.table(s, "graft_ivf_mrtr"), rbase)
     val union = all.filter(!isBatch)
       .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("embedding"))
       .unionByName(drifted)
@@ -3713,9 +3531,6 @@ object ExtQueries {
     */
   private def purgeRule(idCol: String = "doc_id"): Column = col(idCol) % 89 === 0
 
-  private val purgeDigestPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-
   /** Delete propagation into the stored EXACT-dedup digest state,
     * committed write-audit-publish: v1 publishes the full-corpus
     * (digest → canonical) map, the purge reads v1 back THROUGH THE
@@ -3733,7 +3548,7 @@ object ExtQueries {
   def pipelinePurgeDigestState(s: SparkSession, dir: String): DataFrame = {
     import operators.{IncrementalDedup, Publish, StatePurge}
     val all = withExactDups(docs(s, dir))
-    val root = java.nio.file.Files.createTempDirectory("graft_purge_digest").toString
+    val root = Scratch.dir("graft_purge_digest")
     val stateAudit: DataFrame => Unit = st => {
       require(st.filter(col("digest").isNull || col("canonical_id").isNull).isEmpty,
         "state audit: null digest or canonical_id")
@@ -3754,8 +3569,6 @@ object ExtQueries {
     }
     Publish.publish(StatePurge.purgeDigestState(v1, survivors, roster), root, purgedAudit)
     Publish.retireHistory(root)
-    Option(purgeDigestPrev.getAndSet(root))
-      .foreach(p => deleteTree(java.nio.file.Paths.get(p)))
     Publish.read(s, root)
   }
 
@@ -3882,9 +3695,6 @@ object ExtQueries {
       sum(col("doc_id")).as("sum_ids"))
   }
 
-  private val ivfPurgePrev =
-    new java.util.concurrent.atomic.AtomicReference[(String, String)](null)
-
   /** Delete propagation into the stored IVF index: roster vectors are
     * dropped from the cid-bucketed assignment lists by a broadcast
     * LEFT ANTI join and the lists are PHYSICALLY rewritten in the
@@ -3903,20 +3713,13 @@ object ExtQueries {
     import graft.operators.{IvfIndex, KMeans}
     val all = vecs(s, dir)
     val vecRule = purgeRule("vec_id")
-    val base = java.nio.file.Files.createTempDirectory("graft_ivf_prg").toString
-    val tbl = "graft_ivf_prg_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
+    val base = Scratch.dir("graft_ivf_prg")
+    val tbl = Scratch.table(s, "graft_ivf_prg")
     val stored = IvfIndex.build(s, all, k = 8, iterations = 3, tbl, base)
     val roster = all.filter(vecRule).select(col("vec_id").as("__pid"))
-    val base2 = java.nio.file.Files.createTempDirectory("graft_ivf_prgd").toString
-    val tbl2 = "graft_ivf_prgd_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
+    val base2 = Scratch.dir("graft_ivf_prgd")
+    val tbl2 = Scratch.table(s, "graft_ivf_prgd")
     IvfIndex.purge(s, stored, roster, tbl2, base2)
-    // the unpurged index is dead within this invocation (it still holds
-    // roster rows); the purged one follows the cross-invocation lifecycle
-    s.sql(s"DROP TABLE IF EXISTS $tbl")
-    deleteTree(java.nio.file.Paths.get(base))
-    retirePrev(ivfPurgePrev, s, tbl2, base2)
     val centroids = IvfIndex.readCentroids(s, IvfIndex.Stored(tbl2, base2))
     val lists = s.table(tbl2)
       .select(col("vec_id").as("neighbor_id"), col("v").as("c_vec"), col("cid"))
@@ -3925,9 +3728,6 @@ object ExtQueries {
       .select(col("vec_id").as("query_id"), col("v").as("q_vec"), col("cid"))
     ivfScore(lists, probes)
   }
-
-  private val purgeStatePrev =
-    new java.util.concurrent.atomic.AtomicReference[Seq[String]](Seq.empty)
 
   /** The HEADLINE compliance gate (VERDICT r7 #1): delete propagation
     * across the stored text-state artifacts — digest→canonical map,
@@ -3958,7 +3758,7 @@ object ExtQueries {
   def pipelineDeletePropagateState(s: SparkSession, dir: String): DataFrame = {
     import operators.{ConnectedComponents, IncrementalDedup, Publish, StatePurge}
     val roots = Seq("digest", "band", "labels")
-      .map(n => n -> java.nio.file.Files.createTempDirectory(s"graft_prg_$n").toString)
+      .map(n => n -> Scratch.dir(s"graft_prg_$n"))
       .toMap
 
     val nd = withNearDups(docs(s, dir))
@@ -4048,9 +3848,6 @@ object ExtQueries {
     // is fixed by the sequence below, not by completion order.
     val rows = Par.run(Seq(
       () => digestFamily(), () => bandFamily(), () => labelsFamily()))
-
-    Option(purgeStatePrev.getAndSet(roots.values.toSeq)).foreach(
-      _.foreach(p => deleteTree(java.nio.file.Paths.get(p))))
     import s.implicits._
     rows.toDF("artifact", "n_before", "n_after", "n_refs_purged", "n_leaked",
         "n_stale_versions")
@@ -4852,7 +4649,7 @@ object ExtQueries {
     * small files" instead of "recompute bad days" as the reason.
     */
   def layoutCompactionExec(s: SparkSession, dir: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_compact").toString
+    val out = Scratch.dir("graft_compact")
     val ev = Tables.events(s, dir).select(col("event_id"), col("user_id"),
       col("value"), expr("ts_ns DIV 86400000000000").as("day"))
     // fragmented initial layout: many writers per day partition
@@ -4997,7 +4794,7 @@ object ExtQueries {
     */
   def pipelineTimeTravel(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Publish
-    val root = java.nio.file.Files.createTempDirectory("graft_tt").toString
+    val root = Scratch.dir("graft_tt")
     val t = Tables.load(s, dir, "customer").select(col("c_custkey").as("key"),
       expr("CAST(round(c_acctbal * 100) AS BIGINT)").as("bal_fp"))
     val v1 = Publish.publish(t, root)
@@ -5047,7 +4844,7 @@ object ExtQueries {
     */
   private def changeFeedFixture(s: SparkSession, dir: String): (String, Seq[String]) = {
     import graft.operators.Publish
-    val root = java.nio.file.Files.createTempDirectory("graft_cdf").toString
+    val root = Scratch.dir("graft_cdf")
     val d = docs(s, dir)
     // planted-insert id namespace derived from the corpus, not a fixed
     // constant: off = max(doc_id)+1 keeps doc_id+off and doc_id+2*off
@@ -5159,7 +4956,7 @@ object ExtQueries {
     */
   def pipelineVacuumRetention(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Publish
-    val root = java.nio.file.Files.createTempDirectory("graft_vac").toString
+    val root = Scratch.dir("graft_vac")
     val t = Tables.load(s, dir, "customer").select(col("c_custkey").as("key"),
       expr("CAST(round(c_acctbal * 100) AS BIGINT)").as("bal_fp"))
     (1 to 4).foreach(i => Publish.publish(t.filter(col("key") % 7 < i), root))
@@ -5195,7 +4992,7 @@ object ExtQueries {
     */
   def pipelineVacuumCompactMarkers(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Publish
-    val root = java.nio.file.Files.createTempDirectory("graft_vaccm").toString
+    val root = Scratch.dir("graft_vaccm")
     val t = Tables.load(s, dir, "customer").select(col("c_custkey").as("key"),
       expr("CAST(round(c_acctbal * 100) AS BIGINT)").as("bal_fp"))
     (1 to 4).foreach(i => Publish.publish(t.filter(col("key") % 7 < i), root))
@@ -5237,8 +5034,7 @@ object ExtQueries {
     * same bytes (same day partitions replaced with the same rows).
     */
   def pipelineBackfillOverwrite(s: SparkSession, dir: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_backfill")
-      .resolve("table").toString
+    val out = Scratch.dir("graft_backfill") + "/table"
     val daily = Tables.events(s, dir)
       .groupBy(expr("ts_ns DIV 86400000000000").as("day"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
@@ -5258,9 +5054,6 @@ object ExtQueries {
       .select(col("day").cast("long").as("day"), col("event_type"),
         col("n_events"), col("sum_value"))
   }
-
-  private val statsSpinePrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** File-level min/max DATA SKIPPING (`layout_stats_pruned_scan`,
     * [[graft.operators.StatsSpine]]) — the stored-spine form of
@@ -5288,14 +5081,13 @@ object ExtQueries {
     import graft.operators.StatsSpine
     val li = Tables.load(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"))
-    val base = java.nio.file.Files.createTempDirectory("graft_spine").toString
+    val base = Scratch.dir("graft_spine")
     // nightly layout: range-cluster on the skip column, then store the spine
     li.repartitionByRange(16, col("l_orderkey"))
       .sortWithinPartitions("l_orderkey")
       .write.mode("overwrite").parquet(s"$base/data")
     StatsSpine.build(s, s"$base/data", Seq("l_orderkey"))
       .write.mode("overwrite").parquet(s"$base/spine")
-    retirePrevDir(statsSpinePrev, base)
     // query path: band bounds in integer arithmetic (oracle restates
     // them with DuckDB's `//`), spine-pruned scan, predicate re-applied
     // (skipping is a superset guarantee)
@@ -5310,9 +5102,6 @@ object ExtQueries {
         countDistinct(col("l_orderkey")).as("n_orders"),
         sum(round(col("l_quantity") * 100).cast("long")).as("qty_c"))
   }
-
-  private val bloomSpinePrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** Bloom-sidecar POINT-LOOKUP skipping (`layout_bloom_pruned_scan`,
     * [[graft.operators.StatsSpine.buildBloom]]) — the skipping verb
@@ -5343,13 +5132,12 @@ object ExtQueries {
     val mBits = 1 << 13
     val docs = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val base = java.nio.file.Files.createTempDirectory("graft_bloomspine").toString
+    val base = Scratch.dir("graft_bloomspine")
     docs.repartitionByRange(16, col("n_chars"), col("doc_id"))
       .sortWithinPartitions("n_chars")
       .write.mode("overwrite").parquet(s"$base/data")
     StatsSpine.buildBloom(s, s"$base/data", "doc_id", mBits)
       .write.mode("overwrite").parquet(s"$base/bloom")
-    retirePrevDir(bloomSpinePrev, base)
     // the lookup set: 5 ids spread across the domain, stated by the
     // oracle as (i*max)//7 — doc_ids are dense so they all exist
     val mk = docs.agg(max("doc_id")).head.getLong(0)
@@ -5360,9 +5148,6 @@ object ExtQueries {
       .filter(col("doc_id").isin(ids: _*))
       .select(col("doc_id"), col("lang"), col("n_chars"))
   }
-
-  private val bloomRosterPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** Roster-DataFrame targeted delete (`layout_bloom_roster_delete`,
     * VERDICT r10 #4): the GDPR-delete verb at ROSTER scale — the
@@ -5387,7 +5172,7 @@ object ExtQueries {
     val mBits = 1 << 13
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val base = java.nio.file.Files.createTempDirectory("graft_bloomroster").toString
+    val base = Scratch.dir("graft_bloomroster")
     d.repartitionByRange(16, col("n_chars"), col("doc_id"))
       .sortWithinPartitions("n_chars")
       .write.mode("overwrite").parquet(s"$base/data")
@@ -5396,15 +5181,11 @@ object ExtQueries {
     val roster = d.filter(col("doc_id") % 43 === 0).select(col("doc_id"))
     val (stats1, _) = StatsSpine.deleteRewriteRoster(s, stats0, bloom0,
       "doc_id", roster, mBits, Seq("n_chars"), s"$base/gen1")
-    retirePrevDir(bloomRosterPrev, base)
     StatsSpine.readManifest(s, s"$base/data", stats1)
       .agg(count(lit(1)).as("n_docs"),
         sum(col("doc_id")).as("sum_ids"),
         sum(col("n_chars").cast("long")).as("sum_chars"))
   }
-
-  private val versionedPublishPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** Versioned table lifecycle (`layout_versioned_publish`, VERDICT
     * r10 #3 — [[graft.operators.VersionedTable]]): the manifest-is-
@@ -5425,7 +5206,7 @@ object ExtQueries {
     val spec = VersionedTable.Spec(Seq("n_chars"), "doc_id", 1 << 13)
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val root = java.nio.file.Files.createTempDirectory("graft_vtable").toString
+    val root = Scratch.dir("graft_vtable")
     val layout = (df: DataFrame) =>
       df.repartitionByRange(8, col("n_chars"), col("doc_id"))
         .sortWithinPartitions("n_chars")
@@ -5433,7 +5214,6 @@ object ExtQueries {
     val v2 = VersionedTable.append(s, d.filter(col("doc_id") % 3 === 1), root, spec, layout)
     val v3 = VersionedTable.deleteRoster(s, root, spec,
       d.filter(col("doc_id") % 5 === 0).select(col("doc_id")))
-    retirePrevDir(versionedPublishPrev, root)
     def slice(tag: String, df: DataFrame) =
       df.agg(count(lit(1)).as("n_docs"),
           sum(col("doc_id")).as("sum_ids"),
@@ -5452,9 +5232,6 @@ object ExtQueries {
         sum(col("doc_id")).as("sum_ids"),
         sum(col("n_chars").cast("long")).as("sum_chars"))
       .select(lit(tag).as("slice"), col("n_docs"), col("sum_ids"), col("sum_chars"))
-
-  private val dvDeletePrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** Merge-on-read delete lifecycle (`layout_dv_delete`,
     * [[graft.operators.VersionedTable.deleteRosterDV]]): the
@@ -5483,7 +5260,7 @@ object ExtQueries {
     val spec = VersionedTable.Spec(Seq("n_chars"), "doc_id", 1 << 13)
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val root = java.nio.file.Files.createTempDirectory("graft_dvtable").toString
+    val root = Scratch.dir("graft_dvtable")
     val layout = (df: DataFrame) =>
       df.repartitionByRange(8, col("n_chars"), col("doc_id"))
         .sortWithinPartitions("n_chars")
@@ -5493,7 +5270,6 @@ object ExtQueries {
     val v3 = VersionedTable.deleteRosterDV(s, root, spec,
       d.filter(col("doc_id") % 11 === 0).select(col("doc_id")))
     val v4 = VersionedTable.compactDeletes(s, root, spec)
-    retirePrevDir(dvDeletePrev, root)
     vtSlice(s"1_$v1", VersionedTable.readVersion(s, root, v1))
       .unionByName(vtSlice(s"2_$v2", VersionedTable.readVersion(s, root, v2)))
       .unionByName(vtSlice(s"3_$v3", VersionedTable.readVersion(s, root, v3)))
@@ -5502,9 +5278,6 @@ object ExtQueries {
         VersionedTable.prunedRead(s, root, "n_chars", 200, 400)
           .filter(col("n_chars").between(200, 400))))
   }
-
-  private val versionedOccPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** Multi-writer commit race (`layout_versioned_occ`,
     * [[graft.operators.VersionedTable.appendOcc]]): writer A captures
@@ -5525,7 +5298,7 @@ object ExtQueries {
     val spec = VersionedTable.Spec(Seq("n_chars"), "doc_id", 1 << 13)
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val root = java.nio.file.Files.createTempDirectory("graft_occtable").toString
+    val root = Scratch.dir("graft_occtable")
     val layout = (df: DataFrame) =>
       df.repartitionByRange(8, col("n_chars"), col("doc_id"))
         .sortWithinPartitions("n_chars")
@@ -5542,14 +5315,10 @@ object ExtQueries {
         })
     require(attempts == 2,
       s"occ gate expected exactly one conflict (2 attempts), got $attempts")
-    retirePrevDir(versionedOccPrev, root)
     vtSlice(s"1_$v1", VersionedTable.readVersion(s, root, v1))
       .unionByName(vtSlice("2_v00002", VersionedTable.readVersion(s, root, "v00002")))
       .unionByName(vtSlice(s"3_$vA", VersionedTable.readVersion(s, root, vA)))
   }
-
-  private val versionedEvoPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** Schema evolution across versions (`layout_versioned_schema_evolution`):
     * v1 CREATEs the table with (doc_id, n_chars); v2 APPENDs a batch
@@ -5565,7 +5334,7 @@ object ExtQueries {
     import graft.operators.VersionedTable
     val spec = VersionedTable.Spec(Seq("n_chars"), "doc_id", 1 << 13)
     val d = Tables.load(s, dir, "documents")
-    val root = java.nio.file.Files.createTempDirectory("graft_evotable").toString
+    val root = Scratch.dir("graft_evotable")
     val layout = (df: DataFrame) =>
       df.repartitionByRange(4, col("n_chars"), col("doc_id"))
         .sortWithinPartitions("n_chars")
@@ -5587,7 +5356,6 @@ object ExtQueries {
     VersionedTable.append(s,
       d.filter(col("doc_id") % 2 === 1).select(col("doc_id"), col("n_chars"), col("lang")),
       root, spec, layout, allowEvolution = true)
-    retirePrevDir(versionedEvoPrev, root)
     val head = VersionedTable.read(s, root)
     def evoSlice(tag: String, df: DataFrame): DataFrame =
       df.agg(count(lit(1)).as("n_docs"),
@@ -5601,9 +5369,6 @@ object ExtQueries {
       .unionByName(evoSlice("2_head_legacy", head.filter(col("doc_id") % 2 === 0)))
       .unionByName(evoSlice("3_head_new", head.filter(col("doc_id") % 2 === 1)))
   }
-
-  private val dvUpsertPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** Merge-on-read upsert (`layout_dv_upsert`,
     * [[graft.operators.VersionedTable.upsertDV]]): replace-by-key in
@@ -5627,7 +5392,7 @@ object ExtQueries {
     val spec = VersionedTable.Spec(Seq("n_chars"), "doc_id", 1 << 13)
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val root = java.nio.file.Files.createTempDirectory("graft_dvupsert").toString
+    val root = Scratch.dir("graft_dvupsert")
     val layout = (df: DataFrame) =>
       df.repartitionByRange(8, col("n_chars"), col("doc_id"))
         .sortWithinPartitions("n_chars")
@@ -5638,16 +5403,12 @@ object ExtQueries {
       .unionByName(d.filter(col("doc_id") % 17 === 0)
         .withColumn("doc_id", col("doc_id") + lit(off)))
     VersionedTable.upsertDV(s, root, spec, updates, layout)
-    retirePrevDir(dvUpsertPrev, root)
     val head = VersionedTable.read(s, root)
     vtSlice("1_head", head)
       .unionByName(vtSlice("2_updated",
         head.filter(col("doc_id") % 13 === 0 && col("doc_id") < off)))
       .unionByName(vtSlice("3_inserted", head.filter(col("doc_id") >= off)))
   }
-
-  private val versionedVacuumPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** Versioned-table physical vacuum (`layout_versioned_vacuum`,
     * [[graft.operators.VersionedTable.vacuum]]): the storage-reclaim
@@ -5670,7 +5431,7 @@ object ExtQueries {
     val spec = VersionedTable.Spec(Seq("n_chars"), "doc_id", 1 << 13)
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val root = java.nio.file.Files.createTempDirectory("graft_vtvac").toString
+    val root = Scratch.dir("graft_vtvac")
     val layout = (df: DataFrame) =>
       df.repartitionByRange(8, col("n_chars"), col("doc_id"))
         .sortWithinPartitions("n_chars")
@@ -5684,13 +5445,9 @@ object ExtQueries {
     val (retired, nFiles, _) = VersionedTable.vacuum(s, root, keepLast = 2)
     require(retired.nonEmpty && nFiles > 0,
       s"vacuum gate expected real reclaim, got retired=$retired files=$nFiles")
-    retirePrevDir(versionedVacuumPrev, root)
     vtSlice(s"1_$v5", VersionedTable.read(s, root))
       .unionByName(vtSlice(s"2_$v4", VersionedTable.readVersion(s, root, v4)))
   }
-
-  private val dvChangeFeedPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** Manifest-derived change feed (`layout_dv_change_feed`,
     * [[graft.operators.VersionedTable.changeFeed]]): the row-level CDF
@@ -5715,7 +5472,7 @@ object ExtQueries {
     val spec = VersionedTable.Spec(Seq("n_chars"), "doc_id", 1 << 13)
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val root = java.nio.file.Files.createTempDirectory("graft_dvfeed").toString
+    val root = Scratch.dir("graft_dvfeed")
     val layout = (df: DataFrame) =>
       df.repartitionByRange(8, col("n_chars"), col("doc_id"))
         .sortWithinPartitions("n_chars")
@@ -5724,7 +5481,6 @@ object ExtQueries {
     val v3 = VersionedTable.deleteRosterDV(s, root, spec,
       d.filter(col("doc_id") % 5 === 0).select(col("doc_id")))
     val feed = VersionedTable.changeFeed(s, root, v1, v3)
-    retirePrevDir(dvChangeFeedPrev, root)
     val ins = feed.filter(col("change_type") === "insert").drop("change_type")
     val del = feed.filter(col("change_type") === "delete")
     val applied = VersionedTable.readVersion(s, root, v1)
@@ -5735,9 +5491,6 @@ object ExtQueries {
       .unionByName(vtSlice("2_deletes", del))
       .unionByName(vtSlice("3_applied", applied))
   }
-
-  private val feedByTsPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** TIMESTAMP-ADDRESSED batch CDF (`layout_feed_by_timestamp`,
     * [[graft.operators.VersionedTable.changeFeedByTimestamp]] — the
@@ -5763,7 +5516,7 @@ object ExtQueries {
     val spec = VersionedTable.Spec(Seq("n_chars"), "doc_id", 1 << 13)
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val root = java.nio.file.Files.createTempDirectory("graft_feedts").toString
+    val root = Scratch.dir("graft_feedts")
     VersionedTable.create(s, d.filter(col("doc_id") % 3 === 0), root, spec,
       extraMeta = Map("commit_ts" -> "1000"))
     VersionedTable.append(s, d.filter(col("doc_id") % 3 === 1), root, spec,
@@ -5780,14 +5533,8 @@ object ExtQueries {
     require(VersionedTable.changeFeedByTimestamp(s, root, 3200L, 3800L).isEmpty,
       "an empty timestamp range must return zero rows")
     val feed = VersionedTable.changeFeedByTimestamp(s, root, 1500L, 3500L)
-    retirePrevDir(feedByTsPrev, root)
     feed.select(col("doc_id"), col("lang"), col("n_chars"), col("change_type"))
   }
-
-  private val cloneAsOfPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val cloneAsOfDstPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** TIME-ADDRESSED clone + restore (`layout_clone_asof`,
     * [[graft.operators.VersionedTable.shallowCloneAsOfTs]] /
@@ -5811,8 +5558,8 @@ object ExtQueries {
     val spec = VersionedTable.Spec(Seq("n_chars"), "doc_id", 1 << 13)
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val root = java.nio.file.Files.createTempDirectory("graft_clonets").toString
-    val dst = java.nio.file.Files.createTempDirectory("graft_clonets_d").toString + "/c"
+    val root = Scratch.dir("graft_clonets")
+    val dst = Scratch.dir("graft_clonets_d") + "/c"
     VersionedTable.create(s, d.filter(col("doc_id") % 3 === 0), root, spec,
       extraMeta = Map("commit_ts" -> "1000"))
     VersionedTable.append(s, d.filter(col("doc_id") % 3 === 1), root, spec,
@@ -5825,18 +5572,12 @@ object ExtQueries {
       "the clone must reference the as-of version, not the head")
     val headRead = VersionedTable.read(s, root) // binds v3's manifest eagerly
     VersionedTable.restoreAsOfTs(s, root, 1500L) // v4 = content@v1
-    retirePrevDir(cloneAsOfPrev, root)
-    retirePrevDir(cloneAsOfDstPrev,
-      java.nio.file.Paths.get(dst).getParent.toString)
     def slice(name: String, df: DataFrame): DataFrame =
       df.select(lit(name).as("slice"), col("doc_id"), col("lang"), col("n_chars"))
     slice("1_clone", VersionedTable.read(s, dst))
       .unionByName(slice("2_pre_restore_head", headRead))
       .unionByName(slice("3_restored", VersionedTable.read(s, root)))
   }
-
-  private val replaceWherePrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** Transactional band overwrite (`layout_replace_where`,
     * [[graft.operators.VersionedTable.replaceWhere]] — Delta's
@@ -5860,7 +5601,7 @@ object ExtQueries {
     val spec = VersionedTable.Spec(Seq("n_chars"), "doc_id", 1 << 13)
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val root = java.nio.file.Files.createTempDirectory("graft_rplw").toString
+    val root = Scratch.dir("graft_rplw")
     val layout = (df: DataFrame) =>
       df.repartitionByRange(16, col("n_chars"), col("doc_id"))
         .sortWithinPartitions("n_chars")
@@ -5886,15 +5627,11 @@ object ExtQueries {
       .join(del.select(col("doc_id").as("__del_id")),
         col("doc_id") === col("__del_id"), "left_anti")
       .unionByName(ins)
-    retirePrevDir(replaceWherePrev, root)
     def slice(name: String, df: DataFrame): DataFrame =
       df.select(lit(name).as("slice"), col("doc_id"), col("lang"), col("n_chars"))
     slice("1_head", VersionedTable.read(s, root))
       .unionByName(slice("2_feed_applied", applied))
   }
-
-  private val fsckRepairPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** Emergency dangling-reference repair (`layout_fsck_repair`,
     * [[graft.operators.VersionedTable.repairMissingFiles]] — Delta's
@@ -5924,7 +5661,7 @@ object ExtQueries {
     val spec = VersionedTable.Spec(Seq("n_chars"), "doc_id", 1 << 13)
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val root = java.nio.file.Files.createTempDirectory("graft_fsck").toString
+    val root = Scratch.dir("graft_fsck")
     val v1 = VersionedTable.create(s, d.filter(col("lang") =!= "de"), root, spec)
     val v2 = VersionedTable.append(s, d.filter(col("lang") === "de"), root, spec)
     val mroot = s"$root/manifest"
@@ -5944,13 +5681,9 @@ object ExtQueries {
     require(scala.util.Try(
       VersionedTable.changeFeed(s, root, v2, v3).collect()).isFailure,
       "a change-feed window across an fsck repair must refuse")
-    retirePrevDir(fsckRepairPrev, root)
     VersionedTable.read(s, root)
       .select(col("doc_id"), col("lang"), col("n_chars"))
   }
-
-  private val dvPurgeAuditPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** DV-delete ≠ erasure — the compliance decomposition
     * (`layout_dv_purge_audit`): a deletion vector HIDES rows (the
@@ -5975,7 +5708,7 @@ object ExtQueries {
     val spec = VersionedTable.Spec(Seq("n_chars"), "doc_id", 1 << 13)
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val root = java.nio.file.Files.createTempDirectory("graft_dvpurge").toString
+    val root = Scratch.dir("graft_dvpurge")
     val layout = (df: DataFrame) =>
       df.repartitionByRange(8, col("n_chars"), col("doc_id"))
         .sortWithinPartitions("n_chars")
@@ -6012,16 +5745,10 @@ object ExtQueries {
     val s2 = stage("2_compact")
     VersionedTable.vacuum(s, root, keepLast = 1)
     val s3 = stage("3_vacuum")
-    retirePrevDir(dvPurgeAuditPrev, root)
     import s.implicits._
     Seq(s1, s2, s3)
       .toDF("stage", "n_live", "sum_live_ids", "n_physical_roster")
   }
-
-  private val indexFromFeedPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val indexFromFeedIdxPrev =
-    new java.util.concurrent.atomic.AtomicReference[(String, String)](null)
 
   /** Stored index maintained off the table's change feed
     * (`layout_index_from_feed`): the full production stack in one
@@ -6047,14 +5774,13 @@ object ExtQueries {
     import graft.operators.{Bm25Index, VersionedTable}
     val spec = VersionedTable.Spec(Seq("n_chars"), "doc_id", 1 << 13)
     val d = docs(s, dir).select(col("doc_id"), col("text"), col("n_chars"))
-    val root = java.nio.file.Files.createTempDirectory("graft_idxfeed").toString
+    val root = Scratch.dir("graft_idxfeed")
     val layout = (df: DataFrame) =>
       df.repartitionByRange(8, col("n_chars"), col("doc_id"))
         .sortWithinPartitions("n_chars")
     val v1 = VersionedTable.create(s, d.filter(col("doc_id") % 3 === 0), root, spec, layout)
-    val suffix = java.util.UUID.randomUUID().toString.replace("-", "")
-    val base = java.nio.file.Files.createTempDirectory("graft_idxfeed_a").toString
-    val tbl = s"graft_idxfeed_$suffix"
+    val base = Scratch.dir("graft_idxfeed_a")
+    val tbl = Scratch.table(s, "graft_idxfeed_a")
     // the index seed (reads only v1's immutable file set) and the
     // table's writer side (append + DV-delete commits on the table
     // root) share no state beyond committed v1 — overlap them (guide
@@ -6071,8 +5797,8 @@ object ExtQueries {
       })
     // one feed window, two consumers (insert fold + delete purge):
     // persist it so the manifest diff runs once, not per fold
-    val base2 = java.nio.file.Files.createTempDirectory("graft_idxfeed_b").toString
-    val tbl2 = s"graft_idxfeed_p_$suffix"
+    val base2 = Scratch.dir("graft_idxfeed_b")
+    val tbl2 = Scratch.table(s, "graft_idxfeed_b")
     val (idx2, _) =
       Checkpoints.withPersisted(VersionedTable.changeFeed(s, root, v1, v3)) { feed =>
         val (idx1, _) = Bm25Index.append(s, idx0,
@@ -6082,23 +5808,12 @@ object ExtQueries {
           feed.filter(col("change_type") === "delete").select(col("doc_id")),
           tbl2, base2)
       }
-    // the unpurged index is dead within this invocation; the table
-    // root and purged index follow the cross-invocation lifecycle
-    s.sql(s"DROP TABLE IF EXISTS $tbl")
-    deleteTree(java.nio.file.Paths.get(base))
-    retirePrevDir(indexFromFeedPrev, root)
-    retirePrev(indexFromFeedIdxPrev, s, tbl2, base2)
     // query ids ≡ 0 mod 23 — the shared % 25 rule is a subset of the
     // deleted % 5 roster here, which would leave the gate vacuous
     Bm25Index.scoredTopK(s, idx2,
       s.table(idx2.postingsTable).filter(col("doc_id") % 23 === 0)
         .select(col("doc_id").as("query_id"), col("word")))
   }
-
-  private val ivfFromFeedPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val ivfFromFeedIdxPrev =
-    new java.util.concurrent.atomic.AtomicReference[(String, String)](null)
 
   /** Stored IVF index maintained off the change feed
     * (`layout_ivf_from_feed`): the vector-index sibling of
@@ -6126,14 +5841,13 @@ object ExtQueries {
     import graft.operators.{IvfIndex, KMeans, VersionedTable}
     val spec = VersionedTable.Spec(Seq("vec_id"), "vec_id", 1 << 13)
     val all = vecs(s, dir).select(col("vec_id"), col("embedding"))
-    val root = java.nio.file.Files.createTempDirectory("graft_ivffeed").toString
+    val root = Scratch.dir("graft_ivffeed")
     val layout = (df: DataFrame) =>
       df.repartitionByRange(8, col("vec_id")).sortWithinPartitions("vec_id")
     val v1 = VersionedTable.create(s, all.filter(col("vec_id") % 3 === 0),
       root, spec, layout)
-    val suffix = java.util.UUID.randomUUID().toString.replace("-", "")
-    val base = java.nio.file.Files.createTempDirectory("graft_ivffeed_a").toString
-    val tbl = s"graft_ivffeed_$suffix"
+    val base = Scratch.dir("graft_ivffeed_a")
+    val tbl = Scratch.table(s, "graft_ivffeed_a")
     // the quantizer training (reads only v1's immutable file set) and
     // the table's writer side (append + DV-delete commits) share no
     // state beyond committed v1 — overlap them (guide §2.6): the
@@ -6148,8 +5862,8 @@ object ExtQueries {
       })
     // one feed window, two consumers (insert fold + delete purge):
     // persist it so the manifest diff runs once, not per fold
-    val base2 = java.nio.file.Files.createTempDirectory("graft_ivffeed_p").toString
-    val tbl2 = s"graft_ivffeed_p_$suffix"
+    val base2 = Scratch.dir("graft_ivffeed_p")
+    val tbl2 = Scratch.table(s, "graft_ivffeed_p")
     val idx2 =
       Checkpoints.withPersisted(VersionedTable.changeFeed(s, root, v1, v3)) { feed =>
         IvfIndex.append(s, idx0,
@@ -6159,12 +5873,6 @@ object ExtQueries {
           feed.filter(col("change_type") === "delete").select(col("vec_id")),
           tbl2, base2)
       }
-    // the unpurged index is dead within this invocation; the table
-    // root and purged index follow the cross-invocation lifecycle
-    s.sql(s"DROP TABLE IF EXISTS $tbl")
-    deleteTree(java.nio.file.Paths.get(base))
-    retirePrevDir(ivfFromFeedPrev, root)
-    retirePrev(ivfFromFeedIdxPrev, s, tbl2, base2)
     val centroids = IvfIndex.readCentroids(s, idx2)
     val lists = s.table(tbl2)
       .select(col("vec_id").as("neighbor_id"), col("v").as("c_vec"), col("cid"))
@@ -6175,9 +5883,6 @@ object ExtQueries {
       .select(col("vec_id").as("query_id"), col("v").as("q_vec"), col("cid"))
     ivfScore(lists, probes)
   }
-
-  private val reclusterPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** Layout evolution (`layout_recluster`,
     * [[graft.operators.VersionedTable.recluster]]): the OPTIMIZE verb
@@ -6201,7 +5906,7 @@ object ExtQueries {
     val spec = VersionedTable.Spec(Seq("n_chars"), "doc_id", 1 << 13)
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val root = java.nio.file.Files.createTempDirectory("graft_recluster").toString
+    val root = Scratch.dir("graft_recluster")
     // skip-hostile: hash-scatter — every file spans the n_chars domain
     VersionedTable.create(s, d, root, spec, df => df.repartition(8))
     VersionedTable.deleteRosterDV(s, root, spec,
@@ -6217,7 +5922,6 @@ object ExtQueries {
     val filesAfter = bandFiles()
     require(filesAfter < filesBefore,
       s"recluster gate expected real pruning gains, got $filesBefore -> $filesAfter")
-    retirePrevDir(reclusterPrev, root)
     import s.implicits._
     Seq(("1_before", before.getLong(0), before.getLong(1)))
       .toDF("slice", "n_docs", "sum_ids")
@@ -6227,9 +5931,6 @@ object ExtQueries {
         VersionedTable.prunedRead(s, root, "n_chars", 200, 400)
           .filter(col("n_chars").between(200, 400))).drop("sum_chars"))
   }
-
-  private val reclusterZPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** OPTIMIZE ZORDER BY as a manifest commit
     * (`layout_recluster_zorder`,
@@ -6260,7 +5961,7 @@ object ExtQueries {
     val spec = VersionedTable.Spec(Seq("n_chars", "doc_id"), "doc_id", 1 << 13)
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val root = java.nio.file.Files.createTempDirectory("graft_zrecluster").toString
+    val root = Scratch.dir("graft_zrecluster")
     // skip-hostile: hash-scatter — every file spans both domains
     VersionedTable.create(s, d, root, spec, df => df.repartition(16))
     VersionedTable.deleteRosterDV(s, root, spec,
@@ -6283,18 +5984,12 @@ object ExtQueries {
     require(filesZ < filesLinear,
       s"zorder recluster expected multi-dim pruning gains over linear, " +
         s"got $filesLinear -> $filesZ box files")
-    retirePrevDir(reclusterZPrev, root)
     vtSlice("1_after", VersionedTable.read(s, root))
       .unionByName(vtSlice("2_box",
         VersionedTable.prunedReadBands(s, root, bands)
           .filter(col("n_chars").between(200, 400) &&
             col("doc_id").between(100, 200))))
   }
-
-  private val shallowClonePrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val shallowCloneDstPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** Zero-copy clone + divergence (`layout_shallow_clone`,
     * [[graft.operators.VersionedTable.shallowClone]]): the clone's v1
@@ -6317,8 +6012,8 @@ object ExtQueries {
     val spec = VersionedTable.Spec(Seq("n_chars"), "doc_id", 1 << 13)
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val src = java.nio.file.Files.createTempDirectory("graft_clone_src").toString
-    val dst = java.nio.file.Files.createTempDirectory("graft_clone_dst").toString
+    val src = Scratch.dir("graft_clone_src")
+    val dst = Scratch.dir("graft_clone_dst")
     val layout = (df: DataFrame) =>
       df.repartitionByRange(8, col("n_chars"), col("doc_id"))
         .sortWithinPartitions("n_chars")
@@ -6327,8 +6022,6 @@ object ExtQueries {
     VersionedTable.shallowClone(s, src, dst)
     VersionedTable.deleteRosterDV(s, dst, spec,
       d.filter(col("doc_id") % 7 === 0).select(col("doc_id")))
-    retirePrevDir(shallowClonePrev, src)
-    retirePrevDir(shallowCloneDstPrev, dst)
     vtSlice("1_source", VersionedTable.read(s, src))
       .unionByName(vtSlice("2_clone", VersionedTable.read(s, dst)))
   }
@@ -6360,9 +6053,6 @@ object ExtQueries {
       .filter(col("n_docs") > 0)
   }
 
-  private val mvFromFeedPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-
   /** Materialized view maintained off the change feed
     * (`layout_mv_from_feed`): the CDC-consumer composition — a
     * per-language aggregate (n_docs, Σchars) is materialized at v1,
@@ -6384,7 +6074,7 @@ object ExtQueries {
     val spec = VersionedTable.Spec(Seq("n_chars"), "doc_id", 1 << 13)
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val root = java.nio.file.Files.createTempDirectory("graft_mvfeed").toString
+    val root = Scratch.dir("graft_mvfeed")
     val layout = (df: DataFrame) =>
       df.repartitionByRange(8, col("n_chars"), col("doc_id"))
         .sortWithinPartitions("n_chars")
@@ -6394,12 +6084,8 @@ object ExtQueries {
     val v3 = VersionedTable.deleteRosterDV(s, root, spec,
       d.filter(col("doc_id") % 5 === 0).select(col("doc_id")))
     val feed = VersionedTable.changeFeed(s, root, v1, v3)
-    retirePrevDir(mvFromFeedPrev, root)
     mvLangFold(mv0, feed)
   }
-
-  private val feedAcrossPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** Change feed ACROSS a content-identical rewrite
     * (`layout_feed_across_optimize`): Delta CDF's `dataChange=false`
@@ -6422,7 +6108,7 @@ object ExtQueries {
     val spec = VersionedTable.Spec(Seq("n_chars"), "doc_id", 1 << 13)
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val root = java.nio.file.Files.createTempDirectory("graft_feedx").toString
+    val root = Scratch.dir("graft_feedx")
     val layout = (df: DataFrame) =>
       df.repartitionByRange(8, col("n_chars"), col("doc_id"))
         .sortWithinPartitions("n_chars")
@@ -6438,12 +6124,8 @@ object ExtQueries {
     val v5 = VersionedTable.append(s, d.filter(col("doc_id") % 3 === 2),
       root, spec, layout)
     val feed = VersionedTable.changeFeed(s, root, v1, v5)
-    retirePrevDir(feedAcrossPrev, root)
     mvLangFold(mv0, feed)
   }
-
-  private val feedAcrossUpdPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** Change feed ACROSS content-CHANGING rewrites
     * (`layout_feed_across_update`): the writer-side-CDC half of the
@@ -6471,7 +6153,7 @@ object ExtQueries {
     val spec = VersionedTable.Spec(Seq("n_chars"), "doc_id", 1 << 13)
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val root = java.nio.file.Files.createTempDirectory("graft_feedu").toString
+    val root = Scratch.dir("graft_feedu")
     val layout = (df: DataFrame) =>
       df.repartitionByRange(8, col("n_chars"), col("doc_id"))
         .sortWithinPartitions("n_chars")
@@ -6487,12 +6169,8 @@ object ExtQueries {
     val v5 = VersionedTable.deleteRosterDV(s, root, spec,
       d.filter(col("doc_id") % 5 === 0).select(col("doc_id")))
     val feed = VersionedTable.changeFeed(s, root, v1, v5)
-    retirePrevDir(feedAcrossUpdPrev, root)
     mvLangFold(mv0, feed)
   }
-
-  private val mergePrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** Three-clause MERGE (`layout_merge`,
     * [[graft.operators.VersionedTable.merge]]): the SQL/Delta
@@ -6519,7 +6197,7 @@ object ExtQueries {
     val spec = VersionedTable.Spec(Seq("n_chars"), "doc_id", 1 << 13)
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val root = java.nio.file.Files.createTempDirectory("graft_merge").toString
+    val root = Scratch.dir("graft_merge")
     val layout = (df: DataFrame) =>
       df.repartitionByRange(8, col("n_chars"), col("doc_id"))
         .sortWithinPartitions("n_chars")
@@ -6542,12 +6220,8 @@ object ExtQueries {
       .select("file").collect().map(_.getString(0)).toSet
     require(before.subsetOf(after),
       "merge must be merge-on-read: no pre-merge data file is rewritten")
-    retirePrevDir(mergePrev, root)
     mvLangAgg(VersionedTable.read(s, root))
   }
-
-  private val feedAcrossMergePrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** Change feed ACROSS a MERGE (`layout_feed_across_merge`): the
     * feed-safety half of the merge contract — because
@@ -6571,7 +6245,7 @@ object ExtQueries {
     val spec = VersionedTable.Spec(Seq("n_chars"), "doc_id", 1 << 13)
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val root = java.nio.file.Files.createTempDirectory("graft_feedm").toString
+    val root = Scratch.dir("graft_feedm")
     val layout = (df: DataFrame) =>
       df.repartitionByRange(8, col("n_chars"), col("doc_id"))
         .sortWithinPartitions("n_chars")
@@ -6592,12 +6266,8 @@ object ExtQueries {
       notMatchedCond = Some(col("src_doc_id") % 5 =!= 0),
       layout = layout)
     val feed = VersionedTable.changeFeed(s, root, v1, v3)
-    retirePrevDir(feedAcrossMergePrev, root)
     mvLangFold(mv0, feed)
   }
-
-  private val mergeScd2Prev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** SCD Type-2 dimension maintenance in ONE MERGE
     * (`layout_merge_scd2`): the classic warehouse pattern the
@@ -6624,7 +6294,7 @@ object ExtQueries {
     import graft.operators.VersionedTable
     val spec = VersionedTable.Spec(Seq("doc_id"), "doc_id", 1 << 13)
     val d = Tables.load(s, dir, "documents").select(col("doc_id"), col("lang"))
-    val root = java.nio.file.Files.createTempDirectory("graft_scd2").toString
+    val root = Scratch.dir("graft_scd2")
     val layout = (df: DataFrame) =>
       df.repartitionByRange(8, col("doc_id")).sortWithinPartitions("doc_id")
     VersionedTable.create(s,
@@ -6652,14 +6322,10 @@ object ExtQueries {
         "lang" -> col("src_new_lang"),
         "status" -> lit("current")),
       layout = layout)
-    retirePrevDir(mergeScd2Prev, root)
     VersionedTable.read(s, root).groupBy("lang", "status")
       .agg(count(lit(1)).as("n_docs"),
         sum(col("doc_id").cast("long")).as("sum_ids"))
   }
-
-  private val deleteBandPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** Metadata-only band DELETE (`layout_delete_band`,
     * [[graft.operators.VersionedTable.deleteBand]]): the
@@ -6682,7 +6348,7 @@ object ExtQueries {
     val spec = VersionedTable.Spec(Seq("n_chars"), "doc_id", 1 << 13)
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val root = java.nio.file.Files.createTempDirectory("graft_dband").toString
+    val root = Scratch.dir("graft_dband")
     val layout = (df: DataFrame) =>
       df.repartitionByRange(8, col("n_chars"), col("doc_id"))
         .sortWithinPartitions("n_chars")
@@ -6705,16 +6371,12 @@ object ExtQueries {
     // the feed folds across the metadata delete: dropped files + DV
     // delta carry the full deleted payloads
     val folded = mvLangFold(mv0, VersionedTable.changeFeed(s, root, v1, v3))
-    retirePrevDir(deleteBandPrev, root)
     mvLangAgg(VersionedTable.read(s, root))
       .select(lit("1_head").as("slice"), col("lang"), col("n_docs"),
         col("sum_chars"))
       .unionByName(folded.select(lit("2_folded").as("slice"), col("lang"),
         col("n_docs"), col("sum_chars")))
   }
-
-  private val hiddenPartPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** Hidden partitioning (`layout_hidden_partition`,
     * [[graft.operators.PartitionTransform]]): the table declares
@@ -6744,7 +6406,7 @@ object ExtQueries {
     val layout = PartitionTransform.clusterLayout(8, Seq(bucket))
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val root = java.nio.file.Files.createTempDirectory("graft_hpart").toString
+    val root = Scratch.dir("graft_hpart")
     VersionedTable.create(s, d.filter(col("doc_id") % 3 === 0), root, spec,
       layout, transforms = Seq(bucket))
     VersionedTable.append(s, d.filter(col("doc_id") % 3 === 1), root, spec, layout)
@@ -6761,15 +6423,11 @@ object ExtQueries {
         .select(lit(s"1_probe_$p").as("slice"), col("lang"),
           lit(1L).as("n_docs"), col("n_chars").cast("long").as("sum_chars"))
     }.reduce(_.unionByName(_))
-    retirePrevDir(hiddenPartPrev, root)
     probeRows.unionByName(
       mvLangAgg(VersionedTable.read(s, root))
         .select(lit("2_head").as("slice"), col("lang"), col("n_docs"),
           col("sum_chars")))
   }
-
-  private val partEvolvePrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** Partition-spec evolution (`layout_partition_evolution`,
     * [[graft.operators.VersionedTable.evolvePartitioning]]): Iceberg's
@@ -6792,7 +6450,7 @@ object ExtQueries {
     val bucket = BucketTransform(8, "doc_id")
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val root = java.nio.file.Files.createTempDirectory("graft_pevo").toString
+    val root = Scratch.dir("graft_pevo")
     VersionedTable.create(s, d.filter(col("doc_id") % 3 === 0), root, spec,
       layout = _.repartition(4))
     val oldFiles = VersionedTable.manifest(s, root)
@@ -6813,15 +6471,11 @@ object ExtQueries {
         .select(lit(s"1_probe_$p").as("slice"), col("lang"),
           lit(1L).as("n_docs"), col("n_chars").cast("long").as("sum_chars"))
     }.reduce(_.unionByName(_))
-    retirePrevDir(partEvolvePrev, root)
     probeRows.unionByName(
       mvLangAgg(VersionedTable.read(s, root))
         .select(lit("2_head").as("slice"), col("lang"), col("n_docs"),
           col("sum_chars")))
   }
-
-  private val metaDistinctPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** Metadata-only APPROX COUNT DISTINCT (`layout_metadata_distinct`,
     * [[graft.operators.VersionedTable.metadataDistinct]]): the
@@ -6838,19 +6492,13 @@ object ExtQueries {
       keySketch = true)
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val root = java.nio.file.Files.createTempDirectory("graft_mdist").toString
+    val root = Scratch.dir("graft_mdist")
     VersionedTable.create(s, d.filter(col("doc_id") % 3 === 0), root, spec,
       layout = _.repartition(4))
     VersionedTable.append(s, d.filter(col("doc_id") % 3 === 1), root, spec,
       layout = _.repartition(4))
-    retirePrevDir(metaDistinctPrev, root)
     VersionedTable.metadataDistinct(s, root)
   }
-
-  private val applyChangesPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val applyChangesPrev2 =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** CDC table replication (`layout_apply_changes`,
     * [[graft.operators.VersionedTable.applyChanges]]): the Delta
@@ -6876,8 +6524,8 @@ object ExtQueries {
     val spec = VersionedTable.Spec(Seq("n_chars"), "doc_id", 1 << 13)
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val src = java.nio.file.Files.createTempDirectory("graft_cdc_src").toString
-    val rep = java.nio.file.Files.createTempDirectory("graft_cdc_rep").toString
+    val src = Scratch.dir("graft_cdc_src")
+    val rep = Scratch.dir("graft_cdc_rep")
     val layout = (df: DataFrame) =>
       df.repartitionByRange(8, col("n_chars"), col("doc_id"))
         .sortWithinPartitions("n_chars")
@@ -6912,8 +6560,6 @@ object ExtQueries {
       .select("file").collect().map(_.getString(0)).toSet
     require(bootFiles.subsetOf(repFiles),
       "replication must be merge-on-read: bootstrap files survive")
-    retirePrevDir(applyChangesPrev, src)
-    retirePrevDir(applyChangesPrev2, rep)
     mvLangAgg(VersionedTable.read(s, src))
       .select(lit("1_source").as("slice"), col("lang"), col("n_docs"),
         col("sum_chars"))
@@ -6921,9 +6567,6 @@ object ExtQueries {
         .select(lit("2_replica").as("slice"), col("lang"), col("n_docs"),
           col("sum_chars")))
   }
-
-  private val applyChangesSeqPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** APPLY CHANGES ... SEQUENCE BY (`layout_apply_changes_seq`,
     * [[graft.operators.VersionedTable.applyChangesSeq]]): an EXTERNAL
@@ -6951,7 +6594,7 @@ object ExtQueries {
     val spec = VersionedTable.Spec(Seq("n_chars"), "doc_id", 1 << 13)
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val rep = java.nio.file.Files.createTempDirectory("graft_cdcseq_rep").toString
+    val rep = Scratch.dir("graft_cdcseq_rep")
     VersionedTable.create(s, d.filter(col("doc_id") < 300), rep, spec,
       extraMeta = Map("applied_upto" -> "v1"))
     def op(rows: DataFrame, ct: String, seq: Int): DataFrame =
@@ -6985,7 +6628,6 @@ object ExtQueries {
       .isEmpty,
       "an OUT-OF-ORDER redelivery of an older window must no-op — " +
         "re-applying it would resurrect stale key values")
-    retirePrevDir(applyChangesSeqPrev, rep)
     VersionedTable.read(s, rep).groupBy("lang")
       .agg(count(lit(1)).as("n_docs"), sum(col("doc_id")).as("sum_ids"),
         sum(col("n_chars")).as("sum_chars"))
@@ -7037,9 +6679,6 @@ object ExtQueries {
         .as("transitivity_ppm"))
   }
 
-  private val partRosterPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-
   /** Hidden-partition ROSTER lookup (`layout_partition_roster`,
     * [[graft.operators.VersionedTable.partitionPrunedIn]]): the batch
     * point-lookup shape — a GDPR roster of 4 doc_ids against the
@@ -7062,7 +6701,7 @@ object ExtQueries {
     val layout = PartitionTransform.clusterLayout(8, Seq(bucket))
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val root = java.nio.file.Files.createTempDirectory("graft_prost").toString
+    val root = Scratch.dir("graft_prost")
     VersionedTable.create(s, d.filter(col("doc_id") % 3 === 0), root, spec,
       layout, transforms = Seq(bucket))
     VersionedTable.append(s, d.filter(col("doc_id") % 3 === 1), root, spec, layout)
@@ -7072,13 +6711,9 @@ object ExtQueries {
     val kept = pruned.select(input_file_name()).distinct().count()
     require(kept * 2 <= total,
       s"the roster prune must skip most files (kept $kept of $total)")
-    retirePrevDir(partRosterPrev, root)
     pruned.filter(col("doc_id").isin(roster: _*))
       .select(col("doc_id"), col("lang"), col("n_chars"))
   }
-
-  private val mergeEvolvePrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** MERGE with schema evolution (`layout_merge_evolve`, the Delta
     * autoMerge posture): one merge whose source carries a column the
@@ -7100,7 +6735,7 @@ object ExtQueries {
     val spec = VersionedTable.Spec(Seq("doc_id"), "doc_id", 1 << 13)
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val root = java.nio.file.Files.createTempDirectory("graft_mev").toString
+    val root = Scratch.dir("graft_mev")
     VersionedTable.create(s, d.filter(col("doc_id") % 3 < 2), root, spec)
     val before = VersionedTable.manifest(s, root)
       .select("file").collect().map(_.getString(0)).toSet
@@ -7119,16 +6754,12 @@ object ExtQueries {
       .select("file").collect().map(_.getString(0)).toSet
     require(before.subsetOf(after),
       "evolution must not rewrite existing files (merge-on-read)")
-    retirePrevDir(mergeEvolvePrev, root)
     head.groupBy(col("lang"))
       .agg(count(lit(1)).as("n_rows"),
         sum(col("n_chars").cast("long")).as("sum_chars"),
         count(col("quality")).as("n_quality"),
         sum(col("quality").cast("long")).as("sum_quality"))
   }
-
-  private val typeWidenPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** Type widening (`layout_type_widening`,
     * [[graft.operators.VersionedTable.widenColumn]]): the id-column-
@@ -7154,7 +6785,7 @@ object ExtQueries {
       .select(col("doc_id"), col("lang"), col("n_chars"))
     def narrow(m: Long) = d.filter(col("doc_id") % 3 === m)
       .select(col("doc_id"), col("lang"), col("n_chars").cast("int").as("n_small"))
-    val root = java.nio.file.Files.createTempDirectory("graft_widen").toString
+    val root = Scratch.dir("graft_widen")
     VersionedTable.create(s, narrow(0), root, spec)
     VersionedTable.append(s, narrow(1), root, spec)
     VersionedTable.widenColumn(s, root, spec, "n_small", "bigint")
@@ -7174,15 +6805,9 @@ object ExtQueries {
     require(wide.filter(col("n_small") >= 3000000000L).count() ==
       d.filter(col("doc_id") % 3 === 2).count(),
       "the wide generation must read back complete")
-    retirePrevDir(typeWidenPrev, root)
     VersionedTable.read(s, root).groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_small")).as("sum_small"))
   }
-
-  private val branchWapPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val branchWapBrPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** Branch + WRITE-AUDIT-PUBLISH (`layout_branch_wap`,
     * [[graft.operators.VersionedTable.fastForward]]): the risky
@@ -7205,8 +6830,8 @@ object ExtQueries {
     val spec = VersionedTable.Spec(Seq("doc_id"), "doc_id", 1 << 13)
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val main = java.nio.file.Files.createTempDirectory("graft_wap_m").toString
-    val br = java.nio.file.Files.createTempDirectory("graft_wap_b").toString + "/b"
+    val main = Scratch.dir("graft_wap_m")
+    val br = Scratch.dir("graft_wap_b") + "/b"
     VersionedTable.create(s, d.filter(col("doc_id") % 3 === 0), main, spec)
     val vBase = VersionedTable.headVersion(main).get
     VersionedTable.shallowClone(s, main, br)
@@ -7229,20 +6854,10 @@ object ExtQueries {
     require(VersionedTable.readVersion(s, main, vBase).count() ==
       d.filter(col("doc_id") % 3 === 0).count(),
       "time travel to the base must still read pre-branch content")
-    retirePrevDir(branchWapPrev, main)
-    retirePrevDir(branchWapBrPrev,
-      br.substring(0, br.lastIndexOf('/')))
     VersionedTable.read(s, main).groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_chars")).cast("long").as("sum_chars"))
   }
-
-  private val branchRebaseMainPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val branchRebaseBrPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val branchRebaseBr2Prev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** Branch REBASE onto a moved main (`layout_branch_rebase`,
     * [[graft.operators.VersionedTable.rebaseBranch]] — VERDICT r13
@@ -7267,9 +6882,9 @@ object ExtQueries {
     val spec = VersionedTable.Spec(Seq("doc_id"), "doc_id", 1 << 13)
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val main = java.nio.file.Files.createTempDirectory("graft_rb_m").toString
-    val br = java.nio.file.Files.createTempDirectory("graft_rb_b").toString + "/b"
-    val br2 = java.nio.file.Files.createTempDirectory("graft_rb_b2").toString + "/b"
+    val main = Scratch.dir("graft_rb_m")
+    val br = Scratch.dir("graft_rb_b") + "/b"
+    val br2 = Scratch.dir("graft_rb_b2") + "/b"
     VersionedTable.create(s, d.filter(col("doc_id") % 3 === 0), main, spec)
     VersionedTable.shallowClone(s, main, br)
     // the two sides diverge on DISJOINT key sets
@@ -7294,17 +6909,11 @@ object ExtQueries {
     require(rebased.isFailure &&
       rebased.failed.get.getMessage.contains("order-dependent"),
       s"overlapping divergence keys must refuse the replay, got $rebased")
-    retirePrevDir(branchRebaseMainPrev, main)
-    retirePrevDir(branchRebaseBrPrev, br.substring(0, br.lastIndexOf('/')))
-    retirePrevDir(branchRebaseBr2Prev, br2.substring(0, br2.lastIndexOf('/')))
     VersionedTable.read(s, main).groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("doc_id")).cast("long").as("sum_ids"),
         sum(col("n_chars")).cast("long").as("sum_chars"))
   }
-
-  private val joinPrunePrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** Runtime file pruning from a JOIN (`layout_join_prune`,
     * [[graft.operators.VersionedTable.joinPrunedRead]]): the
@@ -7332,7 +6941,7 @@ object ExtQueries {
     val t = TruncateTransform(100, "doc_id")
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val root = java.nio.file.Files.createTempDirectory("graft_jprune").toString
+    val root = Scratch.dir("graft_jprune")
     VersionedTable.create(s, d.filter(col("doc_id") % 3 === 0), root, spec,
       PartitionTransform.clusterLayout(32, Seq(t)), transforms = Seq(t))
     VersionedTable.append(s, d.filter(col("doc_id") % 3 === 1), root, spec,
@@ -7350,16 +6959,12 @@ object ExtQueries {
     val kept = pruned.select(input_file_name()).distinct().count()
     require(kept * 2 <= total,
       s"the join prune must skip most files (kept $kept of $total)")
-    retirePrevDir(joinPrunePrev, root)
     pruned.join(broadcast(dim), pruned("doc_id") === dim("k"))
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_chars")).cast("long").as("sum_chars"),
         sum(col("w")).cast("long").as("sum_w"))
   }
-
-  private val partsTablePrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** PARTITIONS metadata table (`layout_partitions_table`,
     * [[graft.operators.VersionedTable.partitionsTable]]): live rows
@@ -7386,7 +6991,7 @@ object ExtQueries {
     val t = TruncateTransform(200, "n_chars")
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val root = java.nio.file.Files.createTempDirectory("graft_ptab").toString
+    val root = Scratch.dir("graft_ptab")
     VersionedTable.create(s, d.filter(col("doc_id") % 3 === 0), root, spec,
       PartitionTransform.clusterLayout(32, Seq(t)), transforms = Seq(t))
     VersionedTable.append(s, d.filter(col("doc_id") % 3 === 1), root, spec,
@@ -7404,13 +7009,9 @@ object ExtQueries {
       "fixture must keep at least one file on the metadata-only path")
     require(m.count() > nExact,
       "fixture must put at least one file on the scan path")
-    retirePrevDir(partsTablePrev, root)
     VersionedTable.partitionsTable(s, root)
       .select(col(sn).as("bin_chars"), col("n_live"))
   }
-
-  private val reclusterWherePrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** SELECTIVE OPTIMIZE (`layout_optimize_where`,
     * [[graft.operators.VersionedTable.reclusterWhere]]): the nightly
@@ -7434,7 +7035,7 @@ object ExtQueries {
     val spec = VersionedTable.Spec(Seq("n_chars"), "doc_id", 1 << 13)
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val root = java.nio.file.Files.createTempDirectory("graft_rw").toString
+    val root = Scratch.dir("graft_rw")
     val layout = (df: DataFrame) =>
       df.repartitionByRange(8, col("n_chars"), col("doc_id"))
         .sortWithinPartitions("n_chars")
@@ -7459,16 +7060,12 @@ object ExtQueries {
     // window spanning create→append→DV-delete→reclusterWhere folds to
     // the head state
     val folded = mvLangFold(mv0, VersionedTable.changeFeed(s, root, v1, vOpt))
-    retirePrevDir(reclusterWherePrev, root)
     mvLangAgg(VersionedTable.read(s, root))
       .select(lit("1_head").as("slice"), col("lang"), col("n_docs"),
         col("sum_chars"))
       .unionByName(folded.select(lit("2_folded").as("slice"), col("lang"),
         col("n_docs"), col("sum_chars")))
   }
-
-  private val historyPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** DESCRIBE HISTORY (`layout_history`,
     * [[graft.operators.VersionedTable.history]]): the commit log as a
@@ -7491,7 +7088,7 @@ object ExtQueries {
     val spec = VersionedTable.Spec(Seq("n_chars"), "doc_id", 1 << 13)
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val root = java.nio.file.Files.createTempDirectory("graft_hist").toString
+    val root = Scratch.dir("graft_hist")
     val layout = (df: DataFrame) =>
       df.repartitionByRange(8, col("n_chars"), col("doc_id"))
         .sortWithinPartitions("n_chars")
@@ -7508,7 +7105,6 @@ object ExtQueries {
     VersionedTable.optimizeCompact(s, root, spec, targetBytes = 1L << 40)
     val hist = VersionedTable.history(s, root)
       .select("version", "verb").collect()
-    retirePrevDir(historyPrev, root)
     hist.map { r =>
       VersionedTable.readVersion(s, root, r.getString(0))
         .agg(count(lit(1)).as("n_rows"))
@@ -7516,11 +7112,6 @@ object ExtQueries {
           lit(r.getString(1)).as("verb"), col("n_rows"))
     }.reduce(_.unionByName(_))
   }
-
-  private val vacConsumerTablePrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val vacConsumerDerivedPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** Consumer-aware VACUUM (`layout_vacuum_consumer`,
     * [[graft.operators.VersionedTable.vacuum]] with `consumers`): the
@@ -7547,8 +7138,8 @@ object ExtQueries {
     val spec = VersionedTable.Spec(Seq("n_chars"), "doc_id", 1 << 13)
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val tableRoot = java.nio.file.Files.createTempDirectory("graft_vc_t").toString
-    val derivedRoot = java.nio.file.Files.createTempDirectory("graft_vc_d").toString
+    val tableRoot = Scratch.dir("graft_vc_t")
+    val derivedRoot = Scratch.dir("graft_vc_d")
     val layout = (df: DataFrame) =>
       df.repartitionByRange(8, col("n_chars"), col("doc_id"))
         .sortWithinPartitions("n_chars")
@@ -7575,13 +7166,8 @@ object ExtQueries {
     require(caught.size == 1,
       s"caught-up consumer pins nothing extra: keepLast=1 must leave " +
         s"one version, got $caught")
-    retirePrevDir(vacConsumerTablePrev, tableRoot)
-    retirePrevDir(vacConsumerDerivedPrev, derivedRoot)
     Publish.read(s, derivedRoot)
   }
-
-  private val dropColPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** DROP COLUMN as a property commit (`layout_drop_column`,
     * [[graft.operators.VersionedTable.dropColumn]]): the zero-rewrite
@@ -7603,7 +7189,7 @@ object ExtQueries {
     val spec = VersionedTable.Spec(Seq("n_chars"), "doc_id", 1 << 13)
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val root = java.nio.file.Files.createTempDirectory("graft_dropc").toString
+    val root = Scratch.dir("graft_dropc")
     val layout = (df: DataFrame) =>
       df.repartitionByRange(8, col("n_chars"), col("doc_id"))
         .sortWithinPartitions("n_chars")
@@ -7625,14 +7211,10 @@ object ExtQueries {
       df.agg(count(lit(1)).as("n_docs"), sum(col("doc_id")).as("sum_ids"),
           nLang.as("n_lang"))
         .select(lit(tag).as("slice"), col("n_docs"), col("sum_ids"), col("n_lang"))
-    retirePrevDir(dropColPrev, root)
     sl("1_head", VersionedTable.read(s, root), lit(0L))
       .unionByName(sl("2_v1", VersionedTable.readVersion(s, root, v1),
         count(col("lang"))))
   }
-
-  private val renamePrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** RENAME COLUMN via column mapping (`layout_rename_column`,
     * [[graft.operators.VersionedTable.renameColumn]]): the logical
@@ -7656,7 +7238,7 @@ object ExtQueries {
     val spec = VersionedTable.Spec(Seq("n_chars"), "doc_id", 1 << 13)
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val root = java.nio.file.Files.createTempDirectory("graft_ren").toString
+    val root = Scratch.dir("graft_ren")
     val layout = (df: DataFrame) =>
       df.repartitionByRange(8, col("n_chars"), col("doc_id"))
         .sortWithinPartitions("n_chars")
@@ -7683,7 +7265,6 @@ object ExtQueries {
       df.agg(count(lit(1)).as("n_docs"), sum(col("doc_id")).as("sum_ids"),
           sum(col(c).cast("long")).as("sum_chars"))
         .select(lit(tag).as("slice"), col("n_docs"), col("sum_ids"), col("sum_chars"))
-    retirePrevDir(renamePrev, root)
     // the band prune keys on the PHYSICAL stat column; the exact
     // re-filter uses the logical name — both sides of the mapping
     sl("1_head", VersionedTable.read(s, root), "len_chars")
@@ -7692,9 +7273,6 @@ object ExtQueries {
         VersionedTable.prunedRead(s, root, "n_chars", 200, 400)
           .filter(col("len_chars").between(200, 400)), "len_chars"))
   }
-
-  private val updateWherePrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** Predicate UPDATE as a copy-on-write commit (`layout_update_where`,
     * [[graft.operators.VersionedTable.updateWhere]]): the table is
@@ -7717,7 +7295,7 @@ object ExtQueries {
     val spec = VersionedTable.Spec(Seq("n_chars"), "doc_id", 1 << 13)
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val root = java.nio.file.Files.createTempDirectory("graft_upd").toString
+    val root = Scratch.dir("graft_upd")
     val layout = (df: DataFrame) =>
       df.repartitionByRange(8, col("n_chars"), col("doc_id"))
         .sortWithinPartitions("n_chars")
@@ -7734,13 +7312,9 @@ object ExtQueries {
     require((before & after).nonEmpty,
       "a banded update under clustering must leave some files untouched")
     require((before -- after).nonEmpty, "the update must rewrite the band's holders")
-    retirePrevDir(updateWherePrev, root)
     VersionedTable.read(s, root).groupBy("lang")
       .agg(count(lit(1)).as("n_docs"), sum(col("doc_id")).as("sum_ids"))
   }
-
-  private val optimizePrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** OPTIMIZE bin-packing compaction as a commit
     * (`layout_optimize_compact`,
@@ -7764,7 +7338,7 @@ object ExtQueries {
     val spec = VersionedTable.Spec(Seq("n_chars"), "doc_id", 1 << 13)
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val root = java.nio.file.Files.createTempDirectory("graft_opt").toString
+    val root = Scratch.dir("graft_opt")
     VersionedTable.create(s, d.filter(col("doc_id") % 2 === 0), root, spec,
       df => df.repartition(1))
     VersionedTable.append(s, d.filter(col("doc_id") % 2 === 1), root, spec,
@@ -7785,17 +7359,11 @@ object ExtQueries {
       s"optimize expected fewer files, got ${before.length} -> ${after.length}")
     require(after.exists(_._1 == bigFile),
       "the at-target file must pass through un-rewritten")
-    retirePrevDir(optimizePrev, root)
     vtSlice("1_head", VersionedTable.read(s, root))
       .unionByName(vtSlice("2_band",
         VersionedTable.prunedRead(s, root, "n_chars", 200, 400)
           .filter(col("n_chars").between(200, 400))))
   }
-
-  private val consumerTablePrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val consumerDerivedPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** Checkpointed feed-consumer loop (`layout_feed_consumer`,
     * [[graft.operators.FeedConsumer.advance]]): where the one-window
@@ -7819,8 +7387,8 @@ object ExtQueries {
     val spec = VersionedTable.Spec(Seq("n_chars"), "doc_id", 1 << 13)
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val tableRoot = java.nio.file.Files.createTempDirectory("graft_fc_t").toString
-    val derivedRoot = java.nio.file.Files.createTempDirectory("graft_fc_d").toString
+    val tableRoot = Scratch.dir("graft_fc_t")
+    val derivedRoot = Scratch.dir("graft_fc_d")
     val layout = (df: DataFrame) =>
       df.repartitionByRange(8, col("n_chars"), col("doc_id"))
         .sortWithinPartitions("n_chars")
@@ -7843,13 +7411,8 @@ object ExtQueries {
       tableRoot, spec, layout)
     val (_, a4) = wake()
     require(a4 == "fold", s"fourth wake must fold, got $a4")
-    retirePrevDir(consumerTablePrev, tableRoot)
-    retirePrevDir(consumerDerivedPrev, derivedRoot)
     Publish.read(s, derivedRoot)
   }
-
-  private val restoreTagPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** RESTORE + tag custody (`layout_restore_tag`,
     * [[graft.operators.VersionedTable.restore]] /
@@ -7874,7 +7437,7 @@ object ExtQueries {
     val spec = VersionedTable.Spec(Seq("n_chars"), "doc_id", 1 << 13)
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val root = java.nio.file.Files.createTempDirectory("graft_restore").toString
+    val root = Scratch.dir("graft_restore")
     val layout = (df: DataFrame) =>
       df.repartitionByRange(8, col("n_chars"), col("doc_id"))
         .sortWithinPartitions("n_chars")
@@ -7901,13 +7464,9 @@ object ExtQueries {
       try { VersionedTable.readVersion(s, root, v2); false }
       catch { case _: Throwable => true },
       "the untagged v2 must be retired by keepLast=1")
-    retirePrevDir(restoreTagPrev, root)
     vtSlice("1_head", VersionedTable.read(s, root))
       .unionByName(vtSlice("2_tag", VersionedTable.readTag(s, root, "run47")))
   }
-
-  private val asOfTsPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** TIMESTAMP AS OF (`layout_time_travel_ts`,
     * [[graft.operators.VersionedTable.readAsOfTs]]): version-name time
@@ -7929,7 +7488,7 @@ object ExtQueries {
     val spec = VersionedTable.Spec(Seq("n_chars"), "doc_id", 1 << 13)
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val root = java.nio.file.Files.createTempDirectory("graft_asof").toString
+    val root = Scratch.dir("graft_asof")
     val layout = (df: DataFrame) =>
       df.repartitionByRange(8, col("n_chars"), col("doc_id"))
         .sortWithinPartitions("n_chars")
@@ -7947,14 +7506,10 @@ object ExtQueries {
       try { VersionedTable.readAsOfTs(s, root, 50L); false }
       catch { case _: IllegalArgumentException => true },
       "a probe before the first stamp must refuse")
-    retirePrevDir(asOfTsPrev, root)
     vtSlice("1_t100", VersionedTable.readAsOfTs(s, root, 100L))
       .unionByName(vtSlice("2_t250", VersionedTable.readAsOfTs(s, root, 250L)))
       .unionByName(vtSlice("3_t999", VersionedTable.readAsOfTs(s, root, 999L)))
   }
-
-  private val lineagePrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** Row-level commit lineage (`layout_commit_lineage`,
     * [[graft.operators.VersionedTable.readWithCommitVersion]]): the
@@ -7977,7 +7532,7 @@ object ExtQueries {
     val spec = VersionedTable.Spec(Seq("n_chars"), "doc_id", 1 << 13)
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val root = java.nio.file.Files.createTempDirectory("graft_lineage").toString
+    val root = Scratch.dir("graft_lineage")
     val layout = (df: DataFrame) =>
       df.repartitionByRange(8, col("n_chars"), col("doc_id"))
         .sortWithinPartitions("n_chars")
@@ -7986,14 +7541,10 @@ object ExtQueries {
     VersionedTable.deleteRosterDV(s, root, spec,
       d.filter(col("doc_id") % 5 === 0).select(col("doc_id")))
     VersionedTable.append(s, d.filter(col("doc_id") % 3 === 2), root, spec, layout)
-    retirePrevDir(lineagePrev, root)
     VersionedTable.readWithCommitVersion(s, root)
       .groupBy("_commit_version")
       .agg(count(lit(1)).as("n_docs"), sum(col("doc_id")).as("sum_ids"))
   }
-
-  private val constraintsPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** Durable CHECK constraints enforced at commit time
     * (`layout_table_constraints`,
@@ -8017,7 +7568,7 @@ object ExtQueries {
     val spec = VersionedTable.Spec(Seq("n_chars"), "doc_id", 1 << 13)
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val root = java.nio.file.Files.createTempDirectory("graft_cons").toString
+    val root = Scratch.dir("graft_cons")
     val layout = (df: DataFrame) =>
       df.repartitionByRange(8, col("n_chars"), col("doc_id"))
         .sortWithinPartitions("n_chars")
@@ -8039,12 +7590,8 @@ object ExtQueries {
     VersionedTable.append(s, d.filter(col("doc_id") % 3 === 1), root, spec, layout)
     require(VersionedTable.constraints(root).keySet == Set("n_chars_pos", "has_id"),
       s"constraints must survive commits, got ${VersionedTable.constraints(root)}")
-    retirePrevDir(constraintsPrev, root)
     afterVeto.unionByName(vtSlice("2_committed", VersionedTable.read(s, root)))
   }
-
-  private val metaAggPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** Metadata-only aggregates (`layout_metadata_agg`,
     * [[graft.operators.VersionedTable.metadataAgg]]): COUNT/MIN/MAX
@@ -8067,7 +7614,7 @@ object ExtQueries {
     val spec = VersionedTable.Spec(Seq("n_chars"), "doc_id", 1 << 13)
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val root = java.nio.file.Files.createTempDirectory("graft_magg").toString
+    val root = Scratch.dir("graft_magg")
     val layout = (df: DataFrame) =>
       df.repartitionByRange(8, col("n_chars"), col("doc_id"))
         .sortWithinPartitions("n_chars")
@@ -8093,16 +7640,8 @@ object ExtQueries {
     val afterDv = slice("2_after_dv", withMinMax = false)
     VersionedTable.compactDeletes(s, root, spec)
     val compacted = slice("3_compacted", withMinMax = true)
-    retirePrevDir(metaAggPrev, root)
     full.unionByName(afterDv).unionByName(compacted)
   }
-
-  private val txnTablePrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val txnMvPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val txnLogPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** Cross-artifact atomic transaction (`layout_txn_commit`,
     * [[graft.operators.Txn]]): a versioned documents table and its
@@ -8130,9 +7669,9 @@ object ExtQueries {
     val spec = VersionedTable.Spec(Seq("n_chars"), "doc_id", 1 << 13)
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val tableRoot = java.nio.file.Files.createTempDirectory("graft_txn_t").toString
-    val mvRoot = java.nio.file.Files.createTempDirectory("graft_txn_mv").toString
-    val txnRoot = java.nio.file.Files.createTempDirectory("graft_txn_log").toString
+    val tableRoot = Scratch.dir("graft_txn_t")
+    val mvRoot = Scratch.dir("graft_txn_mv")
+    val txnRoot = Scratch.dir("graft_txn_log")
     val layout = (df: DataFrame) =>
       df.repartitionByRange(8, col("n_chars"), col("doc_id"))
         .sortWithinPartitions("n_chars")
@@ -8171,9 +7710,6 @@ object ExtQueries {
     val headMv = Txn.readArtifact(s, txnRoot, "mv_lang")
     require(consistent(headMv, mvLangAgg(Txn.readTable(s, txnRoot, "docs"))),
       "txn committed head: new pair must be consistent")
-    retirePrevDir(txnTablePrev, tableRoot)
-    retirePrevDir(txnMvPrev, mvRoot)
-    retirePrevDir(txnLogPrev, txnRoot)
     crashOut.unionByName(headMv.select(lit("2_committed").as("slice"),
       col("lang"), col("n_docs"), col("sum_chars")))
   }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.ref
-import graft.operators.{LatestPerKey, Quality}
+import graft.operators.{LatestPerKey, Quality, Scratch}
 import graft.reports.ReportingLayer
 import graft.sources.Tables
 import graft.staging.{StagingLayer, StagingViews}
@@ -647,7 +647,7 @@ object Queries {
     */
   def report1FromBucketed(s: SparkSession, dir: String): DataFrame = {
     val v = stagedViews(s, dir)
-    val base = java.nio.file.Files.createTempDirectory("graft_r1b").toString
+    val base = Scratch.dir("graft_r1b")
     Pipeline.writeStagedBucketed(v, base, nBuckets = 8, prefix = "vr1b")
     ReportingLayer.mortgagePortfolio(
       Pipeline.readStagedBucketed(s, prefix = "vr1b"), Seq("operation_number"))
@@ -960,7 +960,7 @@ object Queries {
     * exactly like the parquet reader does.
     */
   def sourceJsonRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_json_rt").toString
+    val out = Scratch.dir("graft_json_rt")
     Tables.events(s, dir)
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("ts_ns"), col("value"), col("props"))
@@ -976,7 +976,7 @@ object Queries {
     * ORC string encoding byte-for-byte).
     */
   def sourceOrcRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_orc_rt").toString
+    val out = Scratch.dir("graft_orc_rt")
     Tables.events(s, dir)
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("ts_ns"), col("value"), col("props"))
@@ -990,7 +990,7 @@ object Queries {
     * `props` column and double round-tripping must be lossless.
     */
   def sourceCsvRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_csv_rt").toString
+    val out = Scratch.dir("graft_csv_rt")
     Tables.writeCsv(
       Tables.events(s, dir)
         .select(col("event_id"), col("user_id"), col("event_type"),
@@ -1011,7 +1011,7 @@ object Queries {
     * everything and row-filter.
     */
   def sourcePartitionedRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_part_rt").toString
+    val out = Scratch.dir("graft_part_rt")
     Tables.writePartitioned(
       Tables.load(s, dir, "documents")
         .withColumn("digest", md5(col("text").cast("binary"))),
@@ -1042,7 +1042,7 @@ object Queries {
     * map-side-combined groupBy.
     */
   def sourceSchemaEvolution(s: SparkSession, dir: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_schema_evo").toString
+    val out = Scratch.dir("graft_schema_evo")
     val ev = Tables.events(s, dir)
     ev.filter(col("event_id") % 2 === 0)
       .select(col("event_id"), col("user_id"), col("value"))

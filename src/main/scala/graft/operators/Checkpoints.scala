@@ -50,17 +50,23 @@ import org.apache.spark.sql.functions.{col, count, lit, sum, xxhash64}
   */
 object Checkpoints {
 
-  private lazy val root: java.nio.file.Path = {
+  /** THE per-JVM root: the context checkpoint dir, [[Scratch]]'s
+    * fixture directories and the commit-keyed stored artifacts all
+    * live under it, and one shutdown hook deletes it. The checkpoint
+    * dir is a per-context UUID subdirectory, so [[sweep]] and
+    * [[liveCount]] never see the siblings.
+    */
+  private[graft] lazy val root: java.nio.file.Path = {
     val p = java.nio.file.Files.createTempDirectory("graft-ckpt")
     Runtime.getRuntime.addShutdownHook(new Thread(() => deleteTree(p)))
     p
   }
 
   /** Recursive delete shared by every local-artifact lifecycle in the
-    * engine (checkpoint roots here, retired stored indexes in
-    * ExtQueries, gate fixtures) — delegates to the [[TableStore]]
-    * facade so the one storage-IO seam owns the implementation; the
-    * storage layer itself calls `TableStore.get.deleteTree` directly.
+    * engine (checkpoint roots here, [[Scratch]] fixtures) — delegates
+    * to the [[TableStore]] facade so the one storage-IO seam owns the
+    * implementation; the storage layer itself calls
+    * `TableStore.get.deleteTree` directly.
     */
   private[graft] def deleteTree(p: java.nio.file.Path): Unit =
     TableStore.get.deleteTree(p.toString)
@@ -183,4 +189,55 @@ object Checkpoints {
   def liveCount(sc: SparkContext): Long =
     checkpointDir(sc).filter(p => TableStore.get.isDirectory(p.toString))
       .fold(0L)(p => TableStore.get.listNames(p.toString).length.toLong)
+}
+
+/** Keyed per-call fixture storage for the query gates: the one place
+  * a gate gets a scratch directory or a scratch catalog table.
+  *
+  * A key (the gate's fixture prefix) owns one GENERATION at a time —
+  * the directory [[dir]] made plus every table [[table]] named since.
+  * The next [[dir]] call for the same key retires the previous
+  * generation: its tables are dropped first, then its directory is
+  * deleted. So each key holds at most one call's fixtures, and
+  * whatever a call leaves behind (a dead index branch, an unpurged
+  * artifact) goes at the key's next call.
+  *
+  * Retiring at allocation is sound because a gate's fixture is read
+  * only by the frame that call returned, and every caller (Verify,
+  * Bench, the smoke suites) consumes that frame before it calls the
+  * same gate again. Thread-safe: each call displaces exactly one
+  * generation, so concurrent allocations neither lose nor
+  * double-delete one.
+  */
+object Scratch {
+  import org.apache.spark.sql.SparkSession
+
+  private final case class Gen(dir: java.nio.file.Path,
+                               tables: List[(SparkSession, String)] = Nil)
+
+  private val gens = scala.collection.mutable.HashMap.empty[String, Gen]
+
+  /** A fresh `<root>/<key>-<n>` directory, opening a new generation
+    * for `key` after retiring the previous one.
+    */
+  def dir(key: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(Checkpoints.root, s"$key-")
+    synchronized(gens.put(key, Gen(d))).foreach { g =>
+      g.tables.foreach { case (s, t) => s.sql(s"DROP TABLE IF EXISTS $t") }
+      Checkpoints.deleteTree(g.dir)
+    }
+    d.toString
+  }
+
+  /** A fresh `<key>_<uuid>` table name, dropped with `key`'s current
+    * generation ([[dir]] must have opened it).
+    */
+  def table(spark: SparkSession, key: String): String = {
+    val t = s"${key}_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    synchronized {
+      val g = gens.getOrElse(key, sys.error(s"Scratch.table: no generation for $key"))
+      gens(key) = g.copy(tables = (spark, t) :: g.tables)
+    }
+    t
+  }
 }

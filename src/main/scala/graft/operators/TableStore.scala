@@ -29,9 +29,10 @@ package graft.operators
   *  - [[listNames]] of a non-directory returns empty, never throws —
   *    absence and emptiness are the same planning fact.
   *
-  * Gate fixtures and the bench/verify harness keep their direct
-  * `java.nio` temp-dir management: they ARE local by definition; the
-  * facade covers the engine's storage layer, not the test rig.
+  * Gate fixtures ([[Scratch]]) and the bench/verify harness allocate
+  * their temp dirs with `java.nio` directly: they ARE local by
+  * definition; the facade covers the engine's storage layer, not the
+  * test rig.
   */
 trait TableStore {
   def exists(path: String): Boolean

@@ -8,6 +8,8 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
+import graft.operators.Scratch
+
 /** Structured Streaming mode for the engine — the incremental capability
   * the reference lacks entirely (its views are batch-only; SURVEY.md §7.1
   * item 7d). Streams are declared with the same Column expressions as the
@@ -206,14 +208,14 @@ object StreamingStage {
   def readCommitted(spark: SparkSession, rootPath: String): DataFrame = {
     val store = graft.operators.TableStore.get
     val root = graft.operators.TableStore.canonicalRoot(rootPath)
-    // max by the NUMERIC id, not the name (ADVICE r8): lexicographic
-    // max over 'batch-%05d' breaks at id 100000, where the format
-    // widens to 6 digits and 'batch-100000' < 'batch-99999' as text
+    // newest first by the NUMERIC id, not the name (ADVICE r8): text
+    // order over 'batch-%05d' breaks at id 100000, where the format
+    // widens to 6 digits and 'batch-100000' < 'batch-99999' as text;
+    // the first committed one wins, so only torn newer dirs cost a probe
     val last = store.listNames(root)
-      .filter(n => n.startsWith("batch-") &&
-        n.stripPrefix("batch-").forall(_.isDigit) &&
-        store.exists(s"$root/$n/_COMMITTED"))
-      .maxByOption(_.stripPrefix("batch-").toLong)
+      .filter(n => n.startsWith("batch-") && n.stripPrefix("batch-").forall(_.isDigit))
+      .sortBy(n => -n.stripPrefix("batch-").toLong)
+      .find(n => store.exists(s"$root/$n/_COMMITTED"))
     spark.read.parquet(s"$root/${last.getOrElse(
       sys.error(s"readCommitted: no committed batch under $root"))}")
   }
@@ -229,7 +231,7 @@ object StreamingStage {
     * frame.
     */
   def streamingPublishExactlyOnce(spark: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft-eo-publish").toString
+    val root = Scratch.dir("graft-eo-publish")
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", StatePartitions.toString)
     val q =
@@ -262,31 +264,13 @@ object StreamingStage {
     * sorts, and a re-run from any checkpoint converges to the same
     * sample because merging top-Bs loses no global winner.
     */
-  private val swsPrevStaged =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val swsPrevChk =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-
-  /** Swap `next` into `ref`, deleting the previous occupant's tree —
-    * the same one-live-dir-per-gate discipline ExtQueries'
-    * retirePrevDir applies to every layout fixture.
-    */
-  private def retirePrev(ref: java.util.concurrent.atomic.AtomicReference[String],
-                         next: String): Unit =
-    Option(ref.getAndSet(next)).foreach(p =>
-      graft.operators.Checkpoints.deleteTree(java.nio.file.Paths.get(p)))
-
   def streamingWeightedSample(spark: SparkSession, dir: String): DataFrame = {
     val B = 100
     val path = s"$dir/documents.parquet"
     val schema = spark.read.parquet(path).schema
     // stage the corpus as 4 arrival files so AvailableNow +
-    // maxFilesPerTrigger=1 delivers a genuinely multi-batch run;
-    // the previous invocation's corpus-sized staged copy and its
-    // checkpoint are retired first (ADVICE r12: repeated bench/verify
-    // runs must not accumulate corpus-sized garbage in /tmp)
-    val staged = java.nio.file.Files.createTempDirectory("graft-sws").toString
-    retirePrev(swsPrevStaged, staged)
+    // maxFilesPerTrigger=1 delivers a genuinely multi-batch run
+    val staged = Scratch.dir("graft-sws")
     spark.read.parquet(path).repartitionByRange(4, col("doc_id"))
       .write.mode("overwrite").parquet(staged)
     val stream = spark.readStream.schema(schema)
@@ -299,8 +283,7 @@ object StreamingStage {
     val state =
       scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long, Double)]
     var nBatches = 0
-    val chk = java.nio.file.Files.createTempDirectory("graft-sws-chk").toString
-    retirePrev(swsPrevChk, chk)
+    val chk = Scratch.dir("graft-sws-chk")
     val q = keyed.writeStream
       .option("checkpointLocation", chk)
       .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], _: Long) =>
@@ -373,19 +356,10 @@ object StreamingStage {
     * over everything, so the hash proves stream → versioned commit →
     * history → read-back in one chain.
     */
-  private val vpubRootPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val vpubStagePrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-
   def streamingVersionedPublish(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Publish
-    // retire the previous invocation's dirs (ADVICE r12's leak class,
-    // backported per VERDICT r13 #3)
-    val root = java.nio.file.Files.createTempDirectory("graft-vpub").toString
-    retirePrev(vpubRootPrev, root)
-    val stage = java.nio.file.Files.createTempDirectory("graft-vpub-src").toString
-    retirePrev(vpubStagePrev, stage)
+    val root = Scratch.dir("graft-vpub")
+    val stage = Scratch.dir("graft-vpub-src")
     val ev = graft.sources.Tables.events(spark, dir)
     def runWave(): Unit = {
       val sch = spark.read.parquet(stage).schema
@@ -445,17 +419,10 @@ object StreamingStage {
     * stale redelivery published nothing. The oracle restates the
     * retained window's aggregates from the raw table.
     */
-  private val vacrpRootPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val vacrpStagePrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-
   def streamingVacuumReplay(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Publish
-    val root = java.nio.file.Files.createTempDirectory("graft-vacrp").toString
-    retirePrev(vacrpRootPrev, root)
-    val stage = java.nio.file.Files.createTempDirectory("graft-vacrp-src").toString
-    retirePrev(vacrpStagePrev, stage)
+    val root = Scratch.dir("graft-vacrp")
+    val stage = Scratch.dir("graft-vacrp-src")
     val ev = graft.sources.Tables.events(spark, dir)
     def runWave(): Unit = {
       val sch = spark.read.parquet(stage).schema
@@ -1408,18 +1375,11 @@ object StreamingStage {
     * table, so the hash proves stream → per-batch fold → merge commit
     * → exactly-once, independent of how events split across batches.
     */
-  private val smrgRootPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val smrgStagePrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-
   def streamingMergeApply(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.VersionedTable
     val spec = VersionedTable.Spec(Seq("user_id"), "user_id", 1 << 13)
-    val troot = java.nio.file.Files.createTempDirectory("graft-smrg").toString
-    retirePrev(smrgRootPrev, troot)
-    val stage = java.nio.file.Files.createTempDirectory("graft-smrg-src").toString
-    retirePrev(smrgStagePrev, stage)
+    val troot = Scratch.dir("graft-smrg")
+    val stage = Scratch.dir("graft-smrg-src")
     val ev = graft.sources.Tables.load(spark, dir, "events")
       .select(col("event_id"), col("user_id"))
     val folds = Map(
@@ -1469,18 +1429,11 @@ object StreamingStage {
     * stream → manifest commit → history → pointer-resolved read, and
     * that the replay published nothing.
     */
-  private val vtingRootPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val vtingStagePrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-
   def streamingVersionedIngest(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.VersionedTable
     val spec = VersionedTable.Spec(Seq("n_chars"), "doc_id", 1 << 13)
-    val troot = java.nio.file.Files.createTempDirectory("graft-vting").toString
-    retirePrev(vtingRootPrev, troot)
-    val stage = java.nio.file.Files.createTempDirectory("graft-vting-src").toString
-    retirePrev(vtingStagePrev, stage)
+    val troot = Scratch.dir("graft-vting")
+    val stage = Scratch.dir("graft-vting-src")
     val d = graft.sources.Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
     def runWave(): Unit = {
@@ -1517,17 +1470,6 @@ object StreamingStage {
     }.reduce(_.unionByName(_))
   }
 
-  private val feedSourcePrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val feedSourceChkPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val t2tBronzePrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val t2tSilverPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val t2tChkPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-
   /** The MEDALLION HOP (`streaming_table_to_table`): bronze → silver
     * as one continuously-maintained pipeline — the composition a
     * lakehouse user actually deploys, built ENTIRELY from this repo's
@@ -1555,12 +1497,9 @@ object StreamingStage {
     val sSpec = VersionedTable.Spec(Seq("chars_bin"), "doc_id", 1 << 13)
     val d = graft.sources.Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val bronze = java.nio.file.Files.createTempDirectory("graft-t2t-b").toString
-    retirePrev(t2tBronzePrev, bronze)
-    val silver = java.nio.file.Files.createTempDirectory("graft-t2t-s").toString
-    retirePrev(t2tSilverPrev, silver)
-    val chk = java.nio.file.Files.createTempDirectory("graft-t2t-chk").toString
-    retirePrev(t2tChkPrev, chk)
+    val bronze = Scratch.dir("graft-t2t-b")
+    val silver = Scratch.dir("graft-t2t-s")
+    val chk = Scratch.dir("graft-t2t-chk")
     def toSilver(df: DataFrame): DataFrame = df.select(
       col("doc_id"), col("lang"),
       (col("n_chars") - col("n_chars") % 100).as("chars_bin"))
@@ -1620,13 +1559,6 @@ object StreamingStage {
           col("sum_ids"), col("sum_bins")))
   }
 
-  private val autoOptStagedPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val autoOptTablePrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val autoOptChkPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-
   /** AUTO-OPTIMIZE inside the ingest loop (`streaming_auto_optimize`,
     * the Delta auto-compaction posture): a continuous micro-batch
     * ingest fragments a table — one small generation per trigger —
@@ -1654,12 +1586,9 @@ object StreamingStage {
     val spec = VersionedTable.Spec(Seq("n_chars"), "doc_id", 1 << 13)
     val d = graft.sources.Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val staged = java.nio.file.Files.createTempDirectory("graft-ao-s").toString
-    retirePrev(autoOptStagedPrev, staged)
-    val root = java.nio.file.Files.createTempDirectory("graft-ao-t").toString
-    retirePrev(autoOptTablePrev, root)
-    val chk = java.nio.file.Files.createTempDirectory("graft-ao-chk").toString
-    retirePrev(autoOptChkPrev, chk)
+    val staged = Scratch.dir("graft-ao-s")
+    val root = Scratch.dir("graft-ao-t")
+    val chk = Scratch.dir("graft-ao-chk")
     d.repartitionByRange(6, col("doc_id")).write.mode("overwrite").parquet(staged)
     val schema = spark.read.parquet(staged).schema
     var nBatches = 0
@@ -1700,13 +1629,6 @@ object StreamingStage {
         sum(col("n_chars").cast("long")).as("sum_chars"))
   }
 
-  private val goldSilverPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val goldGoldPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val goldChkPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-
   /** The GOLD hop (`streaming_gold_agg`): silver → gold where gold is
     * an AGGREGATE — the per-language (n_docs, Σchars) rollup — kept as
     * its own versioned table and maintained INCREMENTALLY per
@@ -1742,12 +1664,9 @@ object StreamingStage {
     val gSpec = VersionedTable.Spec(Seq("n_docs"), "lang", 1 << 13)
     val d = graft.sources.Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val silver = java.nio.file.Files.createTempDirectory("graft-gold-s").toString
-    retirePrev(goldSilverPrev, silver)
-    val gold = java.nio.file.Files.createTempDirectory("graft-gold-g").toString
-    retirePrev(goldGoldPrev, gold)
-    val chk = java.nio.file.Files.createTempDirectory("graft-gold-chk").toString
-    retirePrev(goldChkPrev, chk)
+    val silver = Scratch.dir("graft-gold-s")
+    val gold = Scratch.dir("graft-gold-g")
+    val chk = Scratch.dir("graft-gold-chk")
     def aggOf(df: DataFrame): DataFrame = df.groupBy("lang")
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_chars").cast("long")).as("sum_chars"))
@@ -1819,13 +1738,6 @@ object StreamingStage {
           col("sum_chars")))
   }
 
-  private val sinkMedSrcPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val sinkMedRepPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val sinkMedChkPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-
   /** The DECLARATIVE medallion hop (`streaming_sink_medallion`,
     * [[graft.sources.TableSinkProvider]]): where E220
     * (`streaming_table_to_table`) folds the feed in user foreachBatch
@@ -1850,12 +1762,9 @@ object StreamingStage {
     val spec = VersionedTable.Spec(Seq("n_chars"), "doc_id", 1 << 13)
     val d = graft.sources.Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val src = java.nio.file.Files.createTempDirectory("graft-sm-src").toString
-    retirePrev(sinkMedSrcPrev, src)
-    val replica = java.nio.file.Files.createTempDirectory("graft-sm-rep").toString
-    retirePrev(sinkMedRepPrev, replica)
-    val chk = java.nio.file.Files.createTempDirectory("graft-sm-chk").toString
-    retirePrev(sinkMedChkPrev, chk)
+    val src = Scratch.dir("graft-sm-src")
+    val replica = Scratch.dir("graft-sm-rep")
+    val chk = Scratch.dir("graft-sm-chk")
     val v1 = VersionedTable.create(spark, d.filter(col("doc_id") % 3 === 0),
       src, spec)
     // replica bootstraps from source v1, watermark v0 (the E220
@@ -1902,13 +1811,6 @@ object StreamingStage {
       .unionByName(aggOf(VersionedTable.read(spark, src), "2_source"))
   }
 
-  private val snapSrcPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val snapRepPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val snapChkPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-
   /** FROM-SCRATCH replication via the initial snapshot
     * (`streaming_feed_snapshot`): `startingVersion=snapshot` makes the
     * feed source emit the table's CURRENT content as batch 0 (the
@@ -1934,12 +1836,9 @@ object StreamingStage {
     val spec = VersionedTable.Spec(Seq("n_chars"), "doc_id", 1 << 13)
     val d = graft.sources.Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val src = java.nio.file.Files.createTempDirectory("graft-snap-s").toString
-    retirePrev(snapSrcPrev, src)
-    val replica = java.nio.file.Files.createTempDirectory("graft-snap-r").toString
-    retirePrev(snapRepPrev, replica)
-    val chk = java.nio.file.Files.createTempDirectory("graft-snap-c").toString
-    retirePrev(snapChkPrev, chk)
+    val src = Scratch.dir("graft-snap-s")
+    val replica = Scratch.dir("graft-snap-r")
+    val chk = Scratch.dir("graft-snap-c")
     // two commits BEFORE the stream exists — only a snapshot start
     // can carry them to a from-scratch consumer
     VersionedTable.create(spark, d.filter(col("doc_id") % 3 === 0), src, spec)
@@ -1986,13 +1885,6 @@ object StreamingStage {
     aggOf(VersionedTable.read(spark, replica), "1_replica")
       .unionByName(aggOf(VersionedTable.read(spark, src), "2_source"))
   }
-
-  private val goldMmSilverPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val goldMmGoldPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val goldMmChkPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** MIN/MAX in the gold MV (`streaming_gold_agg_minmax`, VERDICT r13
     * frontier gap #4): a delete cannot FOLD out of a MIN/MAX — the
@@ -2117,12 +2009,9 @@ object StreamingStage {
     val gSpec = VersionedTable.Spec(Seq("n_docs"), "lang", 1 << 13)
     val d = graft.sources.Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val silver = java.nio.file.Files.createTempDirectory("graft-goldmm-s").toString
-    retirePrev(goldMmSilverPrev, silver)
-    val gold = java.nio.file.Files.createTempDirectory("graft-goldmm-g").toString
-    retirePrev(goldMmGoldPrev, gold)
-    val chk = java.nio.file.Files.createTempDirectory("graft-goldmm-chk").toString
-    retirePrev(goldMmChkPrev, chk)
+    val silver = Scratch.dir("graft-goldmm-s")
+    val gold = Scratch.dir("graft-goldmm-g")
+    val chk = Scratch.dir("graft-goldmm-chk")
     def aggOf(df: DataFrame): DataFrame = df.groupBy("lang")
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_chars").cast("long")).as("sum_chars"),
@@ -2183,13 +2072,6 @@ object StreamingStage {
           col("sum_chars"), col("min_chars"), col("max_chars")))
   }
 
-  private val feedCvSrcPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val feedCvOutPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val feedCvChkPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-
   /** PER-ROW COMMIT METADATA on the feed
     * (`streaming_feed_commit_versions`, VERDICT r14 #1 — the Delta
     * CDF `_commit_version`/`_commit_timestamp` parity gap): the
@@ -2217,12 +2099,9 @@ object StreamingStage {
     val spec = VersionedTable.Spec(Seq("n_chars"), "doc_id", 1 << 13)
     val d = graft.sources.Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val src = java.nio.file.Files.createTempDirectory("graft-fcv-src").toString
-    retirePrev(feedCvSrcPrev, src)
-    val out = java.nio.file.Files.createTempDirectory("graft-fcv-out").toString
-    retirePrev(feedCvOutPrev, out)
-    val chk = java.nio.file.Files.createTempDirectory("graft-fcv-chk").toString
-    retirePrev(feedCvChkPrev, chk)
+    val src = Scratch.dir("graft-fcv-src")
+    val out = Scratch.dir("graft-fcv-out")
+    val chk = Scratch.dir("graft-fcv-chk")
     val v1 = VersionedTable.create(spark, d.filter(col("doc_id") % 3 === 0),
       src, spec, extraMeta = Map("commit_ts" -> "1000"))
     VersionedTable.append(spark, d.filter(col("doc_id") % 3 === 1), src, spec)
@@ -2263,15 +2142,6 @@ object StreamingStage {
         col("_commit_version_num"))
   }
 
-  private val sinkExpStagePrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val sinkExpBronzePrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val sinkExpQuarPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val sinkExpChkPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-
   /** EXPECTATIONS on the declarative sink
     * (`streaming_sink_expectations` — the DLT quality-gate trio as
     * sink options, the streaming form of the curation funnel's reject
@@ -2297,14 +2167,10 @@ object StreamingStage {
     import graft.operators.VersionedTable
     val d = graft.sources.Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val stage = java.nio.file.Files.createTempDirectory("graft-se-st").toString
-    retirePrev(sinkExpStagePrev, stage)
-    val bronze = java.nio.file.Files.createTempDirectory("graft-se-b").toString + "/t"
-    retirePrev(sinkExpBronzePrev, java.nio.file.Paths.get(bronze).getParent.toString)
-    val quar = java.nio.file.Files.createTempDirectory("graft-se-q").toString + "/t"
-    retirePrev(sinkExpQuarPrev, java.nio.file.Paths.get(quar).getParent.toString)
-    val chk = java.nio.file.Files.createTempDirectory("graft-se-c").toString
-    retirePrev(sinkExpChkPrev, chk)
+    val stage = Scratch.dir("graft-se-st")
+    val bronze = Scratch.dir("graft-se-b") + "/t"
+    val quar = Scratch.dir("graft-se-q") + "/t"
+    val chk = Scratch.dir("graft-se-c")
     d.repartitionByRange(2, col("doc_id"))
       .write.mode("overwrite").parquet(stage)
     def drain(): Unit = {
@@ -2338,13 +2204,6 @@ object StreamingStage {
     shaped(bronze, "1_bronze").unionByName(shaped(quar, "2_quarantine"))
   }
 
-  private val sinkSeqStagePrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val sinkSeqTablePrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val sinkSeqChkPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-
   /** RAW out-of-order CDC through the declarative sink
     * (`streaming_sink_applyseq`, VERDICT r14 #6 — the spec-only
     * applySeq mode under the oracle gate): a shuffled external CDC
@@ -2369,12 +2228,9 @@ object StreamingStage {
     import graft.operators.VersionedTable
     val d = graft.sources.Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val stage = java.nio.file.Files.createTempDirectory("graft-sq-st").toString
-    retirePrev(sinkSeqStagePrev, stage)
-    val table = java.nio.file.Files.createTempDirectory("graft-sq-t").toString + "/t"
-    retirePrev(sinkSeqTablePrev, java.nio.file.Paths.get(table).getParent.toString)
-    val chk = java.nio.file.Files.createTempDirectory("graft-sq-c").toString
-    retirePrev(sinkSeqChkPrev, chk)
+    val stage = Scratch.dir("graft-sq-st")
+    val table = Scratch.dir("graft-sq-t") + "/t"
+    val chk = Scratch.dir("graft-sq-c")
     def cdc(df: DataFrame, seq: Long, op: String): DataFrame =
       df.select(col("doc_id"), col("lang"), col("n_chars"),
         lit(seq).as("seq"), lit(op).as("change_type"))
@@ -2450,10 +2306,8 @@ object StreamingStage {
     val spec = VersionedTable.Spec(Seq("n_chars"), "doc_id", 1 << 13)
     val d = graft.sources.Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val src = java.nio.file.Files.createTempDirectory("graft-feedsrc").toString
-    retirePrev(feedSourcePrev, src)
-    val chk = java.nio.file.Files.createTempDirectory("graft-feedsrc-chk").toString
-    retirePrev(feedSourceChkPrev, chk)
+    val src = Scratch.dir("graft-feedsrc")
+    val chk = Scratch.dir("graft-feedsrc-chk")
     val layout = (df: DataFrame) =>
       df.repartitionByRange(8, col("n_chars"), col("doc_id"))
         .sortWithinPartitions("n_chars")
@@ -2511,13 +2365,6 @@ object StreamingStage {
           col("sum_chars")))
   }
 
-  private val feedEmbSrcPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val feedEmbReplicaPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val feedEmbChkPrev =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-
   /** COMPLEX columns through the streaming feed
     * (`streaming_feed_embeddings`, VERDICT r13 next-round #2): the
     * E227 embedding corpus — `array<float>`, the first real column
@@ -2550,12 +2397,9 @@ object StreamingStage {
     val spec = VersionedTable.Spec(Seq("vec_id"), "vec_id", 1 << 13)
     val e = graft.sources.Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val src = java.nio.file.Files.createTempDirectory("graft-fe-src").toString
-    retirePrev(feedEmbSrcPrev, src)
-    val replica = java.nio.file.Files.createTempDirectory("graft-fe-rep").toString
-    retirePrev(feedEmbReplicaPrev, replica)
-    val chk = java.nio.file.Files.createTempDirectory("graft-fe-chk").toString
-    retirePrev(feedEmbChkPrev, chk)
+    val src = Scratch.dir("graft-fe-src")
+    val replica = Scratch.dir("graft-fe-rep")
+    val chk = Scratch.dir("graft-fe-chk")
     val v1 = VersionedTable.create(spark, e.filter(col("vec_id") % 4 =!= 3),
       src, spec)                                                    // v1
     VersionedTable.append(spark, e.filter(col("vec_id") % 4 === 3), src, spec) // v2
