@@ -5056,46 +5056,44 @@ object ExtQueries {
   }
 
   /** File-level min/max DATA SKIPPING (`layout_stats_pruned_scan`,
-    * [[graft.operators.StatsSpine]]) — the stored-spine form of
-    * Delta/Iceberg log stats, completing the layout family: E118/E161
-    * plan and execute compaction, `layout_zorder` clusters, and this
-    * gate PRUNES. Lineitem is range-laid-out on `l_orderkey` into 16
-    * files (the nightly OPTIMIZE), a one-row-per-file min/max spine is
-    * built in one pass and STORED; the query path reads the spine,
-    * keeps only files whose [min, max] intersects the middle-decile
-    * order-key band [max/5, 3·max/10], and scans just those. The
-    * oracle states the same band filter over the RAW table, so the
-    * layout write, the spine build, the storage round trip, AND the
-    * driver-side file pruning are all load-bearing in the hash match;
-    * StatsSpineSpec asserts the physical claim the hash can't see
-    * (strictly fewer files scanned than written).
+    * [[graft.operators.VersionedTable.prunedRead]]) — the manifest's
+    * per-file stats as Delta/Iceberg keep them in their logs,
+    * completing the layout family: E118/E161 plan and execute
+    * compaction, `layout_zorder` clusters, and this gate PRUNES.
+    * Lineitem is created as a versioned table range-laid-out on
+    * `l_orderkey` into 16 files (the nightly OPTIMIZE); the create
+    * stores a one-row-per-file manifest with min/max per file, and the
+    * query path keeps only files whose [min, max] intersects the
+    * middle-decile order-key band [max/5, 3·max/10] and scans just
+    * those. The oracle states the same band filter over the RAW table,
+    * so the layout write, the manifest build, the storage round trip,
+    * AND the driver-side file pruning are all load-bearing in the hash
+    * match; VersionedTableSpec asserts the physical claim the hash
+    * can't see (strictly fewer files scanned than written).
     *
-    * Scale shape (100 TB): the spine is one row per file (~800k rows
-    * at 128 MB files — a few MB), built by a map-side-combinable
-    * groupBy during the layout pass and folded per batch thereafter
-    * ([[graft.operators.StatsSpine.append]]); each query plans by
-    * scanning the spine, not by listing/footer-reading 800k files,
-    * and a 10%-band query reads ~10% of the data bytes.
+    * Scale shape (100 TB): the manifest is one row per file (~800k
+    * rows at 128 MB files — a few MB), built by a map-side-combinable
+    * groupBy during the layout pass and folded per append thereafter;
+    * each query plans by scanning the manifest, not by listing/footer-
+    * reading 800k files, and a 10%-band query reads ~10% of the data
+    * bytes.
     */
   def layoutStatsPrunedScan(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.StatsSpine
+    import graft.operators.VersionedTable
     val li = Tables.load(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"))
-    val base = Scratch.dir("graft_spine")
-    // nightly layout: range-cluster on the skip column, then store the spine
-    li.repartitionByRange(16, col("l_orderkey"))
-      .sortWithinPartitions("l_orderkey")
-      .write.mode("overwrite").parquet(s"$base/data")
-    StatsSpine.build(s, s"$base/data", Seq("l_orderkey"))
-      .write.mode("overwrite").parquet(s"$base/spine")
+    val root = Scratch.dir("graft_spine")
+    // nightly layout: range-cluster on the skip column, manifest stored
+    VersionedTable.create(s, li, root,
+      VersionedTable.Spec(Seq("l_orderkey"), "l_orderkey", 1 << 10),
+      _.repartitionByRange(16, col("l_orderkey")).sortWithinPartitions("l_orderkey"))
     // query path: band bounds in integer arithmetic (oracle restates
-    // them with DuckDB's `//`), spine-pruned scan, predicate re-applied
-    // (skipping is a superset guarantee)
+    // them with DuckDB's `//`), manifest-pruned scan, predicate
+    // re-applied (skipping is a superset guarantee)
     val maxK = li.agg(max("l_orderkey")).head.getLong(0)
     val lo = maxK / 5
     val hi = (3 * maxK) / 10
-    val spine = s.read.parquet(s"$base/spine")
-    StatsSpine.prunedRead(s, s"$base/data", spine, "l_orderkey", lo, hi)
+    VersionedTable.prunedRead(s, root, "l_orderkey", lo, hi)
       .filter(col("l_orderkey").between(lo, hi))
       .groupBy(col("l_returnflag").as("rf"))
       .agg(count(lit(1)).as("n_rows"),
@@ -5103,85 +5101,79 @@ object ExtQueries {
         sum(round(col("l_quantity") * 100).cast("long")).as("qty_c"))
   }
 
-  /** Bloom-sidecar POINT-LOOKUP skipping (`layout_bloom_pruned_scan`,
-    * [[graft.operators.StatsSpine.buildBloom]]) — the skipping verb
-    * min/max can't serve: documents are laid out in size tiers
-    * (range on `n_chars` — a realistic ingest clustering), so every
-    * file's doc_id [min, max] spans ~the whole domain and the E160
-    * spine prunes nothing; the per-file Bloom sidecar answers "which
-    * files hold THESE doc_ids?" — the planning question a GDPR delete
-    * or a targeted re-annotation asks — touching only true holders
-    * plus ~zero false positives. Keys are query constants, so their
-    * md5 bit positions are computed once on the driver and the spine
-    * probe is pure element_at/shift arithmetic per file row.
+  /** Bloom POINT-LOOKUP skipping (`layout_bloom_pruned_scan`,
+    * [[graft.operators.VersionedTable.joinPrunedRead]] with a bloom
+    * spec) — the skipping verb min/max can't serve: documents are laid
+    * out in size tiers (range on `n_chars` — a realistic ingest
+    * clustering), so every file's doc_id [min, max] spans ~the whole
+    * domain and range skipping prunes nothing; the per-file Bloom
+    * bitmap in the manifest answers "which files hold THESE doc_ids?"
+    * — the planning question a GDPR delete or a targeted re-annotation
+    * asks — touching only true holders plus ~zero false positives. The
+    * lookup ids arrive as a one-column frame and probe the bitmaps
+    * through [[graft.operators.StatsSpine.rosterHolders]]'s position
+    * join.
     *
     * The oracle states the IN-list over the RAW table, so the layout
     * write, the bloom build (exact OR-merge under any task split),
     * the storage round trip, and the no-false-negative probe are all
-    * load-bearing in the hash; StatsSpineSpec pins the physical
+    * load-bearing in the hash; VersionedTableSpec pins the physical
     * claims: min/max keeps ALL files on this layout while the bloom
     * survivor set equals the true holder set.
     *
-    * Scale shape (100 TB): sidecar ≈ 1 KB per 128 MB file (~800 MB
+    * Scale shape (100 TB): bitmaps ≈ 1 KB per 128 MB file (~800 MB
     * for 800k files — one executor's worth, scanned distributed);
     * a k-id lookup reads ≤ k files instead of the table. Sizing rule:
     * mBits ≥ ~13 bits per expected distinct key per file for <0.1% FP.
     */
   def layoutBloomPrunedScan(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.StatsSpine
-    val mBits = 1 << 13
+    import graft.operators.VersionedTable
+    import s.implicits._
+    val spec = VersionedTable.Spec(Seq("n_chars"), "doc_id", 1 << 13)
     val docs = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val base = Scratch.dir("graft_bloomspine")
-    docs.repartitionByRange(16, col("n_chars"), col("doc_id"))
-      .sortWithinPartitions("n_chars")
-      .write.mode("overwrite").parquet(s"$base/data")
-    StatsSpine.buildBloom(s, s"$base/data", "doc_id", mBits)
-      .write.mode("overwrite").parquet(s"$base/bloom")
+    val root = Scratch.dir("graft_bloomspine")
+    VersionedTable.create(s, docs, root, spec,
+      _.repartitionByRange(16, col("n_chars"), col("doc_id")).sortWithinPartitions("n_chars"))
     // the lookup set: 5 ids spread across the domain, stated by the
     // oracle as (i*max)//7 — doc_ids are dense so they all exist
     val mk = docs.agg(max("doc_id")).head.getLong(0)
     val ids = (1L to 5L).map(i => (i * mk) / 7)
-    val spine = s.read.parquet(s"$base/bloom")
-    StatsSpine.prunedReadByKeys(s, s"$base/data", spine,
-        ids.map(_.toString), mBits)
+    VersionedTable.joinPrunedRead(s, root, "doc_id", ids.toDF("doc_id"), "doc_id",
+        bloomSpec = Some(spec))
       .filter(col("doc_id").isin(ids: _*))
       .select(col("doc_id"), col("lang"), col("n_chars"))
   }
 
   /** Roster-DataFrame targeted delete (`layout_bloom_roster_delete`,
-    * VERDICT r10 #4): the GDPR-delete verb at ROSTER scale — the
-    * doomed-id set is a DataFrame (here every `doc_id % 43 == 0`, a
-    * few percent of the corpus scattered across every size-tier
-    * file), never a driver literal. [[StatsSpine.rosterHolders]]
-    * probes the bloom sidecar with a distributed position join,
-    * [[StatsSpine.deleteRewriteRoster]] rewrites only holder files
-    * with a left-anti join against the roster, and both sidecars fold
-    * (holder rows retracted, fresh-generation rows appended). The
-    * gate reads the post-delete table THROUGH THE FOLDED MANIFEST —
-    * so the oracle's aggregate over `doc_id % 43 <> 0` proves the
-    * probe found every holder, the rewrite dropped exactly the roster
-    * rows, and the manifest names exactly the surviving file set.
+    * [[graft.operators.VersionedTable.deleteRoster]]): the GDPR-delete
+    * verb at ROSTER scale — the doomed-id set is a DataFrame (here
+    * every `doc_id % 43 == 0`, a few percent of the corpus scattered
+    * across every size-tier file), never a driver literal. The delete
+    * probes the manifest's bloom bitmaps with a distributed position
+    * join, rewrites only holder files with a left-anti join against
+    * the roster, and commits a manifest with holder rows retracted and
+    * fresh-generation rows added. The gate reads the post-delete table
+    * THROUGH THE COMMITTED MANIFEST — so the oracle's aggregate over
+    * `doc_id % 43 <> 0` proves the probe found every holder, the
+    * rewrite dropped exactly the roster rows, and the manifest names
+    * exactly the surviving file set.
     *
     * Scale shape (100 TB): probe ∝ roster×files (distributed join,
     * no data bytes), rewrite ∝ holder files only, manifest fold ∝
     * file count — the corpus is read only where it must be rewritten.
     */
   def layoutBloomRosterDelete(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.StatsSpine
-    val mBits = 1 << 13
+    import graft.operators.VersionedTable
+    val spec = VersionedTable.Spec(Seq("n_chars"), "doc_id", 1 << 13)
     val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val base = Scratch.dir("graft_bloomroster")
-    d.repartitionByRange(16, col("n_chars"), col("doc_id"))
-      .sortWithinPartitions("n_chars")
-      .write.mode("overwrite").parquet(s"$base/data")
-    val stats0 = StatsSpine.build(s, s"$base/data", Seq("n_chars"))
-    val bloom0 = StatsSpine.buildBloom(s, s"$base/data", "doc_id", mBits)
-    val roster = d.filter(col("doc_id") % 43 === 0).select(col("doc_id"))
-    val (stats1, _) = StatsSpine.deleteRewriteRoster(s, stats0, bloom0,
-      "doc_id", roster, mBits, Seq("n_chars"), s"$base/gen1")
-    StatsSpine.readManifest(s, s"$base/data", stats1)
+    val root = Scratch.dir("graft_bloomroster")
+    VersionedTable.create(s, d, root, spec,
+      _.repartitionByRange(16, col("n_chars"), col("doc_id")).sortWithinPartitions("n_chars"))
+    VersionedTable.deleteRoster(s, root, spec,
+      d.filter(col("doc_id") % 43 === 0).select(col("doc_id")))
+    VersionedTable.read(s, root)
       .agg(count(lit(1)).as("n_docs"),
         sum(col("doc_id")).as("sum_ids"),
         sum(col("n_chars").cast("long")).as("sum_chars"))

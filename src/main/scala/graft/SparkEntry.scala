@@ -729,12 +729,12 @@ object SparkEntry {
     // RAG query path (stored BM25 leg + stored IVF leg + fusion);
     // the in-flow sim_hybrid_rrf row keeps timing the raw derivation
     "sim_hybrid_stored_rrf",
-    // r16: data skipping — times the full verb (range layout + spine
-    // build + store + spine-pruned band scan), the nightly-OPTIMIZE +
-    // query cycle a production table pays
+    // r16: data skipping — times the full verb (range layout +
+    // manifest build + commit + manifest-pruned band scan), the
+    // nightly-OPTIMIZE + query cycle a production table pays
     "layout_stats_pruned_scan",
-    // r16: bloom-sidecar point lookup — layout + bloom build + store
-    // + probe, the delete-planning cycle
+    // r16: bloom point lookup — layout + manifest build + commit +
+    // bloom probe, the delete-planning cycle
     "layout_bloom_pruned_scan",
     // r17: roster-frame targeted delete — probe join + holder rewrite
     // + manifest fold, the GDPR-delete execution cycle
@@ -2411,7 +2411,7 @@ object SparkEntry {
         |  CAST(0 AS BIGINT) AS n_markers_after,
         |  'v00005' AS next_version""".stripMargin,
     // the band filter stated over the RAW table — the Spark side's
-    // layout write, stored spine, and file pruning must reproduce it
+    // layout write, stored manifest, and file pruning must reproduce it
     "layout_stats_pruned_scan" ->
       """WITH m AS (SELECT max(l_orderkey) AS mk FROM lineitem)
         |SELECT l_returnflag AS rf,
@@ -2422,7 +2422,7 @@ object SparkEntry {
         |WHERE l_orderkey BETWEEN mk // 5 AND (3 * mk) // 10
         |GROUP BY 1""".stripMargin,
     // the IN-list stated over the RAW table — the Spark side's size-
-    // tier layout, stored bloom sidecar, and no-false-negative file
+    // tier layout, stored bloom bitmaps, and no-false-negative file
     // probe must reproduce it
     "layout_bloom_pruned_scan" ->
       """WITH m AS (SELECT max(doc_id) AS mk FROM documents)
@@ -2431,7 +2431,7 @@ object SparkEntry {
         |WHERE doc_id IN ((1 * mk) // 7, (2 * mk) // 7, (3 * mk) // 7,
         |                 (4 * mk) // 7, (5 * mk) // 7)""".stripMargin,
     // the surviving corpus stated over the RAW table — the Spark
-    // side's roster probe join, holder rewrite, and folded manifest
+    // side's roster probe join, holder rewrite, and committed manifest
     // must reproduce it (a missed holder file leaks rows into n_docs,
     // a stale manifest row double-reads a rewritten file)
     "layout_bloom_roster_delete" ->

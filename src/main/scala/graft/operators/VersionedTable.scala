@@ -1,18 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** STATS + BLOOM SIDECARS composed with WAP versioning (VERDICT r10
-  * #3): [[StatsSpine]] gave the repo file-level skipping and
-  * [[Publish]] gave it atomic version pointers, but the spine was
-  * rebuilt per invocation from a directory — here they are joined
-  * into the Delta/Iceberg table model the scaladocs argue for: the
-  * MANIFEST IS THE TABLE. Each published version is one small parquet
-  * table with a row per live data file — row count, per-column
-  * min/max, AND the file's Bloom bitmap (one manifest, both sidecar
-  * projections, built in ONE scan of the files it describes) — and
-  * every verb folds it:
+/** STATS + BLOOM SIDECARS composed with WAP versioning: the engine's
+  * one file-skipping format. [[Publish]] gives atomic version pointers
+  * and [[StatsSpine]] the skipping predicates; here they form the
+  * Delta/Iceberg table model: the MANIFEST IS THE TABLE. Each
+  * published version is one small parquet table with a row per live
+  * data file — row count, per-column min/max, AND the file's Bloom
+  * bitmap (one manifest, both sidecar projections, built in ONE scan
+  * of the files it describes) — and every verb folds it:
   *
   *  - [[create]]: lay out + write generation 0, publish manifest v1;
   *  - [[append]]: write ONLY the batch generation, manifest = current
@@ -1528,7 +1526,7 @@ object VersionedTable {
   def prunedReadBands(s: SparkSession, root: String,
                       bands: Seq[(String, Any, Any)]): DataFrame = {
     val h = head(root)
-    logicalView(readFiles(s, bands.foldLeft(h.manifest(s)) {
+    logicalView(readFiles(s, h, bands.foldLeft(h.manifest(s)) {
       case (m, (c, lo, hi)) => StatsSpine.survivors(m, c, lo, hi)
     }), h.meta)
   }
@@ -1602,7 +1600,7 @@ object VersionedTable {
   def partitionPrunedRead(s: SparkSession, root: String,
                           c: String, v: Any): DataFrame = {
     val h = head(root)
-    logicalView(readFiles(s, ptSurvivors(s, h, c, Seq(v), None)), h.meta)
+    logicalView(readFiles(s, h, ptSurvivors(s, h, c, Seq(v), None)), h.meta)
   }
 
   /** HIDDEN-PARTITION BAND READ: `c BETWEEN lo AND hi` pruned through
@@ -1617,7 +1615,7 @@ object VersionedTable {
   def partitionPrunedBandRead(s: SparkSession, root: String,
                               c: String, lo: Any, hi: Any): DataFrame = {
     val h = head(root)
-    logicalView(readFiles(s, ptSurvivors(s, h, c, Nil, Some((lo, hi)))), h.meta)
+    logicalView(readFiles(s, h, ptSurvivors(s, h, c, Nil, Some((lo, hi)))), h.meta)
   }
 
   /** The surviving file names of a transform-pruned point lookup —
@@ -1648,7 +1646,7 @@ object VersionedTable {
       s"partitionPrunedIn: ${values.length} probe values — a roster this " +
         "large belongs in a semi-join, not a manifest predicate")
     val h = head(root)
-    logicalView(readFiles(s, ptSurvivors(s, h, c, values, None)), h.meta)
+    logicalView(readFiles(s, h, ptSurvivors(s, h, c, values, None)), h.meta)
   }
 
   /** RUNTIME FILE PRUNING FROM A JOIN — the Delta dynamic-file-pruning
@@ -1695,8 +1693,7 @@ object VersionedTable {
       dt.fold(k)(t => k.select(col("k").cast(t).as("k"))).distinct()
     }
     // one dim pass for the band scalars; doubles as the non-empty gate
-    // every later layer relies on (an empty dim joins to nothing — a
-    // prune of "no files" would violate readFiles' contract instead)
+    // the band layer relies on (an empty dim has no bounds to prune by)
     val bounds = keys.agg(min(col("k")), max(col("k"))).head()
     require(!bounds.isNullAt(0),
       "joinPrunedRead: the dim side carries no join keys")
@@ -1731,7 +1728,7 @@ object VersionedTable {
       imaged.filter(col("bloom").isNull)
         .unionByName(imaged.join(hits, Seq("file"), "left_semi"))
     }
-    logicalView(readFiles(s, pruned), h.meta)
+    logicalView(readFiles(s, h, pruned), h.meta)
   }
 
   /** METADATA-ONLY aggregates: COUNT(*), MIN(c), MAX(c) answered from
@@ -1841,7 +1838,7 @@ object VersionedTable {
         .groupBy(names.map(n => col(s"min_$n").as(n)): _*)
         .agg(sum(col("n_rows")).as("n_live"))
       if (loose.isEmpty) fromManifest
-      else fromManifest.unionByName(scanOf(readFiles(s, loose)))
+      else fromManifest.unionByName(scanOf(readFiles(s, h, loose)))
         .groupBy(names.map(col(_)): _*)
         .agg(sum(col("n_live")).as("n_live"))
     }
@@ -2004,12 +2001,18 @@ object VersionedTable {
   }
 
   /** [[readEntries]] of the rows of a DATA-DEPENDENT manifest frame (a
-    * stats- or bloom-pruned survivor set): its entries are collected
-    * first. Entry lists already on the driver go to [[readEntries]].
+    * stats- or bloom-pruned survivor set of head `h`): its entries are
+    * collected first. No survivor reads as an empty frame under the
+    * head's schema — a prune that drops every file is an answer, not
+    * an error. Entry lists already on the driver go to [[readEntries]].
     */
-  private def readFiles(s: SparkSession, manifestRows: DataFrame): DataFrame =
-    readEntries(s, manifestRows.select("file", "dv_path").collect()
-      .map(r => (r.getString(0), Option(r.getString(1)))))
+  private def readFiles(s: SparkSession, h: Head, manifestRows: DataFrame): DataFrame = {
+    val es = manifestRows.select("file", "dv_path").collect()
+      .map(r => (r.getString(0), Option(r.getString(1))))
+    if (es.nonEmpty) readEntries(s, es)
+    else s.createDataFrame(java.util.Collections.emptyList[Row](),
+      Footers.mergedSchemaOf(s, h.entries(s).map(_._1).toSeq))
+  }
 
   /** Resolve manifest entries to live data: list exactly their files
     * (schema MERGED across generations — an evolved append's new

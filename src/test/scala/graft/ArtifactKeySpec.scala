@@ -13,7 +13,7 @@ import graft.operators.ArtifactKey
 class ArtifactKeySpec extends SparkSpec {
 
   test("corpusKey is stable, manifest-sensitive, and pointer-backed when published") {
-    val base = java.nio.file.Files.createTempDirectory("graft-akey").toString
+    val base = tempDir("graft-akey").toString
     import spark.implicits._
     Seq((1L, "a"), (2L, "b")).toDF("k", "v").write.parquet(s"$base/t.parquet")
     val k1 = ArtifactKey.corpusKey(s"$base/t.parquet")

@@ -22,7 +22,7 @@ class AutoOptimizeSpec extends SparkSpec {
   }
 
   test("batchId watermark inherits through optimize/recluster/constraint commits") {
-    val root = java.nio.file.Files.createTempDirectory("graft-ao-wm").toString
+    val root = tempDir("graft-ao-wm").toString
     assert(StreamingStage.appendVersionedTable(rows(0, 50), root, spec, 0L))
     assert(StreamingStage.appendVersionedTable(rows(50, 100), root, spec, 1L))
     // three maintenance commits between ingest commits — each used to
@@ -42,7 +42,7 @@ class AutoOptimizeSpec extends SparkSpec {
   }
 
   test("the plan-consult -> compact loop is idempotent and content-identical") {
-    val root = java.nio.file.Files.createTempDirectory("graft-ao-id").toString
+    val root = tempDir("graft-ao-id").toString
     (0 until 5).foreach { i =>
       StreamingStage.appendVersionedTable(
         rows(i * 20L, i * 20L + 20L), root, spec, i.toLong)

@@ -20,7 +20,7 @@ class BranchWapSpec extends SparkSpec {
   }
 
   private def tmp(p: String): String =
-    java.nio.file.Files.createTempDirectory(p).toString
+    tempDir(p).toString
 
   test("fast-forward publishes the branch head; time travel to the base survives") {
     val main = tmp("graft-wap-m")

@@ -14,7 +14,7 @@ class BucketedStagingSpec extends SparkSpec {
     val v = Pipeline.stageAndPersist(spark,
       Derive.stgAccounts(spark, sfSmoke), Derive.stgActivities(spark, sfSmoke),
       tieCols = Seq("src_seq"))
-    val base = java.nio.file.Files.createTempDirectory("graft_bucketed").toString
+    val base = tempDir("graft_bucketed").toString
     Pipeline.writeStagedBucketed(v, base, nBuckets = 4, prefix = "t_staged")
 
     // expected result computed in the ORIGINAL session from the live views

@@ -17,13 +17,13 @@ class CheckpointsSpec extends SparkSpec {
 
   private def tmp(tag: String): (String, String) = (
     s"graft_ckpt_${tag}_" + java.util.UUID.randomUUID().toString.replace("-", ""),
-    java.nio.file.Files.createTempDirectory(s"graft-ckpt-$tag").toString)
+    tempDir(s"graft-ckpt-$tag").toString)
 
   private val graph = Seq(("a", "b"), ("b", "a"), ("a", "c"), ("c", "a"),
     ("b", "c"), ("c", "b"), ("c", "d"), ("d", "c"))
 
   private def vtRoot(): String = {
-    val root = java.nio.file.Files.createTempDirectory("graft-ckpt-vt").toString
+    val root = tempDir("graft-ckpt-vt").toString
     VersionedTable.create(spark, (0L until 40L).map(i => (i, i % 4, s"v$i"))
       .toDF("k", "g", "v"), root, VersionedTable.Spec(Seq("k"), "k", 1 << 10))
     root

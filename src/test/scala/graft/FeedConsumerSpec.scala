@@ -15,8 +15,8 @@ class FeedConsumerSpec extends SparkSpec {
 
   test("paginated catch-up: a backlog folds in bounded bites, converging exactly") {
     import spark.implicits._
-    val tableRoot = java.nio.file.Files.createTempDirectory("graft-fc-t").toString
-    val derivedRoot = java.nio.file.Files.createTempDirectory("graft-fc-d").toString
+    val tableRoot = tempDir("graft-fc-t").toString
+    val derivedRoot = tempDir("graft-fc-d").toString
     val layout = (df: DataFrame) =>
       df.repartitionByRange(2, col("k")).sortWithinPartitions("k")
     def count(df: DataFrame): DataFrame = df.agg(sum(col("k")).as("sum_k"))
@@ -73,8 +73,8 @@ class FeedConsumerSpec extends SparkSpec {
 
   test("consumer crosses an UPDATE commit (writer-side CDC) and skips property-only windows") {
     import spark.implicits._
-    val tableRoot = java.nio.file.Files.createTempDirectory("graft-fc-u-t").toString
-    val derivedRoot = java.nio.file.Files.createTempDirectory("graft-fc-u-d").toString
+    val tableRoot = tempDir("graft-fc-u-t").toString
+    val derivedRoot = tempDir("graft-fc-u-d").toString
     def wake() = FeedConsumer.advance(
       spark, tableRoot, derivedRoot, sumState, foldSum)
     VersionedTable.create(spark,
@@ -105,8 +105,8 @@ class FeedConsumerSpec extends SparkSpec {
 
   test("caller-provided layout: a bucketed derived artifact keeps its file count through folds") {
     import spark.implicits._
-    val tableRoot = java.nio.file.Files.createTempDirectory("graft-fc-l-t").toString
-    val derivedRoot = java.nio.file.Files.createTempDirectory("graft-fc-l-d").toString
+    val tableRoot = tempDir("graft-fc-l-t").toString
+    val derivedRoot = tempDir("graft-fc-l-d").toString
     // index-sized derived state: the live rows themselves, bucketed by
     // key range — the artifact a query path would probe per-bucket
     def ident(df: DataFrame): DataFrame = df.select("k", "v")
@@ -143,8 +143,8 @@ class FeedConsumerSpec extends SparkSpec {
 
   test("consumer racing OCC writers: no lost windows, no double-applies") {
     import spark.implicits._
-    val tableRoot = java.nio.file.Files.createTempDirectory("graft-fc-o-t").toString
-    val derivedRoot = java.nio.file.Files.createTempDirectory("graft-fc-o-d").toString
+    val tableRoot = tempDir("graft-fc-o-t").toString
+    val derivedRoot = tempDir("graft-fc-o-d").toString
     def wake() = FeedConsumer.advance(
       spark, tableRoot, derivedRoot, sumState, foldSum)
     VersionedTable.create(spark,

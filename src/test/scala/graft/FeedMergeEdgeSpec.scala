@@ -24,7 +24,7 @@ class FeedMergeEdgeSpec extends SparkSpec {
     */
   private def table(): String = {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-feed-edge").toString + "/t"
+    val root = tempDir("graft-feed-edge").toString + "/t"
     VersionedTable.create(spark, (0L until 200L).map(i => (i, i % 10)).toDF("id", "n"),
       root, spec, layout = _.repartitionByRange(4, col("id")).sortWithinPartitions("id"))
     root
@@ -154,7 +154,7 @@ class FeedMergeEdgeSpec extends SparkSpec {
     // a 64-bit bitmap is near full, so every file probes as a holder
     val narrow = spec.copy(mBits = 64)
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-feed-edge").toString + "/t"
+    val root = tempDir("graft-feed-edge").toString + "/t"
     VersionedTable.create(spark, (0L until 200L).map(i => (i, i % 10)).toDF("id", "n"),
       root, narrow, layout = _.repartitionByRange(4, col("id")))
     val v2 = VersionedTable.deleteRosterDV(spark, root, narrow, ids(1000L until 1005L: _*))

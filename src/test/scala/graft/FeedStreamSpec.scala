@@ -42,8 +42,8 @@ class FeedStreamSpec extends SparkSpec {
   }
 
   test("feed source streams version windows; restart from checkpoint consumes only new commits") {
-    val root = java.nio.file.Files.createTempDirectory("graft-fs-t").toString
-    val chk = java.nio.file.Files.createTempDirectory("graft-fs-chk").toString
+    val root = tempDir("graft-fs-t").toString
+    val chk = tempDir("graft-fs-chk").toString
     val v1 = VersionedTable.create(spark, rows(0, 100), root, spec)
     import spark.implicits._
     // three data commits → with maxVersionsPerTrigger=1, three batches
@@ -89,8 +89,8 @@ class FeedStreamSpec extends SparkSpec {
   }
 
   test("feed source default start is the head: an idle table yields zero rows, a commit streams") {
-    val root = java.nio.file.Files.createTempDirectory("graft-fs-h").toString
-    val chk1 = java.nio.file.Files.createTempDirectory("graft-fs-hc1").toString
+    val root = tempDir("graft-fs-h").toString
+    val chk1 = tempDir("graft-fs-hc1").toString
     VersionedTable.create(spark, rows(0, 50), root, spec)
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, String)]
     val batches = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -119,8 +119,8 @@ class FeedStreamSpec extends SparkSpec {
   }
 
   test("spool custody: vacuum reclaims windows every registered consumer committed past; a lagging checkpoint's window survives") {
-    val root = java.nio.file.Files.createTempDirectory("graft-fs-vc").toString
-    val chk = java.nio.file.Files.createTempDirectory("graft-fs-vcc").toString
+    val root = tempDir("graft-fs-vc").toString
+    val chk = tempDir("graft-fs-vcc").toString
     val v1 = VersionedTable.create(spark, rows(0, 60), root, spec)
     VersionedTable.append(spark, rows(60, 90), root, spec)   // v2
     VersionedTable.append(spark, rows(90, 120), root, spec)  // v3
@@ -144,8 +144,8 @@ class FeedStreamSpec extends SparkSpec {
     // floor is min over consumers, so w_v3_v4 (end past the lagger's
     // commit — its restart could re-plan it) must survive
     import spark.implicits._
-    val lagging = java.nio.file.Files.createTempDirectory("graft-fs-lag").toString
-    val caught = java.nio.file.Files.createTempDirectory("graft-fs-cau").toString
+    val lagging = tempDir("graft-fs-lag").toString
+    val caught = tempDir("graft-fs-cau").toString
     VersionedTable.create(spark, rows(0, 5), lagging, spec,
       extraMeta = Map("applied_upto" -> "v00003"))
     VersionedTable.create(spark, rows(0, 5), caught, spec,
@@ -164,8 +164,8 @@ class FeedStreamSpec extends SparkSpec {
 
   test("complex column types stream through the feed: array<float>, array<string>, timestamp, decimal") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-fs-cx").toString
-    val chk = java.nio.file.Files.createTempDirectory("graft-fs-cxc").toString
+    val root = tempDir("graft-fs-cx").toString
+    val chk = tempDir("graft-fs-cxc").toString
     def mk(lo: Long, hi: Long) = (lo until hi).map { i =>
       (i, Array(i.toFloat, (i * 2).toFloat, 0.5f),
         Seq(s"t$i", s"u${i % 7}"),
@@ -211,8 +211,8 @@ class FeedStreamSpec extends SparkSpec {
   }
 
   test("startingTimestamp streams changes after the version the table had at that instant") {
-    val root = java.nio.file.Files.createTempDirectory("graft-fs-ts").toString
-    val chk = java.nio.file.Files.createTempDirectory("graft-fs-tsc").toString
+    val root = tempDir("graft-fs-ts").toString
+    val chk = tempDir("graft-fs-tsc").toString
     VersionedTable.create(spark, rows(0, 10), root, spec,
       extraMeta = Map("commit_ts" -> "100"))
     VersionedTable.append(spark, rows(10, 20), root, spec,
@@ -249,13 +249,13 @@ class FeedStreamSpec extends SparkSpec {
   }
 
   test("maxBytesPerTrigger packs versions to the byte budget; a single over-budget commit still admits") {
-    val root = java.nio.file.Files.createTempDirectory("graft-fs-by").toString
+    val root = tempDir("graft-fs-by").toString
     val v1 = VersionedTable.create(spark, rows(0, 50), root, spec)
     VersionedTable.append(spark, rows(50, 60), root, spec)  // v2
     VersionedTable.append(spark, rows(60, 70), root, spec)  // v3
     VersionedTable.append(spark, rows(70, 120), root, spec) // v4
     def drainBudget(budget: Long): Seq[Long] = {
-      val chk = java.nio.file.Files.createTempDirectory("graft-fs-byc").toString
+      val chk = tempDir("graft-fs-byc").toString
       val perBatch = scala.collection.mutable.ArrayBuffer.empty[Long]
       val q = spark.readStream.format("graft.sources.FeedStreamProvider")
         .option("root", root).option("startingVersion", v1)
@@ -289,8 +289,8 @@ class FeedStreamSpec extends SparkSpec {
   }
 
   test("startingVersion=snapshot: batch 0 is the current content as inserts; a restart never re-emits it") {
-    val root = java.nio.file.Files.createTempDirectory("graft-fs-sn").toString
-    val chk = java.nio.file.Files.createTempDirectory("graft-fs-snc").toString
+    val root = tempDir("graft-fs-sn").toString
+    val chk = tempDir("graft-fs-snc").toString
     VersionedTable.create(spark, rows(0, 30), root, spec)
     VersionedTable.append(spark, rows(30, 40), root, spec)
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, String)]
@@ -313,8 +313,8 @@ class FeedStreamSpec extends SparkSpec {
 
   test("source schema evolution between drains: the next run picks up the evolved schema from its stream-start inference") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-fs-ev").toString
-    val chk = java.nio.file.Files.createTempDirectory("graft-fs-evc").toString
+    val root = tempDir("graft-fs-ev").toString
+    val chk = tempDir("graft-fs-evc").toString
     val v1 = VersionedTable.create(spark, rows(0, 20), root, spec)
     VersionedTable.append(spark, rows(20, 30), root, spec) // v2
     def drainRows(shape: org.apache.spark.sql.Row => Seq[Any]): Seq[Seq[Any]] = {
@@ -356,7 +356,7 @@ class FeedStreamSpec extends SparkSpec {
     // group whose rows ALL delete — the n_docs -> 0 path the gate's
     // fixture can't force: the group must vanish from gold's head
     val gSpec = VersionedTable.Spec(Seq("n_docs"), "lang", 1 << 13)
-    val gold = java.nio.file.Files.createTempDirectory("graft-gold-dr").toString
+    val gold = tempDir("graft-gold-dr").toString
     VersionedTable.create(spark,
       Seq(("fi", 2L, 30L), ("sv", 1L, 7L)).toDF("lang", "n_docs", "sum_chars"),
       gold, gSpec, extraMeta = Map("applied_upto" -> "v0"))

@@ -7,8 +7,9 @@ import scala.jdk.CollectionConverters._
 /** Leak gate for gate fixtures: a query's second call must leave none of
   * its first call's fixture directories on disk and none of its first
   * call's catalog tables registered. Rows cover the gates that once
-  * never retired their fixture plus one gate per retire pattern
-  * (directory only, directory plus table, several roots, streaming).
+  * never retired their fixture, the bloom file-skipping gates, and one
+  * gate per retire pattern (directory only, directory plus table,
+  * several roots, streaming).
   *
   * Fixture directories are matched by the query's fixture prefixes, in
   * `java.io.tmpdir` and under the per-JVM root. Test JVMs share the temp
@@ -33,6 +34,9 @@ class FixtureLeakSpec extends SparkSpec {
     "source_partitioned_roundtrip" -> Seq("graft_part_rt"),
     "source_schema_evolution" -> Seq("graft_schema_evo"),
     "streaming_publish_exactly_once" -> Seq("graft-eo-publish"),
+    // the bloom file-skipping gates
+    "layout_bloom_pruned_scan" -> Seq("graft_bloomspine"),
+    "layout_bloom_roster_delete" -> Seq("graft_bloomroster"),
     // one row per retire pattern
     "layout_stats_pruned_scan" -> Seq("graft_spine"),
     "sim_ivf_append_topk" -> Seq("graft_ivf_app"),

@@ -22,7 +22,7 @@ class HiddenPartitionSpec extends SparkSpec {
   }
 
   test("bucket point lookup prunes to ~1/N of the files; result equals the exact filter") {
-    val root = java.nio.file.Files.createTempDirectory("graft-hp").toString
+    val root = tempDir("graft-hp").toString
     VersionedTable.create(spark, rows(0, 800), root, spec,
       layout = PartitionTransform.clusterLayout(8, Seq(bucket)),
       transforms = Seq(bucket))
@@ -40,7 +40,7 @@ class HiddenPartitionSpec extends SparkSpec {
   }
 
   test("clusterLayout keeps per-file bucket stats tight (contiguous narrow spans)") {
-    val root = java.nio.file.Files.createTempDirectory("graft-hp-t").toString
+    val root = tempDir("graft-hp-t").toString
     VersionedTable.create(spark, rows(0, 800), root, spec,
       layout = PartitionTransform.clusterLayout(8, Seq(bucket)),
       transforms = Seq(bucket))
@@ -54,7 +54,7 @@ class HiddenPartitionSpec extends SparkSpec {
   }
 
   test("partition-spec evolution: old generations survive unpruned (NULL-keep), new ones prune") {
-    val root = java.nio.file.Files.createTempDirectory("graft-hp-e").toString
+    val root = tempDir("graft-hp-e").toString
     // v1: no partitioning at all
     VersionedTable.create(spark, rows(0, 400), root, spec,
       layout = _.repartition(4))
@@ -89,7 +89,7 @@ class HiddenPartitionSpec extends SparkSpec {
   }
 
   test("the ptspec rides every commit; re-evolution replaces it") {
-    val root = java.nio.file.Files.createTempDirectory("graft-hp-i").toString
+    val root = tempDir("graft-hp-i").toString
     VersionedTable.create(spark, rows(0, 100), root, spec,
       transforms = Seq(bucket))
     // unrelated commits inherit the spec
@@ -105,7 +105,7 @@ class HiddenPartitionSpec extends SparkSpec {
   }
 
   test("order-preserving band read prunes through truncate; bucket is skipped for ranges") {
-    val root = java.nio.file.Files.createTempDirectory("graft-hp-b").toString
+    val root = tempDir("graft-hp-b").toString
     val t = TruncateTransform(100, "k")
     VersionedTable.create(spark, rows(0, 800), root, spec,
       layout = PartitionTransform.clusterLayout(8, Seq(t)),
@@ -122,7 +122,7 @@ class HiddenPartitionSpec extends SparkSpec {
 
   test("day transform: a raw-timestamp band maps to day bins in-plan") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-hp-d").toString
+    val root = tempDir("graft-hp-d").toString
     val d = DayTransform("ts")
     val df = (0L until 96L).map(h =>
       (h, java.sql.Timestamp.valueOf(f"2024-03-${1 + h / 24}%02d ${h % 24}%02d:30:00")))
@@ -142,7 +142,7 @@ class HiddenPartitionSpec extends SparkSpec {
 
   test("refusals and skips: no transform on the column; batch omitting the source column") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-hp-r").toString
+    val root = tempDir("graft-hp-r").toString
     val tn = TruncateTransform(100, "n")
     VersionedTable.create(spark,
       (0L until 100L).map(i => (i, i * 3)).toDF("k", "n"), root, spec,
@@ -168,7 +168,7 @@ class HiddenPartitionSpec extends SparkSpec {
   }
 
   test("pruning survives a logical rename of the source column") {
-    val root = java.nio.file.Files.createTempDirectory("graft-hp-n").toString
+    val root = tempDir("graft-hp-n").toString
     val t = TruncateTransform(100, "n")
     val spec2 = VersionedTable.Spec(Seq("n"), "k", 1 << 13)
     import spark.implicits._
@@ -185,7 +185,7 @@ class HiddenPartitionSpec extends SparkSpec {
   }
 
   test("a change-feed window spanning evolve-partitioning segments (content-identical)") {
-    val root = java.nio.file.Files.createTempDirectory("graft-hp-f").toString
+    val root = tempDir("graft-hp-f").toString
     val v1 = VersionedTable.create(spark, rows(0, 100), root, spec)
     VersionedTable.evolvePartitioning(spark, root, Seq(bucket))
     val v3 = VersionedTable.append(spark, rows(100, 150), root, spec,
@@ -196,7 +196,7 @@ class HiddenPartitionSpec extends SparkSpec {
   }
 
   test("pruned read PLANS exactly the survivor file set (inputFiles)") {
-    val root = java.nio.file.Files.createTempDirectory("graft-hp-pf").toString
+    val root = tempDir("graft-hp-pf").toString
     VersionedTable.create(spark, rows(0, 800), root, spec,
       layout = PartitionTransform.clusterLayout(8, Seq(bucket)),
       transforms = Seq(bucket))
@@ -221,7 +221,7 @@ class HiddenPartitionSpec extends SparkSpec {
   }
 
   test("roster lookup: union of point prunes in one manifest filter; exact; bounded") {
-    val root = java.nio.file.Files.createTempDirectory("graft-hp-ro").toString
+    val root = tempDir("graft-hp-ro").toString
     VersionedTable.create(spark, rows(0, 800), root, spec,
       layout = PartitionTransform.clusterLayout(8, Seq(bucket)),
       transforms = Seq(bucket))
@@ -244,7 +244,7 @@ class HiddenPartitionSpec extends SparkSpec {
 
   test("guards: unknown-column transforms refused; evolution accepts logical names post-rename; transform source can't drop") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-hp-g").toString
+    val root = tempDir("graft-hp-g").toString
     // n is ONLY a transform source (not a stat/key column) so the
     // transform-source drop guard is the one that fires
     val spec2 = VersionedTable.Spec(Seq("k"), "k", 1 << 13)
@@ -281,7 +281,7 @@ class HiddenPartitionSpec extends SparkSpec {
 
   test("hour transform: epoch-hour bins prune a raw-timestamp band across days") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-hp-h").toString
+    val root = tempDir("graft-hp-h").toString
     val h = HourTransform("ts")
     val df = (0L until 96L).map(x =>
       (x, java.sql.Timestamp.valueOf(f"2024-03-${1 + x / 24}%02d ${x % 24}%02d:30:00")))
@@ -299,7 +299,7 @@ class HiddenPartitionSpec extends SparkSpec {
 
   test("streaming ingest into a partitioned table: micro-batch files carry pt stats and prune") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-hp-si").toString
+    val root = tempDir("graft-hp-si").toString
     VersionedTable.create(spark, rows(0, 100), root, spec,
       layout = PartitionTransform.clusterLayout(8, Seq(bucket)),
       transforms = Seq(bucket))
@@ -326,7 +326,7 @@ class HiddenPartitionSpec extends SparkSpec {
 
   test("joinPrunedRead: dim band + images + bloom prune files; joined result is exact") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-jp").toString
+    val root = tempDir("graft-jp").toString
     val t = TruncateTransform(100, "k")
     VersionedTable.create(spark, rows(0, 800), root, spec,
       layout = PartitionTransform.clusterLayout(16, Seq(t)),
@@ -346,7 +346,7 @@ class HiddenPartitionSpec extends SparkSpec {
 
   test("joinPrunedRead: NULL-stat evolution files survive the prune (superset contract)") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-jp-ev").toString
+    val root = tempDir("graft-jp-ev").toString
     // generation 0 predates the transform: its manifest rows carry
     // NULL transform stats and must survive every image prune
     VersionedTable.create(spark, rows(0, 400), root, spec)
@@ -362,7 +362,7 @@ class HiddenPartitionSpec extends SparkSpec {
 
   test("joinPrunedRead: an INT dim key probes a LONG fact column without missing rows") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-jp-ty").toString
+    val root = tempDir("graft-jp-ty").toString
     VersionedTable.create(spark, rows(0, 800), root, spec,
       layout = PartitionTransform.clusterLayout(8, Seq(bucket)),
       transforms = Seq(bucket))
@@ -376,7 +376,7 @@ class HiddenPartitionSpec extends SparkSpec {
 
   test("joinPrunedRead refusals: empty dim; bloom key mismatch") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-jp-rf").toString
+    val root = tempDir("graft-jp-rf").toString
     VersionedTable.create(spark, rows(0, 100), root, spec)
     val e1 = intercept[IllegalArgumentException] {
       VersionedTable.joinPrunedRead(spark, root, "k",
@@ -389,5 +389,38 @@ class HiddenPartitionSpec extends SparkSpec {
         bloomSpec = Some(spec)) // bloom key is "k", join column is "v"
     }
     assert(e2.getMessage.contains("not join column"))
+  }
+
+  // ---- no surviving file: every pruned read answers an empty frame ----
+
+  test("pruned reads that keep no file return an empty frame under the head's logical schema") {
+    import spark.implicits._
+    val root = tempDir("graft-hp-none").toString
+    val t = TruncateTransform(100, "k")
+    // even keys only: the odd keys inside the domain are absent, so the
+    // bloom is the layer that drops their files
+    VersionedTable.create(spark, (0L until 800L by 2L).map(i => (i, s"v$i")).toDF("k", "v"),
+      root, spec, layout = PartitionTransform.clusterLayout(8, Seq(t)), transforms = Seq(t))
+    VersionedTable.renameColumn(spark, root, spec, "v", "w")
+    val head = VersionedTable.read(spark, root).schema.map(f => (f.name, f.dataType))
+    val reads: Seq[(String, () => DataFrame)] = Seq(
+      "prunedRead" -> (() => VersionedTable.prunedRead(spark, root, "k", 5000L, 6000L)),
+      "prunedReadBands" -> (() => VersionedTable.prunedReadBands(spark, root,
+        Seq(("k", 0L, 10L), ("k", 5000L, 6000L)))),
+      "partitionPrunedRead" -> (() => VersionedTable.partitionPrunedRead(spark, root, "k", 5000L)),
+      "partitionPrunedBandRead" -> (() =>
+        VersionedTable.partitionPrunedBandRead(spark, root, "k", 5000L, 6000L)),
+      "partitionPrunedIn" -> (() =>
+        VersionedTable.partitionPrunedIn(spark, root, "k", Seq(5000L, 7000L))),
+      "joinPrunedRead, keys past the band" -> (() => VersionedTable.joinPrunedRead(
+        spark, root, "k", Seq(5000L).toDF("dk"), "dk")),
+      "joinPrunedRead, absent bloom keys" -> (() => VersionedTable.joinPrunedRead(
+        spark, root, "k", Seq(301L, 303L).toDF("dk"), "dk", bloomSpec = Some(spec))))
+    reads.foreach { case (name, read) =>
+      val got = read()
+      assert(got.inputFiles.isEmpty, s"$name kept files: ${got.inputFiles.toSeq}")
+      assert(got.count() == 0L, name)
+      assert(got.schema.map(f => (f.name, f.dataType)) == head, name)
+    }
   }
 }

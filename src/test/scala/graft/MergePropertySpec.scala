@@ -83,8 +83,7 @@ class MergePropertySpec extends SparkSpec {
       val insC = col("src_v") % mIns =!= 0
       val sets = Map("v" -> (col("v") + col("src_v")),
         "g" -> (col("src_g") + lit(1)))
-      val root = java.nio.file.Files
-        .createTempDirectory(s"graft-mprop-$seed").toString
+      val root = tempDir(s"graft-mprop-$seed").toString
       VersionedTable.create(spark, target, root, spec)
       VersionedTable.merge(spark, root, spec, source,
         matchedUpdate = if (hasUpd) sets else Map.empty,
@@ -107,7 +106,7 @@ class MergePropertySpec extends SparkSpec {
 
   test("schema evolution on merge: defaults, NULL pre-images, refusal edges") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-mev").toString
+    val root = tempDir("graft-mev").toString
     VersionedTable.create(spark,
       (0L until 40L).map(i => (i, i * 2)).toDF("k", "v"), root, spec)
     val src = Seq((1L, 100L, "a"), (50L, 500L, "b")).toDF("k", "v", "tag")

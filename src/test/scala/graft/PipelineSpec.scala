@@ -7,7 +7,7 @@ import graft.sources.Tables
 class PipelineSpec extends SparkSpec {
 
   test("runAll: stage-once pipeline equals per-report paths and exports CSVs") {
-    val out = java.nio.file.Files.createTempDirectory("graft-pipe").toString
+    val out = tempDir("graft-pipe").toString
     val res = Pipeline.runAll(spark, sfSmoke, csvOutDir = Some(out))
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.mkString("|")).sorted.toSeq
@@ -23,7 +23,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("partitioned staging write enables partition pruning (PartitionFilters)") {
-    val out = java.nio.file.Files.createTempDirectory("graft-part").toString
+    val out = tempDir("graft-part").toString
     Derive.stgAccounts(spark, sfSmoke).write
       .partitionBy("business_division").mode("overwrite").parquet(out)
     val pruned = spark.read.parquet(out).filter(col("business_division") === "RETAIL")

@@ -373,7 +373,7 @@ class PlanRegressionSpec extends SparkSpec {
     import graft.operators.VersionedTable
     import org.apache.spark.sql.functions.col
     val spec = VersionedTable.Spec(Seq("n"), "k", 1 << 13)
-    val root = java.nio.file.Files.createTempDirectory("graft-pin-cv").toString
+    val root = tempDir("graft-pin-cv").toString
     import spark.implicits._
     val df = (0L until 50L).map(i => (i, i % 7)).toDF("k", "n")
     val v1 = VersionedTable.create(spark, df, root, spec)

@@ -11,7 +11,7 @@ class ReadCommittedSpec extends SparkSpec {
   import spark.implicits._
 
   test("readCommitted probes from the newest batch down and stops at the first committed one") {
-    val base = java.nio.file.Files.createTempDirectory("graft-rc-probe").toString
+    val base = tempDir("graft-rc-probe").toString
     val root = s"$base/out"
     (0L until 5L).foreach(id =>
       assert(StreamingStage.commitBatch(Seq(id).toDF("v"), root, id)))

@@ -12,7 +12,7 @@ class Round10OpsSpec extends SparkSpec {
 
   private def freshNames(tag: String): (String, String) = (
     s"graft_test_${tag}_" + java.util.UUID.randomUUID().toString.replace("-", ""),
-    java.nio.file.Files.createTempDirectory(s"graft_test_$tag").toString)
+    tempDir(s"graft_test_$tag").toString)
 
   private def vecs = spark.read.parquet(s"$sfSmoke/embeddings.parquet")
 

@@ -83,7 +83,7 @@ class Round13OpsSpec extends SparkSpec {
 
   test("commitBatch: replayed batchId is a no-op even with different retry content") {
     import streaming.StreamingStage
-    val root = java.nio.file.Files.createTempDirectory("graft-eo-spec").toString
+    val root = tempDir("graft-eo-spec").toString
     val df = spark.range(10).toDF("v")
     assert(StreamingStage.commitBatch(df, root, 0L), "first commit must land")
     // redelivery after a crash-between-write-and-offset-commit: same
@@ -189,7 +189,7 @@ class Round13OpsSpec extends SparkSpec {
 
   test("readVersion: superseded versions stay readable, tombstones and orphans refused") {
     import operators.Publish
-    val root = java.nio.file.Files.createTempDirectory("graft_tt_spec").toString
+    val root = tempDir("graft_tt_spec").toString
     val v1 = Publish.publish(spark.range(10).toDF("v"), root)
     val v1Rows = Publish.readVersion(spark, root, v1).collect().map(_.getLong(0)).sorted
     val v2 = Publish.publish(spark.range(100, 105).toDF("v"), root)
@@ -293,7 +293,7 @@ class Round13OpsSpec extends SparkSpec {
 
   test("layoutCompactionExec-mechanics: fewer files, identical content") {
     // the physical claims the hash gate can't see, on the same shapes
-    val out = java.nio.file.Files.createTempDirectory("graft_compact_spec").toString
+    val out = tempDir("graft_compact_spec").toString
     val ev = sources.Tables.events(spark, sfSmoke).select(col("event_id"),
       expr("ts_ns DIV 86400000000000").as("day"))
     ev.repartition(8).write.partitionBy("day").parquet(s"$out/frag")
@@ -366,7 +366,7 @@ class Round13OpsSpec extends SparkSpec {
     assert(got == want)
     // surgical-overwrite mechanics: untouched partitions keep their exact
     // files (names AND bytes) across a dynamic-overwrite of other ones
-    val out = java.nio.file.Files.createTempDirectory("graft_backfill_spec")
+    val out = tempDir("graft_backfill_spec")
       .resolve("t").toString
     spark.range(100).selectExpr("id % 4 AS day", "id AS v")
       .write.partitionBy("day").parquet(out)

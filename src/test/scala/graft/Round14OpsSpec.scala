@@ -37,7 +37,7 @@ class Round14OpsSpec extends SparkSpec {
 
   test("readCommitted: numeric batch-id max across the 5→6 digit widening") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-rc-width").toString
+    val root = tempDir("graft-rc-width").toString
     // 'batch-100000' sorts BEFORE 'batch-99999' as text — the numeric
     // parse must still pick it (ADVICE r8)
     assert(streaming.StreamingStage.commitBatch(Seq(99999L).toDF("v"), root, 99999L))
@@ -48,7 +48,7 @@ class Round14OpsSpec extends SparkSpec {
   }
 
   private def tmpGraph(): (String, String) = (
-    java.nio.file.Files.createTempDirectory("graft-gidx").toString,
+    tempDir("graft-gidx").toString,
     "gidx_" + java.util.UUID.randomUUID().toString.replace("-", ""))
 
   test("GraphIndex: append folds NEW edges only and the spine tracks folded degrees") {
@@ -196,7 +196,7 @@ class Round14OpsSpec extends SparkSpec {
   test("publishVersioned: replay no-ops, history keeps one time-travelable version per batch") {
     import spark.implicits._
     import operators.Publish
-    val root = java.nio.file.Files.createTempDirectory("graft-vpub-spec").toString
+    val root = tempDir("graft-vpub-spec").toString
     val b0 = Seq((1L, "a")).toDF("k", "v")
     assert(streaming.StreamingStage.publishVersioned(b0, root, 0L))
     // crash-replay of batch 0 delivers DIFFERENT (corrupted) rows — the
@@ -221,7 +221,7 @@ class Round14OpsSpec extends SparkSpec {
   test("publishVersioned: a failed attempt burns its number, the replay completes the batch") {
     import spark.implicits._
     import operators.Publish
-    val root = java.nio.file.Files.createTempDirectory("graft-vpub-crash").toString
+    val root = tempDir("graft-vpub-crash").toString
     assert(streaming.StreamingStage.publishVersioned(
       Seq((1L, "a")).toDF("k", "v"), root, 0L))
     // simulate a crash mid-publish of batch 1: the audit veto leaves a

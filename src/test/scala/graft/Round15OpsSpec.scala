@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 class Round15OpsSpec extends SparkSpec {
 
   private def tmpIdx(): (String, String) = (
-    java.nio.file.Files.createTempDirectory("graft-bm25idx").toString,
+    tempDir("graft-bm25idx").toString,
     "bm25idx_" + java.util.UUID.randomUUID().toString.replace("-", ""))
 
   private def qOf(tbl: String) =
@@ -89,7 +89,7 @@ class Round15OpsSpec extends SparkSpec {
 
   test("vacuumRetain: physical reclaim outside the window, survivors byte-intact, idempotent") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-vac-spec").toString
+    val root = tempDir("graft-vac-spec").toString
     (1 to 4).foreach(i =>
       operators.Publish.publish(Seq((i, s"snap$i")).toDF("n", "tag"), root))
     val beforeBytes = java.nio.file.Files.list(
@@ -119,7 +119,7 @@ class Round15OpsSpec extends SparkSpec {
 
   test("vacuumRetain: failed-publish tombstones are reclaimed regardless of the window") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-vac-fail").toString
+    val root = tempDir("graft-vac-fail").toString
     operators.Publish.publish(Seq((1, "ok")).toDF("n", "tag"), root)
     intercept[IllegalArgumentException] {
       operators.Publish.publish(Seq((2, "bad")).toDF("n", "tag"), root,

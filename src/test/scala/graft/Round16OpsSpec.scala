@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 class Round16OpsSpec extends SparkSpec {
 
   private def tmpIdx(prefix: String): (String, String) = (
-    java.nio.file.Files.createTempDirectory(prefix).toString,
+    tempDir(prefix).toString,
     prefix.replace("-", "_") + "_" +
       java.util.UUID.randomUUID().toString.replace("-", ""))
 
@@ -135,7 +135,7 @@ class Round16OpsSpec extends SparkSpec {
 
   test("publishVersioned x vacuumRetain: burned numbers and replay detection survive a vacuum") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-vacrp-spec").toString
+    val root = tempDir("graft-vacrp-spec").toString
     val d = Seq((1L, "a")).toDF("k", "v")
     assert(streaming.StreamingStage.publishVersioned(d, root, 0))  // v00001
     assert(streaming.StreamingStage.publishVersioned(d, root, 1))  // v00002
@@ -156,7 +156,7 @@ class Round16OpsSpec extends SparkSpec {
 
   test("compactPurgedMarkers: watermark preserves burned numbers, idempotent, monotone") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-cm-spec").toString
+    val root = tempDir("graft-cm-spec").toString
     val d = Seq((1L, "a")).toDF("k", "v")
     (0 to 2).foreach(i => streaming.StreamingStage.publishVersioned(d, root, i))
     assert(operators.Publish.vacuumRetain(root, keepLast = 1) == Seq("v00001", "v00002"))
@@ -180,7 +180,7 @@ class Round16OpsSpec extends SparkSpec {
   }
 
   test("vacuumRetain orders versions numerically past the %05d padding overflow") {
-    val root = java.nio.file.Files.createTempDirectory("graft-vac-num")
+    val root = tempDir("graft-vac-num")
     // fabricate a history that straddles the padding boundary:
     // lexicographically v99999 sorts AFTER v100000/v100001
     Seq("v99999", "v100000", "v100001").foreach(v =>

@@ -21,8 +21,8 @@ class Round17OpsSpec extends SparkSpec {
 
   test("applied_upto survives maintenance commits: redelivered + out-of-order windows still no-op") {
     import spark.implicits._
-    val a = java.nio.file.Files.createTempDirectory("graft-r17-au-a").toString
-    val b = java.nio.file.Files.createTempDirectory("graft-r17-au-b").toString
+    val a = tempDir("graft-r17-au-a").toString
+    val b = tempDir("graft-r17-au-b").toString
     val v1 = VersionedTable.create(spark, rows(0, 100), a, spec)
     VersionedTable.create(spark, VersionedTable.readVersion(spark, a, v1), b, spec,
       extraMeta = Map("applied_upto" -> v1))
@@ -55,7 +55,7 @@ class Round17OpsSpec extends SparkSpec {
   }
 
   test("stat-spec drift fails fast: an append whose Spec omits a manifest stat column is refused") {
-    val root = java.nio.file.Files.createTempDirectory("graft-r17-drift").toString
+    val root = tempDir("graft-r17-drift").toString
     VersionedTable.create(spark, rows(0, 100), root, spec)
     val drifted = VersionedTable.Spec(Seq.empty, "k", 1 << 13)
     val e = intercept[IllegalArgumentException] {
@@ -75,7 +75,7 @@ class Round17OpsSpec extends SparkSpec {
   test("applyChangesSeq: a STORED sequence column passes through; a transport-only one is dropped") {
     import spark.implicits._
     // replica whose schema carries the sequence column (updated_at)
-    val root = java.nio.file.Files.createTempDirectory("graft-r17-seq").toString
+    val root = tempDir("graft-r17-seq").toString
     val sspec = VersionedTable.Spec(Seq("n"), "k", 1 << 13)
     VersionedTable.create(spark,
       Seq((1L, 10L, 100L), (2L, 20L, 100L)).toDF("k", "n", "updated_at"),
@@ -94,7 +94,7 @@ class Round17OpsSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == Set((1L, 11L, 300L)), s"resolution wrong: $got")
     // transport-only sequence column (not in the schema) is dropped
-    val root2 = java.nio.file.Files.createTempDirectory("graft-r17-seq2").toString
+    val root2 = tempDir("graft-r17-seq2").toString
     VersionedTable.create(spark, rows(0, 10), root2, spec,
       extraMeta = Map("applied_upto" -> "v1"))
     val feed2 = Seq((5L, 5000L, 7, "insert"), (5L, 4000L, 3, "insert"))
@@ -147,7 +147,7 @@ class Round17OpsSpec extends SparkSpec {
 
   test("bucket probe literals cast to the column's type: Int/Long probes prune correctly on DOUBLE") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-r17-probe").toString
+    val root = tempDir("graft-r17-probe").toString
     val t = BucketTransform(16, "x")
     val dspec = VersionedTable.Spec(Seq("k"), "k", 1 << 13)
     val df = (0L until 500L).map(i => (i, i.toDouble)).toDF("k", "x")

@@ -25,8 +25,8 @@ class Round18OpsSpec extends SparkSpec {
       .map(_.getLong(0)).toSet
 
   test("rebaseBranch: disjoint divergence replays onto the moved main ≡ serial application; the commit is feed-safe") {
-    val main = java.nio.file.Files.createTempDirectory("graft-rb-m").toString
-    val br = java.nio.file.Files.createTempDirectory("graft-rb-b").toString + "/b"
+    val main = tempDir("graft-rb-m").toString
+    val br = tempDir("graft-rb-b").toString + "/b"
     VersionedTable.create(spark, rows(1, 2, 3, 4), main, spec)
     VersionedTable.shallowClone(spark, main, br)
     // branch: insert {5,6}, delete {1}; main: insert {9,10}, delete {2}
@@ -55,8 +55,8 @@ class Round18OpsSpec extends SparkSpec {
   }
 
   test("rebaseBranch: an unmoved main degenerates to fast-forward") {
-    val main = java.nio.file.Files.createTempDirectory("graft-rb-ff").toString
-    val br = java.nio.file.Files.createTempDirectory("graft-rb-ffb").toString + "/b"
+    val main = tempDir("graft-rb-ff").toString
+    val br = tempDir("graft-rb-ffb").toString + "/b"
     VersionedTable.create(spark, rows(1, 2), main, spec)
     VersionedTable.shallowClone(spark, main, br)
     VersionedTable.append(spark, rows(3), br, spec)
@@ -66,10 +66,10 @@ class Round18OpsSpec extends SparkSpec {
   }
 
   test("rebaseBranch refusals: overlap, never-committed branch, not-a-branch, diverged schema") {
-    val main = java.nio.file.Files.createTempDirectory("graft-rb-rf").toString
+    val main = tempDir("graft-rb-rf").toString
     VersionedTable.create(spark, rows(1, 2, 3, 4), main, spec)
     // overlap: both sides delete key 3
-    val brO = java.nio.file.Files.createTempDirectory("graft-rb-o").toString + "/b"
+    val brO = tempDir("graft-rb-o").toString + "/b"
     VersionedTable.shallowClone(spark, main, brO)
     VersionedTable.deleteRosterDV(spark, brO, spec, rows(3).select("k"))
     VersionedTable.deleteRosterDV(spark, main, spec, rows(3).select("k"))
@@ -78,20 +78,20 @@ class Round18OpsSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("order-dependent") && e.getMessage.contains("3"))
     // never committed: nothing to replay
-    val brN = java.nio.file.Files.createTempDirectory("graft-rb-n").toString + "/b"
+    val brN = tempDir("graft-rb-n").toString + "/b"
     VersionedTable.shallowClone(spark, main, brN)
     VersionedTable.append(spark, rows(7), main, spec) // move main
     assert(intercept[IllegalArgumentException] {
       VersionedTable.rebaseBranch(spark, main, brN, spec)
     }.getMessage.contains("never committed"))
     // not a branch: a plain table's v1 is not a clone
-    val plain = java.nio.file.Files.createTempDirectory("graft-rb-p").toString
+    val plain = tempDir("graft-rb-p").toString
     VersionedTable.create(spark, rows(8), plain, spec)
     assert(intercept[IllegalArgumentException] {
       VersionedTable.rebaseBranch(spark, main, plain, spec)
     }.getMessage.contains("not a branch"))
     // diverged schema: the branch evolved a column main never saw
-    val brS = java.nio.file.Files.createTempDirectory("graft-rb-s").toString + "/b"
+    val brS = tempDir("graft-rb-s").toString + "/b"
     VersionedTable.shallowClone(spark, main, brS)
     import spark.implicits._
     VersionedTable.append(spark,
@@ -105,9 +105,9 @@ class Round18OpsSpec extends SparkSpec {
 
   test("graft-table sink, append mode: one commit per micro-batch, empty redrain no-ops, content complete") {
     import org.apache.spark.sql.streaming.Trigger
-    val stage = java.nio.file.Files.createTempDirectory("graft-ts-st").toString
-    val table = java.nio.file.Files.createTempDirectory("graft-ts-t").toString
-    val chk = java.nio.file.Files.createTempDirectory("graft-ts-c").toString
+    val stage = tempDir("graft-ts-st").toString
+    val table = tempDir("graft-ts-t").toString
+    val chk = tempDir("graft-ts-c").toString
     def drain(): Unit = {
       val sch = spark.read.parquet(stage).schema
       val q = spark.readStream.schema(sch).parquet(stage)
@@ -139,9 +139,9 @@ class Round18OpsSpec extends SparkSpec {
 
   test("graft-table sink, apply mode: an absent replica bootstraps from the first window's inserts") {
     import org.apache.spark.sql.streaming.Trigger
-    val src = java.nio.file.Files.createTempDirectory("graft-ta-s").toString
-    val replica = java.nio.file.Files.createTempDirectory("graft-ta-r").toString + "/t"
-    val chk = java.nio.file.Files.createTempDirectory("graft-ta-c").toString
+    val src = tempDir("graft-ta-s").toString
+    val replica = tempDir("graft-ta-r").toString + "/t"
+    val chk = tempDir("graft-ta-c").toString
     val v1 = VersionedTable.create(spark, rows(1, 2, 3), src, spec)
     VersionedTable.append(spark, rows(10, 11), src, spec)
     VersionedTable.deleteRosterDV(spark, src, spec, rows(1).select("k"))
@@ -168,9 +168,9 @@ class Round18OpsSpec extends SparkSpec {
   test("graft-table sink, applySeq mode: a raw out-of-order CDC feed resolves per key before folding") {
     import org.apache.spark.sql.streaming.Trigger
     import spark.implicits._
-    val stage = java.nio.file.Files.createTempDirectory("graft-tq-st").toString
-    val table = java.nio.file.Files.createTempDirectory("graft-tq-t").toString
-    val chk = java.nio.file.Files.createTempDirectory("graft-tq-c").toString
+    val stage = tempDir("graft-tq-st").toString
+    val table = tempDir("graft-tq-t").toString
+    val chk = tempDir("graft-tq-c").toString
     def drain(): Unit = {
       val sch = spark.read.parquet(stage).schema
       val q = spark.readStream.schema(sch).parquet(stage)
@@ -207,9 +207,9 @@ class Round18OpsSpec extends SparkSpec {
 
   test("graft-table sink, autoOptimize: compaction fires mid-stream and exactly-once survives it") {
     import org.apache.spark.sql.streaming.Trigger
-    val stage = java.nio.file.Files.createTempDirectory("graft-to-st").toString
-    val table = java.nio.file.Files.createTempDirectory("graft-to-t").toString
-    val chk = java.nio.file.Files.createTempDirectory("graft-to-c").toString
+    val stage = tempDir("graft-to-st").toString
+    val table = tempDir("graft-to-t").toString
+    val chk = tempDir("graft-to-c").toString
     rows(1L to 60L: _*).repartitionByRange(6, org.apache.spark.sql.functions.col("k"))
       .write.mode("overwrite").parquet(stage)
     val sch = spark.read.parquet(stage).schema
@@ -241,8 +241,8 @@ class Round18OpsSpec extends SparkSpec {
     import spark.implicits._
     val sSpec = VersionedTable.Spec(Seq("n_chars"), "doc_id", 1 << 13)
     val gSpec = VersionedTable.Spec(Seq("n_docs"), "lang", 1 << 13)
-    val silver = java.nio.file.Files.createTempDirectory("graft-gmm-s").toString
-    val gold = java.nio.file.Files.createTempDirectory("graft-gmm-g").toString
+    val silver = tempDir("graft-gmm-s").toString
+    val gold = tempDir("graft-gmm-g").toString
     // aa: {10, 99} (99 is the max), bb: {5} (drains entirely)
     val v1 = VersionedTable.create(spark,
       Seq((1L, "aa", 10L), (2L, "aa", 99L), (3L, "bb", 5L))

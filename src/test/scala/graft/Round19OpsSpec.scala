@@ -33,9 +33,9 @@ class Round19OpsSpec extends SparkSpec {
   }
 
   test("sink custody stamp is version-true: multi-version windows from startingVersion>0 reclaim every spool after catch-up") {
-    val src = java.nio.file.Files.createTempDirectory("graft-vt-s").toString
-    val replica = java.nio.file.Files.createTempDirectory("graft-vt-r").toString
-    val chk = java.nio.file.Files.createTempDirectory("graft-vt-c").toString
+    val src = tempDir("graft-vt-s").toString
+    val replica = tempDir("graft-vt-r").toString
+    val chk = tempDir("graft-vt-c").toString
     val v1 = VersionedTable.create(spark, rows(0, 30), src, spec)
     (1 to 6).foreach(i =>
       VersionedTable.append(spark, rows(30 * i, 30 * i + 30), src, spec)) // v2..v7
@@ -75,9 +75,9 @@ class Round19OpsSpec extends SparkSpec {
   }
 
   test("sink custody stamp: snapshot bootstrap stamps the snapshot's true version, then window ends") {
-    val src = java.nio.file.Files.createTempDirectory("graft-vs-s").toString
-    val replica = java.nio.file.Files.createTempDirectory("graft-vs-r").toString + "/t"
-    val chk = java.nio.file.Files.createTempDirectory("graft-vs-c").toString
+    val src = tempDir("graft-vs-s").toString
+    val replica = tempDir("graft-vs-r").toString + "/t"
+    val chk = tempDir("graft-vs-c").toString
     VersionedTable.create(spark, rows(0, 20), src, spec)  // v1
     VersionedTable.append(spark, rows(20, 30), src, spec) // v2
     def drain(): Unit = {
@@ -109,9 +109,9 @@ class Round19OpsSpec extends SparkSpec {
   }
 
   test("feed into an append-mode log stamps applied_upto too: the log registers as a spool custody floor") {
-    val src = java.nio.file.Files.createTempDirectory("graft-al-s").toString
-    val log = java.nio.file.Files.createTempDirectory("graft-al-l").toString + "/t"
-    val chk = java.nio.file.Files.createTempDirectory("graft-al-c").toString
+    val src = tempDir("graft-al-s").toString
+    val log = tempDir("graft-al-l").toString + "/t"
+    val chk = tempDir("graft-al-c").toString
     val v1 = VersionedTable.create(spark, rows(0, 20), src, spec)
     VersionedTable.append(spark, rows(20, 40), src, spec) // v2
     VersionedTable.append(spark, rows(40, 60), src, spec) // v3
@@ -142,9 +142,9 @@ class Round19OpsSpec extends SparkSpec {
 
   test("raw-CDC fallback refuses a version-bootstrapped replica instead of silently skipping windows") {
     import spark.implicits._
-    val stage = java.nio.file.Files.createTempDirectory("graft-rf-st").toString
-    val replica = java.nio.file.Files.createTempDirectory("graft-rf-r").toString
-    val chk = java.nio.file.Files.createTempDirectory("graft-rf-c").toString
+    val stage = tempDir("graft-rf-st").toString
+    val replica = tempDir("graft-rf-r").toString
+    val chk = tempDir("graft-rf-c").toString
     // a replica whose watermark is a SOURCE version from an
     // out-of-band bootstrap — under the batch-counter convention the
     // first batches would read as already-applied and be lost
@@ -173,8 +173,8 @@ class Round19OpsSpec extends SparkSpec {
   }
 
   test("byte-admission memoizes: a backlogged catch-up pays each version's estimate once, not once per trigger") {
-    val root = java.nio.file.Files.createTempDirectory("graft-bm-t").toString
-    val chk = java.nio.file.Files.createTempDirectory("graft-bm-c").toString
+    val root = tempDir("graft-bm-t").toString
+    val chk = tempDir("graft-bm-c").toString
     val v1 = VersionedTable.create(spark, rows(0, 30), root, spec)
     (1 to 6).foreach(i =>
       VersionedTable.append(spark, rows(30 * i, 30 * i + 10), root, spec)) // v2..v7
@@ -202,8 +202,8 @@ class Round19OpsSpec extends SparkSpec {
   }
 
   test("spool retention valve: unregistered aged spools reclaim; a registered lagging consumer overrides retention") {
-    val root = java.nio.file.Files.createTempDirectory("graft-rv-t").toString
-    val chk = java.nio.file.Files.createTempDirectory("graft-rv-c").toString
+    val root = tempDir("graft-rv-t").toString
+    val chk = tempDir("graft-rv-c").toString
     val v1 = VersionedTable.create(spark, rows(0, 20), root, spec)
     VersionedTable.append(spark, rows(20, 40), root, spec) // v2
     VersionedTable.append(spark, rows(40, 60), root, spec) // v3
@@ -245,9 +245,9 @@ class Round19OpsSpec extends SparkSpec {
     // re-spool from a fresh checkpoint, register a LAGGING consumer
     // (applied_upto=v1): retention must NOT touch windows past its
     // floor, aged or not
-    drain(java.nio.file.Files.createTempDirectory("graft-rv-c2").toString)
+    drain(tempDir("graft-rv-c2").toString)
     backdate()
-    val lagging = java.nio.file.Files.createTempDirectory("graft-rv-lag").toString
+    val lagging = tempDir("graft-rv-lag").toString
     VersionedTable.create(spark, rows(0, 5), lagging, spec,
       extraMeta = Map("applied_upto" -> "v00001"))
     VersionedTable.vacuum(spark, root, keepLast = keepAll,
@@ -260,7 +260,7 @@ class Round19OpsSpec extends SparkSpec {
 
   test("changeFeedWithCommitVersions: rows charge to their committing version, timestamps inherit, renames refuse") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-cv-t").toString
+    val root = tempDir("graft-cv-t").toString
     val v1 = VersionedTable.create(spark, rows(0, 10), root, spec,
       extraMeta = Map("commit_ts" -> "500"))
     VersionedTable.append(spark, rows(10, 20), root, spec) // v2, inherits 500
@@ -302,9 +302,9 @@ class Round19OpsSpec extends SparkSpec {
 
   test("sink expectations: drop discards violations; fail aborts the batch before anything commits") {
     import spark.implicits._
-    val stage = java.nio.file.Files.createTempDirectory("graft-ex-st").toString
-    val table = java.nio.file.Files.createTempDirectory("graft-ex-t").toString + "/t"
-    val chk = java.nio.file.Files.createTempDirectory("graft-ex-c").toString
+    val stage = tempDir("graft-ex-st").toString
+    val table = tempDir("graft-ex-t").toString + "/t"
+    val chk = tempDir("graft-ex-c").toString
     (0L until 20L).map(i => (i, i % 1000)).toDF("k", "n")
       .write.mode("append").parquet(stage)
     val sch = spark.read.parquet(stage).schema
@@ -321,8 +321,8 @@ class Round19OpsSpec extends SparkSpec {
       .map(_.getLong(0)).toSet
     assert(kept == (0L until 20L).filter(_ % 4 != 0).toSet, s"$kept")
     // fail: the violating batch aborts and NOTHING commits
-    val table2 = java.nio.file.Files.createTempDirectory("graft-ex-t2").toString + "/t"
-    val chk2 = java.nio.file.Files.createTempDirectory("graft-ex-c2").toString
+    val table2 = tempDir("graft-ex-t2").toString + "/t"
+    val chk2 = tempDir("graft-ex-c2").toString
     val q2 = start("fail", chk2, table2)
     intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       q2.awaitTermination()
@@ -330,11 +330,11 @@ class Round19OpsSpec extends SparkSpec {
     assert(VersionedTable.headVersion(table2).isEmpty,
       "a failed expectation must abort before anything commits")
     // expectations follow the DLT NULL rule: NULL violates
-    val stage3 = java.nio.file.Files.createTempDirectory("graft-ex-s3").toString
+    val stage3 = tempDir("graft-ex-s3").toString
     Seq((1L, Some(5L)), (2L, None), (3L, Some(8L)))
       .toDF("k", "n").write.mode("append").parquet(stage3)
-    val table3 = java.nio.file.Files.createTempDirectory("graft-ex-t3").toString + "/t"
-    val chk3 = java.nio.file.Files.createTempDirectory("graft-ex-c3").toString
+    val table3 = tempDir("graft-ex-t3").toString + "/t"
+    val chk3 = tempDir("graft-ex-c3").toString
     val q3 = spark.readStream.schema(spark.read.parquet(stage3).schema)
       .parquet(stage3)
       .writeStream.format("graft.sources.TableSinkProvider")
@@ -354,7 +354,7 @@ class Round19OpsSpec extends SparkSpec {
   }
 
   test("in-commit timestamps: commits auto-stamp monotonically; timestamp addressing works without writer stamps") {
-    val root = java.nio.file.Files.createTempDirectory("graft-ict-t").toString
+    val root = tempDir("graft-ict-t").toString
     VersionedTable.create(spark, rows(0, 10), root, spec) // v1: unstamped
     VersionedTable.setInCommitTimestamps(spark, root)     // v2: property, stamped
     VersionedTable.append(spark, rows(10, 20), root, spec) // v3: auto-stamped
@@ -404,7 +404,7 @@ class Round19OpsSpec extends SparkSpec {
   conditionalCommits.foreach { case (verb, run) =>
     test(s"in-commit timestamps: $verb stamps its version above its predecessor's, " +
       "in a one-file manifest") {
-      val root = java.nio.file.Files.createTempDirectory("graft-ict-c").toString + "/t"
+      val root = tempDir("graft-ict-c").toString + "/t"
       VersionedTable.create(spark, rows(0, 10), root, spec)
       VersionedTable.setInCommitTimestamps(spark, root)
       val v = run(root)
@@ -424,7 +424,7 @@ class Round19OpsSpec extends SparkSpec {
 
   test("fsck repair: missing-file references drop in one manifest commit; the feed refuses across it; total loss refuses") {
     import graft.operators.{LocalTableStore, VersionedTable => VT}
-    val root = java.nio.file.Files.createTempDirectory("graft-fsck").toString
+    val root = tempDir("graft-fsck").toString
     val v1 = VT.create(spark, rows(0, 40).repartition(4), root, spec)
     VT.append(spark, rows(40, 50), root, spec) // v2
     // no-op repair returns the head untouched
@@ -457,7 +457,7 @@ class Round19OpsSpec extends SparkSpec {
 
   test("multi-writer stress: 8 threads of appendOcc serialize with zero lost updates through the store facade") {
     import graft.operators.{VersionedTable => VT}
-    val root = java.nio.file.Files.createTempDirectory("graft-occ8").toString
+    val root = tempDir("graft-occ8").toString
     VT.create(spark, rows(0, 10), root, spec)
     import spark.implicits._
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
@@ -492,7 +492,7 @@ class Round19OpsSpec extends SparkSpec {
     import graft.operators.{VersionedTable => VT}
     // vacuum under a NON-normalized root: the referenced-set compare
     // must normalize both sides or every live file reads unreferenced
-    val rootDir = java.nio.file.Files.createTempDirectory("graft-norm").toString
+    val rootDir = tempDir("graft-norm").toString
     val root = rootDir + "/" // trailing slash, deliberately
     VT.create(spark, rows(0, 30), root, spec)
     VT.append(spark, rows(30, 40), root, spec)
@@ -520,7 +520,7 @@ class Round19OpsSpec extends SparkSpec {
       "self-quarantine must refuse")
     // ICT: a pre-ICT stamp AHEAD of wallclock must not make later
     // auto-stamps run backwards
-    val skew = java.nio.file.Files.createTempDirectory("graft-skew").toString
+    val skew = tempDir("graft-skew").toString
     val future = System.currentTimeMillis() + 10_000_000L
     VT.create(spark, rows(0, 5), skew, spec,
       extraMeta = Map("commit_ts" -> future.toString))
@@ -536,8 +536,8 @@ class Round19OpsSpec extends SparkSpec {
   }
 
   test("commitVersions snapshot: batch 0 attributes each row to the retained version that introduced its file") {
-    val root = java.nio.file.Files.createTempDirectory("graft-cs-t").toString
-    val chk = java.nio.file.Files.createTempDirectory("graft-cs-c").toString
+    val root = tempDir("graft-cs-t").toString
+    val chk = tempDir("graft-cs-c").toString
     VersionedTable.create(spark, rows(0, 10), root, spec,
       extraMeta = Map("commit_ts" -> "700"))               // v1
     VersionedTable.append(spark, rows(10, 20), root, spec) // v2, inherits 700

@@ -35,7 +35,7 @@ class Round20OpsSpec extends SparkSpec {
 
   test("canonical lock key: concurrent commits through four spellings of one root are gap-free, every dir committed") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-canon").toString
+    val base = tempDir("graft-canon").toString
     val root = s"$base/t"
     // four spellings of the SAME root — the r15 weak: un-normalized
     // keys gave each its own lock object, so the advertised per-root
@@ -74,7 +74,7 @@ class Round20OpsSpec extends SparkSpec {
 
   test("ICT stamp is strictly increasing across concurrent same-table writers (minted inside the commit lock)") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-ictc").toString
+    val base = tempDir("graft-ictc").toString
     val root = s"$base/t"
     val spec = VersionedTable.Spec(Seq("n"), "k", 1 << 10)
     VersionedTable.create(spark,
@@ -106,7 +106,7 @@ class Round20OpsSpec extends SparkSpec {
 
   test("ICT commit cost is O(1) in table history: no _ts_index parse, one _ts_max read, constant _META reads per commit") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-icto").toString
+    val base = tempDir("graft-icto").toString
     val root = s"$base/t"
     val spec = VersionedTable.Spec(Seq("n"), "k", 1 << 10)
     VersionedTable.create(spark,
@@ -161,7 +161,7 @@ class Round20OpsSpec extends SparkSpec {
 
   test("store CAS contract: swapIfContentIs is a one-atom compare-and-move; createExclusive claims exactly once") {
     val s = LocalTableStore
-    val r = java.nio.file.Files.createTempDirectory("graft-cas").toString
+    val r = tempDir("graft-cas").toString
     // claim: first caller wins, second reads false
     assert(s.createExclusive(s"$r/v00001.claim"))
     assert(!s.createExclusive(s"$r/v00001.claim"))
@@ -186,7 +186,7 @@ class Round20OpsSpec extends SparkSpec {
 
   test("cross-process fence: a foreign commit inside the swap window loses exactly one writer, never tears the table") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-xproc").toString
+    val base = tempDir("graft-xproc").toString
     val root = s"$base/t"
     Publish.publish(Seq((1, 1)).toDF("a", "b"), root) // v1
     // simulate a FOREIGN PROCESS committing between this JVM's version
@@ -234,7 +234,7 @@ class Round20OpsSpec extends SparkSpec {
 
   test("foreign claim forces the next number: two processes can never write one version dir") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-claim").toString
+    val base = tempDir("graft-claim").toString
     val root = s"$base/t"
     Publish.publish(Seq((1, 1)).toDF("a", "b"), root) // v1
     // a foreign process mid-commit holds the claim for v2 (and has
@@ -261,7 +261,7 @@ class Round20OpsSpec extends SparkSpec {
     import spark.implicits._
     def rows(ks: Long*) = ks.map(k => (k, k * 10)).toDF("k", "n")
     val spec = VersionedTable.Spec(Seq("n"), "k", 1 << 10)
-    val base = java.nio.file.Files.createTempDirectory("graft-2feed").toString
+    val base = tempDir("graft-2feed").toString
     val srcA = s"$base/a"
     val srcB = s"$base/b"
     val replica = s"$base/r"
@@ -321,7 +321,7 @@ class Round20OpsSpec extends SparkSpec {
 
   test("commitBatch/readCommitted route through the TableStore facade (VERDICT r15 #5), replay-idempotent across spellings") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-eo-fac").toString
+    val base = tempDir("graft-eo-fac").toString
     val root = s"$base/out"
     val swaps = new java.util.concurrent.atomic.AtomicLong(0)
     val lists = new java.util.concurrent.atomic.AtomicLong(0)
@@ -352,7 +352,7 @@ class Round20OpsSpec extends SparkSpec {
 
   test("_ts_max advances past explicit stamps: a later auto-stamp never mints below history") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-icte").toString
+    val base = tempDir("graft-icte").toString
     val root = s"$base/t"
     val spec = VersionedTable.Spec(Seq("n"), "k", 1 << 10)
     VersionedTable.create(spark,

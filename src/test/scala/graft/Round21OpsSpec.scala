@@ -12,7 +12,7 @@ import graft.operators.{ForwardingTableStore, LocalTableStore, Publish, TableSto
 class Round21OpsSpec extends SparkSpec {
 
   private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    tempDir(prefix).toString
 
   /** Recursive dir copy — fabricates a stalled writer's fully-written
     * version dir from a real one (test rig only; nio is fine here).

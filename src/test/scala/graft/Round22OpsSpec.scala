@@ -12,7 +12,7 @@ import graft.operators.{ForwardingTableStore, LocalTableStore, Publish, TableSto
 class Round22OpsSpec extends SparkSpec {
 
   private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    tempDir(prefix).toString
 
   private def df(ks: Long*) = {
     import spark.implicits._

@@ -64,7 +64,7 @@ class Round7OpsSpec extends SparkSpec {
     val inB1 = (id: org.apache.spark.sql.Column) => id % 5 === 3
     val state0 = bandState(ExtQueries.minhashBanded(corpus.filter(inA($"doc_id"))))
     val state1 = foldState(state0, ExtQueries.minhashBanded(corpus.filter(inB1($"doc_id"))))
-    val tmp = java.nio.file.Files.createTempDirectory("inc-state").toString
+    val tmp = tempDir("inc-state").toString
     spark.sql("DROP TABLE IF EXISTS inc_state_r7")
     state1.write.format("parquet").bucketBy(4, "band")
       .option("path", s"$tmp/state1").saveAsTable("inc_state_r7")
@@ -243,7 +243,7 @@ class Round7OpsSpec extends SparkSpec {
     // restart FROM THE CHECKPOINT — recovered state must keep deduping
     // across the restart, and the final sink must equal a one-shot run.
     import org.apache.spark.sql.streaming.Trigger
-    val root = java.nio.file.Files.createTempDirectory("ckpt-restart").toString
+    val root = tempDir("ckpt-restart").toString
     val t0 = java.sql.Timestamp.valueOf("2026-01-01 10:00:00")
     def ts(min: Int) = new java.sql.Timestamp(t0.getTime + min * 60000L)
     val part1 = Seq((1L, ts(0), 1.0), (2L, ts(10), 2.0), (2L, ts(11), 2.0),

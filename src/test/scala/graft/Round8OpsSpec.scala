@@ -54,7 +54,7 @@ class Round8OpsSpec extends SparkSpec {
       .select($"doc_id", split($"text", " ").as("words"))
     val s0 = bandState(ExtQueries.minhashBanded(corpus.filter($"doc_id" % 3 =!= 0)))
     val b = ExtQueries.minhashBanded(corpus.filter($"doc_id" % 3 === 0))
-    val tmp = java.nio.file.Files.createTempDirectory("refold").toString
+    val tmp = tempDir("refold").toString
     foldState(s0, b).write.parquet(s"$tmp/s1")
     val stored = spark.read.parquet(s"$tmp/s1")
     assert(canonState(foldState(stored, b)) == canonState(stored),

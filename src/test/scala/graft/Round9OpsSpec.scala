@@ -11,7 +11,7 @@ class Round9OpsSpec extends SparkSpec {
 
   private def freshNames(tag: String): (String, String) = (
     s"graft_test_${tag}_" + java.util.UUID.randomUUID().toString.replace("-", ""),
-    java.nio.file.Files.createTempDirectory(s"graft_test_$tag").toString)
+    tempDir(s"graft_test_$tag").toString)
 
   private def vecs = spark.read.parquet(s"$sfSmoke/embeddings.parquet")
 
@@ -58,7 +58,7 @@ class Round9OpsSpec extends SparkSpec {
 
   test("Publish: crash mid-write and audit veto both leave the previous version live") {
     import operators.Publish
-    val root = java.nio.file.Files.createTempDirectory("graft_test_pub").toString
+    val root = tempDir("graft_test_pub").toString
     val v1 = Publish.publish(Seq((1L, "a"), (2L, "b")).toDF("id", "x"), root)
     assert(Publish.currentVersion(root).contains(v1))
 
@@ -118,7 +118,7 @@ class Round9OpsSpec extends SparkSpec {
     val docs = (1L to 30L).map(i => (i, s"text ${i % 11}")).toDF("doc_id", "text")
     val corpus = docs.filter($"doc_id" % 3 =!= 0)
     val batch = docs.filter($"doc_id" % 3 === 0)
-    val root = java.nio.file.Files.createTempDirectory("graft_test_pub2").toString
+    val root = tempDir("graft_test_pub2").toString
     Publish.publish(IncrementalDedup.digestState(corpus), root)
     Publish.publish(
       IncrementalDedup.foldDigestState(Publish.read(spark, root), batch), root)

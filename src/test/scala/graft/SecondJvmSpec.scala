@@ -23,7 +23,7 @@ class SecondJvmSpec extends SparkSpec {
     * output goes to a log that a failure message quotes.
     */
   private def runChild(root: String, mode: String = "recreate"): Unit = {
-    val dir = Files.createTempDirectory("graft-2jvm-child")
+    val dir = tempDir("graft-2jvm-child")
     val log = dir.resolve("child.log").toFile
     // the module flags Spark needs on JDK 17, as this JVM was given them
     val args = ManagementFactory.getRuntimeMXBean.getInputArguments.asScala.toSeq
@@ -48,7 +48,7 @@ class SecondJvmSpec extends SparkSpec {
 
   test("a table dropped and re-created by a second JVM reads as the new table") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-2jvm").toString + "/t"
+    val root = tempDir("graft-2jvm").toString + "/t"
     VersionedTable.create(spark,
       (0L until 50L).map(i => (i, i % 5)).toDF("id", "n"), root, spec)
     assert(VersionedTable.read(spark, root).count() == 50L)
@@ -62,7 +62,7 @@ class SecondJvmSpec extends SparkSpec {
   test("a child JVM that commits inside the parent's conditional commit wins; " +
     "the parent loses at the pointer swap") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-2jvm").toString + "/t"
+    val root = tempDir("graft-2jvm").toString + "/t"
     VersionedTable.create(spark,
       (0L until 50L).map(i => (i, i % 5)).toDF("id", "n"), root, spec)
     // the child appends while the parent's attempt sits between its

@@ -16,4 +16,10 @@ trait SparkSpec extends AnyFunSuite {
     s
   }
   val sfSmoke = "/root/testdata/sf0.001"
+
+  /** A fresh `<prefix><n>` directory under the per-JVM root, which one
+    * shutdown hook deletes — a spec's fixtures never outlive its fork.
+    */
+  def tempDir(prefix: String): java.nio.file.Path =
+    java.nio.file.Files.createTempDirectory(operators.Checkpoints.root, prefix)
 }

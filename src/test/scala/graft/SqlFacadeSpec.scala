@@ -124,7 +124,7 @@ class SqlFacadeSpec extends SparkSpec {
   }
 
   test("csv sink round-trips a report (S7)") {
-    val out = java.nio.file.Files.createTempDirectory("graft-csv").toString
+    val out = tempDir("graft-csv").toString
     val report = Queries.report3(spark, sfSmoke)
     Tables.writeCsv(report, out, singleFile = true)
     val back = spark.read.option("header", "true").csv(out)

@@ -126,7 +126,7 @@ class StatePurgeSpec extends SparkSpec {
 
   test("retireHistory physically deletes old versions, burns numbers, keeps current") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_retire_spec").toString
+    val root = tempDir("graft_retire_spec").toString
     Publish.publish(Seq((1L, "a")).toDF("k", "v"), root)
     Publish.publish(Seq((2L, "b")).toDF("k", "v"), root)
     assert(Publish.currentVersion(root).contains("v00002"))

@@ -45,7 +45,7 @@ class StoreCallBudgetSpec extends SparkSpec {
   private val spec = VersionedTable.Spec(Seq("n"), "id", 1 << 10)
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-budget").toString + "/t"
+    tempDir("graft-budget").toString + "/t"
 
   private def rows(ids: Range, n: Long => Long = _ % 10): DataFrame = {
     import spark.implicits._

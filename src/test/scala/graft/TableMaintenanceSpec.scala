@@ -21,7 +21,7 @@ class TableMaintenanceSpec extends SparkSpec {
   }
 
   test("partitionsTable answers metadata-only: correct with every data file deleted") {
-    val root = java.nio.file.Files.createTempDirectory("graft-tm-z").toString
+    val root = tempDir("graft-tm-z").toString
     // 32 range partitions over 5 bins: equal keys can't split, so
     // every non-empty file is single-bin (provably exact)
     VersionedTable.create(spark, rows(0, 1000), root, spec,
@@ -39,7 +39,7 @@ class TableMaintenanceSpec extends SparkSpec {
 
   test("partitionsTable scan path: straddlers, DV'd files and NULL transform rows count exactly") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-tm-s").toString
+    val root = tempDir("graft-tm-s").toString
     VersionedTable.create(spark, rows(0, 1000), root, spec,
       PartitionTransform.clusterLayout(32, Seq(t200)), transforms = Seq(t200))
     // straddling append (one file spanning every bin) with a NULL n row
@@ -61,7 +61,7 @@ class TableMaintenanceSpec extends SparkSpec {
 
   test("maintenancePlan prescribes compact/compact-dv/recluster; running them empties the plan") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-tm-p").toString
+    val root = tempDir("graft-tm-p").toString
     // tight create, then: a fragmented append (many small files), a
     // straddler (loose under the spec), and a DV
     VersionedTable.create(spark, rows(0, 1000), root, spec,
@@ -93,7 +93,7 @@ class TableMaintenanceSpec extends SparkSpec {
   test("metadataDistinct: zero data IO, DV refusal, compaction restores") {
     import spark.implicits._
     val skSpec = spec.copy(keySketch = true)
-    val root = java.nio.file.Files.createTempDirectory("graft-tm-d").toString
+    val root = tempDir("graft-tm-d").toString
     VersionedTable.create(spark, rows(0, 500), root, skSpec,
       layout = _.repartition(4))
     VersionedTable.append(spark, rows(400, 700), root, skSpec,
@@ -123,7 +123,7 @@ class TableMaintenanceSpec extends SparkSpec {
       java.lang.Double.doubleToLongBits(e1))
     // DV refusal, then compaction restores exactness (compaction
     // re-derives the sidecar under the sketching spec)
-    val root2 = java.nio.file.Files.createTempDirectory("graft-tm-d2").toString
+    val root2 = tempDir("graft-tm-d2").toString
     VersionedTable.create(spark, rows(0, 500), root2, skSpec)
     VersionedTable.deleteRosterDV(spark, root2, skSpec, Seq(3L).toDF("k"))
     val e = intercept[IllegalArgumentException] {
@@ -135,7 +135,7 @@ class TableMaintenanceSpec extends SparkSpec {
     assert(math.abs(e2 - 499.0) / 499.0 < 0.5, s"post-compact estimate: $e2")
     // default spec (keySketch = false) sheds the per-commit cost; a
     // mixed manifest refuses rather than silently under-count
-    val root3 = java.nio.file.Files.createTempDirectory("graft-tm-d3").toString
+    val root3 = tempDir("graft-tm-d3").toString
     VersionedTable.create(spark, rows(0, 100), root3, spec)
     val e3 = intercept[IllegalArgumentException] {
       VersionedTable.metadataDistinct(spark, root3)
@@ -151,7 +151,7 @@ class TableMaintenanceSpec extends SparkSpec {
 
   test("vacuumOlderThan: time-based retention with instant inheritance; head always survives") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-tm-v").toString
+    val root = tempDir("graft-tm-v").toString
     val v1 = VersionedTable.create(spark, rows(0, 100), root, spec,
       extraMeta = Map("commit_ts" -> "100"))
     val v2 = VersionedTable.append(spark, rows(100, 200), root, spec,
@@ -174,9 +174,9 @@ class TableMaintenanceSpec extends SparkSpec {
 
   test("applyChanges chains: a replica's own feed replicates to a third table") {
     import spark.implicits._
-    val a = java.nio.file.Files.createTempDirectory("graft-tm-a").toString
-    val b = java.nio.file.Files.createTempDirectory("graft-tm-b").toString
-    val c = java.nio.file.Files.createTempDirectory("graft-tm-c").toString
+    val a = tempDir("graft-tm-a").toString
+    val b = tempDir("graft-tm-b").toString
+    val c = tempDir("graft-tm-c").toString
     val v1 = VersionedTable.create(spark, rows(0, 300), a, spec)
     VersionedTable.create(spark, VersionedTable.readVersion(spark, a, v1), b, spec,
       extraMeta = Map("applied_upto" -> v1))
@@ -208,7 +208,7 @@ class TableMaintenanceSpec extends SparkSpec {
 
   test("reclusterWhere: band files rewrite (DVs materialized), out-of-band pass through verbatim") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-tm-r").toString
+    val root = tempDir("graft-tm-r").toString
     val layout = (df: DataFrame) =>
       df.repartitionByRange(8, col("n")).sortWithinPartitions("n")
     VersionedTable.create(spark, rows(0, 1000), root, spec, layout)

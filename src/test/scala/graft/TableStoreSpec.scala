@@ -12,7 +12,7 @@ import graft.operators.{ForwardingTableStore, LocalTableStore, Publish, TableSto
 class TableStoreSpec extends SparkSpec {
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-store").toString
+    tempDir("graft-store").toString
 
   test("local store contract: markers, swaps, renames, tree deletes") {
     val s = LocalTableStore
@@ -93,7 +93,7 @@ class TableStoreSpec extends SparkSpec {
         super.swapIfContentIs(t, p, e)
       }
     }
-    val root = java.nio.file.Files.createTempDirectory("graft-flaky").toString + "/t"
+    val root = tempDir("graft-flaky").toString + "/t"
     val spec = VersionedTable.Spec(Seq("n"), "k", 1 << 13)
     def rows(lo: Long, hi: Long) = (lo until hi).map(i => (i, i)).toDF("k", "n")
     VersionedTable.create(spark, rows(0, 10), root, spec) // v1, clean store

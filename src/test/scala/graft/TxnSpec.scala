@@ -18,9 +18,9 @@ class TxnSpec extends SparkSpec {
     */
   private def fixture(): (String, String, String, String, String, String) = {
     import spark.implicits._
-    val tableRoot = java.nio.file.Files.createTempDirectory("graft-txn-t").toString
-    val mvRoot = java.nio.file.Files.createTempDirectory("graft-txn-m").toString
-    val txnRoot = java.nio.file.Files.createTempDirectory("graft-txn-l").toString
+    val tableRoot = tempDir("graft-txn-t").toString
+    val mvRoot = tempDir("graft-txn-m").toString
+    val txnRoot = tempDir("graft-txn-l").toString
     val layout = (df: org.apache.spark.sql.DataFrame) =>
       df.repartitionByRange(4, col("k")).sortWithinPartitions("k")
     val v1 = VersionedTable.create(spark,

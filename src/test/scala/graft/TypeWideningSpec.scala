@@ -26,7 +26,7 @@ class TypeWideningSpec extends SparkSpec {
   }
 
   private def tmp(p: String): String =
-    java.nio.file.Files.createTempDirectory(p).toString
+    tempDir(p).toString
 
   test("wide batches are refused before the widen commit, accepted after; narrow still accepted") {
     val root = tmp("graft-tw")

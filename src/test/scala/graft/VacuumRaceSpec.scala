@@ -26,7 +26,7 @@ class VacuumRaceSpec extends SparkSpec {
   private val spec = VersionedTable.Spec(Seq("n"), "id", 1 << 10)
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-vacrace").toString + "/t"
+    tempDir("graft-vacrace").toString + "/t"
 
   private def rows(ids: Range): DataFrame = {
     import spark.implicits._

@@ -3,7 +3,8 @@ package graft
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
-import graft.operators.{ForwardingTableStore, LocalTableStore, Publish, TableStore, VersionedTable}
+import graft.operators.{ForwardingTableStore, LocalTableStore, Publish, StatsSpine, TableStore,
+  VersionedTable}
 
 /** Manifest-as-table claims the `layout_versioned_publish` hash gate
   * can't see: pruning actually drops files, superseded generations
@@ -17,7 +18,7 @@ class VersionedTableSpec extends SparkSpec {
 
   private def fixture(): String = {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-vt").toString
+    val root = tempDir("graft-vt").toString
     val layout = (df: org.apache.spark.sql.DataFrame) =>
       df.repartitionByRange(4, col("k")).sortWithinPartitions("k")
     VersionedTable.create(spark,
@@ -29,7 +30,7 @@ class VersionedTableSpec extends SparkSpec {
 
   test("a dropped root re-created with other columns reads the new table, not cached state") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-vt-recreate").toString
+    val root = tempDir("graft-vt-recreate").toString
     VersionedTable.create(spark, (0L until 50L).map(i => (i, s"v$i")).toDF("k", "v"),
       root, spec)
     assert(VersionedTable.read(spark, root).count() == 50L)
@@ -42,7 +43,7 @@ class VersionedTableSpec extends SparkSpec {
       (100L until 130L).map(i => (i, i * 2, i % 3)).toSet)
     // the same holds for a plain Publish root re-published over its
     // dropped tree
-    val proot = java.nio.file.Files.createTempDirectory("graft-pub-recreate").toString
+    val proot = tempDir("graft-pub-recreate").toString
     Publish.publish(Seq((1L, "a")).toDF("x", "y"), proot)
     assert(Publish.read(spark, proot).count() == 1L)
     operators.TableStore.get.deleteTree(proot)
@@ -66,9 +67,54 @@ class VersionedTableSpec extends SparkSpec {
     val band = VersionedTable.manifest(spark, root)
       .filter(col("min_k") <= 450L && col("max_k") >= 350L).count()
     assert(band < total, s"band kept $band of $total files — layout broke")
-    val got = VersionedTable.prunedRead(spark, root, "k", 350L, 450L)
-      .filter(col("k").between(350L, 450L))
+    val read = VersionedTable.prunedRead(spark, root, "k", 350L, 450L)
+    assert(read.inputFiles.length == band, "the scan lists exactly the band's files")
+    val got = read.filter(col("k").between(350L, 450L))
     assert(got.count() == 101L)
+    assert(got.agg(min("k"), max("k")).head.toSeq == Seq(350L, 450L))
+  }
+
+  test("all-null stats files are pruned; mixed-null files keep their non-null bounds") {
+    import spark.implicits._
+    val root = tempDir("graft-vt-null").toString
+    val nullSpec = VersionedTable.Spec(Seq("k"), "v", 1 << 10)
+    // one file of all-null k, then one with nulls mixed into [10, 19]
+    VersionedTable.create(spark, Seq.fill(5)(Option.empty[Long]).map((_, "n")).toDF("k", "v"),
+      root, nullSpec, _.coalesce(1))
+    VersionedTable.append(spark,
+      ((10L to 19L).map(Option(_)) ++ Seq.fill(3)(Option.empty[Long])).map((_, "m"))
+        .toDF("k", "v"), root, nullSpec, _.coalesce(1))
+    val m = VersionedTable.manifest(spark, root)
+    assert(m.count() == 2L)
+    // a range predicate never accepts null → the all-null file must go
+    assert(StatsSpine.survivors(m, "k", 0L, 100L).count() == 1L)
+    val got = VersionedTable.prunedRead(spark, root, "k", 12L, 15L)
+    assert(got.inputFiles.length == 1)
+    assert(got.filter(col("k").between(12L, 15L)).count() == 4L)
+  }
+
+  test("bloom survivors equal the true holders where min/max keeps every file") {
+    import spark.implicits._
+    val root = tempDir("graft-vt-bloom").toString
+    // unique keys scattered across 8 files by hash — every file's key
+    // interval spans ~the whole domain, so min/max cannot prune
+    VersionedTable.create(spark, (0L until 1000L).map(i => (i, s"v$i")).toDF("k", "v"),
+      root, spec, _.repartition(8, col("k")))
+    val m = VersionedTable.manifest(spark, root)
+    assert(m.count() == 8L)
+    val keys = Seq(137L, 512L, 900L)
+    keys.foreach(k => assert(StatsSpine.survivors(m, "k", k, k).count() == 8L))
+    def norm(f: String) = f.replaceFirst("^file:/+", "/")
+    val holders = VersionedTable.read(spark, root).filter(col("k").isin(keys: _*))
+      .select(input_file_name()).distinct().as[String].collect().map(norm).toSet
+    val got = VersionedTable.joinPrunedRead(spark, root, "k", keys.toDF("dk"), "dk",
+      bloomSpec = Some(spec))
+    // no false negatives (⊇) and, at this load factor, no false
+    // positives either (deterministic fixture) — exactly the holders
+    assert(got.inputFiles.map(norm).toSet == holders)
+    assert(holders.size < 8)
+    assert(got.filter(col("k").isin(keys: _*)).select("k").as[Long].collect().toSet ==
+      keys.toSet)
   }
 
   test("delete rewrites only holders; time travel reads superseded content byte-identically") {
@@ -436,7 +482,7 @@ class VersionedTableSpec extends SparkSpec {
   test("shallow clone: zero data copied, divergence isolated, vacuum custody respected") {
     import spark.implicits._
     val src = fixture()
-    val dst = java.nio.file.Files.createTempDirectory("graft-vt-clone").toString
+    val dst = tempDir("graft-vt-clone").toString
     VersionedTable.shallowClone(spark, src, dst)
     // zero-copy: the clone's files dir holds NO data generations
     def parquetsUnder(p: String): Seq[String] = {
@@ -543,7 +589,7 @@ class VersionedTableSpec extends SparkSpec {
     import spark.implicits._
     val src = fixture()
     VersionedTable.setConstraint(spark, src, "k_small", "k < 1000")
-    val dst = java.nio.file.Files.createTempDirectory("graft-vt-ccl").toString
+    val dst = tempDir("graft-vt-ccl").toString
     VersionedTable.shallowClone(spark, src, dst)
     assert(VersionedTable.constraints(dst) == Map("k_small" -> "k < 1000"))
     intercept[IllegalArgumentException] {
@@ -572,7 +618,7 @@ class VersionedTableSpec extends SparkSpec {
 
   test("readAsOfTs resolves from the compacted _ts_index, not per-version _META walks") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-vt-ts").toString
+    val root = tempDir("graft-vt-ts").toString
     VersionedTable.create(spark,
       (0L until 10L).map(i => (i, s"v$i")).toDF("k", "v"), root, spec,
       extraMeta = Map("commit_ts" -> "100"))
@@ -607,7 +653,7 @@ class VersionedTableSpec extends SparkSpec {
 
   test("evolved append: head merges with NULL back-fill; time travel keeps the old schema") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-vt-evo").toString
+    val root = tempDir("graft-vt-evo").toString
     VersionedTable.create(spark,
       (0L until 100L).map(i => (i, s"v$i")).toDF("k", "v"), root, spec)
     intercept[IllegalArgumentException] {
@@ -701,7 +747,7 @@ class VersionedTableSpec extends SparkSpec {
 
   test("merge is row-granular: SCD2 close-out keeps the key's history rows") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-vt-scd").toString
+    val root = tempDir("graft-vt-scd").toString
     // a dimension WITH history: key 1 carries a closed row and a
     // current row — a key-granular DV would vector both
     VersionedTable.create(spark,
@@ -768,7 +814,7 @@ class VersionedTableSpec extends SparkSpec {
 
   test("deleteBand drops fully-in-band files unread and vectors only straddlers") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-vt-band").toString
+    val root = tempDir("graft-vt-band").toString
     // 4 range files with known boundaries: [0,100), [100,200), [200,300), [300,400)
     VersionedTable.create(spark,
       (0L until 400L).map(i => (i, s"v$i")).toDF("k", "v"), root, spec,
