@@ -6,22 +6,32 @@ import graft.operators.{StatsSpine, VersionedTable}
 /** The Bloom roster probe over a [[VersionedTable]] manifest: the
   * distributed position words address the same bits as the driver-side
   * positions, the probe is a join (never a literal IN-list), and its
-  * holder set covers every file that holds a roster key.
+  * holder set covers every file that holds a roster key. `deleteRoster`,
+  * built on that probe, drops exactly the roster's keys and rewrites
+  * nothing for an absent or empty roster.
   */
 class StatsSpineSpec extends SparkSpec {
 
   private val mBits = 1 << 13
 
-  /** The (file, bloom) rows of a hash-scattered 8-file table's
-    * manifest — min/max can't prune its keys, only the bloom can.
+  private val spec = VersionedTable.Spec(Seq("k"), "k", mBits)
+
+  /** A hash-scattered 8-file table of keys 0..999 — min/max can't
+    * prune its keys, only the bloom can.
     */
-  private def bloomFixture(): org.apache.spark.sql.DataFrame = {
+  private def bloomTable(): String = {
     import spark.implicits._
     val root = tempDir("graft-roster").toString
     VersionedTable.create(spark, (0L until 1000L).map(i => (i, s"v$i")).toDF("k", "v"),
-      root, VersionedTable.Spec(Seq("k"), "k", mBits), _.repartition(8, col("k")))
-    VersionedTable.manifest(spark, root).select("file", "bloom")
+      root, spec, _.repartition(8, col("k")))
+    root
   }
+
+  /** The (file, bloom) rows of `root`'s current manifest. */
+  private def bloomRows(root: String): org.apache.spark.sql.DataFrame =
+    VersionedTable.manifest(spark, root).select("file", "bloom")
+
+  private def bloomFixture(): org.apache.spark.sql.DataFrame = bloomRows(bloomTable())
 
   /** Files of `bloom0` holding a row that passes `p`. */
   private def trueHolders(bloom0: org.apache.spark.sql.DataFrame,
@@ -45,6 +55,51 @@ class StatsSpineSpec extends SparkSpec {
     assert(probePlan.contains("Join"), probePlan.take(2000))
     assert(trueHolders(bloom0, col("k") % 3 === 0)
       .subsetOf(probe.as[String].collect().toSet))
+  }
+
+  test("absent keys and an empty roster hold no file; deleting either rewrites nothing") {
+    import spark.implicits._
+    val root = bloomTable()
+    val bloom0 = bloomRows(root)
+    val absent = Seq(99999L, 123456L).toDF("k")
+    val empty = Seq.empty[Long].toDF("k")
+    // at this load the probe itself drops every file for absent keys
+    assert(StatsSpine.rosterHolders(bloom0, absent, "k", mBits).isEmpty)
+    assert(StatsSpine.rosterHolders(bloom0, empty, "k", mBits).isEmpty)
+    val got = VersionedTable.joinPrunedRead(spark, root, "k", absent, "k",
+      bloomSpec = Some(spec))
+    assert(got.inputFiles.isEmpty)
+    assert(got.count() == 0L)
+    assert(got.schema.fieldNames.toSeq == Seq("k", "v"))
+    val files0 = bloom0.select("file").as[String].collect().toSet
+    VersionedTable.deleteRoster(spark, root, spec, absent)
+    VersionedTable.deleteRoster(spark, root, spec, empty)
+    assert(bloomRows(root).select("file").as[String].collect().toSet == files0)
+    assert(VersionedTable.read(spark, root).count() == 1000L)
+  }
+
+  test("deleteRoster: a large roster, then a disjoint one probed off the rewritten manifest") {
+    import spark.implicits._
+    val root = bloomTable()
+    // every 3rd key — 334 ids, every file a holder
+    VersionedTable.deleteRoster(spark, root, spec, (0L until 1000L by 3L).toDF("k"))
+    val t1 = VersionedTable.read(spark, root)
+    assert(t1.count() == 666L)
+    assert(t1.filter(col("k") % 3 === 0).count() == 0L)
+    val m1 = VersionedTable.manifest(spark, root)
+    assert(m1.agg(sum("n_rows")).head.getLong(0) == 666L)
+    // the rewritten generation's rows carry their own blooms
+    assert(m1.filter(col("bloom").isNull).isEmpty)
+    // the second probe runs over the first delete's replacement rows
+    val roster2 = Seq(1L, 7L, 13L).toDF("k")
+    assert(trueHolders(bloomRows(root), col("k").isin(1L, 7L, 13L))
+      .subsetOf(StatsSpine.rosterHolders(bloomRows(root), roster2, "k", mBits)
+        .as[String].collect().toSet))
+    VersionedTable.deleteRoster(spark, root, spec, roster2)
+    val t2 = VersionedTable.read(spark, root)
+    assert(t2.count() == 663L)
+    assert(t2.filter(col("k").isin(1L, 7L, 13L)).count() == 0L)
+    assert(VersionedTable.manifest(spark, root).agg(sum("n_rows")).head.getLong(0) == 663L)
   }
 
   test("rosterWords addresses the same bits as the driver-side positions") {

@@ -61,6 +61,22 @@ class VersionedTableSpec extends SparkSpec {
     assert(VersionedTable.readVersion(spark, root, "v00001").count() == 400L)
   }
 
+  test("manifest rows folded by append and deleteRoster equal a rescan of the live files") {
+    import spark.implicits._
+    val root = fixture()
+    VersionedTable.deleteRoster(spark, root, spec, Seq(5L, 450L).toDF("k"))
+    val m = VersionedTable.manifest(spark, root)
+    val files = m.select("file").as[String].collect()
+    val rescan = spark.read.parquet(files.toSeq: _*)
+      .groupBy(col("_metadata.file_path").as("file"))
+      .agg(count(lit(1)).as("n_rows"), min("k").as("min_k"), max("k").as("max_k"),
+        call_function("bloom_agg", col("k").cast("string"), lit(spec.mBits)).as("bloom"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("file", "n_rows", "min_k", "max_k", "bloom").collect().map(_.toSeq).toSet
+    assert(rows(m) == rows(rescan))
+    assert(m.agg(sum("n_rows")).head.getLong(0) == 598L)
+  }
+
   test("pruned band read lists strictly fewer files; range spans both generations") {
     val root = fixture()
     val total = VersionedTable.manifest(spark, root).count()
