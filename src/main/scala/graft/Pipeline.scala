@@ -75,16 +75,24 @@ object Pipeline {
     StagingViews(a, p, f, pr, r)
   }
 
-  /** The reference's §5.1 data-quality checks, as hard assertions. */
+  /** The reference's §5.1 data-quality checks, as hard assertions: each
+    * contact view is unique per `account_id` (rows == distinct non-NULL
+    * keys, so a NULL key fails this first) and has no NULL key;
+    * `clean_accounts` has no NULL key. All five views' counts come from
+    * ONE aggregate query ([[Quality.keyCounts]]); the checks then fail
+    * in the order and with the messages of one `Quality.assertUniqueKey`
+    * / `assertNoNullKey` call per view and check.
+    */
   def qa(v: StagingViews): Unit = {
-    Seq("clean_contacts_primary" -> v.primary, "clean_contacts_field" -> v.field,
+    val contacts = Seq("clean_contacts_primary" -> v.primary, "clean_contacts_field" -> v.field,
       "clean_contacts_promise" -> v.promise, "clean_contacts_restructure" -> v.restructure)
-      .foreach { case (name, df) =>
-        Quality.assertUniqueKey(df, org.apache.spark.sql.functions.col("account_id"), name)
-        Quality.assertNoNullKey(df, org.apache.spark.sql.functions.col("account_id"), name)
-      }
-    Quality.assertNoNullKey(v.cleanAccounts,
-      org.apache.spark.sql.functions.col("account_id"), "clean_accounts")
+    val counts = Quality.keyCounts(contacts :+ ("clean_accounts" -> v.cleanAccounts),
+      "account_id")
+    contacts.foreach { case (name, _) =>
+      require(counts(name).unique, s"$name: key not unique")
+      require(counts(name).nulls == 0L, s"$name: NULL keys present")
+    }
+    require(counts("clean_accounts").nulls == 0L, "clean_accounts: NULL keys present")
   }
 
   /** Stage → QA → 3 reports (+ optional CSV export). */

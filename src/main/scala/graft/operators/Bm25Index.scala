@@ -159,14 +159,14 @@ object Bm25Index {
       // max(spine fold, stats fold, bucketed append), not the sum
       // (guide §2.6, r17 — the from-feed gates' sequential tail)
       Par.run[Unit](Seq(
-        () => spark.read.parquet(stored.dfPath)
+        () => Footers.read(spark, stored.dfPath)
           .join(fresh.groupBy(col("word")).agg(count(lit(1)).as("d")),
             Seq("word"), "full_outer")
           .select(col("word"),
             (coalesce(col("df"), lit(0L)) + coalesce(col("d"), lit(0L))).as("df"))
           .write.mode("overwrite").parquet(next.dfPath),
         () => {
-          val st = spark.read.parquet(stored.statsPath).head()
+          val st = Footers.rowsOf(spark, stored.statsPath).head
           spark.range(1).select(
               lit(st.getLong(0) + nNew).as("n_docs"),
               lit(st.getLong(1) + freshDocs.getLong(1)).as("sum_dl"))
@@ -280,7 +280,7 @@ object Bm25Index {
       // purge's wall time is the postings rewrite, with both spine
       // retractions riding its tail (guide §2.6, r17)
       Par.run[Unit](Seq(
-        () => spark.read.parquet(stored.dfPath)
+        () => Footers.read(spark, stored.dfPath)
           .join(victim.groupBy(col("word")).agg(count(lit(1)).as("d")),
             Seq("word"), "left")
           .select(col("word"),
@@ -288,7 +288,7 @@ object Bm25Index {
           .filter(col("df") > 0)
           .write.mode("overwrite").parquet(next.dfPath),
         () => {
-          val st = spark.read.parquet(stored.statsPath).head()
+          val st = Footers.rowsOf(spark, stored.statsPath).head
           spark.range(1).select(
               lit(st.getLong(0) - nPurged).as("n_docs"),
               lit(st.getLong(1) - vd.getLong(1)).as("sum_dl"))
@@ -320,8 +320,8 @@ object Bm25Index {
                  k: Int = 10): DataFrame = {
     val p = spark.table(stored.postingsTable)
       .select(col("doc_id"), col("dl"), col("word"), col("tf"))
-    val dfSpine = spark.read.parquet(stored.dfPath)
-    val stats = spark.read.parquet(stored.statsPath)
+    val dfSpine = Footers.read(spark, stored.dfPath)
+    val stats = Footers.read(spark, stored.statsPath)
       .select(col("n_docs").as("__n"), col("sum_dl").as("__l"))
     // per-posting weight materializes BEFORE the query join (PLANS.md
     // #18/#26); the bucketed scan's hashpartitioning(doc_id) satisfies

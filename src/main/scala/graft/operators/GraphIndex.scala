@@ -126,7 +126,7 @@ object GraphIndex {
       // the append itself reads the same pinned blocks.
       val next = stored.copy(spineGen = gen)
       val delta = fresh.groupBy(col("src").as("node")).agg(count(lit(1)).as("d"))
-      spark.read.parquet(stored.spinePath)
+      Footers.read(spark, stored.spinePath)
         .join(delta, Seq("node"), "full_outer")
         .select(col("node"),
           (coalesce(col("out_deg"), lit(0L)) + coalesce(col("d"), lit(0L)))
@@ -215,7 +215,7 @@ object GraphIndex {
         .join(broadcast(ids).withColumnRenamed("node", "src"), Seq("src"), "left_anti")
         .groupBy(col("src").as("node")).agg(count(lit(1)).as("d"))
       val next = Stored(newTable, newBase, 0)
-      spark.read.parquet(stored.spinePath)
+      Footers.read(spark, stored.spinePath)
         .join(broadcast(ids), Seq("node"), "left_anti")
         .join(delta, Seq("node"), "left")
         .select(col("node"),
@@ -236,7 +236,7 @@ object GraphIndex {
       // |V|-row parquet sums is the retraction — the two full
       // edge-table counts this replaces were ∝ |E| each.
       def spineEdges(path: String): Long =
-        spark.read.parquet(path)
+        Footers.read(spark, path)
           .agg(coalesce(sum(col("out_deg")), lit(0L))).head().getLong(0)
       (next, spineEdges(stored.spinePath) - spineEdges(next.spinePath))
     }
@@ -253,7 +253,7 @@ object GraphIndex {
   def ranks(spark: SparkSession, stored: Stored, iterations: Int,
             dampingPct: Int = 85): DataFrame = {
     require(iterations >= 1, "ranks: iterations must be >= 1")
-    Checkpoints.withPersisted(spark.read.parquet(stored.spinePath)) { out =>
+    Checkpoints.withPersisted(Footers.read(spark, stored.spinePath)) { out =>
     Checkpoints.withPersisted(spark.table(stored.edgesTable)
       .select(col("src"), col("dst"))
       .join(out.select(col("node").as("src"), col("out_deg")), "src")) { eo =>
@@ -289,7 +289,7 @@ object GraphIndex {
   def warmStartRanks(spark: SparkSession, stored: Stored, initRanks: DataFrame,
                      iterations: Int, dampingPct: Int = 85): DataFrame = {
     require(iterations >= 1, "warmStartRanks: iterations must be >= 1")
-    Checkpoints.withPersisted(spark.read.parquet(stored.spinePath)) { out =>
+    Checkpoints.withPersisted(Footers.read(spark, stored.spinePath)) { out =>
     Checkpoints.withPersisted(spark.table(stored.edgesTable)
       .select(col("src"), col("dst"))
       .join(out.select(col("node").as("src"), col("out_deg")), "src")) { eo =>
@@ -310,7 +310,7 @@ object GraphIndex {
     */
   private[graft] def ranksUnmaterialized(spark: SparkSession, stored: Stored,
                                          iterations: Int, dampingPct: Int): DataFrame = {
-    val out = spark.read.parquet(stored.spinePath)
+    val out = Footers.read(spark, stored.spinePath)
     val eo = spark.table(stored.edgesTable)
       .select(col("src"), col("dst"))
       .join(out.select(col("node").as("src"), col("out_deg")), "src")

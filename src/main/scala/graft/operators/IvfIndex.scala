@@ -65,12 +65,13 @@ object IvfIndex {
     stored
   }
 
-  /** The stored centroid table, driver-side (k×dim doubles — the same
-    * footprint class as KMeans.fit's own pulls), sorted by cid for the
-    * dense-0..k-1 contract `KMeans.assignFull` requires.
+  /** The stored centroid table, read on the driver without a Spark job
+    * (k×dim doubles — the same footprint class as KMeans.fit's own
+    * pulls), sorted by cid for the dense-0..k-1 contract
+    * `KMeans.assignFull` requires.
     */
   def readCentroids(spark: SparkSession, stored: Stored): Seq[(Int, Array[Double])] =
-    spark.read.parquet(stored.centroidsPath).collect()
+    Footers.rowsOf(spark, stored.centroidsPath)
       .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).toSeq.sortBy(_._1)
 
   /** Fold a batch into the stored index: assign against the STORED
@@ -126,7 +127,7 @@ object IvfIndex {
     // centroid copy and lists rewrite read immutable inputs and write
     // disjoint paths — overlapped (guide §2.6, r17)
     Par.run[Unit](Seq(
-      () => spark.read.parquet(stored.centroidsPath)
+      () => Footers.read(spark, stored.centroidsPath)
         .write.mode("overwrite").parquet(out.centroidsPath),
       () => spark.table(stored.listsTable)
         .repartition(8, pmod(hash(col("cid")), lit(8)))
@@ -216,7 +217,7 @@ object IvfIndex {
     // centroid copy and roster-filtered lists rewrite read immutable
     // inputs and write disjoint paths — overlapped (guide §2.6, r17)
     Par.run[Unit](Seq(
-      () => spark.read.parquet(stored.centroidsPath)
+      () => Footers.read(spark, stored.centroidsPath)
         .write.mode("overwrite").parquet(next.centroidsPath),
       () => spark.table(stored.listsTable)
         .join(broadcast(ids), col(idCol) === col("__pid"), "left_anti")

@@ -626,8 +626,7 @@ object Publish {
     */
   def readCommitted(spark: SparkSession, rootPath: String,
                     version: String): DataFrame = {
-    val dir = s"${canon(rootPath)}/$version"
-    spark.read.schema(Footers.schemaOf(spark, dir)).parquet(dir)
+    Footers.read(spark, s"${canon(rootPath)}/$version")
   }
 
   /** The `_META` pairs a version was published with (empty map if the

@@ -111,7 +111,7 @@ object VersionedTable {
     // one relation resolve for the freshly written generation: the
     // schema probe and the stats scan share it, and its schema is the
     // footer of one of its files — no inference job
-    val gen = s.read.schema(Footers.schemaOf(s, dataDir)).parquet(dataDir)
+    val gen = Footers.read(s, dataDir)
     val present = gen.schema.fieldNames.toSet
     // nnull makes "every row of this file belongs to value min"
     // PROVABLE from the manifest (min/max ignore NULLs, so min == max
@@ -1265,7 +1265,7 @@ object VersionedTable {
         if (CdcVerbs.contains(verb))
           meta.get("cdc_path")
             // CDC dirs are write-once — the schema is a file's footer
-            .foreach(p => pieces += s.read.schema(Footers.schemaOf(s, p)).parquet(p))
+            .foreach(p => pieces += Footers.read(s, p))
         segStart = i + 1
       }
     }

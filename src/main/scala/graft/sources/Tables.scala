@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.operators.Footers
+
 /** Readers for the driver-generated TPC-H-ish parquet tables (TESTDATA.md)
   * plus generic source/sink helpers mirroring the reference's I/O surface
   * (reference `README.md:72-76` — CSV export; base tables "must exist",
@@ -14,8 +16,9 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** One table, typed from its footer on the driver (no inference job). */
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Footers.read(spark, s"$dir/$name.parquet")
 
   /** The events stream table, normalized to the engine's internal shape:
     * `ts_ns` (Long, exact epoch nanoseconds — totally ordered, matches

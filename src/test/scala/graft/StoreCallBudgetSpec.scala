@@ -1,16 +1,12 @@
 package graft
 
-import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicBoolean
 
 import scala.jdk.CollectionConverters._
 
 import graft.operators.{ForwardingTableStore, LocalTableStore, TableStore, VersionedTable}
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SQLExecution
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions.{col, lit}
 
 /** Control-plane budget of the `VersionedTable` verbs, counted through
@@ -105,39 +101,9 @@ class StoreCallBudgetSpec extends SparkSpec {
       at("lastModifiedMs", p)(super.lastModifiedMs(p))
   }
 
-  /** The call site of every Spark job `action` starts, in Spark's long
-    * form: the outermost Spark frame the job came from, then the
-    * caller's frames, innermost first. A job of a SQL execution is
-    * named by the execution's call site: AQE starts one job per
-    * exchange, and those stage jobs carry no frame of the caller.
-    */
-  private def jobSites(action: => Any): Seq[String] = {
-    val sites = new ConcurrentLinkedQueue[String]()
-    val executions = new ConcurrentHashMap[Long, String]()
-    val l = new SparkListener {
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case x: SparkListenerSQLExecutionStart =>
-          executions.put(x.executionId, x.details)
-          ()
-        case _ => ()
-      }
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        val execution = Option(j.properties)
-          .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
-          .flatMap(id => Option(executions.get(id.toLong)))
-        sites.add(execution.getOrElse(
-          j.stageInfos.sortBy(_.stageId).lastOption.fold("")(_.details)))
-        ()
-      }
-    }
-    ListenerBusDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      action
-      ListenerBusDrain(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(l)
-    sites.asScala.toSeq
-  }
+  /** The call site of every Spark job `action` starts ([[JobSites]]). */
+  private def jobSites(action: => Any): Seq[String] =
+    JobSites.of(spark)(action).map(_.site)
 
   /** A job that only answers a question the driver can answer or the
     * next write observes: a schema inference (started inside a
@@ -149,7 +115,7 @@ class StoreCallBudgetSpec extends SparkSpec {
     */
   private def controlPlane(site: String): Boolean = {
     val outer = site.linesIterator.nextOption().getOrElse("")
-    outer.contains("DataFrameReader") ||
+    JobSites.startedByReader(site) ||
       Seq("SchemaCache", "versionEntriesOf", "auditFilesExist",
         "VersionedTable$.vacuum", "VersionedTable$.manifestDiff",
         "VersionedTable$.rowsAtPositions").exists(site.contains) ||
