@@ -41,10 +41,10 @@ import org.apache.spark.sql.functions._
   * Scale shape (100 TB): build = one tokenize + one bucketed write
   * (offline/nightly); fold = one batch tokenize + a bucket-local
   * anti-join + two spine folds (∝ batch and ∝ |vocab|); query = one
-  * bucketed postings scan with broadcast spines and broadcast query
-  * terms. At web scale the df spine takes a stop-word cap exactly like
-  * the n-gram dedup's posting cap, and the broadcast df join degrades
-  * to one key-partitioned join.
+  * bucketed postings scan with the broadcast df spine, the corpus stats
+  * as literals and broadcast query terms. At web scale the df spine
+  * takes a stop-word cap exactly like the n-gram dedup's posting cap,
+  * and the broadcast df join degrades to one key-partitioned join.
   */
 object Bm25Index {
 
@@ -116,6 +116,12 @@ object Bm25Index {
     ()
   }
 
+  /** (n_docs, sum_dl) of a postings frame as [[Checkpoints.pin]] extras:
+    * a document's length is the Σ tf of its postings.
+    */
+  private val docStats: Seq[Column] =
+    Seq(count_distinct(col("doc_id")), coalesce(sum(col("tf")), lit(0L)))
+
   /** Fold a document batch into the stored index. Documents already in
     * the index are dropped (doc-keyed anti-join against the bucketed
     * postings — the stored side reads bucket-local under subset-key
@@ -147,12 +153,10 @@ object Bm25Index {
     // append ordering this fold previously relied on).
     Checkpoints.withPinned(postingsOf(batchDocs)
       .join(spark.table(stored.postingsTable).select(col("doc_id")).distinct(),
-        Seq("doc_id"), "left_anti")) { fresh =>
+        Seq("doc_id"), "left_anti"), docStats: _*) { pinned =>
+      val fresh = pinned.df
       val next = stored.copy(gen = gen)
-      val freshDocs = fresh.select(col("doc_id"), col("dl")).distinct()
-        .agg(count(lit(1)).as("n_docs"), coalesce(sum(col("dl")), lit(0L)).as("sum_dl"))
-        .head()
-      val nNew = freshDocs.getLong(0)
+      val nNew = pinned.extras.getLong(0)
       // three independent writes off the pinned delta — disjoint output
       // paths (next.dfPath, next.statsPath, the postings table), inputs
       // immutable-or-materialized; overlapped so the fold's wall time is
@@ -169,7 +173,7 @@ object Bm25Index {
           val st = Footers.rowsOf(spark, stored.statsPath).head
           spark.range(1).select(
               lit(st.getLong(0) + nNew).as("n_docs"),
-              lit(st.getLong(1) + freshDocs.getLong(1)).as("sum_dl"))
+              lit(st.getLong(1) + pinned.extras.getLong(1)).as("sum_dl"))
             .write.mode("overwrite").parquet(next.statsPath)
         },
         () => fresh.withColumn("gen", lit(gen))
@@ -267,13 +271,11 @@ object Bm25Index {
     // pinned (flat materialized plan — eager, lineage-cut) before the
     // overlapped writes below start
     Checkpoints.withPinned(spark.table(stored.postingsTable)
-      .select(col("doc_id"), col("dl"), col("word"))
-      .join(broadcast(ids), Seq("doc_id"), "left_semi")) { victim =>
+      .select(col("doc_id"), col("dl"), col("word"), col("tf"))
+      .join(broadcast(ids), Seq("doc_id"), "left_semi"), docStats: _*) { pinned =>
+      val victim = pinned.df
       val next = Stored(newTable, newBase, 0)
-      val vd = victim.select(col("doc_id"), col("dl")).distinct()
-        .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("l"))
-        .head()
-      val nPurged = vd.getLong(0)
+      val nPurged = pinned.extras.getLong(0)
       // three independent writes — disjoint outputs (next.dfPath,
       // next.statsPath, the NEW postings table), inputs read-only
       // (stored artifacts) or materialized (victim); overlapped so the
@@ -291,7 +293,7 @@ object Bm25Index {
           val st = Footers.rowsOf(spark, stored.statsPath).head
           spark.range(1).select(
               lit(st.getLong(0) - nPurged).as("n_docs"),
-              lit(st.getLong(1) - vd.getLong(1)).as("sum_dl"))
+              lit(st.getLong(1) - pinned.extras.getLong(1)).as("sum_dl"))
             .write.mode("overwrite").parquet(next.statsPath)
         },
         () => spark.table(stored.postingsTable)
@@ -321,15 +323,17 @@ object Bm25Index {
     val p = spark.table(stored.postingsTable)
       .select(col("doc_id"), col("dl"), col("word"), col("tf"))
     val dfSpine = Footers.read(spark, stored.dfPath)
-    val stats = Footers.read(spark, stored.statsPath)
-      .select(col("n_docs").as("__n"), col("sum_dl").as("__l"))
+    // the one-row stats read on the driver enter the weight as literals
+    // (no broadcast job)
+    val stats = Footers.rowsOf(spark, stored.statsPath).head
     // per-posting weight materializes BEFORE the query join (PLANS.md
     // #18/#26); the bucketed scan's hashpartitioning(doc_id) satisfies
     // the pair groupBy's clustering, so no corpus-side exchange exists
     // anywhere in this plan
     val scoredPostings = p
       .join(broadcast(dfSpine), "word")
-      .crossJoin(broadcast(stats))
+      .withColumn("__n", lit(stats.get(0)).cast("long"))
+      .withColumn("__l", lit(stats.get(1)).cast("long"))
       .withColumn("term_fp", expr(
         """((2 * (__n - df) + 1) * 1000 DIV (2 * df + 1)) * tf * 2200000
            DIV (tf * 1000000 + 300000 + (900000 * dl * __n) DIV __l)"""))

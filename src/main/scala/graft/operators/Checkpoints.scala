@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.SparkContext
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions.{col, count, lit, sum, xxhash64}
 
 /** The one module that materializes intermediates. Three modes, each
@@ -20,8 +20,9 @@ import org.apache.spark.sql.functions.{col, count, lit, sum, xxhash64}
   *    released in a `finally`, also when `use` throws.
   *
   * Only frames that OUTLIVE their creating call keep a bare `persist()`
-  * at the call site (the staged views of `Pipeline.stageAndPersist`,
-  * the returned labels of `ConnectedComponents.run`).
+  * at the call site: the returned labels of `ConnectedComponents.run`,
+  * and the two staged frames of `Pipeline.stageAndPersist`, which its
+  * caller `Pipeline.runAll` releases in a `finally` before it returns.
   *
   * On-disk lifetime. The iterative operators (PageRank,
   * ConnectedComponents.runStar) materialize their result on disk
@@ -123,10 +124,10 @@ object Checkpoints {
     spark.read.schema(df.schema).parquet(dir)
   }
 
-  /** A [[pin]]ned frame with the row count and row digest its eager
-    * job computed.
+  /** A [[pin]]ned frame with the row count, row digest and extra
+    * aggregates its eager job computed.
     */
-  final case class Pinned(df: DataFrame, rows: Long, digest: Long)
+  final case class Pinned(df: DataFrame, rows: Long, digest: Long, extras: Row)
 
   /** Pin a frame IN MEMORY behind a FLAT, persisted `LogicalRDD` plan
     * (the SNIPPETS Dataset-from-plan trick), built eagerly. Three
@@ -152,20 +153,23 @@ object Checkpoints {
     *     arithmetic. Two DISTINCT row sets with different digests are
     *     provably different, so `ConnectedComponents.runStar`'s
     *     convergence check skips its exact union-count proof in
-    *     equal-count-but-still-moving rounds at no extra job.
+    *     equal-count-but-still-moving rounds at no extra job. The
+    *     caller's `extras` aggregates over the pinned frame ride the
+    *     same job (a distinct-count among them adds one exchange).
     *
     * The caller owns the release ([[withPinned]], or `unpersist()` for
     * a round rotation); a failing eager job releases the blocks before
     * rethrowing.
     */
-  def pin(df: DataFrame): Pinned = {
+  def pin(df: DataFrame, extras: Column*): Pinned = {
     val out = org.apache.spark.sql.GraftSqlBridge
       .fromInternalRdd(df.sparkSession, df.queryExecution.toRdd, df.schema)
       .persist()
     val r =
-      try out.agg(count(lit(1)), sum(xxhash64(out.columns.map(col): _*))).head()
+      try out.agg(count(lit(1)), sum(xxhash64(out.columns.map(col): _*)) +: extras: _*).head()
       catch { case t: Throwable => out.unpersist(); throw t }
-    Pinned(out, r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+    Pinned(out, r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1),
+      Row.fromSeq(r.toSeq.drop(2)))
   }
 
   /** Loan `df` persisted (lazily, at the session default level) to
@@ -176,9 +180,13 @@ object Checkpoints {
   def withPersisted[T](df: DataFrame)(use: DataFrame => T): T =
     release(df.persist())(use)
 
-  /** Loan a [[pin]] of `df` to `use`, released like [[withPersisted]]. */
-  def withPinned[T](df: DataFrame)(use: DataFrame => T): T =
-    release(pin(df).df)(use)
+  /** Loan a [[pin]] of `df` (with `extras`) to `use`, released like
+    * [[withPersisted]].
+    */
+  def withPinned[T](df: DataFrame, extras: Column*)(use: Pinned => T): T = {
+    val p = pin(df, extras: _*)
+    release(p.df)(_ => use(p))
+  }
 
   private def release[T](held: DataFrame)(use: DataFrame => T): T =
     try use(held) finally { held.unpersist(); () }

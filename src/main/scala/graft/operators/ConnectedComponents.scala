@@ -203,7 +203,10 @@ object ConnectedComponents {
             s"(> $DriverPathWarnEdges) — this path is for batch-sized quotient graphs; " +
             "corpus-scale graphs belong on runStar (raise via a smaller maxCollected)")
         }
-        val vs = vertices.select(col("id").cast("long")).distinct().collect().map(_.getLong(0))
+        // deduped on the driver, with no distinct() shuffle job: callers
+        // pass distinct ids, so the collect is no larger than the
+        // deduped array the bound below checks
+        val vs = vertices.select(col("id").cast("long")).collect().map(_.getLong(0)).distinct
         if (vs.length + ne > maxCollected) { starFallbacks.incrementAndGet(); runStar(vertices, edges) }
         else {
           val parent = new java.util.HashMap[Long, Long]()

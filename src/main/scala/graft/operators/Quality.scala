@@ -37,21 +37,17 @@ object Quality {
     def unique: Boolean = rows == keys
   }
 
-  /** [[KeyCounts]] of several named views in ONE aggregate query over
-    * their `key` columns, each tagged with its view's name — the checks
-    * of every view in one job graph instead of one action per check and
-    * view. A view with no rows counts as all zeros.
+  /** [[KeyCounts]] per view of a frame whose int column `tag` names
+    * each row's view, in ONE aggregate query — the checks of every view
+    * in one job graph instead of one action per check and view. A tag
+    * with no rows counts as all zeros.
     */
-  def keyCounts(views: Seq[(String, DataFrame)], key: String): Map[String, KeyCounts] = {
-    val found = views
-      .map { case (name, df) => df.select(lit(name).as("view"), col(key).as("key")) }
-      .reduce(_ unionByName _)
-      .groupBy(col("view"))
-      .agg(count(lit(1)), count_distinct(col("key")),
-        sum(when(col("key").isNull, 1L).otherwise(0L)))
+  def keyCounts(tagged: DataFrame, tag: String, key: String): Map[Int, KeyCounts] =
+    tagged.groupBy(col(tag))
+      .agg(count(lit(1)), count_distinct(col(key)),
+        sum(when(col(key).isNull, 1L).otherwise(0L)))
       .collect()
-      .map(r => r.getString(0) -> KeyCounts(r.getLong(1), r.getLong(2), r.getLong(3)))
+      .map(r => r.getInt(0) -> KeyCounts(r.getLong(1), r.getLong(2), r.getLong(3)))
       .toMap
-    views.map { case (name, _) => name -> found.getOrElse(name, KeyCounts(0L, 0L, 0L)) }.toMap
-  }
+      .withDefaultValue(KeyCounts(0L, 0L, 0L))
 }

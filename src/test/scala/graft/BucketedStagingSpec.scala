@@ -15,7 +15,8 @@ class BucketedStagingSpec extends SparkSpec {
       Derive.stgAccounts(spark, sfSmoke), Derive.stgActivities(spark, sfSmoke),
       tieCols = Seq("src_seq"))
     val base = tempDir("graft_bucketed").toString
-    Pipeline.writeStagedBucketed(v, base, nBuckets = 4, prefix = "t_staged")
+    try Pipeline.writeStagedBucketed(v, base, nBuckets = 4, prefix = "t_staged")
+    finally Pipeline.persisted(v).foreach(_.unpersist())
 
     // expected result computed in the ORIGINAL session from the live views
     val expected = v.primary.select("account_id", "collection_channel")

@@ -138,9 +138,9 @@ class CheckpointsSpec extends SparkSpec {
     val before = persistent()
     val boom = new IllegalArgumentException("boom")
     val thrown = intercept[IllegalArgumentException] {
-      Checkpoints.withPinned(spark.range(100).toDF("id")) { df =>
+      Checkpoints.withPinned(spark.range(100).toDF("id")) { p =>
         assert(persistent() == before + 1, "the pin did not materialize eagerly")
-        assert(df.count() == 100)
+        assert(p.df.count() == 100)
         throw boom
       }
     }

@@ -7,8 +7,12 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.{QueryExecution, SQLExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** The Spark jobs an action starts, each named by its call site — the
   * count seam of the job-budget specs.
@@ -58,4 +62,43 @@ object JobSites {
     */
   def startedByReader(site: String): Boolean =
     site.linesIterator.nextOption().getOrElse("").contains("DataFrameReader")
+
+  /** The executed plans of the queries an action ran. */
+  def plansOf(spark: SparkSession)(action: => Any): Seq[SparkPlan] = {
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val l = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        plans.add(qe.executedPlan)
+        ()
+      }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.listenerManager.register(l)
+    try {
+      action
+      ListenerBusDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(l)
+    plans.asScala.toSeq
+  }
+
+  /** Every operator of `plans`, through adaptive plans, their query
+    * stages, reused exchanges and the plans that built a cached
+    * relation; an operator shared by several plans (a cache's build
+    * plan) counts once.
+    */
+  def operators(plans: Seq[SparkPlan]): Seq[SparkPlan] = {
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
+    def walk(p: SparkPlan): Seq[SparkPlan] =
+      if (!seen.add(p)) Nil
+      else p +: ((p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case s: QueryStageExec => Seq(s.plan)
+        case r: ReusedExchangeExec => Seq(r.child)
+        case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+        case _ => Nil
+      }) ++ p.children ++ p.subqueries).flatMap(walk)
+    plans.flatMap(walk)
+  }
 }

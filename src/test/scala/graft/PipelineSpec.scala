@@ -18,8 +18,6 @@ class PipelineSpec extends SparkSpec {
       "commercial_promises_report").foreach { name =>
       assert(spark.read.option("header", "true").csv(s"$out/$name").count() > 0)
     }
-    Seq(res.views.cleanAccounts, res.views.primary, res.views.field,
-      res.views.promise, res.views.restructure).foreach(_.unpersist())
   }
 
   test("partitioned staging write enables partition pruning (PartitionFilters)") {

@@ -1,19 +1,17 @@
 package graft
 
-import graft.operators.{Bm25Index, IvfIndex}
+import graft.operators.{Bm25Index, GraphIndex, IvfIndex}
 import graft.sources.Tables
-import graft.staging.StagingViews
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.functions.col
 
 /** Jobs of the paper's pipeline and the stored-index verbs it feeds,
-  * counted by call site ([[JobSites]]): the QA is one aggregate query,
-  * and reads of files the engine or the test-data generator wrote take
-  * their schema from a footer, so no job is a schema inference.
+  * counted by call site ([[JobSites]]): the staging layer reads the
+  * activity log once, the QA is one aggregate query, and reads of files
+  * the engine or the test-data generator wrote take their schema from a
+  * footer, so no job is a schema inference.
   */
 class ReadJobBudgetSpec extends SparkSpec {
-
-  private def all(v: StagingViews) =
-    Seq(v.cleanAccounts, v.primary, v.field, v.promise, v.restructure)
 
   private def readerJobs(jobs: Seq[JobSites.Job]): Seq[String] =
     jobs.map(_.site).filter(JobSites.startedByReader)
@@ -23,24 +21,55 @@ class ReadJobBudgetSpec extends SparkSpec {
     val v = Pipeline.stageAndPersist(spark, Derive.stgAccounts(spark, sfSmoke),
       Derive.stgActivities(spark, sfSmoke), tieCols = Seq("src_seq"))
     try {
-      all(v).foreach(_.count())
+      Pipeline.persisted(v).foreach(_.count())
       val jobs = JobSites.of(spark)(Pipeline.qa(v))
       val executions = jobs.map(_.execution)
       assert(executions.forall(_.isDefined) && executions.distinct.size == 1,
         s"qa ran ${executions.distinct.size} SQL executions")
       assert(jobs.size <= 3, s"qa ran ${jobs.size} jobs (budget 3)")
-    } finally all(v).foreach(_.unpersist(blocking = true))
+    } finally Pipeline.persisted(v).foreach(_.unpersist(blocking = true))
+  }
+
+  /** One `Pipeline.runAll` on sfSmoke: its jobs, the executed plans of
+    * its queries, and the RDDs it left persisted.
+    */
+  private lazy val runAll: (Seq[JobSites.Job], Seq[SparkPlan], Set[Int]) = {
+    val out = tempDir("graft-reads").toString
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    var plans = Seq.empty[SparkPlan]
+    val jobs = JobSites.of(spark) {
+      plans = JobSites.plansOf(spark)(Pipeline.runAll(spark, sfSmoke, csvOutDir = Some(out)))
+    }
+    (jobs, plans, spark.sparkContext.getPersistentRDDs.keySet.toSet -- before)
   }
 
   test("Pipeline.runAll starts no schema-inference job") {
-    val out = tempDir("graft-reads").toString
-    var res: Option[Pipeline.RunResult] = None
-    try {
-      val jobs = JobSites.of(spark) {
-        res = Some(Pipeline.runAll(spark, sfSmoke, csvOutDir = Some(out)))
-      }
-      assert(readerJobs(jobs).isEmpty, readerJobs(jobs).mkString("\n  ", "\n  ", ""))
-    } finally res.foreach(r => all(r.views).foreach(_.unpersist(blocking = true)))
+    val (jobs, _, _) = runAll
+    assert(readerJobs(jobs).isEmpty, readerJobs(jobs).mkString("\n  ", "\n  ", ""))
+  }
+
+  test("Pipeline.runAll stages and QAs in one SQL execution of at most 6 jobs") {
+    val (jobs, _, _) = runAll
+    val staging = jobs.filter(j => j.site.contains("graft.Pipeline$.qa(") ||
+      j.site.contains("graft.Pipeline$.stageAndPersist("))
+    assert(staging.nonEmpty && staging.forall(_.execution.isDefined) &&
+      staging.map(_.execution).distinct.size == 1,
+      s"staging and QA ran ${staging.map(_.execution).distinct.size} SQL executions")
+    assert(staging.size <= 6, s"staging and QA ran ${staging.size} jobs (budget 6)")
+  }
+
+  test("Pipeline.runAll scans the activity log once") {
+    val (_, plans, _) = runAll
+    val scans = JobSites.operators(plans).collect {
+      case f: FileSourceScanExec
+          if f.relation.location.rootPaths.exists(_.toString.endsWith("/events.parquet")) => f
+    }
+    assert(scans.size == 1, s"${scans.size} scans of the activity log")
+  }
+
+  test("Pipeline.runAll releases every frame it persisted") {
+    val (_, _, left) = runAll
+    assert(left.isEmpty, s"RDDs still persisted after runAll: $left")
   }
 
   test("Bm25Index.append and scoredTopK start no schema-inference job") {
@@ -60,6 +89,25 @@ class ReadJobBudgetSpec extends SparkSpec {
         Seq((1L, "banana"), (1L, "date")).toDF("query_id", "word"), k = 2).collect())
       assert(readerJobs(query).isEmpty, readerJobs(query).mkString("\n  ", "\n  ", ""))
     } finally spark.sql(s"DROP TABLE IF EXISTS $table")
+  }
+
+  test("GraphIndex.purge observes its retracted-edge count on the spine write") {
+    import spark.implicits._
+    val base = tempDir("graft-reads").toString
+    val tables = Seq("g", "gp", "gq").map(_ + "_reads_" +
+      java.util.UUID.randomUUID().toString.replace("-", ""))
+    try {
+      val s0 = GraphIndex.build(spark, Seq(("a", "b"), ("b", "a"), ("b", "c"), ("c", "b"))
+        .toDF("src", "dst"), tables(0), s"$base/g")
+      var retracted = -1L
+      val jobs = JobSites.of(spark) {
+        retracted = GraphIndex.purge(spark, s0, Seq("b").toDF("node"), tables(1), s"$base/gp")._2
+      }
+      // b's 2 out-edges and the 2 edges into it; the spine sums ran 16 jobs in all
+      assert(retracted == 4L)
+      assert(jobs.size <= 14, s"purge ran ${jobs.size} jobs (budget 14)")
+      assert(GraphIndex.purge(spark, s0, Seq("z").toDF("node"), tables(2), s"$base/gq")._2 == 0L)
+    } finally tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
   test("IvfIndex.append starts no schema-inference job; readCentroids starts no job") {
